@@ -115,8 +115,8 @@ exact re-rank) completing the compression ladder. Engine-level and
 fixture-pinned rather than SQL-gated: the open-web snowball mode
 (crawl → extract embedded links → admit unseen → fixpoint, equal to
 a pure-python BFS-closure oracle on all four status sets, incl.
-crash-resume and the mor+cuckoo feature matrix) and the DUST loop
-(mine strip rules from own docs, apply at next ingest).
+crash-resume) and the DUST loop (mine strip rules from own docs,
+apply at next ingest).
 """
 
 from __future__ import annotations

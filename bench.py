@@ -59,7 +59,6 @@ HEADLINE = [
     "d6_simhash128_pairs",
     "j10_frontier_machine",
     "j11_token_bucket_replay",
-    "j12_seen_filter_unseen",
     "m1_interleaved_spans",
     "m2_media_pipeline",
     "f1_jalali_calendar",
@@ -153,15 +152,13 @@ HEADLINE = [
 # Gate-replay scaffolds: queries whose wall-clock is dominated by
 # multi-round replay/stream-restart scaffolding built to make the
 # correctness gate deterministic, not by the operator under test
-# (j10/j11 = 4-5 unrolled frontier rounds, j12 = rebuild+fold+probe of
-# two filter-store kinds on scratch catalogs, s1/s4 = real streaming
-# runs with per-batch checkpoints). Reported as their own subtotal so a
+# (j10/j11 = 4-5 unrolled frontier rounds, s1/s4 = real streaming runs
+# with per-batch checkpoints). Reported as their own subtotal so a
 # regression in ENGINE operators is never masked by scaffold noise
 # (round-4 verdict nit #3).
 GATE_REPLAY = {
     "j10_frontier_machine",
     "j11_token_bucket_replay",
-    "j12_seen_filter_unseen",
     "j14_aimd_budget_replay",
     "s1_stream_cursor_cut",
     "s4_windowed_rates",
@@ -579,172 +576,6 @@ def cc_algorithm_ab(spark, reps: int = 2) -> dict:
     # the chain is ONE component: label prop at 60 capped rounds leaves
     # it split (clusters > 1), two-star must close it exactly
     out["chain_twostar_exact"] = out["chain_twostar_clusters"] == 1
-    return out
-
-
-def unseen_op_ab(
-    spark, n_keys: int, n_batch: int, kind: str = "bloom", reps: int = 5
-) -> dict:
-    """The unseen CHECK alone, exact anti-join vs persistent-filter
-    probe, interleaved A/B at a given |seen| — the slope evidence: the
-    exact path shuffles O(|seen|) rows per poll, the filter path's jobs
-    are O(|batch| + filter state) with a scan-only confirm. Interleaving
-    makes VM steal hit both arms equally so the RATIO is trustworthy.
-    Keys are synthesized directly (no engine state needed), so large
-    |seen| stays affordable."""
-    import statistics
-    import tempfile
-
-    from news_crawler_spark.catalog import SnapshotCatalog
-    from news_crawler_spark.operators import seen_set
-    from news_crawler_spark.operators.seen_filter import SeenFilterStore
-
-    tmp = scratch("opab_")
-    key = lambda df: df.select(  # noqa: E731
-        F.xxhash64(F.concat(F.lit("k"), "id")).alias("url_hash"),
-        F.concat(F.lit("https://h/p/"), "id").alias("canonical_url"),
-    )
-    parts = max(8, spark.sparkContext.defaultParallelism)
-    key(spark.range(0, n_keys)).repartitionByRange(parts, "url_hash") \
-        .sortWithinPartitions("url_hash").write.parquet(tmp + "/seen")
-    seen = spark.read.parquet(tmp + "/seen")
-    n_buckets = max(64, n_keys // 250_000)
-    cap = max(1024, (2 * n_keys) // n_buckets)
-    store = SeenFilterStore(
-        SnapshotCatalog(spark, tmp),
-        kind=kind,
-        n_buckets=n_buckets,
-        capacity_per_bucket=cap,
-    )
-    t0 = time.perf_counter()
-    # bulk build = rebuild (one O(|seen|) pass into bucket-partitioned
-    # blobs); per-poll folds are O(|batch|) deltas and never touch blobs
-    store.rebuild(0, seen, capacity_per_bucket=cap)
-    t_fold = time.perf_counter() - t0
-    # the per-poll fold (the round-3 design rewrote the FULL state table
-    # here — the 12-20 GB/poll scale-killer; now an O(|batch|) delta)
-    t0 = time.perf_counter()
-    store.fold(1, key(spark.range(3 * n_keys, 3 * n_keys + n_batch)))
-    t_incr_fold = time.perf_counter() - t0
-    half = n_batch // 2
-    batch = key(
-        spark.range(0, half).unionAll(spark.range(2 * n_keys, 2 * n_keys + half))
-    ).localCheckpoint(eager=True)  # half truly-seen + half truly-new
-    ts_e, ts_f = [], []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        seen_set.unseen_only(batch, seen).count()
-        ts_e.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        store.unseen(batch, seen, 0).count()
-        ts_f.append(time.perf_counter() - t0)
-    out = {
-        "seen_keys": n_keys,
-        "batch": n_batch,
-        "kind": kind,
-        "full_build_sec": round(t_fold, 1),
-        "incr_fold_sec": round(t_incr_fold, 2),
-        "exact_sec": round(statistics.median(ts_e), 2),
-        "filter_sec": round(statistics.median(ts_f), 2),
-        "exact_reps": [round(t, 2) for t in ts_e],
-        "filter_reps": [round(t, 2) for t in ts_f],
-    }
-    out["speedup"] = round(out["exact_sec"] / out["filter_sec"], 2)
-    log(
-        f"  unseen A/B @ {n_keys}: exact {out['exact_sec']}s vs "
-        f"{kind} {out['filter_sec']}s ({out['speedup']}x)"
-    )
-    return out
-
-
-def ingest_probe(spark, n_seen: int, n_batch: int) -> dict:
-    """Steady-state incremental-ingest probe (the round-2 verdict's done
-    criterion for the persistent prefilter): |seen| ≫ |batch| link-poll
-    batches, half redelivered / half new, exact anti-join vs the
-    persistent cuckoo-filter path — medians of 3 distinct batches on
-    identical state copies. mor merge mode + huge compact_every so the
-    measured work is the ingest dedup itself, not pending-slice rewrite.
-
-    Run at TWO seen sizes (main): the scale evidence is the SLOPE — the
-    exact path's cost grows with |seen| (its anti-join shuffles the seen
-    side), the prefiltered path's does not (probe + fold touch O(|batch|)
-    + fixed filter state; the confirm is a pruned scan)."""
-    import shutil
-    import statistics
-    import tempfile
-
-    from news_crawler_spark.catalog import SnapshotCatalog
-    from news_crawler_spark.engine import CrawlEngine
-    from news_crawler_spark.operators.seen_filter import SeenFilterStore
-
-    from news_crawler_spark.functions.urls import with_url_columns
-    from news_crawler_spark.operators import seen_set
-
-    half = n_batch // 2
-    base = scratch("ingbase_")
-    t0 = time.perf_counter()
-    eng0 = CrawlEngine(spark, base)
-    eng0.ingest(synth.build_seed_list(spark, n_seen))
-    t_build = time.perf_counter() - t0
-    out: dict = {
-        "seen_urls": n_seen,
-        "batch_urls": n_batch,
-        "seen_build_sec": round(t_build, 1),
-    }
-
-    # fold the full seen set into a persistent store ONCE on the base
-    # workdir — both engine modes below copytree it (the cuckoo mode
-    # probes it; the exact mode ignores it). The unseen-CHECK A/B itself
-    # lives in unseen_op_ab (interleaved, two seen sizes).
-    cat0 = SnapshotCatalog(spark, base)
-    cap0 = max(1024, (2 * n_seen) // 64)
-    store0 = SeenFilterStore(
-        cat0, kind="cuckoo", n_buckets=64, capacity_per_bucket=cap0
-    )
-    t0 = time.perf_counter()
-    store0.rebuild(0, cat0.read("seen_keys", 0), capacity_per_bucket=cap0)
-    out["filter_build_sec"] = round(time.perf_counter() - t0, 1)
-
-    def mixed_batch(i: int):
-        # half previously-admitted, half new — worst case for a filter
-        # (every redelivered row is a true 'maybe')
-        lo = n_seen + i * half - half
-        return synth.build_seed_list(spark, lo + n_batch, lo=lo)
-
-    def fresh_batch(i: int):
-        # all-new links — the post-cursor-cut steady state (the cursor
-        # cut drops already-delivered links before ingest ever sees them)
-        lo = n_seen + 20 * n_batch + i * n_batch
-        return synth.build_seed_list(spark, lo + n_batch, lo=lo)
-
-    for mode in (None, "cuckoo"):
-        tag = mode or "exact"
-        wd = scratch(f"ing_{tag}_")
-        shutil.rmtree(wd)
-        shutil.copytree(base, wd)  # carries the folded filter state
-        eng = CrawlEngine(
-            spark, wd, merge_mode="mor", compact_every=10**6, seen_prefilter=mode
-        )
-        for kind, mk in (("mixed", mixed_batch), ("fresh", fresh_batch)):
-            ts, admitted = [], 0
-            for i in range(3):
-                t0 = time.perf_counter()
-                admitted = eng.ingest_incremental(mk(i))
-                ts.append(time.perf_counter() - t0)
-            med = statistics.median(ts)
-            out[f"{tag}_{kind}_sec"] = round(med, 2)
-            out[f"{tag}_{kind}_urls_per_sec"] = round(n_batch / med, 1)
-            out[f"{tag}_{kind}_reps"] = [round(t, 2) for t in ts]
-            log(
-                f"  ingest {tag}/{kind}: median {med:.2f}s "
-                f"({[round(t, 2) for t in ts]}, last admitted {admitted})"
-            )
-    out["prefilter_speedup_mixed"] = round(
-        out["exact_mixed_sec"] / out["cuckoo_mixed_sec"], 2
-    )
-    out["prefilter_speedup_fresh"] = round(
-        out["exact_fresh_sec"] / out["cuckoo_fresh_sec"], 2
-    )
     return out
 
 
@@ -1527,16 +1358,6 @@ def _main() -> None:
     )
     log("== d3 stage profile ==")
     d3_split = d3_profile(spark, sf_dir)
-    log("== incremental-ingest prefilter probe ==")
-    ingest = ingest_probe(
-        spark,
-        n_seen=100_000 if quick else 1_000_000,
-        n_batch=4_000 if quick else 20_000,
-    )
-    ingest["op_ab"] = [
-        unseen_op_ab(spark, n, 4_000 if quick else 20_000)
-        for n in ((200_000,) if quick else (1_000_000, 16_000_000))
-    ]
     import tempfile
 
     probe_path = scratch("probe_") + "/cand.parquet"
@@ -1574,7 +1395,6 @@ def _main() -> None:
                 "cosine_pairs": cos_pairs,
                 "temporal_join": temporal,
                 "d3_profile": d3_split,
-                "ingest": ingest,
                 "scaling": scaling,
                 "total_wall_sec": round(total, 1),
             }

@@ -981,180 +981,6 @@ GROUP BY 1, 2
 )
 
 
-def j12_seen_filter_unseen(spark, sf):
-    """The persistent seen-filter store (J1 incremental path, the
-    round-3 verdict's one 'weak' component) under the HARD gate, both
-    serializer kinds. The probabilistic pre-pass never changes the
-    ANSWER — definitely-new skips the seen table, the maybe-sliver is
-    exactly confirmed — so the full production read shape
-    (bucket-partitioned base blobs from ``rebuild``, an uncompacted
-    fold delta, the mapInPandas probe with the per-worker blob cache,
-    the broadcast/In-pushdown confirm) is value-hash-comparable to a
-    plain DuckDB anti-join.
-
-    Construction (all md5-derived from events, DuckDB-reproducible):
-    seen wave 1 = pmod(h,4)==1 → ``rebuild`` (the base snapshot); seen
-    wave 2 = pmod(h,4)==2 → ``fold`` (stays a delta: compact_every=4 >
-    folds, so the probe must overlay base ∪ delta); candidates =
-    pmod(h,3)==0, overlapping both waves. Output: each kind's unseen
-    rows, identical across kinds by construction. The maybe-sliver here
-    (≈|cand ∩ seen|) exceeds the 256-key In-pushdown cap, so the
-    full-scan semi-confirm branch is the one under test; the ≤256
-    fast path is pinned by tests/test_seen_filter.py."""
-    import tempfile
-
-    from .catalog import SnapshotCatalog
-    from .operators.dedup import md5_hash64
-    from .operators.seen_filter import SeenFilterStore
-
-    e = load(spark, sf, "events")
-    # materialize the keyed projection once: four branches (two waves,
-    # the confirm's seen side, the candidates) otherwise each re-derive
-    # the md5 hash from their own events scan
-    keyed = e.select(
-        md5_hash64(F.concat(F.lit("u"), F.col("event_id").cast("string"))).alias(
-            "url_hash"
-        ),
-        F.concat(F.lit("https://e/"), F.col("event_id").cast("string")).alias(
-            "canonical_url"
-        ),
-    ).localCheckpoint(eager=True)
-    wave1 = keyed.filter(F.pmod(F.col("url_hash"), F.lit(4)) == 1)
-    wave2 = keyed.filter(F.pmod(F.col("url_hash"), F.lit(4)) == 2)
-    seen = wave1.unionByName(wave2)
-    cand = keyed.filter(F.pmod(F.col("url_hash"), F.lit(3)) == 0)
-    out, scratch = None, []
-    for kind in ("bloom", "cuckoo"):
-        work = tempfile.mkdtemp(prefix=f"j12_{kind}_")
-        scratch.append(work)
-        cat = SnapshotCatalog(spark, work)
-        store = SeenFilterStore(
-            cat, kind=kind, n_buckets=8, capacity_per_bucket=4096, compact_every=4
-        )
-        store.rebuild(1, wave1, capacity_per_bucket=4096)
-        store.fold(2, wave2)
-        got = store.unseen(cand, seen, 2).select(
-            F.lit(kind).alias("kind"), "url_hash", "canonical_url"
-        )
-        out = got if out is None else out.unionByName(got)
-    # materialize before deleting the filter-store catalogs the plan
-    # reads: this query is in the bench HEADLINE and must not accrete
-    # state dirs across a long bench session (ADVICE round 4)
-    out = out.localCheckpoint(eager=True)
-    for work in scratch:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
-
-
-J12_SQL = f"""
-WITH keyed AS (
-  SELECT {_J10_H} AS url_hash,
-         'https://e/' || event_id::VARCHAR AS canonical_url
-  FROM events
-),
-unseen AS (
-  SELECT url_hash, canonical_url FROM keyed
-  WHERE ((url_hash % 3) + 3) % 3 = 0
-    AND ((url_hash % 4) + 4) % 4 NOT IN (1, 2)
-)
-SELECT k.kind, u.url_hash, u.canonical_url
-FROM unseen u CROSS JOIN (VALUES ('bloom'), ('cuckoo')) AS k(kind)
-"""
-
-
-def j13_mor_merge(spark, sf):
-    """The merge-on-read pending reconstruction (engine.merge_pending —
-    the Iceberg-MOR analog behind mor mode's O(|popped|) writes) under
-    the HARD gate. Three synthetic delta rounds derived md5-deterministically
-    from events exercise every transition: tombed-only keys die
-    (pmod5 = r−1, no re-add), add-after-tomb resurrects with the newest
-    row, add-THEN-tomb dies, same-round tomb+add survives (the
-    addition-wins tie rule ``__ar >= __tr``), two add families (pmod7
-    tried=r, pmod11 tried=r+10, disjoint within a round) pin max_by
-    picking the NEWEST add across rounds, untouched base rows pass
-    through the broadcast anti-join. Oracle = the same latest-event-wins
-    closed form as DuckDB arg_max/max CTEs. Engine equivalence (cow ≡
-    mor over real crawl rounds) is pinned by tests/test_crawl_engine.py;
-    this puts the reconstruction OPERATOR itself under the value-hash
-    gate."""
-    from .engine import merge_pending
-    from .operators.dedup import md5_hash64
-
-    e = load(spark, sf, "events")
-    h = md5_hash64(F.concat(F.lit("u"), F.col("event_id").cast("string")))
-    # materialize once — ten delta branches (3×2 add families, 3 tombs,
-    # the base, the anti-join) otherwise each re-derive the md5 hash
-    # from their own events scan (86 md5 nodes in the lazy plan)
-    base = e.select(
-        h.alias("url_hash"),
-        F.concat(F.lit("https://e/"), F.col("event_id").cast("string")).alias(
-            "canonical_url"
-        ),
-        F.col("event_type").alias("host"),
-        F.col("ts").alias("published_ts"),
-        F.lit("pending").alias("status"),
-        F.lit(0).alias("tried_count"),
-    ).localCheckpoint(eager=True)
-    adds, tombs = [], []
-    for r in (1, 2, 3):
-        fam_a = base.filter(F.pmod(F.col("url_hash"), F.lit(7)) == r).withColumn(
-            "tried_count", F.lit(r)
-        )
-        fam_b = base.filter(
-            (F.pmod(F.col("url_hash"), F.lit(11)) == r)
-            & (F.pmod(F.col("url_hash"), F.lit(7)) != r)
-        ).withColumn("tried_count", F.lit(r + 10))
-        adds.append(fam_a.unionByName(fam_b).withColumn("__r", F.lit(r)))
-        tombs.append(
-            base.filter(F.pmod(F.col("url_hash"), F.lit(5)) == r - 1)
-            .select("url_hash", "canonical_url")
-            .withColumn("__r", F.lit(r))
-        )
-    merged = merge_pending(spark, base, adds, tombs)
-    return merged.select(
-        "url_hash",
-        "canonical_url",
-        F.col("tried_count").cast("int").alias("tried_count"),
-    )
-
-
-J13_SQL = f"""
-WITH keyed AS (
-  SELECT {_J10_H} AS url_hash,
-         'https://e/' || event_id::VARCHAR AS canonical_url
-  FROM events
-),
-rounds AS (SELECT * FROM (VALUES (1), (2), (3)) AS t(r)),
-adds AS (
-  SELECT url_hash, canonical_url, r, r AS tried FROM keyed, rounds
-   WHERE ((url_hash % 7) + 7) % 7 = r
-  UNION ALL
-  SELECT url_hash, canonical_url, r, r + 10 AS tried FROM keyed, rounds
-   WHERE ((url_hash % 11) + 11) % 11 = r AND ((url_hash % 7) + 7) % 7 <> r
-),
-tombs AS (
-  SELECT url_hash, r FROM keyed, rounds WHERE ((url_hash % 5) + 5) % 5 = r - 1
-),
-la AS (
-  SELECT url_hash, canonical_url, arg_max(tried, r) AS tried, max(r) AS ar
-  FROM adds GROUP BY 1, 2
-),
-lt AS (SELECT url_hash, max(r) AS tr FROM tombs GROUP BY 1),
-survivors AS (
-  SELECT la.url_hash, la.canonical_url, la.tried::INT AS tried_count
-  FROM la LEFT JOIN lt ON la.url_hash = lt.url_hash
-  WHERE lt.tr IS NULL OR la.ar >= lt.tr
-),
-touched AS (
-  SELECT url_hash FROM la UNION SELECT url_hash FROM lt
-)
-SELECT k.url_hash, k.canonical_url, 0::INT AS tried_count
-FROM keyed k WHERE k.url_hash NOT IN (SELECT url_hash FROM touched)
-UNION ALL
-SELECT * FROM survivors
-"""
-
-
 def f1_jalali_calendar(spark, sf):
     """F3 (exact Jalali↔Gregorian, the reference's date backbone) under
     the HARD gate. 460 years of md5-derived dates (1800-03-01 + pmod(h,
@@ -8662,8 +8488,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "j9_docs_vectors_reconcile": j9_docs_vectors_reconcile,
     "j10_frontier_machine": j10_frontier_machine,
     "j11_token_bucket_replay": j11_token_bucket_replay,
-    "j12_seen_filter_unseen": j12_seen_filter_unseen,
-    "j13_mor_merge": j13_mor_merge,
     "f1_jalali_calendar": f1_jalali_calendar,
     "f2_persian_datetime_parse": f2_persian_datetime_parse,
     "p9_robots_filter": p9_robots_filter,
@@ -8800,8 +8624,6 @@ ORACLES: dict[str, str] = {
     "j9_docs_vectors_reconcile": J9_SQL,
     "j10_frontier_machine": J10_SQL,
     "j11_token_bucket_replay": J11_SQL,
-    "j12_seen_filter_unseen": J12_SQL,
-    "j13_mor_merge": J13_SQL,
     "f1_jalali_calendar": F1_SQL,
     "f2_persian_datetime_parse": F2_SQL,
     "p9_robots_filter": P9_SQL,

@@ -45,7 +45,6 @@ from .operators import frontier as frontier_ops
 from .operators import seen_set
 from .operators.extract import documents_from_fetch_extract
 from .operators.fetch import fetch_extract_pages
-from .operators.seen_filter import SeenFilterStore
 
 
 @dataclass
@@ -57,50 +56,6 @@ class RoundStats:
     pending_left: int
 
 
-def merge_pending(
-    spark: SparkSession,
-    base: DataFrame,
-    adds: list[DataFrame],
-    tombs: list[DataFrame],
-) -> DataFrame:
-    """Latest-event-wins merge-on-read reconstruction (the Iceberg MOR
-    analog): base snapshot ⊖ any key with a delta event, ⊕ the rows
-    whose NEWEST event is an addition. ``adds``/``tombs`` carry an
-    ``__r`` round column; a round pops a row (tombstone) and may re-pend
-    it (addition) in the same round — the addition wins ties
-    (``__ar >= __tr``). Module-level so the oracle gate
-    (analytics.j13_mor_merge) replays the exact reconstruction the
-    engine's mor mode runs per round; key-grouped aggregates get
-    map-side partial combine and only delta keys ever shuffle — the
-    base joins the (small) touched-key set broadcast-anti."""
-    keys = ["url_hash", "canonical_url"]
-    cols = base.columns
-    empty_add = spark.createDataFrame([], base.schema).withColumn("__r", F.lit(0))
-    add_all = empty_add
-    for a in adds:
-        add_all = add_all.unionByName(a)
-    latest_add = add_all.groupBy(*keys).agg(
-        F.max_by(F.struct(*cols), F.col("__r")).alias("__row"),
-        F.max("__r").alias("__ar"),
-    )
-    if tombs:
-        tomb_all = tombs[0]
-        for t in tombs[1:]:
-            tomb_all = tomb_all.unionByName(t)
-        latest_tomb = tomb_all.groupBy(*keys).agg(F.max("__r").alias("__tr"))
-    else:
-        latest_tomb = spark.createDataFrame(
-            [], "url_hash long, canonical_url string, __tr int"
-        )
-    ev = latest_add.join(latest_tomb, keys, "full")
-    survivors = ev.filter(
-        F.col("__ar").isNotNull()
-        & (F.col("__tr").isNull() | (F.col("__ar") >= F.col("__tr")))
-    ).select("__row.*")
-    touched = ev.select(*keys)
-    return base.join(touched, keys, "left_anti").unionByName(survivors)
-
-
 class CrawlEngine:
     def __init__(
         self,
@@ -110,38 +65,11 @@ class CrawlEngine:
         politeness: DataFrame | None = None,
         default_refill: int = 20,
         max_retries: int = schemas.MAX_RETRIES,
-        merge_mode: str = "cow",
         compact_every: int = 8,
-        seen_prefilter: str | None = None,
-        filter_buckets: int = 64,
-        filter_capacity: int = 1 << 17,
-        robots_grammar: str = "prefix",
         param_rules: DataFrame | None = None,
     ):
-        """``merge_mode``:
-
-        - ``"cow"`` (default): copy-on-write — the pending slice is
-          rewritten whole each round (simple; write I/O O(|pending|)).
-        - ``"mor"``: merge-on-read — each round writes only a tombstone
-          delta (popped keys) and an addition delta (retry re-pends),
-          write I/O O(|popped|); reads reconstruct base ⊖ tombstones ⊕
-          additions, and every ``compact_every`` rounds the state is
-          compacted back to a full snapshot (bounding read depth). This
-          is the Iceberg MERGE-on-read analog and the mode that matters
-          at 10^10 pending rows, where rewriting the slice per round IS
-          the I/O bill. Equivalence with cow is fixture-pinned
-          (tests/test_crawl_engine.py).
-        """
-        if robots_grammar not in ("prefix", "rfc9309"):
-            raise ValueError(f"unknown robots_grammar: {robots_grammar!r}")
         self.spark = spark
         self.catalog = SnapshotCatalog(spark, workdir)
-        # "rfc9309" evaluates rules through the wildcard matcher
-        # (frontier.allowed_by_robots_wildcards: '*' / trailing '$');
-        # plain prefixes are a strict subset of that grammar, so on
-        # prefix-only rule sets the two modes produce the identical
-        # crawl (order-equivalence pinned in test_crawl_engine).
-        self.robots_grammar = robots_grammar
         # learned DUST strip rules (a prior crawl's dust_rules() output):
         # applied to absolute seed URLs BEFORE canonicalization, so
         # learned session-id aliases collapse into one seen-set key and
@@ -154,28 +82,7 @@ class CrawlEngine:
         )
         self.default_refill = default_refill
         self.max_retries = max_retries
-        if merge_mode not in ("cow", "mor"):
-            raise ValueError(f"merge_mode must be cow|mor, got {merge_mode!r}")
-        self.merge_mode = merge_mode
         self.compact_every = max(1, compact_every)
-        # approximate-membership pre-pass for the incremental-ingest
-        # anti-join ("bloom" | "cuckoo" | None): PERSISTENT per-bucket
-        # filter state in the catalog, folded incrementally per committed
-        # ingest — probing costs O(|batch| + filter state), never a
-        # seen-set shuffle (round-2 verdict item 1). Output identical to
-        # the exact path either way.
-        self.seen_prefilter = seen_prefilter
-        self.filter_store = (
-            SeenFilterStore(
-                self.catalog,
-                kind=seen_prefilter,
-                n_buckets=filter_buckets,
-                capacity_per_bucket=filter_capacity,
-                compact_every=self.compact_every,
-            )
-            if seen_prefilter
-            else None
-        )
         # cached eligible-pending count, maintained by lineage arithmetic
         # (eligible' = eligible - popped + re-pended); None = recount once
         self._eligible_left: int | None = None
@@ -185,52 +92,7 @@ class CrawlEngine:
         # 1-row agg, once per engine lifetime
         self._pop_salts: int | None = None
 
-    # ------------------------------------------------------------- pending io
-    def _read_pending(self, round_no: int) -> DataFrame:
-        """The pending slice as of ``round_no``. cow: read the snapshot.
-        mor: latest-event-wins reconstruction — base snapshot ⊖ any key
-        with a delta event, ⊕ the rows whose newest event is an addition
-        (a round pops a row [tombstone] and may re-pend it [addition] in
-        the same round: the addition wins ties)."""
-        if self.merge_mode != "mor":
-            return self.catalog.read("pending", round_no)
-        base_r = next(
-            r for r in range(round_no, -1, -1)
-            if self.catalog.exists("pending", r)
-        )
-        base = self.catalog.read("pending", base_r)
-        adds, tombs = [], []
-        for r in range(base_r + 1, round_no + 1):
-            if self.catalog.exists("pending_add", r):
-                adds.append(
-                    self.catalog.read("pending_add", r).withColumn("__r", F.lit(r))
-                )
-            if self.catalog.exists("pending_tomb", r):
-                tombs.append(
-                    self.catalog.read("pending_tomb", r).withColumn("__r", F.lit(r))
-                )
-        if not adds and not tombs:
-            return base
-        return merge_pending(self.spark, base, adds, tombs)
-
-    def _write_pending(
-        self,
-        round_no: int,
-        next_pending: DataFrame,
-        tombstones: DataFrame,
-        additions: DataFrame,
-    ) -> None:
-        """cow / mor-compaction rounds: materialize the full slice.
-        mor delta rounds: write only O(|popped|) tombstone keys +
-        re-pend rows."""
-        if self.merge_mode == "mor" and round_no % self.compact_every != 0:
-            self.catalog.write(
-                "pending_tomb", round_no, tombstones.coalesce(4)
-            )
-            self.catalog.write("pending_add", round_no, additions.coalesce(4))
-        else:
-            self.catalog.write("pending", round_no, next_pending)
-
+    # ------------------------------------------------------------ state reads
     def _read_accreted(self, table: str, upto_round: int) -> DataFrame:
         """Generic base+delta read for an append-only table folded on the
         compaction cadence: newest ``{table}_base`` snapshot ⊕ per-round
@@ -301,9 +163,9 @@ class CrawlEngine:
 
     def _prune_seen_deltas(self) -> None:
         """Post-commit: drop snapshots superseded by a newer base/fold —
-        deltas at or before the newest seen_keys base, older bases, and
-        older filter-state rounds (read paths only ever touch the newest
-        of each, so a crash mid-prune just leaves unread garbage)."""
+        deltas at or before the newest seen_keys base and older bases
+        (read paths only ever touch the newest of each, so a crash
+        mid-prune just leaves unread garbage)."""
         latest = self.catalog.latest_round()
         if latest is None:
             return
@@ -311,14 +173,11 @@ class CrawlEngine:
         if base_r is not None:
             self.catalog.prune_upto("seen_keys_delta", base_r)
             self.catalog.prune_upto("seen_keys", base_r - 1)
-        # filter-state pruning lives in SeenFilterStore (it prunes its
-        # own superseded bases/deltas at compaction/rebuild time)
         cur_r = self.catalog.latest_existing("cursors", latest)
         if cur_r is not None:
             self.catalog.prune_upto("cursors", cur_r - 1)
         self.catalog.prune_upto("tokens", latest - 1)
-        if self.merge_mode != "mor":
-            self.catalog.prune_upto("pending", latest - 1)
+        self.catalog.prune_upto("pending", latest - 1)
 
     # ----------------------------------------------------------------- cursors
     # cursors(source, last_url, published_ts, url_hash, round): the newest
@@ -374,7 +233,7 @@ class CrawlEngine:
     def ingest(self, seed: DataFrame) -> None:
         """Seed list → frontier round 0: canonicalize, hash, first-wins
         dedup (the URL-seen set), initial pending state, seen-keys base,
-        filter state, per-source cursors.
+        per-source cursors.
         """
         cand = with_url_columns(self._with_learned_rules(seed), "url")
         fresh = seen_set.ingest_batch(cand, seen=None)
@@ -406,8 +265,6 @@ class CrawlEngine:
                 "url_hash"
             ),
         )
-        if self.filter_store is not None:
-            self.filter_store.fold(0, keys0)
         cursors = self._cursor_rows(admitted).withColumn("round", F.lit(0))
         self.catalog.write("cursors", 0, cursors.coalesce(1))
         tokens = self.spark.createDataFrame([], "host string, tokens int")
@@ -427,30 +284,22 @@ class CrawlEngine:
         Steady-state cost per poll is O(|batch|) work + a bounded number
         of snapshot reads: the seen side is the compacted ``seen_keys``
         base ⊕ ≤compact_every deltas (never a per-round `done` union),
-        the optional bloom/cuckoo pre-pass probes PERSISTED filter state
-        and folds this batch's keys back in (never rebuilding from the
-        seen set), and the cursors fold prev ⊕ batch instead of
-        re-scanning pending.
+        and the cursors fold prev ⊕ batch instead of re-scanning
+        pending.
         """
-        # a crashed earlier attempt may have left uncommitted round dirs;
-        # every read below resolves strictly ≤ the last committed round,
-        # but the mor pending-base probe scans raw dirs — clean first so
-        # a direct ingest_incremental() after a crash (without run())
-        # never reads a half-written snapshot
+        # a crashed earlier attempt may have left uncommitted round dirs
+        # (say, a compacted seen_keys base at the round this call is about
+        # to commit); clean first so a direct ingest_incremental() after a
+        # crash (without run()) never commits a half-written snapshot
         self.catalog.drop_uncommitted()
         prev = self.catalog.latest_round()
         if prev is None:
             raise RuntimeError("ingest() first — no committed round 0")
         round_no = prev + 1
-        prev_pending = self._read_pending(prev)
+        prev_pending = self.catalog.read("pending", prev)
         seen = self._read_seen_keys(prev)
         cand = with_url_columns(self._with_learned_rules(seed), "url")
-        fresh = seen_set.dedup_first_wins(cand)
-        if self.filter_store is not None:
-            self._ensure_filter_fresh(prev, seen)
-            fresh = self.filter_store.unseen(fresh, seen, prev)
-        else:
-            fresh = seen_set.unseen_only(fresh, seen)
+        fresh = seen_set.ingest_batch(cand, seen)
         new_rows = fresh.select(
             "url", "canonical_url", "url_hash", "host", "source",
             F.pmod(F.col("url_hash"), F.lit(3)).cast("int").alias("priority"),
@@ -460,31 +309,13 @@ class CrawlEngine:
             F.lit(None).cast("int").alias("last_tried_round"),
         ).cache()
         n_new = new_rows.count()
-        merged = prev_pending.unionByName(new_rows)
         # discovery round = pure additions (nothing popped)
-        empty_keys = self.spark.createDataFrame(
-            [], "url_hash long, canonical_url string"
-        )
-        self._write_pending(round_no, merged, empty_keys, new_rows)
+        self.catalog.write("pending", round_no, prev_pending.unionByName(new_rows))
         # tokens are unchanged by a discovery round — metadata-only copy,
         # not a Spark read+write job
         self.catalog.copy_snapshot("tokens", prev, round_no)
         new_keys = new_rows.select("url_hash", "canonical_url")
         self._write_seen_keys(round_no, new_keys, seen)
-        if self.filter_store is not None:
-            self.filter_store.fold(round_no, new_keys)
-            # overflow check on the compaction cadence only — it is a
-            # driver round-trip, and a filter a few polls past 0.9 load
-            # just degrades fpr (never correctness)
-            if (
-                round_no % self.compact_every == 0
-                and self.filter_store.max_load(round_no) > 0.9
-            ):
-                # doubling rebuild from the full key set — amortized
-                # O(1)/key; the only O(|seen|) step left, and it is rare
-                self.filter_store.rebuild(
-                    round_no, seen.unionByName(new_keys)
-                )
         prev_cur_r = self.catalog.latest_existing("cursors", prev)
         cursors = self._fold_cursors(
             self.catalog.read("cursors", prev_cur_r), new_rows, round_no
@@ -496,29 +327,6 @@ class CrawlEngine:
         if self._eligible_left is not None:
             self._eligible_left += n_new  # admitted rows are all eligible
         return n_new
-
-    def _ensure_filter_fresh(self, prev: int, seen: DataFrame) -> None:
-        """Rebuild filter state when it lags the seen_keys table — a
-        store attached to a pre-existing catalog (or re-enabled after
-        exact-path ingests, or orphaned by a crash between a compaction's
-        base write and its commit) would otherwise re-admit every key
-        that was never folded (round-3 advice bug). Newest-write
-        comparison only — two directory probes, no data read."""
-        seen_rounds = [
-            r
-            for r in (
-                self.catalog.latest_existing("seen_keys", prev),
-                self.catalog.latest_existing("seen_keys_delta", prev),
-            )
-            if r is not None
-        ]
-        if not seen_rounds:
-            return
-        filt_r = self.filter_store.latest_state_round(prev)
-        if filt_r is None or filt_r < max(seen_rounds):
-            self.filter_store.rebuild(
-                prev, seen, capacity_per_bucket=self.filter_store.capacity
-            )
 
     # ------------------------------------------------------------------ rounds
     def _budgets(self, pending: DataFrame, prev_tokens: DataFrame) -> DataFrame:
@@ -544,22 +352,11 @@ class CrawlEngine:
         committed). Idempotent: re-running after a crash overwrites the
         uncommitted outputs and commits once."""
         prev = round_no - 1
-        pending = self._read_pending(prev)
-        if self.merge_mode == "mor":
-            # the reconstructed slice feeds two actions this round (pop
-            # materialization + next-pending write); persist so the
-            # base⊖tombs⊕adds plan runs once, spilling if large
-            pending = pending.persist()
+        pending = self.catalog.read("pending", prev)
         prev_tokens = self.catalog.read("tokens", prev)
 
         eligible = frontier_ops.eligible(pending, self.max_retries)
-        if self.robots_grammar == "rfc9309":
-            allowed = frontier_ops.allowed_by_robots_wildcards(
-                eligible,
-                self.robots.withColumnRenamed("path_prefix", "pattern"),
-            )
-        else:
-            allowed = frontier_ops.allowed_by_robots(eligible, self.robots)
+        allowed = frontier_ops.allowed_by_robots(eligible, self.robots)
         budgets = self._budgets(allowed, prev_tokens)
         if self._pop_salts is None:
             max_cap = (
@@ -656,12 +453,7 @@ class CrawlEngine:
             "url_hash",
         )
 
-        self._write_pending(
-            round_no,
-            next_pending,
-            tombstones=popped.select("url_hash", "canonical_url"),
-            additions=still_pending,
-        )
+        self.catalog.write("pending", round_no, next_pending)
         # done is append-only; on the compaction cadence the per-round
         # snapshots fold into a ``done_base`` snapshot so the read path
         # touches O(compact_every) dirs, not one per round forever. The
@@ -736,21 +528,13 @@ class CrawlEngine:
                 self.catalog.prune_upto(f"{table}_base", round_no - 1)
         # tokens: only the newest snapshot is ever read (next step's prev)
         self.catalog.prune_upto("tokens", round_no - 1)
-        # pending: cow rereads only the newest slice; mor needs the newest
-        # FULL snapshot (a compact round) plus the tomb/add deltas after it
-        if self.merge_mode != "mor":
-            self.catalog.prune_upto("pending", round_no - 1)
-        elif compact_done:
-            self.catalog.prune_upto("pending", round_no - 1)
-            self.catalog.prune_upto("pending_tomb", round_no)
-            self.catalog.prune_upto("pending_add", round_no)
+        # pending: only the newest slice is ever reread
+        self.catalog.prune_upto("pending", round_no - 1)
         # cache update only after the commit: a failed commit + step retry
         # would otherwise apply the recurrence twice
         self._eligible_left = pending_left
         popped.unpersist()
         fetched.unpersist()
-        if self.merge_mode == "mor":
-            pending.unpersist()
         return RoundStats(round_no, n_popped, n_ok, n_popped - n_ok, pending_left)
 
     def run(self, max_rounds: int = 1000) -> list[RoundStats]:
@@ -785,7 +569,7 @@ class CrawlEngine:
 
     def final_frontier(self) -> DataFrame:
         last = self.catalog.latest_round()
-        pending = self._read_pending(last)
+        pending = self.catalog.read("pending", last)
         done = self._read_done(last)
         return pending.unionByName(done)
 
@@ -806,15 +590,9 @@ class CrawlEngine:
         last = self.catalog.latest_round()
         if last is None:
             raise FileNotFoundError("no committed rounds — ingest() first")
-        pending = self._read_pending(last)
+        pending = self.catalog.read("pending", last)
         eligible = frontier_ops.eligible(pending, self.max_retries)
-        if self.robots_grammar == "rfc9309":
-            allowed = frontier_ops.allowed_by_robots_wildcards(
-                eligible,
-                self.robots.withColumnRenamed("path_prefix", "pattern"),
-            )
-        else:
-            allowed = frontier_ops.allowed_by_robots(eligible, self.robots)
+        allowed = frontier_ops.allowed_by_robots(eligible, self.robots)
         budgets = self._budgets(allowed, self.catalog.read("tokens", last))
         return frontier_ops.drain_eta(
             allowed, budgets, self.default_refill, rounds_cap
@@ -851,8 +629,8 @@ class CrawlEngine:
         """Open-web mode: crawl the frontier to quiescence, extract the
         links embedded in the pages just fetched, admit the unseen ones
         (exactly the ``ingest_incremental`` path a discovery poll uses —
-        seen anti-join, filter fold, cursor fold all included), and
-        repeat until a cycle discovers nothing new.
+        seen anti-join and cursor fold included), and repeat until a
+        cycle discovers nothing new.
 
         The reference never snowballs — its collectors enumerate
         closed per-source lists (archives/RSS/sitemaps) and the page

@@ -1,29 +1,21 @@
-"""Filesystem abstraction for the catalog's and filter store's direct IO.
+"""Filesystem abstraction for the catalog's direct IO.
 
-``SnapshotCatalog`` and ``SeenFilterStore`` do a small amount of
-non-Spark file IO: commit markers, snapshot listing/pruning, the filter
-store's ``_META.json``, delta byte accounting, and — the one
-executor-side case — the probe's pruned read of bucket blobs
-(seen_filter.py). The round-4 implementation used ``os.path``/``shutil``
-directly, which silently breaks the moment the catalog root is not
-shared POSIX storage: on a worker, ``os.path.isdir("s3a://…")`` is
-simply ``False``, so the probe would have declared every base-covered
-key unseen — false negatives that re-admit already-crawled URLs with no
-error raised (ADVICE round 4, medium). This module routes every such
-access through ``pyarrow.fs`` instead:
+``SnapshotCatalog`` does a small amount of non-Spark file IO: commit
+markers and snapshot listing, pruning and carry-forward. Plain
+``os.path``/``shutil`` calls silently break the moment the catalog root
+is not shared POSIX storage (``os.path.isdir("s3a://…")`` is simply
+``False``), so every such access routes through ``pyarrow.fs``:
 
-- **scheme-less paths** take an ``os``/``shutil`` fast path —
-  bit-identical to the round-4 behavior, no FileSystem object anywhere
-  in the hot loop;
+- **scheme-less paths** take an ``os``/``shutil`` fast path, with no
+  FileSystem object anywhere in the hot loop;
 - **URI paths** resolve through ``pyarrow.fs.FileSystem.from_uri``
   (``file://``, ``hdfs://``, ``s3://``, ``gs://``, …), with the Hadoop
   spelling ``s3a://`` mapped to pyarrow's ``s3://``;
 - **tests** register an in-memory, non-POSIX filesystem under a private
   scheme via :func:`register_filesystem` to pin that no ``os.path``
   call hides inside any routine (tests/test_fsio.py), and run the whole
-  engine against ``file://`` URIs end-to-end (tests/test_seen_filter.py,
-  tests/test_crawl_engine.py) so the URI plumbing crosses real Spark
-  writes and real python workers.
+  engine against ``file://`` URIs end-to-end (tests/test_seen_filter.py)
+  so the URI plumbing crosses real Spark writes.
 
 Only directory-shaped operations the catalog actually needs are
 exposed; anything fancier should go through Spark.
@@ -42,13 +34,12 @@ _SCHEME_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://")
 _SCHEME_ALIASES = {"s3a": "s3", "s3n": "s3"}
 
 # test hook: scheme → FileSystem instance (consulted before from_uri).
-# Registered per-process; executor-side code paths that must work with a
-# registered scheme are unit-tested driver-side (a worker process would
-# not see this registry).
+# Registered per-process: a worker process would not see this registry,
+# which is fine because only the driver does direct IO.
 _REGISTERED: dict[str, object] = {}
 
 # (scheme, authority-less prefix) → resolved FileSystem; from_uri can be
-# costly for remote filesystems and the probe calls resolve per task.
+# costly for remote filesystems and the catalog resolves on every listing.
 _FS_CACHE: dict[str, tuple[object, str]] = {}
 
 
@@ -98,28 +89,13 @@ def join(base: str, *parts: str) -> str:
     return posixpath.join(base, *parts)
 
 
-def _info(fs, fs_path: str):
-    from pyarrow import fs as pafs  # noqa: F401  (FileType lives here)
-
-    return fs.get_file_info(fs_path)
-
-
 def is_dir(path: str) -> bool:
     fs, p = resolve(path)
     if fs is None:
         return os.path.isdir(p)
     from pyarrow.fs import FileType
 
-    return _info(fs, p).type == FileType.Directory
-
-
-def exists(path: str) -> bool:
-    fs, p = resolve(path)
-    if fs is None:
-        return os.path.exists(p)
-    from pyarrow.fs import FileType
-
-    return _info(fs, p).type != FileType.NotFound
+    return fs.get_file_info(p).type == FileType.Directory
 
 
 def listdir(path: str) -> list[str]:
@@ -179,52 +155,3 @@ def touch(path: str) -> None:
         open(p, "w").close()
     else:
         fs.open_output_stream(p).close()
-
-
-def read_bytes(path: str) -> bytes:
-    fs, p = resolve(path)
-    if fs is None:
-        with open(p, "rb") as fh:
-            return fh.read()
-    with fs.open_input_stream(p) as stream:
-        return stream.read()
-
-
-def write_bytes(path: str, data: bytes) -> None:
-    fs, p = resolve(path)
-    if fs is None:
-        with open(p, "wb") as fh:
-            fh.write(data)
-        return
-    with fs.open_output_stream(p) as stream:
-        stream.write(data)
-
-
-def du(path: str) -> int:
-    """Recursive on-disk bytes under a directory (0 if missing)."""
-    fs, p = resolve(path)
-    if fs is None:
-        total = 0
-        for root, _dirs, files in os.walk(p):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-    from pyarrow.fs import FileSelector, FileType
-
-    sel = FileSelector(p, recursive=True, allow_not_found=True)
-    return sum(
-        info.size for info in fs.get_file_info(sel) if info.type == FileType.File
-    )
-
-
-def read_parquet_column(path: str, column: str):
-    """All values of one column from a parquet file/dir — the probe's
-    pruned blob read. Returns a pyarrow ChunkedArray (empty if the
-    directory holds no rows)."""
-    import pyarrow.parquet as pq
-
-    fs, p = resolve(path)
-    if fs is None:
-        tbl = pq.read_table(p, columns=[column])
-    else:
-        tbl = pq.read_table(p, columns=[column], filesystem=fs)
-    return tbl.column(column)

@@ -846,8 +846,9 @@ def _with_simhash_md5_kernel(
                     outs[w][i] = int(packed.astype(np.int64))
             out = pd.DataFrame({"doc_id": pdf[id_col]})
             for w, c in enumerate(out_cols):
-                s = pd.Series(outs[w])
-                out[c] = s.where(~nulls, None) if nulls.any() else s
+                # nullable Int64, never where(): a NULL would upcast the
+                # int64 column to float64 and round every sketch > 2^53
+                out[c] = pd.arrays.IntegerArray(outs[w], nulls)
             yield out
 
     id_type = docs.select(F.col(id_col)).schema.fields[0].dataType.simpleString()

@@ -65,8 +65,9 @@ def split_url(url: Column) -> tuple[Column, Column, Column]:
     # anchor the query to the PRE-fragment portion: a '?' that first
     # appears inside the fragment (https://h/p#frag?x=1) is fragment
     # text, not a query — the unanchored form minted bogus param
-    # evidence from it (ADVICE round 5)
-    query = F.regexp_extract(url, r"^[^#]*\?([^#]*)", 1)
+    # evidence from it (ADVICE round 5). The prefix cannot cross a '?',
+    # so the query starts at the FIRST one (p?a=1?b=2 → "a=1?b=2")
+    query = F.regexp_extract(url, r"^[^#?]*\?([^#]*)", 1)
     params = F.when(query == "", _empty_str_array()).otherwise(
         F.array_sort(F.split(query, "&"))
     )

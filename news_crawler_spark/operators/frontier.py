@@ -219,7 +219,7 @@ def url_trap_flags(
 
     Scale shape: pure whole-stage-codegen expressions over the URL
     string (regexp split + higher-order array ops, no UDF, no shuffle)
-    — a map-side admission filter in front of merge_pending, so trap
+    — a map-side admission filter in front of the pending merge, so trap
     URLs never cost frontier storage or MERGE work. The segment-repeat
     count is O(depth²) per row with depth ≤ a few dozen — flat register
     work next to the parquet scan it fuses into.

@@ -15,15 +15,13 @@ Spark-first restatement (SURVEY.md §2.3 J1/J2):
 
 At 100 TB the anti-join is the hot path; Spark's runtime bloom-filter
 join reduction (spark.sql.optimizer.runtime.bloomFilter.enabled, see
-session.py) injects a bloom pre-filter on the scan side automatically. For
-clusters where that is disabled, ``bloom.py`` provides an explicit
-partition-local bloom pre-pass; the exact anti-join always remains the
-correctness backstop (a bloom "maybe" is never treated as "seen").
+session.py) injects a bloom pre-filter on the scan side automatically, so
+the engine carries no approximate-membership pre-pass of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -67,38 +65,10 @@ def unseen_only(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     return candidates.join(seen_keys, ["url_hash", "canonical_url"], "left_anti")
 
 
-def ingest_batch(
-    candidates: DataFrame,
-    seen: DataFrame | None,
-    use_bloom: bool = False,
-    prefilter: str | None = None,
-) -> DataFrame:
+def ingest_batch(candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
     """Full ON-CONFLICT-DO-NOTHING equivalent: within-batch first-wins dedup,
-    then drop anything already seen. Returns the rows to insert.
-
-    ``prefilter`` routes the cross-batch check through a partition-local
-    approximate-membership pre-pass — identical output (property-tested),
-    ~n·fpr of the candidates reach the exact join instead of all of them.
-    Worth it when |seen| ≫ |batch| (steady-state incremental crawl):
-
-    - ``"bloom"`` (functions/bloom.py): smallest memory, no delete.
-    - ``"cuckoo"`` (functions/cuckoo.py): similar fpr, supports DELETE —
-      use when seen-set retirement (domain removal, erasure) is live.
-
-    ``use_bloom=True`` is the legacy spelling of ``prefilter="bloom"``.
-    """
+    then drop anything already seen. Returns the rows to insert."""
     fresh = dedup_first_wins(candidates)
     if seen is not None:
-        if use_bloom:
-            prefilter = "bloom"
-        if prefilter == "bloom":
-            from ..functions.bloom import bloom_unseen
-
-            fresh = bloom_unseen(fresh, seen)
-        elif prefilter == "cuckoo":
-            from ..functions.cuckoo import cuckoo_unseen
-
-            fresh = cuckoo_unseen(fresh, seen)
-        else:
-            fresh = unseen_only(fresh, seen)
+        fresh = unseen_only(fresh, seen)
     return fresh

@@ -1284,7 +1284,8 @@ def pq_encode(
     ascending, so the LOWEST code wins ties — the twin's ORDER BY
     dist, code (pinned bit-for-bit in tests/test_pq.py).
 
-    Returns ``(vec_id, codes array<int>, code_word long)`` where
+    Returns ``(vec_id, codes array<int>, code_word long)``, ``vec_id``
+    keeping the input id column's type, where
     code_word = Σ codes[m]·code_base^m — the whole code in one BIGINT
     (n_sub·log2(code_base) ≤ 63 bits; 32 at the 8×16 default), the
     column an ADC scan actually reads.
@@ -1334,6 +1335,7 @@ def pq_encode(
             out["code_word"] = codes @ mults
             yield out
 
+    id_type = embeddings.select(F.col(id_col)).schema.fields[0].dataType.simpleString()
     extra_schema = "".join(
         f", {f.name} {f.dataType.simpleString()}"
         for f in embeddings.select(*extra_cols).schema.fields
@@ -1342,7 +1344,7 @@ def pq_encode(
         F.col(id_col).alias("vec_id"), *extra_cols, F.col(src)
     ).mapInPandas(
         enc_fn,
-        schema=f"vec_id long{extra_schema}, codes array<int>, code_word long",
+        schema=f"vec_id {id_type}{extra_schema}, codes array<int>, code_word long",
     )
 
 
@@ -1444,8 +1446,8 @@ def pq_topk_rerank(
 
     Scale shape: the candidate set is a bounded collect (≤ r_cand
     rows), re-fetched via an ``isin`` filter — an In-pushdown the
-    parquet scan prunes with (the seen_filter sliver-confirm pattern),
-    so the re-rank touches ~r_cand rows of a 10⁹-row table, joined
+    parquet scan prunes with (session.py raises the In-pushdown
+    threshold for it), so the re-rank touches ~r_cand rows of a 10⁹-row table, joined
     broadcast back to their ADC scores. Total order (dist, vec_id) on
     the output keeps LIMIT deterministic for the v11 twin.
     """

@@ -18,6 +18,23 @@ from pyspark.sql import SparkSession
 # them broadcast even at large rule counts.
 _BROADCAST_THRESHOLD = str(64 * 1024 * 1024)
 
+# Driver heap cap: local mode runs every executor inside the driver JVM.
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Half of this host's MemTotal, capped at 48g — a fixed 48g heap
+    on a smaller machine lets the JVM grow until the kernel kills it."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(total_mb // 2, _MAX_DRIVER_MEM_MB)}m"
+    except OSError:
+        pass
+    return f"{_MAX_DRIVER_MEM_MB}m"
+
 
 def get_spark(
     app_name: str = "news_crawler_spark",
@@ -31,6 +48,9 @@ def get_spark(
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores. Shuffle
     partitions default to the core count — correct for local mode; on a
     cluster AQE coalescing re-sizes post-shuffle partitions anyway.
+
+    ``spark.driver.memory`` is $SPARK_DRIVER_MEM when set, else half of
+    the host's memory capped at 48g.
 
     ``master``: explicit master URL; ``"inherit"`` sets NO master so the
     one provided by ``spark-submit --master`` wins (cluster deployment,
@@ -55,18 +75,21 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # runtime bloom-filter join pre-filtering for large anti/semi joins
         # (note: runtimeFilter.semiJoinReduction hangs session startup on
         # this pyspark build — do not enable it)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # push moderate IN-lists down to parquet (default 10): the
-        # seen-set confirm path filters the range-sorted seen_keys scan
-        # by the maybe-sliver's url_hash list, and rowgroup min/max
-        # stats prune it only if the In predicate actually reaches the
-        # reader. Capped at 300 — parquet evaluates a pushed In as a
+        # push moderate IN-lists down to parquet (default 10): the PQ
+        # re-rank in similarity.py filters the vectors scan by its
+        # candidate-id ``isin`` list, and rowgroup min/max stats prune
+        # it only if the In predicate actually reaches the reader.
+        # Capped at 300 — parquet evaluates a pushed In as a
         # RECURSIVE Or tree, and ~2000 values overflowed the executor
         # stack (scala.MatchError: StackOverflowError in FileScanRDD)
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "300")

@@ -60,8 +60,8 @@ def start_ingest_stream(
     incremental ingest: the batch becomes a committed discovery round,
     deduped against the full seen set. Batches are tiny next to the
     frontier, so the per-batch cost is the anti-join of |batch| rows
-    against the seen set (bloom-assisted when enabled) — NOT a frontier
-    rewrite per event.
+    against the seen set (Spark's runtime bloom filter prunes the seen
+    side) — NOT a frontier rewrite per event.
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

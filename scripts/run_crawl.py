@@ -41,21 +41,9 @@ def main() -> None:
     ap.add_argument("--master", default=None,
                     help="'inherit' under spark-submit; default local[N]")
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--merge-mode", choices=("cow", "mor"), default="cow",
-                    help="pending-state strategy: cow rewrites the slice "
-                         "per round; mor writes O(|popped|) deltas + "
-                         "periodic compaction (the 10^10-row mode)")
     ap.add_argument("--compact-every", type=int, default=8,
-                    help="mor: full-snapshot compaction interval (rounds)")
-    ap.add_argument("--seen-prefilter", choices=("bloom", "cuckoo"),
-                    default=None,
-                    help="approximate pre-pass for incremental-ingest "
-                         "anti-joins (steady state, |seen| >> |batch|)")
-    ap.add_argument("--robots-grammar", choices=("prefix", "rfc9309"),
-                    default="prefix",
-                    help="robots rule grammar: plain path prefixes, or "
-                         "the full RFC 9309 wildcard grammar ('*', "
-                         "trailing '$') big sites ship")
+                    help="compaction interval (rounds) of the done, seen-key, "
+                         "pops and lineage logs")
     ap.add_argument("--dust-rules", action="store_true",
                     help="after the crawl, mine per-host content-neutral "
                          "query params from this crawl's own documents "
@@ -75,10 +63,7 @@ def main() -> None:
 
     spark = get_spark(app_name="crawl_run", cores=args.cpus, master=args.master)
     eng = CrawlEngine(spark, args.workdir, default_refill=args.refill,
-                      merge_mode=args.merge_mode,
-                      compact_every=args.compact_every,
-                      seen_prefilter=args.seen_prefilter,
-                      robots_grammar=args.robots_grammar)
+                      compact_every=args.compact_every)
 
     t0 = time.perf_counter()
     if eng.catalog.latest_round() is None:

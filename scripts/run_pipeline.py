@@ -45,7 +45,6 @@ def main() -> None:
     ap.add_argument("--query", default="economy oil market")
     ap.add_argument("--k", type=int, default=5)
     ap.add_argument("--dim", type=int, default=32)
-    ap.add_argument("--merge-mode", choices=("cow", "mor"), default="cow")
     ap.add_argument("--master", default=None)
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
@@ -61,8 +60,7 @@ def main() -> None:
     out["discovered_links"] = fresh.count()
 
     # 2. crawl: frontier rounds to quiescence (resumes if workdir exists)
-    eng = CrawlEngine(spark, os.path.join(args.workdir, "crawl"),
-                      merge_mode=args.merge_mode)
+    eng = CrawlEngine(spark, os.path.join(args.workdir, "crawl"))
     if eng.catalog.latest_round() is None:
         eng.ingest(fresh)
     stats = eng.run()

@@ -12,6 +12,6 @@ from news_crawler_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="nc_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="nc_spark_tests")
     yield s
     s.stop()

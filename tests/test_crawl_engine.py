@@ -186,107 +186,46 @@ def test_first_wins_dedup_nulls_lose(spark):
     assert got[2] is None                    # all-NULL group still survives
 
 
-def test_mor_mode_equals_cow(spark, oracle_result, tmp_path_factory):
-    """Merge-on-read pending (tombstone/addition deltas + periodic
-    compaction) must be observation-equivalent to the reference-semantics
-    oracle (which the cow engine is pinned to by the fixtures above):
-    same pop sequence, same final state machine — while writing only
-    O(|popped|) pending bytes on delta rounds. (Compared against the
-    oracle, not the shared engine_run fixture: a later test mutates that
-    engine with incremental ingests.)"""
-    wd = str(tmp_path_factory.mktemp("engine_mor"))
-    eng = CrawlEngine(spark, wd, merge_mode="mor", compact_every=3)
-    eng.ingest(synth.build_seed_list(spark, N_SEED))
-    stats = eng.run()
-    assert len(stats) > 3  # deltas AND a compaction round both exercised
-    got_pops = [(r.round, r.host, r.canonical_url)
-                for r in eng.pops_in_order().collect()]
-    want_pops = sorted(oracle_result.pops, key=lambda p: (p[0], p[1]))
-    assert got_pops == want_pops
-    got = {r.canonical_url: (r.status, r.tried_count)
-           for r in eng.final_frontier().collect()}
-    robots = synth.robots_rows()
-    for cu, e in oracle_result.seen.items():
-        if not oracle._robots_allows(robots, e.host, cu):
-            assert got[cu] == (STATUS_PENDING, 0)
-        else:
-            assert got[cu] == (e.status, e.tried_count), cu
-    assert len(got) == len(oracle_result.seen)
-    assert eng.documents().count() == len(oracle_result.docs)
-    # delta rounds really skipped the full-slice write
-    import os
-    pend_rounds = set(os.listdir(os.path.join(wd, "pending")))
-    assert "round=1" not in pend_rounds            # delta round
-    # only full snapshots from compaction rounds exist, and post-commit GC
-    # keeps just the newest (older fulls are unreachable by any read)
-    nums = sorted(int(d.split("=")[1]) for d in pend_rounds)
-    assert len(nums) == 1 and nums[0] % 3 == 0, pend_rounds
+def test_rfc9309_grammar_equals_prefix_on_prefix_rules(spark):
+    """Plain prefixes are a strict subset of the RFC 9309 grammar (no
+    '*', no trailing '$' → pure startswith, same longest-match and
+    allow-wins-tie rules), so on the prefix-only synth robots both
+    matchers keep the identical survivor set over a seed frontier, and
+    that set is the oracle's."""
+    from news_crawler_spark.functions.urls import with_url_columns
+    from news_crawler_spark.operators.frontier import (
+        allowed_by_robots,
+        allowed_by_robots_wildcards,
+    )
 
-
-def test_rfc9309_grammar_equals_prefix_on_prefix_rules(
-    spark, oracle_result, tmp_path_factory
-):
-    """robots_grammar="rfc9309" on a prefix-only rule set must produce
-    the IDENTICAL crawl (plain prefixes are a strict subset of the
-    wildcard grammar: no '*', no trailing '$' → pure startswith, same
-    longest-match/tie semantics) — pinned against the same
-    reference-semantics oracle the prefix engine is pinned to."""
-    wd = str(tmp_path_factory.mktemp("engine_rfc"))
-    eng = CrawlEngine(spark, wd, robots_grammar="rfc9309")
-    eng.ingest(synth.build_seed_list(spark, N_SEED))
-    eng.run()
-    got_pops = [(r.round, r.host, r.canonical_url)
-                for r in eng.pops_in_order().collect()]
-    want_pops = sorted(oracle_result.pops, key=lambda p: (p[0], p[1]))
-    assert got_pops == want_pops
-    assert eng.documents().count() == len(oracle_result.docs)
-
-
-def test_mor_resume_equals_uninterrupted(spark, tmp_path_factory):
-    """Kill/resume in mor mode: crash after a committed DELTA round (the
-    hard case — resume must reconstruct pending from base + deltas)."""
-    seeds = synth.build_seed_list(spark, N_SEED)
-    wd = str(tmp_path_factory.mktemp("mor_resume"))
-    eng = CrawlEngine(spark, wd, merge_mode="mor", compact_every=4)
-    eng.ingest(seeds)
-    eng.step(1)
-    eng.step(2)  # committed delta round; round 4 compaction not reached
-    # dangling uncommitted junk from the "crash"
-    eng.catalog.write("pending_tomb", 3,
-                      spark.createDataFrame([], "url_hash long, canonical_url string"))
-
-    eng2 = CrawlEngine(spark, wd, merge_mode="mor", compact_every=4)
-    eng2.run()  # resumes from round 2
-
-    wd_full = str(tmp_path_factory.mktemp("mor_full"))
-    eng_full = CrawlEngine(spark, wd_full, merge_mode="mor", compact_every=4)
-    eng_full.ingest(seeds)
-    eng_full.run()
-    got = [(r.round, r.host, r.canonical_url) for r in eng2.pops_in_order().collect()]
-    want = [(r.round, r.host, r.canonical_url) for r in eng_full.pops_in_order().collect()]
-    assert got == want
-    f1 = {(r.canonical_url, r.status, r.tried_count)
-          for r in eng_full.final_frontier().collect()}
-    f2 = {(r.canonical_url, r.status, r.tried_count)
-          for r in eng2.final_frontier().collect()}
-    assert f1 == f2
-
-
-def test_seen_prefilter_modes_identical(spark, tmp_path_factory):
-    """Engine incremental ingest admits the identical set with no
-    prefilter, the bloom pre-pass, or the cuckoo pre-pass (approximate
-    structures only divert definite-negatives around the exact join)."""
-    results = {}
-    for pf in (None, "bloom", "cuckoo"):
-        wd = str(tmp_path_factory.mktemp(f"pf_{pf}"))
-        eng = CrawlEngine(spark, wd, seen_prefilter=pf)
-        eng.ingest(synth.build_seed_list(spark, 300))
-        n = eng.ingest_incremental(synth.build_seed_list(spark, 400))
-        pend = eng.catalog.read("pending", eng.catalog.latest_round())
-        urls = frozenset(r.canonical_url for r in pend.collect())
-        results[pf] = (n, urls)
-    assert results[None] == results["bloom"] == results["cuckoo"]
-    assert results[None][0] > 0  # the batch really admitted new URLs
+    seeds = with_url_columns(synth.build_seed_list(spark, 400), "url")
+    # rule-boundary probes next to the seeds: exact prefix, inside,
+    # sibling that only shares the characters, and the deep deny
+    probes = spark.createDataFrame(
+        [
+            (host, f"https://{host}{path}")
+            for _source, host, _w in synth.SOURCES
+            for path in ("/", "/private", "/private/x", "/privatex",
+                         "/news/8400001", "/news/84000019/a")
+        ],
+        "host string, canonical_url string",
+    )
+    frontier = seeds.select("host", "canonical_url").unionByName(probes)
+    robots = synth.robots_df(spark)
+    prefix = {r.canonical_url for r in allowed_by_robots(frontier, robots).collect()}
+    wild = {
+        r.canonical_url
+        for r in allowed_by_robots_wildcards(
+            frontier, robots.withColumnRenamed("path_prefix", "pattern")
+        ).collect()
+    }
+    assert prefix == wild
+    rows = synth.robots_rows()
+    every = {(r.host, r.canonical_url) for r in frontier.collect()}
+    assert prefix == {u for h, u in every if oracle._robots_allows(rows, h, u)}
+    denied = {u for _h, u in every} - prefix
+    assert any("/news/8400001" in u for u in denied)
+    assert len(denied) > len(synth.SOURCES)  # every host's /private denied
 
 
 def test_apportion_budget_hamilton_exact(spark):
@@ -578,29 +517,6 @@ def test_snowball_resumes_after_kill_between_run_and_ingest(
         [synth.seed_row(i) for i in range(40)], universe=150
     )
     ff = e2.final_frontier().select("canonical_url", "status").collect()
-    assert {r.canonical_url for r in ff} == exp["seen"]
-    assert {
-        r.canonical_url for r in ff if r.status == "completed"
-    } == exp["completed"]
-
-
-def test_snowball_with_mor_and_cuckoo_prefilter(spark, tmp_path_factory):
-    """Feature-matrix composition: open-web discovery through the
-    merge-on-read pending state AND the persistent cuckoo seen-filter
-    must land on the identical closure — the prefilter's probe/fold
-    path is exercised by every discovery cycle's ingest_incremental."""
-    from news_crawler_spark import oracle
-
-    wd = str(tmp_path_factory.mktemp("snowball_mor"))
-    eng = CrawlEngine(
-        spark, wd, merge_mode="mor", seen_prefilter="cuckoo", compact_every=3
-    )
-    eng.ingest(synth.build_seed_list(spark, 40))
-    eng.run_snowball(max_cycles=20, universe=150)
-    exp = oracle.snowball(
-        [synth.seed_row(i) for i in range(40)], universe=150
-    )
-    ff = eng.final_frontier().select("canonical_url", "status").collect()
     assert {r.canonical_url for r in ff} == exp["seen"]
     assert {
         r.canonical_url for r in ff if r.status == "completed"

@@ -117,13 +117,15 @@ def test_fragment_urls_parse_and_rebuild_safely(spark):
     """ADVICE round 5: a '?' first appearing inside the '#fragment' is
     fragment text, not a query (no bogus param evidence, byte-identical
     pass-through), and a rewrite that fires on a fragment-carrying URL
-    must keep the fragment."""
+    must keep the fragment. The query starts at the FIRST '?': a later
+    '?' is query text, never a second query start."""
     rules = dust.mine_param_rules(_pages(spark), min_support=3)
     urls = spark.createDataFrame(
         [
             ("https://a.example/i/9#frag?sid=42",),   # '?' only in fragment
             ("https://a.example/i/9?sid=42#frag",),   # real query + fragment
             ("https://a.example/i/9?sid=42&page=1#x",),
+            ("https://a.example/i/9?page=1?sid=42",),  # one param, key page
         ],
         "url string",
     )
@@ -138,6 +140,13 @@ def test_fragment_urls_parse_and_rebuild_safely(spark):
     assert out["https://a.example/i/9?sid=42&page=1#x"] == (
         "https://a.example/i/9?page=1#x"
     )
+    assert out["https://a.example/i/9?page=1?sid=42"] == (
+        "https://a.example/i/9?page=1?sid=42"
+    )
+    parts = spark.createDataFrame([("https://h/p?a=1?b=2",)], "url string")
+    host, path, params = dust.split_url(F.col("url"))
+    got = parts.select(host.alias("h"), path.alias("p"), params.alias("q")).first()
+    assert (got.h, got.p, list(got.q)) == ("h", "/p", ["a=1?b=2"])
 
 
 def test_mine_plan_has_no_cartesian_and_bounded_shuffle(spark):

@@ -1,25 +1,19 @@
 """Storage portability of the catalog's direct IO (functions/fsio).
 
-Round-4 ADVICE (medium): the seen-filter probe read bucket blobs with
-``os.path`` + local pyarrow, so any catalog root that is not shared
-POSIX storage silently produced false negatives. These tests pin the
-fix from three directions:
+Any catalog root that is not shared POSIX storage breaks plain
+``os.path`` calls silently. These tests pin the IO layer from two
+directions:
 
 1. every fsio routine runs against a REGISTERED NON-POSIX in-memory
    filesystem (``pyarrow.fs._MockFileSystem`` under a private scheme) —
    an ``os.path`` call hiding anywhere in the IO layer fails here;
 2. the catalog's marker/listing/prune protocol runs against that same
-   in-memory fs (no Spark writes involved);
-3. the worker-side blob loader distinguishes "bucket never written"
-   (visible base → None) from "storage unreachable" (invisible base →
-   loud RuntimeError) — the exact false-negative mode from the advice.
+   in-memory fs (no Spark writes involved).
 
-The distributed half (real Spark writes + real python workers on a
-``file://`` URI root) lives in test_seen_filter.py / the engine tests.
+The distributed half (real Spark writes on a ``file://`` URI root) lives
+in the engine tests (test_seen_filter.py).
 """
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyarrow import fs as pafs
 
@@ -42,17 +36,24 @@ def u(path: str) -> str:
 
 
 # --------------------------------------------------------------- fsio routines
+def _write(fs, path: str, data: bytes) -> None:
+    with fs.open_output_stream(path) as stream:
+        stream.write(data)
+
+
+def _read(fs, path: str) -> bytes:
+    with fs.open_input_stream(path) as stream:
+        return stream.read()
+
+
 def test_roundtrip_on_non_posix_fs(memfs):
     fsio.makedirs(u("a/b"))
     assert fsio.is_dir(u("a/b"))
     assert not fsio.is_dir(u("a/zzz"))
-    fsio.write_bytes(u("a/b/x.bin"), b"hello")
-    assert fsio.exists(u("a/b/x.bin"))
-    assert fsio.read_bytes(u("a/b/x.bin")) == b"hello"
+    _write(memfs, "a/b/x.bin", b"hello")
     fsio.touch(u("a/b/_MARKER"))
     assert sorted(fsio.listdir(u("a/b"))) == ["_MARKER", "x.bin"]
     assert fsio.listdir(u("a/nope")) == []
-    assert fsio.du(u("a")) == 5
     fsio.rmtree(u("a/b"))
     assert not fsio.is_dir(u("a/b"))
     fsio.rmtree(u("a/b"))  # missing → no-op, prune semantics
@@ -60,11 +61,11 @@ def test_roundtrip_on_non_posix_fs(memfs):
 
 def test_copytree_on_non_posix_fs(memfs):
     fsio.makedirs(u("src/inner"))
-    fsio.write_bytes(u("src/f1"), b"11")
-    fsio.write_bytes(u("src/inner/f2"), b"222")
+    _write(memfs, "src/f1", b"11")
+    _write(memfs, "src/inner/f2", b"222")
     fsio.copytree(u("src"), u("dst"))
-    assert fsio.read_bytes(u("dst/f1")) == b"11"
-    assert fsio.read_bytes(u("dst/inner/f2")) == b"222"
+    assert _read(memfs, "dst/f1") == b"11"
+    assert _read(memfs, "dst/inner/f2") == b"222"
 
 
 def test_join_keeps_scheme():
@@ -80,15 +81,34 @@ def test_scheme_alias_s3a_maps_to_s3():
     assert fsio.is_local("/tmp/x") and not fsio.is_local("hdfs://nn/x")
 
 
-def test_read_parquet_column_via_fs(memfs):
-    fsio.makedirs(u("tbl/bucket=3"))
+def test_read_parquet_column_via_fs(memfs, tmp_path):
+    """``resolve`` hands back a ``(filesystem, path)`` pair that pyarrow
+    can read a snapshot's parquet column through — for a registered
+    non-POSIX scheme and for a ``file://`` URI (the from_uri path, cached
+    after the first call)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fsio.makedirs(u("tbl/round=3"))
     pq.write_table(
-        pa.table({"state": [b"\x01\x02"], "n": [1]}),
-        "tbl/bucket=3/part0.parquet",
+        pa.table({"url_hash": [7, 9], "n": [1, 2]}),
+        "tbl/round=3/part0.parquet",
         filesystem=memfs,
     )
-    col = fsio.read_parquet_column(u("tbl/bucket=3"), "state")
-    assert bytes(col[0].as_py()) == b"\x01\x02"
+    assert fsio.listdir(u("tbl/round=3")) == ["part0.parquet"]
+    fs, p = fsio.resolve(u("tbl/round=3"))
+    assert fs is memfs and p == "tbl/round=3"
+    col = pq.read_table(p, columns=["url_hash"], filesystem=fs).column("url_hash")
+    assert col.to_pylist() == [7, 9]
+
+    local = tmp_path / "t" / "round=0"
+    local.mkdir(parents=True)
+    pq.write_table(pa.table({"url_hash": [5]}), str(local / "part0.parquet"))
+    uri = "file://" + str(local)
+    fs, p = fsio.resolve(uri)
+    assert fsio.resolve(uri) == (fs, p)  # cached
+    col = pq.read_table(p, columns=["url_hash"], filesystem=fs).column("url_hash")
+    assert col.to_pylist() == [5]
 
 
 # ------------------------------------------------------------ catalog markers
@@ -106,28 +126,3 @@ def test_catalog_commit_protocol_on_non_posix_fs(spark, memfs):
     cat.prune_upto("frontier", 3)  # missing table dir → no-op
     cat.drop_uncommitted()  # nothing dangling → no-op
     assert cat.latest_round() == 3
-
-
-# ------------------------------------------------------- worker blob loading
-def test_load_bucket_filter_non_posix_and_loud_failure(memfs):
-    from news_crawler_spark.functions.bloom import BloomFilter
-    from news_crawler_spark.operators import seen_filter as sfmod
-
-    filt = BloomFilter(256)
-    import numpy as np
-
-    filt.insert(np.array([11, 22, 33], dtype=np.int64))
-    base = u("cat/seen_filter/round=0")
-    fsio.makedirs(base + "/bucket=5")
-    pq.write_table(
-        pa.table({"state": [b"B" + filt.to_bytes()]}),
-        "cat/seen_filter/round=0/bucket=5/part0.parquet",
-        filesystem=memfs,
-    )
-    got = sfmod._load_bucket_filter(base, 5)
-    assert got is not None and bool(got.contains(np.array([11]))[0])
-    # visible base + missing bucket dir ⇒ legitimately "no keys here"
-    assert sfmod._load_bucket_filter(base, 6) is None
-    # INVISIBLE base ⇒ loud failure, never a silent all-unseen
-    with pytest.raises(RuntimeError, match="not visible"):
-        sfmod._load_bucket_filter(u("cat/seen_filter/round=99"), 5)

@@ -36,9 +36,7 @@ def test_gc_bounded_dirs_long_run(spark, tmp_path_factory):
         wd,
         politeness=politeness,
         default_refill=4,
-        merge_mode="mor",
         compact_every=COMPACT,
-        seen_prefilter="cuckoo",
     )
     eng.ingest(synth.build_seed_list(spark, 500))
     step_rounds = 0
@@ -51,8 +49,6 @@ def test_gc_bounded_dirs_long_run(spark, tmp_path_factory):
     # bounds depend ONLY on compact_every — the boundedness contract
     bounds = {
         "pending": 2,              # newest full slice (+1 transient)
-        "pending_tomb": COMPACT + 1,
-        "pending_add": 2 * (COMPACT + 1),  # step re-pends + ingest additions
         "done": COMPACT,
         "done_base": 2,
         "pops": COMPACT,
@@ -63,8 +59,6 @@ def test_gc_bounded_dirs_long_run(spark, tmp_path_factory):
         "cursors": 2,
         "seen_keys": 2,
         "seen_keys_delta": COMPACT,
-        "seen_filter": 2,
-        "seen_filter_delta": COMPACT,
     }
     for table, bound in bounds.items():
         dirs = _round_dirs(wd, table)
@@ -85,7 +79,7 @@ def test_gc_bounded_dirs_long_run(spark, tmp_path_factory):
     assert eng.final_frontier().count() > 0
     resumed = CrawlEngine(
         spark, wd, politeness=politeness, default_refill=4,
-        merge_mode="mor", compact_every=COMPACT, seen_prefilter="cuckoo",
+        compact_every=COMPACT,
     )
     stats = resumed.run(max_rounds=2)
     assert stats and stats[0].popped > 0

@@ -182,6 +182,24 @@ def test_minhash_kernel_matches_expression_tier(spark, docs):
     assert ker == expr and len(ker) > 0
 
 
+def _null_beside_wide_sketches(spark, doc_rows, sketch):
+    """One NULL text and one text whose sketch exceeds 2^53 (not a
+    float64-representable value) in EVERY input partition. There are
+    defaultParallelism partitions, so spread_for_cpu leaves them in
+    place and each Arrow batch holds both. Returns (frame, the wide
+    text's doc_id)."""
+    wide = next(
+        (d, t) for d, t in sorted(doc_rows.items())
+        if all(abs(v) > 2**53 and int(float(v)) != v for v in sketch(t))
+    )
+    parts = spark.sparkContext.defaultParallelism
+    rows = []
+    for p in range(parts):
+        rows += [(-1 - p, None), (wide[0] if p == 0 else 10**6 + p, wide[1])]
+    df = spark.sparkContext.parallelize(rows, parts).toDF("doc_id long, text string")
+    return df, wide[0]
+
+
 def test_simhash_matches_python_twin(spark, docs, doc_rows):
     for th in ("md5", "xxhash64"):
         got = {
@@ -190,6 +208,13 @@ def test_simhash_matches_python_twin(spark, docs, doc_rows):
         }
         for doc_id, sh in got.items():
             assert sh == py_simhash(doc_rows[doc_id], th), (th, doc_id)
+        # a NULL text sketches NULL and leaves its batch-mates bit-exact
+        df, wide_id = _null_beside_wide_sketches(
+            spark, doc_rows, lambda t, th=th: [py_simhash(t, th)]
+        )
+        want = py_simhash(doc_rows[wide_id], th)
+        for r in dedup.with_simhash(df, token_hash=th).collect():
+            assert r.simhash == (None if r.doc_id < 0 else want), (th, r.doc_id)
 
 
 def test_lsh_equals_exact_jaccard(spark, docs, doc_rows):
@@ -724,6 +749,13 @@ def test_simhash128_matches_python_twin(spark, docs, doc_rows):
     }
     for doc_id, sh in got.items():
         assert sh == py_simhash128(doc_rows[doc_id]), doc_id
+    # the shared md5 kernel: a NULL text leaves both words of its
+    # batch-mates bit-exact
+    df, wide_id = _null_beside_wide_sketches(spark, doc_rows, py_simhash128)
+    want = py_simhash128(doc_rows[wide_id])
+    for r in dedup.with_simhash128(df).collect():
+        got_r = (r.sh_w1, r.sh_w2)
+        assert got_r == ((None, None) if r.doc_id < 0 else want), r.doc_id
 
 
 def test_simhash128_pairs_complete_at_radius(spark, docs, doc_rows):

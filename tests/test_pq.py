@@ -80,9 +80,17 @@ def test_pq_codebooks_and_encode_match_python_twin(emb, quantized):
     got_cb = {(r["sub"], r["code"]): list(r["cv"]) for r in cb_rows}
     assert got_cb == cb_t
 
+    want = {v: (codes_t[v], words_t[v]) for v in codes_t}
     enc = sim.pq_encode(emb, cb_rows, code_base=K).collect()
     got = {r["vec_id"]: (list(r["codes"]), r["code_word"]) for r in enc}
-    assert got == {v: (codes_t[v], words_t[v]) for v in codes_t}
+    assert got == want
+
+    # an int-typed id column keeps its type through the encode kernel
+    emb_int = emb.withColumn("vec_id", emb["vec_id"].cast("int"))
+    enc_int = sim.pq_encode(emb_int, cb_rows, code_base=K)
+    assert enc_int.schema["vec_id"].dataType.simpleString() == "int"
+    got_int = {r["vec_id"]: (list(r["codes"]), r["code_word"]) for r in enc_int.collect()}
+    assert got_int == want
 
 
 def test_pq_adc_topk_matches_twin_and_reranks(emb, quantized):
