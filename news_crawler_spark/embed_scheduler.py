@@ -48,7 +48,7 @@ def claim_batch(pending: DataFrame, k: int, salts: int | None = None) -> DataFra
     323-324 ``ORDER BY published_datetime ASC LIMIT batch``); doc_id
     breaks ties and orders docs with no timestamp (nulls last).
     Two-phase salted window — identical output to a single per-source
-    window, salts× its parallelism. Module-level so the analytics gate
+    window, salts× its parallelism. Module-level so the analytics query
     (e1_embed_drain_schedule) replays the exact operator the scheduler
     runs. ``salts=None`` sizes the salt count to the batch size
     (phase 2's per-source input is salts × k — see

@@ -20,9 +20,9 @@ expressed Spark-first:
 
 Hash provenance: shingle/MinHash hashes are Spark's builtin ``xxhash64``
 (seed 42), bit-identical to the pure-Python twin in functions/xxh64.py;
-SimHash token hashes default to md5-derived 64-bit values so the
-driver's DuckDB oracle recomputes the sketch exactly (analytics.D4_SQL;
-xxhash64 variant retained for speed via ``token_hash="xxhash64"``).
+SimHash token hashes default to md5-derived 64-bit values so a SQL
+twin can recompute the sketch exactly (xxhash64 variant retained for
+speed via ``token_hash="xxhash64"``).
 Nothing depends on partitioning.
 
 Scale notes: shingles travel as 8-byte hashes everywhere (3-5× smaller
@@ -702,8 +702,8 @@ def duplicate_clusters(
             # a component's diameter exceeds max_iters: the label answer
             # would be SILENTLY split into several clusters. Fall back
             # to the chain-safe O(log²)-round backend and return the
-            # exact components (VERDICT round 5: no code path may
-            # return coarser-than-true labels without raising).
+            # exact components (no code path may return
+            # coarser-than-true labels without raising).
             warnings.warn(
                 f"duplicate_clusters: label propagation did not converge "
                 f"within max_iters={max_iters} (a component's diameter "
@@ -750,8 +750,8 @@ def simhash64(
     per-token hash, per-bit ±1 vote aggregated with a fold over a
     64-long counter array, sign → bit. No Python, no explode.
 
-    ``token_hash``: "md5" (default — oracle-able in DuckDB, see
-    analytics.D4_SQL) or "xxhash64" (cheaper hash; pure-Python twin in
+    ``token_hash``: "md5" (default — recomputable in DuckDB with SQL
+    md5) or "xxhash64" (cheaper hash; pure-Python twin in
     tests/test_pipeline_ops.py).
 
     The token hash is materialized ONCE per token (a ``transform`` into

@@ -613,8 +613,7 @@ def allowed_by_robots_wildcards(frontier: DataFrame, robots: DataFrame) -> DataF
     ``_robots_pattern_match`` expression fold it replaces — the fold's
     interpreted per-(row, rule) ArrayAggregate measured ~3× the whole
     query wall at sf0.1 for identical survivors; the fold stays as the
-    fixture-pinned reference semantics). The DuckDB twin (P14_SQL)
-    keeps its independent regex-conversion formulation."""
+    fixture-pinned reference semantics)."""
     from ..functions.urls import path_col
 
     rules_by_host = robots.groupBy("host").agg(

@@ -41,7 +41,7 @@ def pagerank_int(
     out-degree d contributes ``rank div d`` to every successor and
     rank' = base + (damping_num · Σ contribs) div damping_den, with
     base = (scale · (den − num)) div den. Every step is integer-exact,
-    so the unrolled-CTE SQL twin matches bit-for-bit (analytics.G1_SQL).
+    so an unrolled-CTE SQL twin matches bit-for-bit.
 
     Scale shape: the edge list is the big table — it is joined once with
     the out-degree (computed once, checkpointed) and then per iteration
@@ -113,8 +113,8 @@ def hits_int(
     hub = Σ auth over out-edges, each sum rescaled to ``(v · scale)
     div max(v)`` — the normalization that keeps classic HITS from
     blowing up, done in exact integer arithmetic so a DuckDB twin
-    (analytics.G5_SQL) replays every iteration bit-for-bit (the
-    g1/v10 determinism contract). Nodes without in-edges get auth 0,
+    can replay every iteration bit-for-bit (the pagerank_int
+    determinism contract). Nodes without in-edges get auth 0,
     without out-edges hub 0; max() is guarded to ≥1 identically in
     both engines.
 
@@ -380,8 +380,8 @@ def trustrank_int(
     Same skeleton and determinism contract as ``pagerank_int`` — the
     ONLY change is the teleport term: ``base`` lands on seed nodes
     only (trust⁰ likewise), everything else is the identical integer
-    pipeline, so the unrolled-CTE DuckDB twin (analytics.G8_SQL)
-    replays every iteration bit-for-bit. Scale shape unchanged: the
+    pipeline, so an unrolled-CTE DuckDB twin can replay every
+    iteration bit-for-bit. Scale shape unchanged: the
     seed set is a dim (hundreds of vetted hosts real-world) joined
     broadcast onto the |hosts|-row vector; the edge list only ever
     meets the broadcast rank vector."""
@@ -457,8 +457,8 @@ def bfs_depth(edges: DataFrame, seeds: DataFrame, max_depth: int = 4) -> DataFra
     g3's pointer-doubling (which composes PATHS and needs the chain
     relation), min-plus BFS re-expands from the full reached set, so
     linear unrolling is the right recurrence. Integer-exact by
-    construction (depths are counters), so the DuckDB twin
-    (analytics.G9_SQL) replays every level bit-for-bit."""
+    construction (depths are counters), so a DuckDB twin can replay
+    every level bit-for-bit."""
     e = edges.select(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),

@@ -443,10 +443,9 @@ def signlsh_bits_for(n_vectors: int, target_occupancy: int = 5, floor: int = 8) 
     join is QUADRATIC in bucket occupancy (expected pairs ≈ tables ·
     2^bits · C(n/2^bits, 2)), so fixed bits turn a 10× corpus into
     ~100× candidate pairs; one extra bit per corpus doubling keeps the
-    candidate volume linear in n (bench.py's sf1 probe measures both
-    regimes). Raising bits lowers per-table recall for a fixed table
-    count; compensate with n_tables when the threshold regime demands
-    it (recall = 1-(1-p^bits)^tables, p = 1-acos(c)/π)."""
+    candidate volume linear in n. Raising bits lowers per-table recall
+    for a fixed table count; compensate with n_tables when the threshold
+    regime demands it (recall = 1-(1-p^bits)^tables, p = 1-acos(c)/π)."""
     import math
 
     return max(floor, math.ceil(math.log2(max(n_vectors, 2) / target_occupancy)))
@@ -459,9 +458,9 @@ def hyperplane_weights(n_bits: int, dim: int, seed_tag: str) -> list[list[int]]:
     24-bit signed-centered weights keep the quantized dot product exactly
     representable in one BIGINT (|dot| ≤ dim · |q|max · 2²³ ≈ 2⁵³ at
     dim 64 with unit-scale embeddings), so Spark and the DuckDB oracle
-    compute the SAME bucket bit-for-bit — V8_SQL *recomputes* this spec
-    with SQL md5 over generate_series; nothing is shared but the spec
-    string. Uniform symmetric weights are a valid random-hyperplane
+    compute the SAME bucket bit-for-bit — a SQL twin recomputes this
+    spec with SQL md5 over generate_series; nothing is shared but the
+    spec string. Uniform symmetric weights are a valid random-hyperplane
     family (collision probability monotone in angle), and deriving them
     here (driver-side, n_bits·dim hashes, no Spark job) is cheaper than
     the round-4 design's per-row xxhash64 of every (bit, dim)."""
@@ -494,8 +493,8 @@ def _sign_lsh_buckets_udf(tables: list[list[list[int]]], dim: int):
     as ONE int64 matmul. quantize (floor(v·1e6+0.5) in float64 = Spark's
     double), dots = Q @ Wᵀ, sign-weight by 2^(j mod bits), per-table
     sums. Exact integer arithmetic throughout (|dot| ≤ dim·|q|·2²³ ≈
-    2⁵³ ≪ int64), so the DuckDB twin (V8_SQL) still recomputes the
-    buckets bit-for-bit.
+    2⁵³ ≪ int64), so a DuckDB twin still recomputes the buckets
+    bit-for-bit.
 
     Why a pandas UDF and not expressions: the higher-order-function
     formulation (transform/aggregate/zip_with over a tables·bits literal
@@ -720,9 +719,10 @@ def _cosine_pairs_int_blocked(
     ``(vec_id, iv, n2)`` frame — two regimes, identical pair set:
 
     - ``n ≤ _COSINE_BCAST_MAX``: the b side is a BOUNDED collect (≤ the
-      constant, the codebook-collect discipline) shipped as ONE
-      ``sc.broadcast`` (never a per-task closure copy); each partition
-      GEMMs against it masked to ``b_id > a_id``.
+      constant, the codebook-collect discipline) shipped in the task
+      closure (PySpark broadcasts a pickled command over 1 MB itself and
+      ties that broadcast to the RDD's lifetime); each partition GEMMs
+      against it masked to ``b_id > a_id``.
     - larger n: fully distributed block-pair GEMM — rows hash into
       ``nb = ⌈n/4096⌉`` (≤128) blocks, each row is replicated to its
       ``nb`` unordered block pairs, and one ``applyInPandas`` task
@@ -749,18 +749,9 @@ def _cosine_pairs_int_blocked(
             np.array([r[1] for r in rows], dtype=np.float64),
             np.array([r[2] for r in rows], dtype=np.float64),
         )
-        # one sc.broadcast ships the b side once per worker; below ~8k
-        # rows the matrix is ≲ a few MB and the plain closure copy is
-        # cheaper than the broadcast machinery. Exactly ONE of payload /
-        # bc is non-None so the closure never captures both.
-        if len(rows) > 8192:
-            bc = v.sparkSession.sparkContext.broadcast(mats)
-            payload = None
-        else:
-            bc, payload = None, mats
 
         def pairs(it):
-            ids_all, Q_all, n2_all = payload if payload is not None else bc.value
+            ids_all, Q_all, n2_all = mats
             for pdf in it:
                 if not len(pdf):
                     continue
@@ -885,8 +876,8 @@ def semdedup_prune(
     against a sampled codebook (or any hash/routing scheme) — Lloyd's
     full assignment is n·k integer distances, quadratic once k tracks
     corpus size, while the prune itself stays linear·occupancy at any
-    scale. ``bench.py``'s ``semdedup_prune_probe`` measures exactly
-    that: double the corpus at constant occupancy → ~double the wall."""
+    scale: double the corpus at constant occupancy → ~double the
+    wall."""
     a = v.select(
         F.col("vec_id").alias("a_id"),
         "cell",

@@ -15,7 +15,8 @@ Operators:
   partial-overlap winnowing fingerprints (the SIGMOD'03 rolling-hash
   scheme — shared token runs share a fingerprint)
 
-Each has a ``queries()`` entry in __spark_entry__.py with a DuckDB oracle.
+tests/test_pipeline_ops.py pins each; ``bm25_topk`` has its DuckDB twin
+``analytics.X13_SQL``.
 """
 
 from __future__ import annotations

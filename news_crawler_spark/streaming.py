@@ -224,8 +224,8 @@ def enrich_stream(
     STATELESS — nothing is checkpointed, unlike cursor_cut_stream /
     dedup_stream — and the LEFT side means a link from an unconfigured
     source passes through with NULL config for the consumer to
-    default, never silently dropped (the inner-join-drops-batch
-    trap documented on S1_SQL).
+    default, never silently dropped (an inner join would drop
+    links from unconfigured sources).
 
     Scale shape: broadcast keeps the stream side shuffle-free — per
     batch the plan is scan → BroadcastHashJoin, no exchange on the

@@ -117,10 +117,24 @@ def test_pop_round_salt_invariant(spark):
 
 
 def test_query_and_oracle_registries_stay_aligned():
-    """Every queries() entry must have its oracle_sql() twin (the driver
-    records a weaker rows-only check for missing oracles — an
-    accidental registration drift silently downgrades the gate)."""
-    from news_crawler_spark import analytics
+    """The public ``(spark, sf)`` query functions in analytics are
+    exactly the ones tests/test_oracles.py checks, and each has its
+    ``<PREFIX>_SQL`` twin: a query added without a twin, or left out of
+    the oracle test, fails here."""
+    import inspect
 
-    assert set(analytics.QUERIES) == set(analytics.ORACLES)
-    assert len(analytics.QUERIES) >= 70
+    from news_crawler_spark import analytics
+    from test_oracles import QUERY_NAMES, twin_name
+
+    defined = {
+        name
+        for name, fn in vars(analytics).items()
+        if inspect.isfunction(fn)
+        and fn.__module__ == analytics.__name__
+        and not name.startswith("_")
+        and list(inspect.signature(fn).parameters) == ["spark", "sf"]
+    }
+    assert defined == set(QUERY_NAMES)
+    assert len(QUERY_NAMES) == len(set(QUERY_NAMES))
+    for name in QUERY_NAMES:
+        assert isinstance(getattr(analytics, twin_name(name), None), str), name

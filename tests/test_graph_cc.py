@@ -104,10 +104,9 @@ def test_nonconvergence_still_one_row_per_node(spark):
 
 
 def test_auto_falls_back_to_twostar_on_long_chains(spark):
-    """VERDICT round 5: the default path must never return silently
-    split clusters. A 40-node chain at max_iters=5 exceeds label
-    propagation's reach; algorithm='auto' must warn and return the
-    EXACT single component, while algorithm='label' keeps the
+    """The default path must never return silently split clusters. A
+    40-node chain at max_iters=5 exceeds label propagation's reach;
+    algorithm='auto' must warn and return the EXACT single component, while algorithm='label' keeps the
     warn-and-return-coarse behavior for the A/B harness."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "a_id long, b_id long"

@@ -1,6 +1,6 @@
 """Training-data-pipeline operators: dedup (exact / Jaccard / MinHash /
 SimHash), similarity search, text features, multimodal plumbing — Spark
-vs independent pure-Python oracles on the driver's sf0.001 tables."""
+vs independent pure-Python oracles on the sf0.001 testdata tables."""
 
 import struct
 
@@ -241,8 +241,7 @@ def test_exact_duplicates(spark):
 
 def test_simhash_pairs_complete_at_radius(spark, docs, doc_rows):
     """Default banding (n_bands = max_hamming + 1) must be COMPLETE: the
-    banded output equals the exact all-pairs hamming<=8 set (the same
-    contract the driver's DuckDB oracle enforces for d4)."""
+    banded output equals the exact all-pairs hamming<=8 set."""
     rows = dedup.simhash_pairs(docs, max_hamming=8).collect()
     sh = {d: py_simhash(t) for d, t in doc_rows.items()}
     ids = sorted(sh)
@@ -386,8 +385,23 @@ def test_m1_span_equality_all_dialects(spark, tmp_path):
         any(r.kind == "image" for r in rows) for rows in by_doc.values()
     )
 
-    # m2 sizes from the same table, pinned to the python synth path
-    m2 = {r.media_ref: r for r in analytics.m2_media_pipeline(spark, str(tmp_path)).collect()}
+    # media sizes from the same spans, pinned to the python synth path
+    media = multimodal.media_table(analytics._m1_extracted(spark, str(tmp_path)))
+    frames = (
+        multimodal.frame_sample(media)
+        .groupBy("media_ref")
+        .agg(F.count("*").alias("n_frames"))
+    )
+    thumbs = multimodal.resize_image(media).select(
+        "media_ref", F.length("payload").alias("thumb_bytes")
+    )
+    m2 = {
+        r.media_ref: r
+        for r in media.select("media_ref", F.col("meta.n_bytes").alias("n_bytes"))
+        .join(frames, "media_ref")
+        .join(thumbs, "media_ref")
+        .collect()
+    }
     assert m2  # at least one media item
     for ref, r in m2.items():
         n = len(multimodal.synth_media_payload(ref))
@@ -492,7 +506,7 @@ def test_fused_fetch_extract_matches_two_stage(spark):
 
 
 def test_signlsh_quantization_parity(spark):
-    """The invariant v8's cross-engine gate rests on: the matmul
+    """The invariant a cross-engine sign-LSH twin rests on: the matmul
     sketch's numpy-float64 quantization (floor(v·1e6+0.5) in
     _sign_lsh_buckets_udf) computes EXACTLY what the catalyst
     expression twin ``quantize_vec`` computes (both are IEEE-double
@@ -559,6 +573,40 @@ def test_cosine_pairs_int_tiers_identical(spark):
             ):
                 brute.add((a, b))
     assert expr == brute
+
+    # past 8192 rows the bounded regime still ships the b side in the
+    # task closure: 8193 random ±1 vectors in 64 dims, where only pairs
+    # with dot ≥ 30 (cos ≥ 0.45) cross τ
+    import pandas as pd
+
+    n, dim = 8193, 64
+    signs = np.where(np.random.default_rng(7).random((n, dim)) < 0.5, -1, 1)
+    pm = spark.createDataFrame(
+        pd.DataFrame({
+            "vec_id": np.arange(n, dtype=np.int64),
+            "embedding": [row.astype(np.float32) for row in signs],
+        }),
+        "vec_id long, embedding array<float>",
+    )
+    blk = {(r.a_id, r.b_id) for r in
+           similarity.cosine_pairs_int(pm, tier="blocked").collect()}
+    # integer brute force on the ±1 matrix: quantization scales every
+    # component by the same 10^6, and the dup test is scale-invariant
+    S = signs.astype(np.int64)
+    norm2 = dim  # every ‖v‖² is 64
+    brute = set()
+    for lo in range(0, n, 1024):
+        D = S[lo:lo + 1024] @ S.T
+        ids_a = np.arange(lo, min(lo + 1024, n))[:, None]
+        keep = (
+            (ids_a < np.arange(n)[None, :])
+            & (D > 0)
+            & (D * D * similarity.SEMDEDUP_TAU_DEN
+               >= similarity.SEMDEDUP_TAU_NUM * norm2 * norm2)
+        )
+        ai, bj = np.nonzero(keep)
+        brute.update(zip((ai + lo).tolist(), bj.tolist()))
+    assert blk == brute and 0 < len(brute) < n
 
 
 def test_cosine_pairs_int_distributed_blocks_identical(spark, monkeypatch):

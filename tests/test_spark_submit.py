@@ -5,8 +5,7 @@ stripped from PYTHONPATH, so every import (driver side and the python
 workers unpickling the mapInPandas closures) must resolve from the
 shipped zip. This is the line of BASELINE.json's north_rule ("run via
 spark-submit --py-files on a multi-executor cluster") that a unit test
-can witness in-sandbox; the multi-executor half is evidenced by the
-bench's two-parallelism scaling probe (BENCH.md)."""
+can witness on one host; the multi-executor half needs a real cluster."""
 
 from __future__ import annotations
 

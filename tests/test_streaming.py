@@ -149,8 +149,7 @@ def test_discovery_rates_watermark(spark, tmp_path):
     # (10:04) outruns it → counted. (Spark's late filter gates on the
     # WINDOW's end, not the row's raw event time — a row in a
     # still-open window is counted even when the row itself is older
-    # than the watermark; established against the boundary window in
-    # the s4 gate query, analytics.s4_windowed_rates.)
+    # than the watermark.)
     write_batch("b2", [datetime(2024, 6, 1, 10, 0, 50),
                        datetime(2024, 6, 1, 10, 3, 30)], t0 + 10)
     drain()

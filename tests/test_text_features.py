@@ -138,41 +138,6 @@ def test_bm25_matches_python_twin(spark):
     assert all(d != 3 for d, _ in got)  # no query terms -> not retrieved
 
 
-def test_x17_quantiles_rank_math(spark):
-    """x17's explicit ceil(q*n) rank picks must equal the python
-    percentile_disc on a frame whose per-group sizes hit awkward
-    divisors (n = 1, 7, 10, 100)."""
-    from news_crawler_spark import analytics
-
-    rows, did = [], 0
-    for g, n in (("a", 1), ("b", 7), ("c", 10), ("d", 100)):
-        for i in range(n):
-            did += 1
-            rows.append((did, "t", "fa", g, (i * 37) % 500))
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    import tempfile, shutil, os
-
-    work = tempfile.mkdtemp(prefix="x17_")
-    try:
-        df.write.parquet(os.path.join(work, "documents.parquet"))
-        got = {
-            r.source: (r.n_docs, r.p50, r.p90, r.p99)
-            for r in analytics.x17_length_quantiles(spark, work).collect()
-        }
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    import math
-
-    want = {}
-    for g, n in (("a", 1), ("b", 7), ("c", 10), ("d", 100)):
-        vals = sorted(((i * 37) % 500) for i in range(n))
-        pick = lambda q: vals[math.ceil(q * n) - 1]
-        want[g] = (n, pick(0.5), pick(0.9), pick(0.99))
-    assert got == want
-
-
 def test_duplicate_spans_planted(spark):
     """Planted repeated passages: a 12-token licence block shared by two
     docs must come back as ONE maximal span covering exactly its token
