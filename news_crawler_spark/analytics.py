@@ -1088,7 +1088,7 @@ c{i} AS (SELECT cell, list(cx ORDER BY j) AS cv FROM s{i} GROUP BY cell)"""
 _KMEANS_CTES = (
     f"""qv AS (
   SELECT vec_id,
-         [floor(x::DOUBLE * {similarity.SIGNLSH_QUANT} + 0.5)::BIGINT
+         [floor(x::DOUBLE * {similarity.QUANT} + 0.5)::BIGINT
           for x in embedding] AS iv
   FROM embeddings
 ),

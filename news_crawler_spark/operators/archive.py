@@ -28,7 +28,8 @@ and the ordered fold both run per segment partition. Segment size is
 controlled by ``n_segments`` at call site (at 100 TB you size it so a
 blob is a few hundred MB — the object-store sweet spot); the index is
 the only thing later queries shuffle. Reads never open a blob a doc_id
-doesn't live in — the index prunes exactly like v9's partitioned IVF.
+doesn't live in — the index prunes blobs the way partition pruning prunes
+a partitioned table's directories.
 """
 
 from __future__ import annotations

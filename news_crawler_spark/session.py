@@ -85,10 +85,9 @@ def get_spark(
         # (note: runtimeFilter.semiJoinReduction hangs session startup on
         # this pyspark build — do not enable it)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # push moderate IN-lists down to parquet (default 10): the PQ
-        # re-rank in similarity.py filters the vectors scan by its
-        # candidate-id ``isin`` list, and rowgroup min/max stats prune
-        # it only if the In predicate actually reaches the reader.
+        # push moderate IN-lists down to parquet (default 10): rowgroup
+        # min/max stats prune an ``isin`` filter on a scan only if the
+        # In predicate actually reaches the reader.
         # Capped at 300 — parquet evaluates a pushed In as a
         # RECURSIVE Or tree, and ~2000 values overflowed the executor
         # stack (scala.MatchError: StackOverflowError in FileScanRDD)

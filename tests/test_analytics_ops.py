@@ -1,8 +1,11 @@
 """Analytics-layer operators that need behavior beyond the DuckDB oracle:
 a5b outage detection on injected gaps, v4 payload-filtered vector search
-vs a numpy oracle."""
+vs a numpy oracle; and a source-level guard that the operator modules
+carry no function without a program caller."""
 
+import ast
 from datetime import datetime
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -138,3 +141,55 @@ def test_query_and_oracle_registries_stay_aligned():
     assert len(QUERY_NAMES) == len(set(QUERY_NAMES))
     for name in QUERY_NAMES:
         assert isinstance(getattr(analytics, twin_name(name), None), str), name
+
+
+# program code (tests excluded) that counts as a caller, and the operator
+# modules whose public functions must each be reached from it
+PROGRAM_DIRS = ("news_crawler_spark", "scripts", "perfbench")
+CALLER_GUARDED_MODULES = ("news_crawler_spark/operators/similarity.py",)
+
+
+def _referenced_names(node) -> set[str]:
+    """Identifiers a syntax tree uses: bare names, attribute names
+    (``similarity.topk_cosine``) and imported names."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_similarity_functions_all_have_a_program_caller():
+    """Every public top-level function of a guarded module is reached
+    from program code: it is referenced by another program file, by the
+    module's top-level statements, or by a function of the module that is
+    itself reached. A function only tests call — or only other unreached
+    functions call — fails here, so a deleted test-only tier cannot creep
+    back. Parses source only; no Spark."""
+    root = Path(__file__).resolve().parent.parent
+    refs = {
+        f: _referenced_names(ast.parse(f.read_text()))
+        for d in PROGRAM_DIRS
+        for f in (root / d).rglob("*.py")
+    }
+    for rel in CALLER_GUARDED_MODULES:
+        path = root / rel
+        tree = ast.parse(path.read_text())
+        funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+        reached = set().union(*(r for f, r in refs.items() if f != path))
+        for n in tree.body:
+            if not isinstance(n, ast.FunctionDef):
+                reached |= _referenced_names(n)
+        todo = [name for name in funcs if name in reached]
+        while todo:
+            new = (_referenced_names(funcs[todo.pop()]) & funcs.keys()) - reached
+            reached |= new
+            todo.extend(new)
+        orphans = sorted(
+            name for name in funcs if not name.startswith("_") and name not in reached
+        )
+        assert not orphans, f"{rel}: no program caller for {orphans}"

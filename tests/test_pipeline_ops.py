@@ -274,14 +274,6 @@ def test_topk_cosine_matches_numpy(spark):
     assert [(v, round(s, 4)) for v, s in want] == got
 
 
-def test_ivf_assign_produces_cells(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    assigned = similarity.ivf_assign(emb, n_cells=4)
-    assert assigned.count() == emb.count()
-    cells = {r.cell for r in assigned.select("cell").distinct().collect()}
-    assert cells <= set(range(4)) and len(cells) > 1
-
-
 # -- text -------------------------------------------------------------------
 
 def test_text_features(spark):
@@ -506,11 +498,12 @@ def test_fused_fetch_extract_matches_two_stage(spark):
 
 
 def test_signlsh_quantization_parity(spark):
-    """The invariant a cross-engine sign-LSH twin rests on: the matmul
-    sketch's numpy-float64 quantization (floor(v·1e6+0.5) in
-    _sign_lsh_buckets_udf) computes EXACTLY what the catalyst
-    expression twin ``quantize_vec`` computes (both are IEEE-double
-    arithmetic), for every component of every real embedding."""
+    """The invariant every integer-exact twin of the quantized vectors
+    rests on: a numpy-float64 quantization (floor(v·1e6+0.5), as the
+    python brute forces of the k-means and SemDeDup tests compute it)
+    equals EXACTLY what the catalyst expression ``quantize_vec``
+    computes (both are IEEE-double arithmetic), for every component of
+    every real embedding."""
     import numpy as np
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -522,154 +515,8 @@ def test_signlsh_quantization_parity(spark):
     }
     for r in emb.collect():
         v = np.asarray(r.embedding, dtype=np.float64)
-        q = np.floor(v * similarity.SIGNLSH_QUANT + 0.5).astype(np.int64)
+        q = np.floor(v * similarity.QUANT + 0.5).astype(np.int64)
         assert q.tolist() == expr[r.vec_id]
-
-
-def test_signlsh_bits_for():
-    """The sign-LSH sizing rule: bits track log2(n) so expected bucket
-    occupancy — and with it the quadratic candidate volume — stays flat
-    as the corpus grows."""
-    assert similarity.signlsh_bits_for(500) == 8          # floor
-    assert similarity.signlsh_bits_for(2_000) == 9
-    assert similarity.signlsh_bits_for(20_000) == 12
-    assert similarity.signlsh_bits_for(10**9) == 28
-    # doubling the corpus adds at most one bit = occupancy stays bounded
-    for n in (10**4, 10**6, 10**8):
-        assert similarity.signlsh_bits_for(2 * n) - similarity.signlsh_bits_for(n) <= 1
-
-
-def test_cosine_pairs_int_tiers_identical(spark):
-    """cosine_pairs_int: the expression tier (decimal(38,0) join test)
-    and the GEMM blocked tier must emit the IDENTICAL pair set on real
-    data — the x26 bit-identity contract applied to the x27 pair graph —
-    and both must match a python big-int brute force."""
-    import numpy as np
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    expr = {(r.a_id, r.b_id) for r in
-            similarity.cosine_pairs_int(emb, tier="expression").collect()}
-    blk = {(r.a_id, r.b_id) for r in
-           similarity.cosine_pairs_int(emb, tier="blocked").collect()}
-    assert expr == blk and len(expr) > 0
-
-    rows = emb.collect()
-    qs = {
-        int(r.vec_id): np.floor(
-            np.asarray(r.embedding, dtype=np.float64) * similarity.SIGNLSH_QUANT
-            + 0.5
-        ).astype(np.int64)
-        for r in rows
-    }
-    brute = set()
-    ids = sorted(qs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            d = int(qs[a] @ qs[b])
-            na = int(qs[a] @ qs[a])
-            nb = int(qs[b] @ qs[b])
-            if d > 0 and d * d * similarity.SEMDEDUP_TAU_DEN >= (
-                similarity.SEMDEDUP_TAU_NUM * na * nb
-            ):
-                brute.add((a, b))
-    assert expr == brute
-
-    # past 8192 rows the bounded regime still ships the b side in the
-    # task closure: 8193 random ±1 vectors in 64 dims, where only pairs
-    # with dot ≥ 30 (cos ≥ 0.45) cross τ
-    import pandas as pd
-
-    n, dim = 8193, 64
-    signs = np.where(np.random.default_rng(7).random((n, dim)) < 0.5, -1, 1)
-    pm = spark.createDataFrame(
-        pd.DataFrame({
-            "vec_id": np.arange(n, dtype=np.int64),
-            "embedding": [row.astype(np.float32) for row in signs],
-        }),
-        "vec_id long, embedding array<float>",
-    )
-    blk = {(r.a_id, r.b_id) for r in
-           similarity.cosine_pairs_int(pm, tier="blocked").collect()}
-    # integer brute force on the ±1 matrix: quantization scales every
-    # component by the same 10^6, and the dup test is scale-invariant
-    S = signs.astype(np.int64)
-    norm2 = dim  # every ‖v‖² is 64
-    brute = set()
-    for lo in range(0, n, 1024):
-        D = S[lo:lo + 1024] @ S.T
-        ids_a = np.arange(lo, min(lo + 1024, n))[:, None]
-        keep = (
-            (ids_a < np.arange(n)[None, :])
-            & (D > 0)
-            & (D * D * similarity.SEMDEDUP_TAU_DEN
-               >= similarity.SEMDEDUP_TAU_NUM * norm2 * norm2)
-        )
-        ai, bj = np.nonzero(keep)
-        brute.update(zip((ai + lo).tolist(), bj.tolist()))
-    assert blk == brute and 0 < len(brute) < n
-
-
-def test_cosine_pairs_int_distributed_blocks_identical(spark, monkeypatch):
-    """The blocked tier's LARGE regime (distributed block-pair GEMM — no
-    driver-side matrix collect) must emit the identical pair set as the
-    expression tier; forced here by dropping the broadcast-regime
-    ceiling to 0 so the small table takes the block path."""
-    monkeypatch.setattr(similarity, "_COSINE_BCAST_MAX", 0)
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    expr = {(r.a_id, r.b_id) for r in
-            similarity.cosine_pairs_int(emb, tier="expression").collect()}
-    blk = {(r.a_id, r.b_id) for r in
-           similarity.cosine_pairs_int(emb, tier="blocked").collect()}
-    assert expr == blk and len(expr) > 0
-
-
-def test_cosine_pairs_int_boundary_band(spark):
-    """Pairs landing EXACTLY on the τ² boundary (lhs == rhs, inside the
-    blocked tier's float64 guard band) must be decided by the exact
-    integer recheck — included (>=) — in both tiers. va=(3,4), vb=(4,3):
-    dot=24, norms 25 → cos=24/25; τ²=576/625 is exact equality. The
-    third vector sits well below τ and must not pair."""
-    emb = spark.createDataFrame(
-        [
-            (1, [3e-6, 4e-6]),
-            (2, [4e-6, 3e-6]),
-            (3, [5e-6, 0.0]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    for tier in ("expression", "blocked"):
-        got = {(r.a_id, r.b_id) for r in similarity.cosine_pairs_int(
-            emb, tau_num=576, tau_den=625, tier=tier
-        ).collect()}
-        assert got == {(1, 2)}, tier
-
-
-def test_lsh_cosine_pairs_recall(spark):
-    """Sign-LSH near-dup scale path: exact verification means precision is
-    1.0 by construction; recall for genuinely-near pairs (the dedup
-    regime, cosine >= 0.9) must be high. Planted pairs: vector + tiny
-    deterministic perturbation."""
-    import numpy as np
-
-    rows = spark.read.parquet(f"{SF}/embeddings.parquet").limit(60).collect()
-    planted = []
-    for r in rows:
-        v = np.array(r.embedding, dtype="float32")
-        planted.append((int(r.vec_id), v.tolist()))
-        noise = np.array(
-            [((h := hash((r.vec_id, i))) % 1000 - 500) / 25000.0 for i in range(len(v))],
-            dtype="float32",
-        )
-        planted.append((int(r.vec_id) + 10000, (v + noise * np.abs(v).mean()).tolist()))
-    emb = spark.createDataFrame(planted, "vec_id long, embedding array<float>")
-
-    brute = {(r.a_id, r.b_id) for r in
-             similarity.cosine_pairs(emb, threshold=0.9).collect()}
-    fast = {(r.a_id, r.b_id) for r in
-            similarity.lsh_cosine_pairs(emb, threshold=0.9).collect()}
-    assert fast <= brute                      # no false positives (verified)
-    assert len(brute) >= 50                   # the plants really are near-dups
-    assert len(fast & brute) / len(brute) >= 0.9
 
 
 def test_per_source_dialect_span_equality(spark):
@@ -843,41 +690,6 @@ def test_duplicate_clusters_warns_when_unconverged(spark):
                for r in dedup.duplicate_clusters(df, max_iters=20).collect()}
     assert not any("did not converge" in str(w.message) for w in caught)
     assert set(got.values()) == {0}
-
-
-def test_ivf_multiprobe_matches_numpy(spark):
-    """Multiprobe IVF == numpy oracle: rank cells by centroid cosine,
-    probe top-3, exact top-k within; and n_probe=all == brute force."""
-    import numpy as np
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    rows = emb.collect()
-    vecs = {r.vec_id: np.array(r.embedding, dtype="float64") for r in rows}
-    cells = {r.vec_id: r.label for r in rows}
-    q = vecs[7]
-
-    def cos(a, b):
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    cents = {}
-    for lab in set(cells.values()):
-        members = [vecs[v] for v, l2 in cells.items() if l2 == lab]
-        cents[lab] = np.mean(members, axis=0)
-    probed = sorted(cents, key=lambda l2: (-cos(cents[l2], q), l2))[:3]
-    scored = sorted(
-        ((-round(cos(v, q), 4), vid) for vid, v in vecs.items()
-         if vid != 7 and cells[vid] in probed)
-    )[:10]
-    want = [(vid, -s) for s, vid in scored]
-    got = [(r.vec_id, r.score)
-           for r in similarity.ivf_multiprobe_topk(emb, 7, k=10, n_probe=3).collect()]
-    assert got == want
-    # probing every cell degenerates to brute force
-    n_cells = len(cents)
-    all_probe = [(r.vec_id, r.score) for r in
-                 similarity.ivf_multiprobe_topk(emb, 7, k=10, n_probe=n_cells).collect()]
-    brute = [(r.vec_id, r.score) for r in similarity.topk_cosine(emb, 7, k=10).collect()]
-    assert all_probe == brute
 
 
 def test_winnow_fingerprint_overlap_guarantee(spark):
@@ -1418,9 +1230,11 @@ def test_temperature_mixture_upweights_small_groups(spark):
 
 
 def test_semdedup_prune_blocked_equals_expression(spark):
-    """The GEMM tier must be BIT-IDENTICAL to the expression tier on a
-    deterministic pseudo-random corpus (both kept flags and witnesses),
-    including cells with zero dups and a planted exact-duplicate pair."""
+    """``semdedup_prune`` on a deterministic pseudo-random corpus in 6
+    given cells equals a python big-int brute force of the within-cell
+    rule ``dot > 0 ∧ dot²·τ_den ≥ τ_num·‖a‖²·‖b‖²`` (kept flags and
+    min-id witnesses), including cells with zero dups and a planted
+    exact-duplicate pair."""
     import numpy as np
 
     from news_crawler_spark.operators import similarity
@@ -1446,24 +1260,41 @@ def test_semdedup_prune_blocked_equals_expression(spark):
         "cell",
         similarity.quantize_vec(F.col("embedding")).alias("iv"),
     ).select("vec_id", "cell", "iv", sq.alias("n2"))
-
-    expr = {
+    got = {
         r.vec_id: (r.cell, r.kept, r.witness)
         for r in similarity.semdedup_prune(v).collect()
     }
-    blocked = {
-        r.vec_id: (r.cell, r.kept, r.witness)
-        for r in similarity.semdedup_prune_blocked(v).collect()
+
+    # the same rule in python ints over numpy's floor(v·1e6+0.5)
+    # (test_signlsh_quantization_parity pins it equal to quantize_vec)
+    q = [
+        [int(x) for x in row]
+        for row in np.floor(vv * similarity.QUANT + 0.5).astype(np.int64)
+    ]
+    n2 = [sum(x * x for x in row) for row in q]
+    num, den = similarity.SEMDEDUP_TAU_NUM, similarity.SEMDEDUP_TAU_DEN
+    witness = {}
+    for b in range(n):
+        for a in range(b % cells, b, cells):  # same cell, smaller id, ascending
+            d = sum(x * y for x, y in zip(q[a], q[b]))
+            if d > 0 and d * d * den >= num * n2[a] * n2[b]:
+                witness[b] = a
+                break
+    want = {
+        i: (i % cells, 0 if i in witness else 1, witness.get(i))
+        for i in range(n)
     }
-    assert blocked == expr
-    assert sum(1 for c, k, w in expr.values() if k == 0) >= 1  # dups exist
-    assert expr[11][1] == 0 and expr[11][2] == 5  # planted pair collapses
+    assert got == want
+    assert 0 < len(witness) < n  # some cells prune, most vectors survive
+    assert got[11] == (5, 0, 5)  # planted pair collapses onto the min id
 
 
 def test_kmeans_assign_blocked_equals_expression(spark):
-    """The GEMM assignment must match kmeans_cells' expression assign
-    bit-for-bit (iters=1 = one assignment against the seed centroids),
-    including the duplicate-centroid tie (smallest cell id wins)."""
+    """``kmeans_cells(iters=1)`` — one assignment against the seed
+    centroids — equals a numpy int64 argmin of the squared-L2 distance
+    over the 4 quantized seed vectors (cell and distance for every
+    vector), and the duplicate-centroid tie goes to the smaller cell
+    id: seeds 0 and 1 are identical, so cell 1 never wins."""
     import numpy as np
 
     from news_crawler_spark.operators import similarity
@@ -1478,29 +1309,21 @@ def test_kmeans_assign_blocked_equals_expression(spark):
         "vec_id long, embedding array<double>",
     )
     seeds = (0, 1, 2, 3)
-    expr = {
+    got = {
         r.vec_id: (r.cell, r.dist)
         for r in similarity.kmeans_cells(emb, seed_ids=seeds, iters=1).collect()
     }
 
-    qv = emb.select(
-        "vec_id", similarity.quantize_vec(F.col("embedding")).alias("iv")
-    )
-    sq = F.aggregate(
-        F.zip_with("iv", "iv", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    v = qv.select("vec_id", "iv", sq.alias("n2"))
-    cents = qv.filter(F.col("vec_id").isin(*seeds)).select(
-        F.col("vec_id").alias("cell"), F.col("iv").alias("cv")
-    )
-    blocked = {
-        r.vec_id: (r.cell, r.dist)
-        for r in similarity.kmeans_assign_blocked(v, cents).collect()
+    Q = np.floor(vv * similarity.QUANT + 0.5).astype(np.int64)
+    C = Q[list(seeds)]
+    D = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)  # exact: < 2^63
+    best = D.argmin(axis=1)  # first minimum = smallest cell id
+    want = {
+        i: (seeds[best[i]], int(D[i, best[i]])) for i in range(n)
     }
-    assert blocked == expr
-    assert blocked[1][0] == 0  # the planted tie resolved to the smaller cell
+    assert got == want
+    assert got[1] == (0, 0)  # the planted tie resolved to the smaller cell
+    assert 1 not in {c for c, _ in got.values()}
 
 
 def test_pack_interleaved_mixed_costs(spark):

@@ -193,40 +193,6 @@ def test_k1_cache_fold_is_aggregate_not_window(spark):
     assert "SortMergeJoin" not in p, p
 
 
-def test_v8_signlsh_is_bucketed_not_allpairs(spark):
-    """The sign-LSH near-dup scale path must candidate-generate through
-    the (table, bucket) EQUI-join — an all-pairs nested-loop/cartesian
-    anywhere in the plan means the bucketing silently degenerated (the
-    O(n²) shape this operator exists to avoid at 10^9 vectors)."""
-    from news_crawler_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pairs = similarity.lsh_cosine_pairs(emb, threshold=0.35, materialize=False)
-    p = plan(pairs)
-    assert "CartesianProduct" not in p, p
-    assert "BroadcastNestedLoopJoin" not in p, p
-    # candidate join keyed on the bucket columns, verify joins on ids
-    assert "table" in p and "bucket" in p, p
-
-
-def test_v9_partition_pruning_is_dynamic(spark, tmp_path):
-    """The IVF layout's 100 TB claim: with the vector table written
-    partitioned by cell, probing the query's cell must reach the scan as
-    DYNAMIC partition pruning (the cell id arrives via the broadcast
-    query row) — only that cell's files are read, scan cost = 1/n_cells.
-    A plan without dynamicpruning in PartitionFilters reads every
-    partition and only filters post-scan."""
-    from news_crawler_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    emb.write.partitionBy("label").parquet(str(tmp_path / "emb"))
-    part = spark.read.parquet(str(tmp_path / "emb"))
-    df = similarity.ivf_probe_topk(part, 7, k=5)
-    p = explain_formatted(df)
-    assert "dynamicpruning" in p.lower(), p
-    assert df.count() == 5
-
-
 def test_surt_range_reaches_scan_as_pushed_filter(spark, tmp_path):
     """The f3 layout claim's plan half: a per-domain surt prefix range
     must reach the parquet scan as PushedFilters (row-group min/max
@@ -637,27 +603,6 @@ def test_m4_integrity_prunes_payload_and_reduces_before_join(spark):
     assert below.count("HashAggregate") >= 2, p
 
 
-def test_v11_pq_encode_is_single_scan_and_adc_is_take_ordered(spark):
-    """PQ plans: the encode inlines the codebook as literals — no join,
-    no exchange, ONE scan (the 10⁹-row compression pass); the ADC scan
-    is a joinless TakeOrderedAndProject over the codes column (the
-    8-bytes-per-vector regime)."""
-    from news_crawler_spark.operators import similarity as sim
-
-    emb = spark.read.parquet(SF + "/embeddings.parquet")
-    cb = sim.pq_codebooks(emb, n_sub=8, k_codes=16, iters=2).collect()
-    enc = sim.pq_encode(emb, cb, code_base=16)
-    p_enc = explain_formatted(enc)
-    assert "Exchange" not in p_enc, p_enc
-    assert "Join" not in p_enc, p_enc
-
-    qrow = emb.filter(F.col("vec_id") == 7).select("embedding").head()
-    top = sim.pq_adc_topk(enc, cb, sim.quantize_list(qrow[0]), k=10)
-    p_top = explain_formatted(top)
-    assert "TakeOrderedAndProject" in p_top, p_top
-    assert "Join" not in p_top, p_top
-
-
 def test_x31_qsketch_two_phase_bounded(spark):
     """The quantile sketch must aggregate in the x15 two-phase bounded
     shape (ObjectHashAggregate over per-partition slices), with no
@@ -811,19 +756,6 @@ def test_c2_rendezvous_is_a_pure_projection(spark):
     assert "EvalPython" not in p
 
 
-def test_v13_sq8_scan_is_takeordered(spark):
-    """The SQ8 candidate cut is a TakeOrderedAndProject over the code
-    scan — per-partition top-k with a k-row driver merge, never a
-    global Sort, and no python stage anywhere."""
-    from news_crawler_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = similarity.sq8_topk_rerank(emb, 7, k=10, r_cand=100)
-    p = explain_formatted(df)
-    assert "TakeOrderedAndProject" in p
-    assert "EvalPython" not in p
-
-
 def test_s8_sitemap_tree_iterates_files_broadcast(spark):
     """The URL side must never be iterated: every join in the expansion
     broadcasts the (bounded) file frontier; page URLs only flow through
@@ -882,29 +814,6 @@ def test_t11_refresh_allocation_has_no_global_sort_of_pages(spark):
     # boundary rows — exactly the bounded-sort contract)
     assert "Exchange rangepartitioning" not in p, p
     assert p.count("TakeOrderedAndProject") <= 1, p
-
-
-def test_v14_binary_scan_is_take_ordered(spark):
-    """The Hamming candidate scan must plan per-partition top-k
-    (TakeOrderedAndProject), never a global sort of the table."""
-    from news_crawler_spark.operators import similarity
-
-    import numpy as np
-
-    rows = [
-        (i, [float(((i * 31 + j * 7) % 13) - 6) / 6.0 for j in range(64)])
-        for i in range(300)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.binary_topk_rerank(emb, query_id=7, k=5, r_cand=50)
-    p = plan(out)
-    assert "TakeOrderedAndProject" in p
-    assert "Exchange rangepartitioning" not in p, p
-    # and the result is sane: k rows, exact_dot sorted desc
-    got = out.collect()
-    assert len(got) == 5
-    dots = [r.exact_dot for r in got]
-    assert dots == sorted(dots, reverse=True)
 
 
 def test_aqe_splits_skewed_join_partitions(spark):
