@@ -17,7 +17,8 @@ Here:
   embedding_service.py:217-220) and the output dim is schema-enforced
   (the reference's dim-validation, embedding_service.py:98-159);
 - search = embed the query (driver-side, same function) → brute-force
-  cosine top-k (TakeOrderedAndProject) → join payloads.
+  cosine top-k over the driver-side vector index the first search builds
+  (``similarity.vector_index``) → join payloads on the k hits.
 """
 
 from __future__ import annotations
@@ -26,11 +27,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.xxh64 import xxh64
-from .similarity import cosine
+from . import similarity
 
 DEFAULT_DIM = 64
 
@@ -93,36 +95,6 @@ def embed_documents(
     return src.mapInPandas(run, schema="doc_id string, vector array<float>, dim int")
 
 
-def reconcile_docs_vectors(
-    docs: DataFrame,
-    vectors: DataFrame,
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    group_col: str = "source",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Collection health audit: per-source doc/vector count drift + dim
-    consistency — the reference's monitor/manager checks restated as one
-    left-join aggregate (monitor_collection.py:50-57 compares DB article
-    counts with Qdrant point counts; vector_db_manager.py:99-121 verifies
-    the collection's vector dim). ``n_missing > 0`` or ``n_dims > 1`` is
-    the drift alarm. One broadcast-friendly join keyed by the doc id; at
-    scale both sides are bucketed by id so the join co-locates."""
-    v = vectors.select(
-        F.col(vec_id_col).alias("__vid"), F.size(F.col(vec_col)).alias("__dim")
-    )
-    return (
-        docs.join(v, docs[doc_id_col] == v["__vid"], "left")
-        .groupBy(group_col)
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.count("__vid").alias("n_vectors"),
-            (F.count("*") - F.count("__vid")).alias("n_missing"),
-            F.countDistinct("__dim").alias("n_dims"),
-        )
-    )
-
-
 def search(
     embeddings: DataFrame,
     documents: DataFrame,
@@ -132,17 +104,27 @@ def search(
 ) -> DataFrame:
     """§3.3: embed the query, cosine top-k over the vectors, join payload.
 
-    The query vector is a literal (driver-side embed of ONE string — the
-    same thing the reference does before calling Qdrant); the scan side
-    is one pass + TakeOrderedAndProject(k); the payload join touches only
-    k rows.
+    The query is embedded on the driver (ONE string — the same thing the
+    reference does before calling Qdrant) and scored against
+    ``similarity.vector_index(embeddings, "vector")``, the vectors held
+    in driver memory, built by one Spark job on the first search over
+    this ``embeddings`` object; scores are rounded to 6. Only the k best
+    rows become a DataFrame, so the payload join touches k rows.
     """
-    qvec = F.lit(embed_text(query_text, dim))
-    scored = (
-        embeddings.withColumn("score", F.round(cosine(F.col("vector"), qvec), 6))
-        .orderBy(F.desc("score"), "doc_id")
-        .limit(k)
+    index = similarity.vector_index(embeddings, "vector")
+    scores = similarity.cosine_scores(
+        index, np.array(embed_text(query_text, dim)), np.arange(len(index.m)), 6
     )
-    return scored.join(documents, "doc_id", "left").orderBy(
-        F.desc("score"), "doc_id"
+    top = similarity.top_k(scores, index.rows.column("doc_id"), k)
+    vectors = pa.array(list(index.m[top]), index.vec_type)
+    hits = (
+        index.rows.take(top)
+        .append_column("vector", vectors)
+        .append_column("score", pa.array(scores[top], pa.float64()))
+        .select(embeddings.columns + ["score"])
+    )
+    return (
+        embeddings.sparkSession.createDataFrame(hits)
+        .join(documents, "doc_id", "left")
+        .orderBy(F.desc("score"), "doc_id")
     )

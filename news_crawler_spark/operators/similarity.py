@@ -1,49 +1,133 @@
 """Vector similarity search and semantic dedup over an embedding column.
 
 The reference's search surface is Qdrant cosine top-10 with payload
-filters (search_news.py:64-88; HNSW config vector_db_manager.py:135-147).
-The exact-match equivalents here (SURVEY.md T5/E2):
+filters (search_news.py:64-88; HNSW config vector_db_manager.py:135-147),
+answered from the index Qdrant already holds. The exact-match
+equivalents here (SURVEY.md T5/E2):
 
-- brute-force cosine top-k (``topk_cosine``): JVM-side fold (zip_with +
-  aggregate) — one scan + a k-row final sort (Spark's
-  TakeOrderedAndProject, no full sort, no collect);
-- payload-filtered top-k (``payload_filtered_topk``): the same scoring
-  over only the vectors whose payload row passes the predicate;
+- brute-force cosine top-k (``topk_cosine``) over ``vector_index``: the
+  float64 vector matrix, its row norms and the non-vector columns,
+  collected through Arrow once per embeddings DataFrame and kept in
+  driver memory (``cached_index``). A search scores the matrix in numpy
+  and returns its k rows as an Arrow-backed local DataFrame, so a repeat
+  search over the same DataFrame starts no Spark job;
+- payload-filtered top-k (``payload_filtered_topk``): the payload
+  predicate runs in Spark, one job that collects the surviving ids; only
+  those rows of the cached matrix are scored;
 - SemDeDup (``semdedup``): exact-integer k-means cells
   (``kmeans_cells``), then a within-cell integer-exact cosine ≥ τ prune.
 
-Search math is double precision with a deterministic fold order, rounded
-on output so the DuckDB oracle (list_cosine_similarity) hashes
-identically; k-means and SemDeDup run on quantized BIGINT components, so
+Search math is the arithmetic Spark's ``aggregate(zip_with(...))`` fold
+did: double precision, every dot product and squared norm summed left to
+right, rounded on output as Spark's ``round`` rounds (``spark_round``),
+so the DuckDB oracle (list_cosine_similarity) hashes identically;
+k-means and SemDeDup run in Spark on quantized BIGINT components, so
 their DuckDB twin replays them bit-for-bit.
 """
 
 from __future__ import annotations
 
+import weakref
+from decimal import ROUND_HALF_UP, Context, Decimal
+from typing import Callable, NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# DataFrame -> {column arguments: index}. A DataFrame is a fixed plan over
+# a fixed file listing, and committed catalog snapshots are never
+# rewritten, so an index stays valid for as long as its DataFrame lives;
+# the weak key drops it with the object.
+_INDEXES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
-def _as_double(v: Column) -> Column:
-    return v.cast("array<double>")
+
+def cached_index(df: DataFrame, key: tuple, build: Callable[[DataFrame], object]):
+    """``build(df)`` on the first call for this DataFrame object and
+    ``key``; the stored result after that (threads racing on a first call
+    may each build; any result is valid). The result must not reference
+    ``df``, or the weak key would never die."""
+    per_df = _INDEXES.setdefault(df, {})
+    if key not in per_df:
+        per_df[key] = build(df)
+    return per_df[key]
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, x: s + x,
+_DECIMAL = Context(prec=1000, rounding=ROUND_HALF_UP)
+
+
+def spark_round(x, digits: int) -> np.ndarray:
+    """Spark's ``round(x, digits)`` over a float64 array: HALF_UP on the
+    decimal string Java prints for x (``BigDecimal(Double.toString(x))``),
+    back to the nearest double. Python's and numpy's ``round`` round the
+    binary value half-even instead, so 0.00015 becomes 0.0001 there and
+    0.0002 here. Values away from a decimal half-way point round in
+    numpy; the rest go through ``Decimal``."""
+    x = np.asarray(x, dtype=np.float64)
+    scale = 10.0**digits
+    y = x * scale
+    out = np.floor(y + 0.5) / scale
+    unit = Decimal(1).scaleb(-digits)
+    exact = ~(np.abs(y - np.floor(y) - 0.5) > 1e-6) | ~(np.abs(y) < 2.0**52)
+    for i in np.flatnonzero(exact):
+        v = float(x[i])
+        out[i] = float(_DECIMAL.quantize(Decimal(repr(v)), unit)) if np.isfinite(v) else v
+    return out + 0.0  # BigDecimal has no -0
+
+
+def top_k(scores: np.ndarray, ids, k: int) -> np.ndarray:
+    """Positions of the ``k`` highest scores, ties by id ascending: the
+    rows ``orderBy(desc("score"), id).limit(k)`` keeps, in its order."""
+    t = pa.table({"score": pa.array(scores, pa.float64()), "id": ids})
+    order = pc.sort_indices(
+        t, [("score", "descending"), ("id", "ascending")], null_placement="at_start"
     )
+    return order[:k].to_numpy()
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(_as_double(a), F.lit(0.0), lambda s, x: s + x * x)
-    )
+class VectorIndex(NamedTuple):
+    rows: pa.Table  # every column but the vector column
+    m: np.ndarray  # the vectors as float64, one row per row of ``rows``
+    norms: np.ndarray
+    vec_type: pa.DataType
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def _fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``Σ_j a[:, j]·b[..., j]`` summed left to right from 0.0, as Spark's
+    ``aggregate(zip_with(a, b, x*y), 0.0, s + x)`` folds; numpy's ``@``
+    sums pairwise and differs in the last bits."""
+    acc = np.zeros(len(a))
+    for j in range(a.shape[1]):
+        acc = acc + a[:, j] * b[..., j]
+    return acc
+
+
+def vector_index(embeddings: DataFrame, vec_col: str = "embedding") -> VectorIndex:
+    """The cached search index of ``embeddings``: one Spark job collects
+    the DataFrame through Arrow on the first search; the index holds the
+    whole vector table in driver memory for the DataFrame's lifetime."""
+
+    def build(df: DataFrame) -> VectorIndex:
+        t = df.toArrow()
+        vecs = t.column(vec_col).combine_chunks()
+        flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+        m = flat.reshape(len(vecs), len(flat) // max(len(vecs), 1))
+        rows = t.drop_columns([vec_col]).combine_chunks()
+        return VectorIndex(rows, m, np.sqrt(_fold(m, m)), vecs.type)
+
+    return cached_index(embeddings, ("vectors", vec_col), build)
+
+
+def cosine_scores(index: VectorIndex, q: np.ndarray, rows: np.ndarray, digits: int) -> np.ndarray:
+    """``round(dot(v, q) / (‖v‖·‖q‖), digits)`` for the vectors ``rows``."""
+    q_norm = np.sqrt(_fold(q[None, :], q))
+    return spark_round(_fold(index.m[rows], q) / (index.norms[rows] * q_norm), digits)
+
+
+def _mask(values: pa.ChunkedArray) -> np.ndarray:
+    return pc.fill_null(values, False).to_numpy(zero_copy_only=False)
 
 
 def topk_cosine(
@@ -53,21 +137,15 @@ def topk_cosine(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Brute-force cosine top-k against the stored vector ``query_vec_id``.
+    """Brute-force cosine top-k against the stored vector ``query_vec_id``
+    (none if no row has that id), scores rounded to 4, ties by id.
 
-    The 1-row query side is broadcast; the scan side never shuffles —
-    the plan is Scan → Project(cosine) → TakeOrderedAndProject(k).
+    Scores every other vector in ``vector_index(embeddings, vec_col)``,
+    which the first search over this DataFrame object builds with one
+    Spark job and which holds the corpus in driver memory; the k rows
+    come back as a local DataFrame, so later searches start no job.
     """
-    q = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("__qvec")
-    )
-    scored = (
-        embeddings.filter(F.col(id_col) != query_vec_id)
-        .join(F.broadcast(q))
-        .withColumn("score", F.round(cosine(F.col(vec_col), F.col("__qvec")), 4))
-        .drop("__qvec", vec_col)
-    )
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    return _cosine_topk(embeddings, None, query_vec_id, k, vec_col, id_col)
 
 
 def payload_filtered_topk(
@@ -84,26 +162,39 @@ def payload_filtered_topk(
     timestamp against the payload indexes built in
     create_vector_db_index.py:77-98).
 
-    ``payload`` carries one row per vector id with the filterable
-    attributes (id_col must match). The predicate is applied to the
-    payload BEFORE anything touches a vector: Catalyst pushes it into the
-    payload scan, the surviving ids semi-join the vector table (at scale
-    both sides are bucketed by id, so this is a co-located join), and
-    only the filtered slice is scored. The plan ends in
-    TakeOrderedAndProject(k) — no global sort, no post-scoring filter.
+    ``payload`` carries the filterable attributes keyed by ``id_col``.
+    The predicate runs in Spark on the payload side only — Catalyst
+    pushes it into the payload scan, and no vector column is read — as
+    one job that collects the surviving ids. Only those rows of
+    ``vector_index(embeddings, vec_col)`` (built on the first search over
+    this DataFrame object, held in driver memory) are then scored: a
+    semi-join, filter-then-score, never score-everything-then-filter.
     """
-    q = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("__qvec")
+    keep = payload.filter(predicate).select(id_col).toArrow().column(0)
+    return _cosine_topk(embeddings, keep, query_vec_id, k, vec_col, id_col)
+
+
+def _cosine_topk(embeddings, keep, query_vec_id, k, vec_col, id_col) -> DataFrame:
+    index = vector_index(embeddings, vec_col)
+    ids = index.rows.column(id_col)
+    cand = pc.not_equal(ids, query_vec_id)
+    if keep is not None:
+        keep = keep.combine_chunks().cast(ids.type)
+        cand = pc.and_(cand, pc.is_in(ids, value_set=keep, skip_nulls=True))
+    rows = np.flatnonzero(_mask(cand))
+    # a query id on several rows scores each candidate once per row
+    queries = np.flatnonzero(_mask(pc.equal(ids, query_vec_id)))
+    scores = np.concatenate(
+        [np.empty(0)] + [cosine_scores(index, index.m[q], rows, 4) for q in queries]
     )
-    keep_ids = payload.filter(predicate).select(id_col)
-    scored = (
-        embeddings.filter(F.col(id_col) != query_vec_id)
-        .join(keep_ids, id_col, "left_semi")
-        .join(F.broadcast(q))
-        .withColumn("score", F.round(cosine(F.col(vec_col), F.col("__qvec")), 4))
-        .drop("__qvec", vec_col)
-    )
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    hits = index.rows.take(np.tile(rows, len(queries)))
+    top = top_k(scores, hits.column(id_col), k)
+    out = hits.take(top).append_column("score", pa.array(scores[top], pa.float64()))
+    return embeddings.sparkSession.createDataFrame(out)
+
+
+def _as_double(v: Column) -> Column:
+    return v.cast("array<double>")
 
 
 # quantization scale: components become floor(v·1e6 + 0.5) BIGINTs, so
@@ -157,7 +248,8 @@ def kmeans_cells(
     codebook needs ~10⁶ points, not 10¹⁰) and keep the final full-scan
     assignment — same operators, one extra filter.
 
-    Returns ``(vec_id, cell, dist)`` — the final assignment.
+    Returns ``(vec_id, cell, dist, iv)`` — the final assignment, with the
+    quantized vector ``semdedup`` prunes on.
     """
     vecs = embeddings.select(
         F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("iv")
@@ -178,16 +270,14 @@ def kmeans_cells(
             vecs.join(F.broadcast(cent))
             .withColumn("dist", d)
             .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cell")).alias("m"))
-            .select(
-                "vec_id", F.col("m.cell").alias("cell"), F.col("m.dist").alias("dist")
-            )
+            # (dist, cell) is unique per vector, so iv never decides the min
+            .agg(F.min(F.struct("dist", "cell", "iv")).alias("m"))
+            .select("vec_id", "m.cell", "m.dist", "m.iv")
         )
 
     def update(a: DataFrame) -> DataFrame:
         return (
-            a.join(vecs, "vec_id")
-            .select("cell", F.posexplode("iv").alias("pos", "x"))
+            a.select("cell", F.posexplode("iv").alias("pos", "x"))
             .groupBy("cell", "pos")
             .agg(F.floor(F.sum("x") / F.count("*")).alias("cx"))
             .groupBy("cell")
@@ -243,12 +333,6 @@ def semdedup(
     Returns ``(vec_id, cell, kept, witness)``; kept=0 rows carry the
     smallest same-cell dup partner as the witness.
     """
-    cells = kmeans_cells(
-        embeddings, seed_ids=seed_ids, iters=iters, vec_col=vec_col, id_col=id_col
-    ).select("vec_id", "cell")
-    qv = embeddings.select(
-        F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("iv")
-    )
     sq = F.aggregate(
         F.zip_with("iv", "iv", lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -257,7 +341,9 @@ def semdedup(
     # one small frame feeds both join sides and the final left join;
     # checkpoint it so the 3-iteration k-means lineage runs once.
     v = (
-        cells.join(qv, "vec_id")
+        kmeans_cells(
+            embeddings, seed_ids=seed_ids, iters=iters, vec_col=vec_col, id_col=id_col
+        )
         .select("vec_id", "cell", "iv", sq.alias("n2"))
         .localCheckpoint(eager=True)
     )

@@ -3,9 +3,13 @@
 The reference's text handling is per-row CPython (content cleaning
 collectors/isna/isna_source.py:100-112, quality filters
 collectors/shargh/pages_collector.py:270-277,329-335, embed-text projection
-vector_db_manager.py:205-215). Here every operator is a pure
+vector_db_manager.py:205-215). Here every feature operator is a pure
 ``pyspark.sql.functions`` expression — JVM-side, whole-stage-codegen'd,
 no Python in the hot path — so it survives a 100 TB scan unchanged.
+Search is the exception: ``bm25_topk`` builds its postings with one
+Spark aggregate per corpus DataFrame and answers each query from them
+in numpy on the driver, as the reference's full-text index answers from
+an index already built.
 
 Operators:
 - tokenization (whitespace + a BPE-ish regex token count)
@@ -21,8 +25,15 @@ tests/test_pipeline_ops.py pins each; ``bm25_topk`` has its DuckDB twin
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .similarity import cached_index, spark_round, top_k
 
 # Tiny deterministic English stopword list — shared with the DuckDB oracle
 # (keep in sync with analytics.py SQL strings).
@@ -193,6 +204,60 @@ def winnow_fingerprints(
     return let_bound(F.split(c, " "), with_toks)
 
 
+class _Postings(NamedTuple):
+    lists: dict  # term -> positions of its postings
+    doc: np.ndarray  # per posting: code of its doc id in ``ids``
+    tf: np.ndarray
+    dl: np.ndarray
+    ids: pa.Array  # distinct doc ids
+    n: float
+    avgdl: float
+
+
+def _bm25_postings(docs: DataFrame, text_col: str, id_col: str) -> _Postings:
+    """One Spark aggregate, collected through Arrow: a row per (doc id,
+    term) with its tf and dl. posexplode_outer marks each input row once
+    (position 0, or null for a null text), so the same rows also carry
+    the corpus stats: N counts input rows, avgdl averages their non-null
+    lengths."""
+    toks = tokens_col(text_col)
+    first = F.col("pos").isNull() | (F.col("pos") == 0)
+    t = (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.size(toks).cast("double").alias("dl"),
+            F.posexplode_outer(toks).alias("pos", "term"),
+        )
+        .groupBy("doc_id", "term")
+        .agg(
+            F.count("term").cast("double").alias("tf"),
+            F.max("dl").alias("dl"),
+            F.count_if(first).alias("n_rows"),
+            F.sum(F.when(first, F.col("dl"))).alias("dl_sum"),
+            F.count(F.when(first, F.col("dl"))).alias("n_dl"),
+        )
+        .toArrow()
+    )
+    n = float(pc.sum(t.column("n_rows")).as_py() or 0)
+    n_dl = pc.sum(t.column("n_dl")).as_py() or 0
+    avgdl = (pc.sum(t.column("dl_sum")).as_py() or 0.0) / n_dl if n_dl else np.nan
+    t = t.filter(pc.is_valid(t.column("term")))
+    docs_enc = t.column("doc_id").combine_chunks().dictionary_encode("encode")
+    terms = t.column("term").combine_chunks().dictionary_encode()
+    codes = terms.indices.to_numpy()
+    ends = np.cumsum(np.bincount(codes, minlength=len(terms.dictionary)))
+    by_term = np.split(np.argsort(codes, kind="stable"), ends[:-1])
+    return _Postings(
+        lists=dict(zip(terms.dictionary.to_pylist(), by_term)),
+        doc=docs_enc.indices.to_numpy(),
+        tf=t.column("tf").to_numpy(),
+        dl=t.column("dl").to_numpy(),
+        ids=docs_enc.dictionary,
+        n=n,
+        avgdl=avgdl,
+    )
+
+
 def bm25_topk(
     docs: DataFrame,
     query_terms: tuple[str, ...],
@@ -212,55 +277,36 @@ def bm25_topk(
 
     Returns the top-``k`` ``(doc_id, score)`` by score desc, id asc.
 
-    Scale shape: tokens explode ONCE and are filtered to the query
-    terms BEFORE any shuffle (the per-(doc,term) tf aggregate only ever
-    sees |terms| rows per doc); df and the corpus stats (N, avgdl) are
-    1-to-|terms|-row aggregates crossJoined back as broadcasts — no
-    driver-side collect; the final ranking is a
-    TakeOrderedAndProject(k), never a global sort. At 100 TB this is
-    one filtered scan + a tf shuffle bounded by docs·|terms|.
+    The postings (term → doc id, tf, dl) and the corpus stats (N, avgdl)
+    are an index in driver memory, built by one Spark aggregate on the
+    first search over this DataFrame object and cached for its lifetime
+    (``similarity.cached_index``). A query scores only its distinct
+    terms' posting lists in numpy and returns its k rows as a local
+    DataFrame, so a repeat search starts no Spark job.
 
     Determinism across engines: idf is rounded to 6 decimals before
     use — N, df, tf, dl, avgdl are all exactly representable doubles
     and IEEE ×/÷ are correctly rounded, so after the idf round every
-    per-term contribution is bit-identical in Spark and the SQL twin;
+    per-term contribution is bit-identical here and in the SQL twin;
     the only engine-varying step left is the ≤|terms|-element sum
     (ulp-level), absorbed by the final round to 4.
     """
-    terms = [t for t in query_terms]
-    toked = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__t")
+    ix = cached_index(
+        docs, ("bm25", text_col, id_col), lambda d: _bm25_postings(d, text_col, id_col)
     )
-    stats = toked.select(F.size("__t").cast("double").alias("dl")).agg(
-        F.count("*").cast("double").alias("n"), F.avg("dl").alias("avgdl")
+    lists = [ix.lists[t] for t in dict.fromkeys(query_terms) if t in ix.lists]
+    df = np.array([len(p) for p in lists], dtype=np.int64)
+    idf = np.repeat(spark_round(np.log(1.0 + (ix.n - df + 0.5) / (df + 0.5)), 6), df)
+    p = np.concatenate([np.empty(0, np.int64)] + lists)
+    tf, dl = ix.tf[p], ix.dl[p]
+    contrib = idf * (tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / ix.avgdl)))
+    hit_docs, per_hit = np.unique(ix.doc[p], return_inverse=True)
+    scores = spark_round(np.bincount(per_hit, weights=contrib, minlength=len(hit_docs)), 4)
+    ids = ix.ids.take(hit_docs)
+    top = top_k(scores, ids, k)
+    return docs.sparkSession.createDataFrame(
+        pa.table({"doc_id": ids.take(top), "score": pa.array(scores[top], pa.float64())})
     )
-    # dl rides along through the explode so the tf aggregate is the ONLY
-    # touch on the big side (no second join back for lengths)
-    tf = (
-        toked.select(
-            "doc_id",
-            F.size("__t").cast("double").alias("dl"),
-            F.explode("__t").alias("term"),
-        )
-        .filter(F.col("term").isin(terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"), F.max("dl").alias("dl"))
-    )
-    df = tf.groupBy("term").agg(F.count_distinct("doc_id").cast("double").alias("df"))
-    idf = F.round(
-        F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)), 6
-    )
-    contrib = F.col("idf") * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        tf.join(F.broadcast(df.crossJoin(stats).withColumn("idf", idf)), "term")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.col("doc_id")).limit(k)
 
 
 def with_text_features(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -68,23 +68,3 @@ def test_search_end_to_end(spark, crawl_docs):
     assert hits[0].title is not None  # payload joined
     scores = [h.score for h in hits]
     assert scores == sorted(scores, reverse=True)
-
-
-def test_reconcile_docs_vectors_flags_drift(spark):
-    """J9 analog: missing vectors and dim inconsistency must surface in
-    the per-source audit columns (monitor_collection.py:50-57 /
-    vector_db_manager.py:99-121 restatement)."""
-    docs = spark.createDataFrame(
-        [(1, "sA"), (2, "sA"), (3, "sA"), (4, "sB"), (5, "sB")],
-        "doc_id long, source string",
-    )
-    vecs = spark.createDataFrame(
-        [(1, [0.1, 0.2]), (2, [0.3, 0.4, 0.5]), (4, [0.6, 0.7])],
-        "vec_id long, embedding array<float>",
-    )
-    got = {
-        r.source: (r.n_docs, r.n_vectors, r.n_missing, r.n_dims)
-        for r in embed.reconcile_docs_vectors(docs, vecs).collect()
-    }
-    assert got["sA"] == (3, 2, 1, 2)  # doc 3 missing; dims 2 and 3 mixed
-    assert got["sB"] == (2, 1, 1, 1)

@@ -1,13 +1,19 @@
 """Physical-plan assertions: the optimizations SURVEY.md §4 claims come
 free from Catalyst must actually appear in the plans — predicate pushdown
 to the parquet scan, column pruning, broadcast joins, top-k as
-TakeOrderedAndProject (never a global sort), and whole-stage codegen."""
+TakeOrderedAndProject (never a global sort), and whole-stage codegen —
+and the searches served from a per-DataFrame index start the Spark jobs
+they claim (counted per job group)."""
+
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from news_crawler_spark import analytics
 from news_crawler_spark.operators import frontier as fops
+from news_crawler_spark.operators import similarity
+from news_crawler_spark.operators import text as text_ops
 from news_crawler_spark import synth
 
 SF = "/root/testdata/sf0.001"
@@ -15,6 +21,30 @@ SF = "/root/testdata/sf0.001"
 
 def plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def jobs_of(spark, action):
+    """Run ``action`` under a fresh job group; return its result and the
+    ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"plans-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def executed_plans(spark, job_ids) -> list[str]:
+    """Physical plans of the SQL executions that ran ``job_ids``."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in job_ids)
+    ]
 
 
 def explain_formatted(df) -> str:
@@ -41,8 +71,18 @@ def test_column_pruning(spark):
 
 
 def test_topk_is_take_ordered(spark):
-    p = plan(analytics.v1_cosine_topk(spark, SF))
-    assert "TakeOrderedAndProject" in p  # never a global sort for limit-k
+    """Top-k is served from an index built once per embeddings
+    DataFrame: the first search builds it with one job, a repeat search
+    on the same object starts none and returns the same rows."""
+    emb = analytics.load(spark, SF, "embeddings")
+
+    def search():
+        return similarity.topk_cosine(emb, analytics.QUERY_VEC_ID, k=10).collect()
+
+    first, built = jobs_of(spark, search)
+    again, jobs = jobs_of(spark, search)
+    assert len(built) == 1 and jobs == []
+    assert again == first and len(first) == 10
 
 
 def test_robots_filter_has_no_shuffle(spark):
@@ -83,48 +123,51 @@ def test_whole_stage_codegen_on_text_features(spark):
     assert "codegen id" in p or "*(1)" in plan(df), p
 
 
-def test_v4_payload_filter_below_scoring(spark):
-    """v4: the payload predicate must be applied on the (tiny) payload
-    side below the semi-join — pushed into the parquet scan when reading
-    files (PushedFilters), or a Filter directly over the cached relation
-    when another test has cached the table — and the top-k must be
-    TakeOrderedAndProject: filter-then-score-then-k, never
-    score-everything-then-filter."""
-    df = analytics.v4_filtered_topk(spark, SF)
-    p = plan(df)
-    assert "TakeOrderedAndProject" in p
-    assert "LeftSemi" in p
-    # the payload filter exists as its own node (below the join build),
-    # NOT as a post-scoring filter: nothing filters on n_chars above the
-    # TakeOrderedAndProject (which is the root), and the semi-join build
-    # side carries the predicate
-    build_side = p.split("LeftSemi", 1)[1]
-    assert "n_chars" in build_side and "src3" in build_side, p
+def filtered_search_plan(spark, monkeypatch, query) -> str:
+    """Run an analytics filtered search twice over the same loaded
+    tables (the first call builds the vector index) and return the
+    executed plan of the second call, which must run exactly one job —
+    the payload predicate's id scan — and read no vector column."""
+    load, frames = analytics.load, {}
+
+    def same_frames(spark, sf, table):
+        if table not in frames:
+            frames[table] = load(spark, sf, table)
+        return frames[table]
+
+    monkeypatch.setattr(analytics, "load", same_frames)
+    want = query(spark, SF).collect()
+    got, jobs = jobs_of(spark, lambda: query(spark, SF).collect())
+    assert got == want
+    assert len(jobs) == 1, jobs
+    (p,) = executed_plans(spark, jobs)
+    assert "embedding" not in p, p
+    return p
 
 
-def test_v6_keyword_filter_below_scoring(spark):
+def test_v4_payload_filter_below_scoring(spark, monkeypatch):
+    """v4: the payload predicate runs on the payload side only, pushed
+    into its scan, as the one job a warm filtered search starts; the
+    surviving ids then select rows of the cached vector index
+    (filter-then-score, never score-everything-then-filter)."""
+    p = filtered_search_plan(spark, monkeypatch, analytics.v4_filtered_topk)
+    assert "n_chars" in p and "src3" in p, p
+
+
+def test_v6_keyword_filter_below_scoring(spark, monkeypatch):
     """v6: keyword + full-text predicates evaluate on the payload side
-    below the semi-join (filter → ids → score), ending in
-    TakeOrderedAndProject — same contract as v4."""
-    df = analytics.v6_keyword_topk(spark, SF)
-    p = plan(df)
-    assert "TakeOrderedAndProject" in p
-    assert "LeftSemi" in p
-    build_side = p.split("LeftSemi", 1)[1]
-    assert "array_contains" in build_side and "Contains" in build_side, p
+    in the search's one job, reading no vector — same contract as v4."""
+    p = filtered_search_plan(spark, monkeypatch, analytics.v6_keyword_topk)
+    assert "array_contains" in p and "Contains" in p, p
 
 
-def test_v7_ts_range_filter_below_scoring(spark):
+def test_v7_ts_range_filter_below_scoring(spark, monkeypatch):
     """v7: the published-timestamp RANGE predicate evaluates on the
-    payload side below the semi-join (filter → ids → score), ending in
-    TakeOrderedAndProject — completes the reference's payload-index trio
-    (source v4, keywords/full-text v6, published_timestamp v7)."""
-    df = analytics.v7_ts_range_topk(spark, SF)
-    p = plan(df)
-    assert "TakeOrderedAndProject" in p
-    assert "LeftSemi" in p
-    build_side = p.split("LeftSemi", 1)[1]
-    assert "ts" in build_side and "2024-01-01" in build_side, p
+    payload side in the search's one job, reading no vector — completes
+    the reference's payload-index trio (source v4, keywords/full-text
+    v6, published_timestamp v7)."""
+    p = filtered_search_plan(spark, monkeypatch, analytics.v7_ts_range_topk)
+    assert "ts" in p and "2024-01-01" in p, p
 
 
 def test_embed_claim_is_salted_two_phase(spark):
@@ -266,16 +309,21 @@ def test_x12_boilerplate_strip_is_broadcast_anti(spark):
 
 
 def test_x13_bm25_plan_shape(spark):
-    """BM25: term filter BELOW the tf aggregate (the only big-side
-    shuffle), stats/df sides broadcast, ranking as
-    TakeOrderedAndProject."""
-    p = plan(analytics.x13_bm25(spark, SF))
-    assert "TakeOrderedAndProject" in p
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-    # the isin(term) filter must sit under the first aggregate, i.e.
-    # appear in the plan BELOW (after, in toString order) the final agg
-    assert "dup" in p and "table" in p  # the IN-list made it into the plan
+    """BM25 scores from postings built once per documents DataFrame by
+    one aggregate over the exploded tokens; repeat searches on the same
+    object, with the same or other terms, start no Spark job."""
+    docs = analytics.load(spark, SF, "documents")
+
+    def search(terms):
+        return lambda: text_ops.bm25_topk(docs, terms, k=10).collect()
+
+    first, built = jobs_of(spark, search(analytics.BM25_TERMS))
+    again, jobs = jobs_of(spark, search(analytics.BM25_TERMS))
+    _, other_jobs = jobs_of(spark, search(("window", "dup", "absent")))
+    assert built and jobs == [] and other_jobs == []
+    assert again == first and len(first) == 10
+    p = "\n".join(executed_plans(spark, built))
+    assert "Generate" in p and "HashAggregate" in p, p
 
 
 def test_v10_kmeans_assign_is_broadcast(spark):
