@@ -15,6 +15,17 @@ Maven, which we cannot do):
   round. A crash mid-round leaves a dangling uncommitted directory that is
   ignored and overwritten on retry (write path is idempotent).
 
+Two write paths share that layout (``<table>/round=<k>/`` holding
+parquet files plus a ``_SUCCESS`` marker). Frontier-sized tables
+(pending, done, docs, pops, seen keys) go through Spark's writer. The
+tiny per-round tables the engine builds on the driver (tokens, cursors,
+lineage: one row per host or source) go through :meth:`write_rows` as
+ONE parquet file written with pyarrow over ``fsio`` and are read back
+by :meth:`read_rows` the same way, so neither side starts a Spark job.
+Spark's :meth:`read` reads those snapshots too, with the same column
+types. :meth:`read` takes an explicit schema where the caller knows it,
+which skips the footer-inference job a schema-less parquet read runs.
+
 On a real cluster, swap ``SnapshotCatalog`` for Iceberg
 (``MERGE INTO frontier``, snapshot ids instead of round markers); the
 engine only uses this module's narrow API, so nothing else changes.
@@ -24,11 +35,21 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .functions import fsio
 
 _COMMIT_RE = re.compile(r"^_COMMIT_(\d+)$")
+
+
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    """Arrow twin of a Spark schema, every column nullable (as Spark
+    writes parquet), timestamps as UTC microseconds."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
 
 
 class SnapshotCatalog:
@@ -67,8 +88,35 @@ class SnapshotCatalog:
         """Idempotent snapshot write (overwrite → crash-retry safe)."""
         df.write.mode("overwrite").parquet(self._path(table, round_no))
 
-    def read(self, table: str, round_no: int) -> DataFrame:
-        return self.spark.read.parquet(self._path(table, round_no))
+    def read(
+        self, table: str, round_no: int, schema: T.StructType | None = None
+    ) -> DataFrame:
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self._path(table, round_no))
+
+    def write_rows(
+        self, table: str, round_no: int, rows: list[dict], schema: T.StructType
+    ):
+        """Idempotent snapshot write of driver-side rows: one parquet file
+        plus ``_SUCCESS``, written with pyarrow (no Spark job). Columns
+        are nullable, as Spark writes them. Returns the Arrow table."""
+        data = pa.Table.from_pylist(rows, schema=_arrow_schema(schema))
+        path = self._path(table, round_no)
+        fsio.rmtree(path)
+        fsio.makedirs(path)
+        fsio.write_parquet(fsio.join(path, "part-00000.parquet"), data)
+        fsio.touch(fsio.join(path, "_SUCCESS"))
+        return data
+
+    def read_rows(
+        self, table: str, round_no: int, schema: T.StructType
+    ) -> list[dict]:
+        """A snapshot as driver-side rows (pyarrow, no Spark job), cast to
+        ``schema`` whichever writer produced it."""
+        data = fsio.read_parquet(self._path(table, round_no))
+        return data.select(schema.names).cast(_arrow_schema(schema)).to_pylist()
 
     def copy_snapshot(self, table: str, from_round: int, to_round: int) -> None:
         """Carry a snapshot forward unchanged as a file copy — no Spark

@@ -27,14 +27,20 @@ Scale shape (10^10-row frontier):
   functions — zero shuffle on the frontier side. The fetch stage is ONE
   fused python pass (fetch+extract), explicitly partitioned by rows (not
   bytes — AQE's byte-based coalescing undersizes CPU-bound python stages).
-  No driver-side row materialization anywhere — counters come from
-  lineage aggregates.
+- frontier-sized data never reaches the driver. Tables of one row per
+  host or source do: the robots and politeness dims are collected once
+  per engine (robots stays a local relation, so no robots scan starts
+  python workers), and each round's budgets, tokens, cursors, lineage
+  and ``RoundStats`` come from per-host or per-source aggregate
+  ``collect()``s and are written from the driver (catalog.write_rows) —
+  no Spark job per tiny table.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,10 +82,19 @@ class CrawlEngine:
         # are never fetched twice (dust.apply_param_rules; rules are
         # broadcast — the seed stream is never shuffled by this)
         self.param_rules = param_rules
-        self.robots = robots if robots is not None else synth.robots_df(spark)
-        self.politeness = (
-            politeness if politeness is not None else synth.politeness_df(spark)
-        )
+        # the dims are a few rows per host, collected once: robots is held
+        # as a local relation (a DataFrame built from a python list scans
+        # through python workers every time a round reads it), politeness
+        # as host → (max_per_round, bucket_capacity) for the driver-side
+        # budgets
+        robots = robots if robots is not None else synth.robots_df(spark)
+        self.robots = spark.createDataFrame(robots.toArrow())
+        if politeness is None:
+            politeness = synth.politeness_df(spark)
+        self._buckets = {
+            r["host"]: (r["max_per_round"], r["bucket_capacity"])
+            for r in politeness.toArrow().to_pylist()
+        }
         self.default_refill = default_refill
         self.max_retries = max_retries
         self.compact_every = max(1, compact_every)
@@ -87,10 +102,11 @@ class CrawlEngine:
         # (eligible' = eligible - popped + re-pended); None = recount once
         self._eligible_left: int | None = None
         # pop_round salt count sized to the largest configured budget
-        # (salts × budget bounds the phase-2 re-rank input per host);
-        # resolved lazily from the politeness table on first step — one
-        # 1-row agg, once per engine lifetime
-        self._pop_salts: int | None = None
+        # (salts × budget bounds the phase-2 re-rank input per host)
+        caps = [c for _refill, c in self._buckets.values() if c is not None]
+        self._pop_salts = frontier_ops.salts_for_budget(
+            max(caps + [2 * default_refill])
+        )
 
     # ------------------------------------------------------------ state reads
     def _read_accreted(self, table: str, upto_round: int) -> DataFrame:
@@ -117,6 +133,9 @@ class CrawlEngine:
             raise FileNotFoundError(f"no committed snapshots for {table}")
         return df
 
+    def _read_pending(self, round_no: int) -> DataFrame:
+        return self.catalog.read("pending", round_no, schemas.FRONTIER)
+
     def _read_done(self, upto_round: int) -> DataFrame:
         """All completed/failed rows through ``upto_round``."""
         return self._read_accreted("done", upto_round)
@@ -131,10 +150,12 @@ class CrawlEngine:
         base_r = self.catalog.latest_existing("seen_keys", upto_round)
         if base_r is None:
             raise RuntimeError("no seen_keys base — ingest() first")
-        df = self.catalog.read("seen_keys", base_r)
+        df = self.catalog.read("seen_keys", base_r, schemas.SEEN_KEYS)
         for r in range(base_r + 1, upto_round + 1):
             if self.catalog.exists("seen_keys_delta", r):
-                df = df.unionByName(self.catalog.read("seen_keys_delta", r))
+                df = df.unionByName(
+                    self.catalog.read("seen_keys_delta", r, schemas.SEEN_KEYS)
+                )
         return df
 
     def _write_seen_keys(
@@ -186,7 +207,9 @@ class CrawlEngine:
     # FOLDS into them (prev ⊕ batch-max) instead of re-aggregating the
     # whole pending slice per poll (round-2 verdict item 3).
     @staticmethod
-    def _cursor_rows(admitted: DataFrame) -> DataFrame:
+    def _newest_per_source(admitted: DataFrame) -> list[dict]:
+        """One aggregate over admitted rows, collected: per source, the
+        row count ``n`` and the newest link (Spark's ``max_by`` order)."""
         pick = F.max_by(
             F.struct(
                 F.col("canonical_url").alias("last_url"),
@@ -195,24 +218,30 @@ class CrawlEngine:
             ),
             F.struct("published_ts", "url_hash"),
         ).alias("__c")
-        return admitted.groupBy("source").agg(pick).select("source", "__c.*")
+        agg = admitted.groupBy("source").agg(F.count("*").alias("n"), pick)
+        return agg.select("source", "n", "__c.*").toArrow().to_pylist()
 
+    @staticmethod
     def _fold_cursors(
-        self, prev_cursors: DataFrame, new_rows: DataFrame, round_no: int
-    ) -> DataFrame:
-        both = prev_cursors.select(
-            "source", "last_url", "published_ts", "url_hash"
-        ).unionByName(self._cursor_rows(new_rows))
-        pick = F.max_by(
-            F.struct("last_url", "published_ts", "url_hash"),
-            F.struct("published_ts", "url_hash"),
-        ).alias("__c")
-        return (
-            both.groupBy("source")
-            .agg(pick)
-            .select("source", "__c.*")
-            .withColumn("round", F.lit(round_no))
-        )
+        prev: list[dict], batch: list[dict], round_no: int
+    ) -> list[dict]:
+        """prev ⊕ batch on the driver, in the order ``max_by`` uses on
+        ``struct(published_ts, url_hash)``: a null timestamp sorts below
+        every real one, and ``url_hash`` breaks ties."""
+
+        def key(r):
+            return (r["published_ts"] is not None, r["published_ts"], r["url_hash"])
+
+        best: dict[str, dict] = {}
+        for r in prev + batch:
+            cur = best.get(r["source"])
+            if cur is None or key(r) > key(cur):
+                best[r["source"]] = r
+        cols = ("source", "last_url", "published_ts", "url_hash")
+        return [
+            {**{c: r[c] for c in cols}, "round": round_no}
+            for _src, r in sorted(best.items())
+        ]
 
     # ------------------------------------------------------------------ ingest
     def _with_learned_rules(self, seed: DataFrame) -> DataFrame:
@@ -251,11 +280,10 @@ class CrawlEngine:
             F.lit(None).cast("int").alias("last_tried_round"),
         )
         self.catalog.write("pending", 0, frontier)
-        empty = self.spark.createDataFrame([], frontier.schema)
-        self.catalog.write("done", 0, empty)
+        self.catalog.write_rows("done", 0, [], schemas.FRONTIER)
         # derive downstream state from the WRITTEN snapshot — recomputing
         # from `frontier` would re-run seed→canonicalize→dedup each time
-        admitted = self.catalog.read("pending", 0)
+        admitted = self._read_pending(0)
         keys0 = admitted.select("url_hash", "canonical_url")
         parts = max(4, self.spark.sparkContext.defaultParallelism)
         self.catalog.write(
@@ -265,10 +293,9 @@ class CrawlEngine:
                 "url_hash"
             ),
         )
-        cursors = self._cursor_rows(admitted).withColumn("round", F.lit(0))
-        self.catalog.write("cursors", 0, cursors.coalesce(1))
-        tokens = self.spark.createDataFrame([], "host string, tokens int")
-        self.catalog.write("tokens", 0, tokens)
+        cursors = self._fold_cursors([], self._newest_per_source(admitted), 0)
+        self.catalog.write_rows("cursors", 0, cursors, schemas.CURSORS)
+        self.catalog.write_rows("tokens", 0, [], schemas.TOKENS)
         self.catalog.commit(0)
         self._eligible_left = None  # recount on first step
 
@@ -296,7 +323,7 @@ class CrawlEngine:
         if prev is None:
             raise RuntimeError("ingest() first — no committed round 0")
         round_no = prev + 1
-        prev_pending = self.catalog.read("pending", prev)
+        prev_pending = self._read_pending(prev)
         seen = self._read_seen_keys(prev)
         cand = with_url_columns(self._with_learned_rules(seed), "url")
         fresh = seen_set.ingest_batch(cand, seen)
@@ -308,7 +335,10 @@ class CrawlEngine:
             F.lit(0).alias("tried_count"),
             F.lit(None).cast("int").alias("last_tried_round"),
         ).cache()
-        n_new = new_rows.count()
+        # one aggregate: the admitted count and the batch's cursor rows
+        # (it also materializes the cache the writes below read)
+        batch = self._newest_per_source(new_rows)
+        n_new = sum(r["n"] for r in batch)
         # discovery round = pure additions (nothing popped)
         self.catalog.write("pending", round_no, prev_pending.unionByName(new_rows))
         # tokens are unchanged by a discovery round — metadata-only copy,
@@ -317,10 +347,9 @@ class CrawlEngine:
         new_keys = new_rows.select("url_hash", "canonical_url")
         self._write_seen_keys(round_no, new_keys, seen)
         prev_cur_r = self.catalog.latest_existing("cursors", prev)
-        cursors = self._fold_cursors(
-            self.catalog.read("cursors", prev_cur_r), new_rows, round_no
-        )
-        self.catalog.write("cursors", round_no, cursors.coalesce(1))
+        prev_cursors = self.catalog.read_rows("cursors", prev_cur_r, schemas.CURSORS)
+        cursors = self._fold_cursors(prev_cursors, batch, round_no)
+        self.catalog.write_rows("cursors", round_no, cursors, schemas.CURSORS)
         self.catalog.commit(round_no)
         self._prune_seen_deltas()
         new_rows.unpersist()
@@ -329,57 +358,87 @@ class CrawlEngine:
         return n_new
 
     # ------------------------------------------------------------------ rounds
-    def _budgets(self, pending: DataFrame, prev_tokens: DataFrame) -> DataFrame:
-        """Token-bucket refill: budget = min(cap, carry + refill) per host
-        with pending work. Small (one row per live host) → broadcast."""
-        hosts = pending.select("host").distinct()
-        b = (
-            hosts.join(prev_tokens, "host", "left")
-            .join(self.politeness, "host", "left")
-            .select(
-                "host",
-                F.least(
-                    F.coalesce(F.col("bucket_capacity"), F.lit(2 * self.default_refill)),
-                    F.coalesce(F.col("tokens"), F.lit(0))
-                    + F.coalesce(F.col("max_per_round"), F.lit(self.default_refill)),
-                ).alias("budget"),
-            )
-        )
-        return b
+    def _budgets(
+        self, allowed: DataFrame, tokens_round: int
+    ) -> dict[str, tuple[int, int]]:
+        """Token-bucket refill per host with allowed pending work, from
+        one per-host count of ``allowed`` (collected) and the carried
+        tokens (read on the driver): host → (budget, pops). budget =
+        min(cap, carry + refill); pops = min(budget, backlog) is exactly
+        the number of rows ``pop_round`` takes for the host."""
+        carry = {
+            r["host"]: r["tokens"]
+            for r in self.catalog.read_rows("tokens", tokens_round, schemas.TOKENS)
+        }
+        out = {}
+        for r in allowed.groupBy("host").count().collect():
+            refill, cap = self._buckets.get(r["host"], (None, None))
+            refill = self.default_refill if refill is None else refill
+            cap = 2 * self.default_refill if cap is None else cap
+            budget = min(cap, (carry.get(r["host"]) or 0) + refill)
+            out[r["host"]] = (budget, max(0, min(budget, r["count"])))
+        return out
+
+    def _budget_frame(self, budgets: dict[str, tuple[int, int]]) -> DataFrame:
+        """The (host, budget) dim ``pop_round``/``drain_eta`` join, as a
+        local relation."""
+        return self.spark.createDataFrame(pa.table({
+            "host": pa.array(list(budgets), pa.string()),
+            "budget": pa.array([b for b, _n in budgets.values()], pa.int32()),
+        }))
 
     def step(self, round_no: int) -> RoundStats:
         """Execute round ``round_no`` (requires round ``round_no-1``
         committed). Idempotent: re-running after a crash overwrites the
         uncommitted outputs and commits once."""
         prev = round_no - 1
-        pending = self.catalog.read("pending", prev)
-        prev_tokens = self.catalog.read("tokens", prev)
+        pending = self._read_pending(prev)
 
         eligible = frontier_ops.eligible(pending, self.max_retries)
         allowed = frontier_ops.allowed_by_robots(eligible, self.robots)
-        budgets = self._budgets(allowed, prev_tokens)
-        if self._pop_salts is None:
-            max_cap = (
-                self.politeness.agg(F.max("bucket_capacity")).first()[0] or 0
-            )
-            self._pop_salts = frontier_ops.salts_for_budget(
-                max(max_cap, 2 * self.default_refill)
-            )
+        # budgets are collected once: they drive the pop, size the fetch
+        # stage and, less the pops, become the next round's tokens
+        budgets = self._budgets(allowed, prev)
         popped = frontier_ops.pop_round(
-            allowed, budgets, salts=self._pop_salts
+            allowed, self._budget_frame(budgets), salts=self._pop_salts
         ).cache()
 
         # size the python fetch stage by ROWS, not bytes (each row costs
         # ~1 ms of python): ~500 rows/task, capped at 2×cores; tiny rounds
-        # stay single-task instead of paying 2×cores task launches. The
-        # count also materializes the popped cache before fan-out.
-        n_popped = popped.count()
+        # stay single-task instead of paying 2×cores task launches
+        n_popped = sum(n for _b, n in budgets.values())
         sc = self.spark.sparkContext
         parts = max(1, min(2 * sc.defaultParallelism, (n_popped + 499) // 500))
         fetched = fetch_extract_pages(popped, partitions=parts).cache()
         docs = documents_from_fetch_extract(fetched).withColumn(
             "fetched_round", F.lit(round_no)
         )
+
+        # ---- per-round accounting: one aggregate over the fetch outcomes
+        # (it also materializes the popped and fetched caches) -------------
+        per_host = (
+            fetched.groupBy("host")
+            .agg(
+                F.count("*").alias("popped"),
+                F.sum(F.col("ok").cast("long")).alias("fetched_ok"),
+                F.sum((~F.col("ok")).cast("long")).alias("fetched_fail"),
+                F.sum(
+                    ((~F.col("ok")) & (F.col("tried_count") + 1 >= self.max_retries))
+                    .cast("long")
+                ).alias("marked_failed"),
+            )
+            .collect()
+        )
+        lineage = sorted(
+            ({"round": round_no, **r.asDict()} for r in per_host),
+            key=lambda r: r["host"],
+        )
+        n_ok = sum(r["fetched_ok"] for r in lineage)
+        n_fail = sum(r["fetched_fail"] for r in lineage)
+        n_marked_failed = sum(r["marked_failed"] for r in lineage)
+        tokens_next = [
+            {"host": h, "tokens": b - n} for h, (b, n) in budgets.items()
+        ]
 
         # ---- MERGE-equivalent state transition ----------------------------
         outcomes = fetched.select(
@@ -418,32 +477,6 @@ class CrawlEngine:
             )
             .unionByName(still_pending)
         )
-
-        # ---- per-round accounting ------------------------------------------
-        pop_counts = popped.groupBy("host").agg(F.count("*").alias("n_popped"))
-        tokens_next = (
-            budgets.join(pop_counts, "host", "left")
-            .select(
-                "host",
-                (F.col("budget") - F.coalesce(F.col("n_popped"), F.lit(0)))
-                .cast("int")
-                .alias("tokens"),
-            )
-        )
-        lineage = (
-            fetched.groupBy("host")
-            .agg(
-                F.count("*").alias("popped"),
-                F.sum(F.col("ok").cast("long")).alias("fetched_ok"),
-                F.sum((~F.col("ok")).cast("long")).alias("fetched_fail"),
-                F.sum(
-                    ((~F.col("ok")) & (F.col("tried_count") + 1 >= self.max_retries))
-                    .cast("long")
-                ).alias("marked_failed"),
-            )
-            .withColumn("round", F.lit(round_no))
-            .select("round", "host", "popped", "fetched_ok", "fetched_fail", "marked_failed")
-        )
         pops_log = popped.select(
             F.lit(round_no).alias("round"),
             "host",
@@ -471,8 +504,10 @@ class CrawlEngine:
             self.catalog.write("done", round_no, finished.coalesce(4))
         self.catalog.write("docs", round_no, docs)
         self.catalog.write("pops", round_no, pops_log.coalesce(4))
-        self.catalog.write("lineage", round_no, lineage.coalesce(1))
-        self.catalog.write("tokens", round_no, tokens_next.coalesce(1))
+        lineage_tbl = self.catalog.write_rows(
+            "lineage", round_no, lineage, schemas.LINEAGE
+        )
+        self.catalog.write_rows("tokens", round_no, tokens_next, schemas.TOKENS)
         if compact_done:
             # fold the pops/lineage LOGS on the same cadence (round-4 GC:
             # without this, one tiny dir per round accretes forever — at
@@ -480,7 +515,11 @@ class CrawlEngine:
             # exempt: it is the append-only DATA product (Iceberg-append
             # analog), not a log.
             parts = max(4, self.spark.sparkContext.defaultParallelism)
-            for table, delta in (("pops", pops_log), ("lineage", lineage)):
+            deltas = (
+                ("pops", pops_log),
+                ("lineage", self.spark.createDataFrame(lineage_tbl)),
+            )
+            for table, delta in deltas:
                 try:
                     prior = self._read_accreted(table, prev)
                     merged = prior.unionByName(delta)
@@ -490,20 +529,6 @@ class CrawlEngine:
                     f"{table}_base", round_no, merged.coalesce(parts)
                 )
 
-        # fetch stats come from the (tiny) written lineage — no extra
-        # count job over the cached fetched lineage
-        agg = (
-            self.catalog.read("lineage", round_no)
-            .agg(
-                F.sum("fetched_ok").alias("ok"),
-                F.sum("fetched_fail").alias("fail"),
-                F.sum("marked_failed").alias("mf"),
-            )
-            .collect()[0]
-        )
-        n_ok = int(agg.ok or 0)
-        n_fail = int(agg.fail or 0)
-        n_marked_failed = int(agg.mf or 0)
         # pending_left by lineage arithmetic — NOT a rescan of the written
         # pending slice (at 10^10 rows that second scan per round is real
         # I/O): every popped row leaves the eligible set, and the failed-
@@ -569,7 +594,7 @@ class CrawlEngine:
 
     def final_frontier(self) -> DataFrame:
         last = self.catalog.latest_round()
-        pending = self.catalog.read("pending", last)
+        pending = self._read_pending(last)
         done = self._read_done(last)
         return pending.unionByName(done)
 
@@ -590,10 +615,10 @@ class CrawlEngine:
         last = self.catalog.latest_round()
         if last is None:
             raise FileNotFoundError("no committed rounds — ingest() first")
-        pending = self.catalog.read("pending", last)
+        pending = self._read_pending(last)
         eligible = frontier_ops.eligible(pending, self.max_retries)
         allowed = frontier_ops.allowed_by_robots(eligible, self.robots)
-        budgets = self._budgets(allowed, self.catalog.read("tokens", last))
+        budgets = self._budget_frame(self._budgets(allowed, last))
         return frontier_ops.drain_eta(
             allowed, budgets, self.default_refill, rounds_cap
         )

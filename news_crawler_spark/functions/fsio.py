@@ -17,8 +17,10 @@ is not shared POSIX storage (``os.path.isdir("s3a://…")`` is simply
   engine against ``file://`` URIs end-to-end (tests/test_seen_filter.py)
   so the URI plumbing crosses real Spark writes.
 
-Only directory-shaped operations the catalog actually needs are
-exposed; anything fancier should go through Spark.
+Only the operations the catalog actually needs are exposed: directory
+handling plus a single-file parquet write and a directory read for the
+tiny per-round tables it writes from the driver. Anything fancier should
+go through Spark.
 """
 
 from __future__ import annotations
@@ -155,3 +157,20 @@ def touch(path: str) -> None:
         open(p, "w").close()
     else:
         fs.open_output_stream(p).close()
+
+
+def write_parquet(path: str, table) -> None:
+    """Write a ``pyarrow.Table`` as one parquet file (parent must exist)."""
+    import pyarrow.parquet as pq
+
+    fs, p = resolve(path)
+    pq.write_table(table, p, filesystem=fs)
+
+
+def read_parquet(path: str):
+    """Every parquet file under a directory as one ``pyarrow.Table``;
+    ``_``/``.``-prefixed names (``_SUCCESS``, checksums) are skipped."""
+    import pyarrow.parquet as pq
+
+    fs, p = resolve(path)
+    return pq.read_table(p, filesystem=fs)

@@ -119,7 +119,25 @@ CURSORS = T.StructType(
     [
         T.StructField("source", T.StringType(), False),
         T.StructField("last_url", T.StringType(), True),
+        T.StructField("published_ts", T.TimestampType(), True),
+        T.StructField("url_hash", T.LongType(), True),
         T.StructField("round", T.IntegerType(), False),
+    ]
+)
+
+# carried token-bucket balance per host (the next round's carry)
+TOKENS = T.StructType(
+    [
+        T.StructField("host", T.StringType(), False),
+        T.StructField("tokens", T.IntegerType(), False),
+    ]
+)
+
+# every admitted canonical URL (the reference's unique link index)
+SEEN_KEYS = T.StructType(
+    [
+        T.StructField("url_hash", T.LongType(), False),
+        T.StructField("canonical_url", T.StringType(), False),
     ]
 )
 

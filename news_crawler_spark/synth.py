@@ -300,12 +300,23 @@ def politeness_rows() -> list[dict]:
     ]
 
 
+def _local_df(spark: SparkSession, rows: list[dict], schema) -> DataFrame:
+    """A local relation (built through Arrow): scanning it starts no
+    python worker, unlike ``createDataFrame(rows)``'s python RDD."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    )
+
+
 def robots_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(robots_rows(), schema=schemas.ROBOTS_RULES)
+    return _local_df(spark, robots_rows(), schemas.ROBOTS_RULES)
 
 
 def politeness_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(politeness_rows(), schema=schemas.POLITENESS)
+    return _local_df(spark, politeness_rows(), schemas.POLITENESS)
 
 
 # ---------------------------------------------------------------------------

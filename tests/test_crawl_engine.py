@@ -166,6 +166,35 @@ def test_incremental_ingest_dedups(spark, engine_run):
     assert left == 0
 
 
+def test_poll_cycle_scans_no_python_rdd(spark, tmp_path_factory):
+    """A poll cycle (``ingest_incremental`` + ``step``) on an engine given
+    list-built robots and politeness tables: no executed plan scans a
+    python RDD (each such scan starts python workers per task), and the
+    cycle stays within 32 Spark jobs — the per-round tiny tables are
+    built on the driver, not by a Spark job each."""
+    from test_plans import executed_plans, jobs_of
+
+    wd = str(tmp_path_factory.mktemp("poll_jobs"))
+    eng = CrawlEngine(
+        spark,
+        wd,
+        robots=spark.createDataFrame(synth.robots_rows()),
+        politeness=spark.createDataFrame(synth.politeness_rows()),
+    )
+    eng.ingest(synth.build_seed_list(spark, 300))
+    eng.step(1)
+
+    def cycle():
+        admitted = eng.ingest_incremental(synth.build_seed_list(spark, 500, lo=200))
+        return admitted, eng.step(eng.catalog.latest_round() + 1)
+
+    (admitted, stats), jobs = jobs_of(spark, cycle)
+    assert admitted > 0 and stats.popped > 0
+    plans = executed_plans(spark, jobs)
+    assert plans and not [p for p in plans if "ExistingRDD" in p]
+    assert len(jobs) <= 32, len(jobs)
+
+
 def test_first_wins_dedup_nulls_lose(spark):
     """A NULL discovery_time must LOSE first-wins dedup (asc_nulls_last),
     not win via struct comparison's nulls-first field ordering."""

@@ -7,8 +7,9 @@ directions:
 1. every fsio routine runs against a REGISTERED NON-POSIX in-memory
    filesystem (``pyarrow.fs._MockFileSystem`` under a private scheme) —
    an ``os.path`` call hiding anywhere in the IO layer fails here;
-2. the catalog's marker/listing/prune protocol runs against that same
-   in-memory fs (no Spark writes involved).
+2. the catalog's marker/listing/prune protocol and its driver-side
+   (pyarrow) snapshot write/read run against that same in-memory fs
+   (no Spark writes involved).
 
 The distributed half (real Spark writes on a ``file://`` URI root) lives
 in the engine tests (test_seen_filter.py).
@@ -113,6 +114,7 @@ def test_read_parquet_column_via_fs(memfs, tmp_path):
 
 # ------------------------------------------------------------ catalog markers
 def test_catalog_commit_protocol_on_non_posix_fs(spark, memfs):
+    from news_crawler_spark import schemas
     from news_crawler_spark.catalog import SnapshotCatalog
 
     cat = SnapshotCatalog(spark, u("cat"))
@@ -126,3 +128,16 @@ def test_catalog_commit_protocol_on_non_posix_fs(spark, memfs):
     cat.prune_upto("frontier", 3)  # missing table dir → no-op
     cat.drop_uncommitted()  # nothing dangling → no-op
     assert cat.latest_round() == 3
+
+    # the driver-side snapshot path: one parquet file + _SUCCESS, read
+    # back through the same fs; a rewrite replaces it (crash retry)
+    rows = [{"host": "a", "tokens": 3}, {"host": "b", "tokens": 0}]
+    cat.write_rows("tokens", 3, rows, schemas.TOKENS)
+    assert cat.exists("tokens", 3)
+    assert sorted(fsio.listdir(u("cat/tokens/round=3"))) == [
+        "_SUCCESS",
+        "part-00000.parquet",
+    ]
+    assert cat.read_rows("tokens", 3, schemas.TOKENS) == rows
+    cat.write_rows("tokens", 3, rows[:1], schemas.TOKENS)
+    assert cat.read_rows("tokens", 3, schemas.TOKENS) == rows[:1]

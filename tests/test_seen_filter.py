@@ -10,10 +10,12 @@ re-admitting the seen set."""
 import os
 import re
 import shutil
+from datetime import datetime, timedelta
 
 import pytest
+from pyspark.sql import functions as F
 
-from news_crawler_spark import streaming, synth
+from news_crawler_spark import schemas, streaming, synth
 from news_crawler_spark.engine import CrawlEngine
 from news_crawler_spark.functions.urls import with_url_columns
 from news_crawler_spark.operators.seen_set import (
@@ -147,24 +149,71 @@ def test_engine_seen_keys_bounded_and_correct(spark, tmp_path_factory):
     assert got == want and len(got) > 300  # 410 seeds minus canonical dups
 
 
+def _cursor_rows(admitted):
+    """Spark reference for the cursors: per source, ``max_by`` of the
+    link under ``struct(published_ts, url_hash)`` over ALL admitted rows."""
+    pick = F.max_by(
+        F.struct(
+            F.col("canonical_url").alias("last_url"), "published_ts", "url_hash"
+        ),
+        F.struct("published_ts", "url_hash"),
+    ).alias("__c")
+    return admitted.groupBy("source").agg(pick).select("source", "__c.*")
+
+
 def test_engine_cursor_fold_matches_full_recompute(spark, tmp_path_factory):
-    """The per-source cursors folded poll by poll (prev ⊕ batch max) equal
-    a full recompute over the pending slice they describe."""
+    """The per-source cursors folded poll by poll (prev ⊕ batch max, on
+    the driver) equal a full Spark recompute over the pending slice they
+    describe, after every poll. One poll carries the order's edge cases:
+    a null ``published_ts`` (loses to any real one; the only link of a
+    new source still becomes its cursor), two links of one source at one
+    new timestamp (``url_hash`` picks), and links at the very timestamp
+    of a source's current cursor (prev against batch by ``url_hash``)."""
     wd = str(tmp_path_factory.mktemp("cur"))
     eng = CrawlEngine(spark, wd)
     eng.ingest(synth.build_seed_list(spark, 150))
+
+    def folded_equals_full() -> dict:
+        latest = eng.catalog.latest_round()
+        folded = {
+            r.source: (r.last_url, r.published_ts, r.url_hash)
+            for r in eng.catalog.read("cursors", latest).collect()
+        }
+        full = {
+            r.source: (r.last_url, r.published_ts, r.url_hash)
+            for r in _cursor_rows(eng.catalog.read("pending", latest)).collect()
+        }
+        assert folded == full and len(folded) > 0
+        return folded
+
     eng.ingest_incremental(synth.build_seed_list(spark, 260))
+    before = folded_equals_full()
+    newest = max(ts for _u, ts, _h in before.values())
+    tie = before["tasnim"][1]
+    disc = datetime(2024, 6, 1)
+
+    def row(source, url, ts):
+        return {"source": source, "url": url, "published_ts": ts, "discovery_time": disc}
+
+    edge = [
+        row("isna", "https://www.isna.ir/news/99000001/null-ts", None),
+        row("fresh", "https://www.isna.ir/news/99000002/only-null", None),
+        row("irna", "https://www.irna.ir/news/99000003/same-ts-a", newest + timedelta(days=1)),
+        row("irna", "https://www.irna.ir/news/99000004/same-ts-b", newest + timedelta(days=1)),
+    ] + [
+        row("tasnim", f"https://www.tasnimnews.com/fa/news/1403/01/01/9900001{k}/at-cursor-ts", tie)
+        for k in range(6)
+    ]
+    assert eng.ingest_incremental(spark.createDataFrame(edge, schemas.SEED_LIST)) == len(edge)
+    after = folded_equals_full()
+    assert after["isna"] == before["isna"]  # the null timestamp lost
+    assert after["fresh"][0].endswith("/only-null") and after["fresh"][1] is None
+    assert "same-ts" in after["irna"][0]
+    # the tie with the old cursor was live: a new link won it on url_hash
+    assert after["tasnim"][1] == tie and after["tasnim"][0].endswith("at-cursor-ts")
+
     eng.ingest_incremental(synth.build_seed_list(spark, 300))
-    latest = eng.catalog.latest_round()
-    folded = {
-        r.source: (r.last_url, r.published_ts, r.url_hash)
-        for r in eng.catalog.read("cursors", latest).collect()
-    }
-    full = {
-        r.source: (r.last_url, r.published_ts, r.url_hash)
-        for r in eng._cursor_rows(eng.catalog.read("pending", latest)).collect()
-    }
-    assert folded == full and len(folded) > 0
+    folded_equals_full()
 
 
 def test_engine_done_compaction_bounds_dirs(spark, tmp_path_factory):
