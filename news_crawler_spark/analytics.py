@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import schemas
 from .operators import dedup, similarity, text
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -43,8 +44,16 @@ QUERY_VEC_ID = 7
 JACCARD_THRESHOLD = 0.6
 
 
+# the corpus tables have a known schema, so reading them starts no
+# footer-inference job; the other tables infer theirs
+_SCHEMAS = {"documents": schemas.CORPUS_DOCUMENTS, "embeddings": schemas.EMBEDDINGS}
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    reader = spark.read
+    if table in _SCHEMAS:
+        reader = reader.schema(_SCHEMAS[table])
+    return reader.parquet(f"{sf_dir}/{table}.parquet")
 
 
 # ===========================================================================
@@ -1380,36 +1389,45 @@ def x14_corpus_build(spark, sf):
     document. A drift in ANY stage — a score boundary, a dedup
     canonical, one contaminated doc sneaking through, one packing
     offset — shifts downstream offsets and breaks the comparison, so the
-    twin pins the stages AND their composition."""
+    twin pins the stages AND their composition.
+
+    One pass: a single scan of ``documents`` is quality-gated, deduped
+    (the canonical copy is the row whose id is the min of its md5 group,
+    a window over one shuffle), eval-labelled, tokenized once into its
+    4-gram hashes and token count (dedup.with_gram_hashes) and cut with
+    ONE localCheckpoint. The contamination join, the anti-join and the
+    packing all read that checkpoint."""
+    from pyspark.sql import Window
+
     from .operators import sampling
     from .operators.dedup import md5_hash64
 
-    q = (
+    canon = F.min("doc_id").over(Window.partitionBy(F.md5("text")))
+    dd = (
         load(spark, sf, "documents")
         .filter(text.quality_score("text") >= 0.5)
-        .select("doc_id", "text")
+        .select("doc_id", "text", canon.alias("__canon"))
+        .filter(F.col("doc_id") == F.col("__canon"))
     )
-    canon = (
-        q.groupBy(F.md5("text").alias("fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+    lab = dd.select(
+        "doc_id",
+        "text",
+        (
+            F.pmod(
+                md5_hash64(F.concat(F.lit("eval:"), F.col("doc_id").cast("string"))),
+                F.lit(20),
+            )
+            == 0
+        ).alias("is_eval"),
     )
-    dd = q.join(canon, "doc_id", "left_semi")
-    lab = dd.withColumn(
-        "__e",
-        F.pmod(
-            md5_hash64(F.concat(F.lit("eval:"), F.col("doc_id").cast("string"))),
-            F.lit(20),
-        )
-        == 0,
+    built = dedup.with_gram_hashes(lab, n=4, passthrough=("is_eval",)).localCheckpoint(
+        eager=True
     )
-    train = lab.filter(~F.col("__e")).drop("__e")
-    ev = lab.filter(F.col("__e")).drop("__e")
-    contaminated = dedup.cross_contamination(train, ev, n=4).select("doc_id")
-    clean = train.join(contaminated, "doc_id", "left_anti")
-    return sampling.pack_token_shards(clean, budget=2048, n_shards=8).orderBy(
-        "doc_id"
-    )
+    train = built.filter(~F.col("is_eval"))
+    clean = train.join(dedup.cross_contamination(built), "doc_id", "left_anti")
+    return sampling.pack_token_shards(
+        clean, budget=2048, n_shards=8, n_tokens="n_tokens"
+    ).orderBy("doc_id")
 
 
 X14_SQL = f"""

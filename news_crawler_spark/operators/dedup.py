@@ -8,15 +8,19 @@ expressed Spark-first:
 - n-gram Jaccard: exact pairwise similarity via a HASHED-shingle
                  inverted-index self-join (the correctness oracle;
                  O(pairs-sharing-a-shingle), not O(n²))
-- MinHash+LSH: signature via JVM-side xxhash64 over hashed shingles
-               inside higher-order array functions (zero Python), banded
-               bucketing, candidate join, exact-Jaccard verify on hashed
-               sets — the scale path (O(n·bands) shuffle)
+- MinHash+LSH: ONE signature path, on the JVM: ``with_minhash`` =
+               ``with_hashed_shingles`` + ``minhash_signature``, xxhash64
+               over hashed shingles inside higher-order array functions
+               (no Python task), banded bucketing, candidate join,
+               exact-Jaccard verify on hashed sets — the scale path
+               (O(n·bands) shuffle)
 - SimHash:     64-bit per-doc sketch from token hashes (pure
                expressions), banded hamming candidates with COMPLETE
                recall at the named radius (n_bands = max_hamming+1)
 - clusters:    connected components over near-dup pairs (iterative
-               min-label propagation) — the pipeline's final output
+               min-label propagation, one aggregate per round, its
+               convergence count observed on the round's own job) — the
+               pipeline's final output
 
 Hash provenance: shingle/MinHash hashes are Spark's builtin ``xxhash64``
 (seed 42), bit-identical to the pure-Python twin in functions/xxh64.py;
@@ -37,68 +41,32 @@ verify-stage candidates. Stop-shingle skew (one shingle shared by k docs
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# XXH64 primes (the public spec) as wrapping uint64 — shared by the
-# vectorized kernels below that must reproduce Spark's XxHash64 bit-for-bit
-_XX_P1 = np.uint64(0x9E3779B185EBCA87)
-_XX_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-_XX_P3 = np.uint64(0x165667B19E3779F9)
-_XX_P4 = np.uint64(0x85EBCA77C2B2AE63)
-_XX_P5 = np.uint64(0x27D4EB2F165667C5)
-_XX_SEED = np.uint64(42)  # Spark's xxhash64 seed
-
-
-def _xx_rotl(x, r: int):
-    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
-
-
-def _xxh64_hash_long(v, seed):
-    """Spark ``XxHash64`` on a LongType input: ``hashLong(v, seed)`` —
-    the 8-byte tail step of the XXH64 spec, vectorized; ``v`` and/or
-    ``seed`` may be uint64 arrays, all ops wrap in uint64 (numpy array
-    arithmetic wraps silently — the semantics we need)."""
-    h = seed + _XX_P5 + np.uint64(8)
-    h = h ^ (_xx_rotl(v * _XX_P2, 31) * _XX_P1)
-    h = _xx_rotl(h, 27) * _XX_P1 + _XX_P4
-    h ^= h >> np.uint64(33)
-    h *= _XX_P2
-    h ^= h >> np.uint64(29)
-    h *= _XX_P3
-    h ^= h >> np.uint64(32)
-    return h
-
-
-def _gram_hashes_distinct(toks: list[str], n: int):
-    """First-occurrence-distinct chained-xxhash64 word-n-gram hashes of
-    a token list, as signed int64 — the ``with_hashed_shingles``
-    contract computed in numpy (token hash = XXH64 of the UTF-8 bytes,
-    gram hash = Spark's multi-arg chaining: each element's hashLong
-    seeds the next, from seed 42). Caller guarantees len(toks) >= n."""
-    import pandas as pd
-
-    from ..functions.xxh64 import xxh64
-
-    th = np.array([xxh64(t.encode("utf-8")) for t in toks], dtype=np.uint64)
-    m = len(toks) - n + 1
-    g = np.full(m, _XX_SEED, dtype=np.uint64)
-    for j in range(n):
-        g = _xxh64_hash_long(th[j : j + m], g)
-    return pd.unique(g.astype(np.int64))
+from .text import tokens_col
 
 
 def spread_for_cpu(df: DataFrame) -> DataFrame:
     """Guard for expression-bound stages over small inputs: a tiny
     parquet table scans as ONE partition (file-size-based splitting), so
-    a per-row-heavy stage (128-hash MinHash signatures, SimHash bit
-    votes, winnowing) serializes on one core — measured as 87% of d3's
-    runtime at sf0.1 (11.7 s single-task signature build). Repartition
-    up to the cluster parallelism ONLY when the input has fewer
-    partitions than cores; at real scale (inputs already ≥ cores
-    partitions) this is a no-op, so no extra shuffle is introduced where
-    it would hurt."""
+    a per-row-heavy stage (SimHash bit votes, winnowing, span
+    extraction) serializes on one core. Repartition up to the cluster
+    parallelism ONLY when the input has fewer partitions than cores; at
+    real scale (inputs already ≥ cores partitions) this is a no-op, so
+    no extra shuffle is introduced where it would hurt.
+
+    The decision never runs ``df``. An input whose physical plan holds
+    an exchange or a subquery is returned as it is: its partitioning is
+    set by that shuffle (and by AQE, which sizes it to the data), and
+    asking such a plan for its partitions runs its shuffle stages, which
+    the caller's action would then run again. For any other plan,
+    building its RDD starts no job, so its partition count is read."""
     sc = df.sparkSession.sparkContext
+    physical = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" in physical or "Subquery" in physical:
+        return df
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
@@ -119,10 +87,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 
 # --------------------------------------------------------------------------
 # shingles
-
-def tokens(text_col: str) -> Column:
-    return F.split(F.col(text_col), " ")
-
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles from a *materialized* token array —
@@ -149,7 +113,7 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
 
 def with_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
     toked = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks")
+        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__toks")
     ).filter(
         # short-doc drop BELOW the shingle projection (≥n tokens ⇔ a
         # non-empty shingle set) — a `size(shingles) > 0` filter above it
@@ -163,22 +127,24 @@ def with_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def with_hashed_shingles(
+def with_gram_hashes(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id, sh: array<long>[, *passthrough]) — shingles as 64-bit
-    xxhash64 values.
+    """(doc_id, n_tokens, sh: array<long>[, *passthrough]) for EVERY
+    row: its whitespace token count and its distinct word n-grams as
+    64-bit xxhash64 values (empty below n tokens).
 
     Everything downstream (inverted index, MinHash signatures, verify
-    intersections) operates on the hashes, never the strings: an 8-byte
-    long vs a ~25-byte shingle string is a 3-5× smaller shuffle and a
-    cheaper sort/intersect, and Jaccard over hashed sets equals Jaccard
-    over the strings up to 64-bit collisions (p ≈ m²/2⁶⁴ per doc pair —
-    vanishing; the sf0.01 DuckDB string-side oracle would catch any).
+    intersections, contamination) operates on the hashes, never the
+    strings: an 8-byte long vs a ~25-byte shingle string is a 3-5×
+    smaller shuffle and a cheaper sort/intersect, and Jaccard over
+    hashed sets equals Jaccard over the strings up to 64-bit collisions
+    (p ≈ m²/2⁶⁴ per doc pair — vanishing; the sf0.01 DuckDB string-side
+    oracle would catch any).
 
     The shingle hash is computed WITHOUT ever materializing the n-gram
     string: each token is hashed once, and a shingle's hash is the
@@ -189,35 +155,18 @@ def with_hashed_shingles(
     shingle) was measured at 2× the cost of this arithmetic-only form
     at sf0.1 (1.0 s → 0.27 s for the shingle stage, exp round 4): every
     token's bytes are hashed n times either way, but the concat
-    allocates and copies each gram before hashing it. Jaccard over
-    either hash family is identical up to 64-bit collisions.
-    """
-    # Drop docs shorter than n tokens HERE, where the predicate is cheap
-    # (as the string path does): an empty set has no Jaccard pairs, and
-    # an all-NULL MinHash signature must never reach the banding join.
-    # The filter must NOT sit above the gram projection: PushDownPredicates
-    # substitutes a deterministic predicate straight through a Project
-    # (no cost heuristic, unlike CollapseProject), so `size(sh) > 0` above
-    # the select re-evaluated the ENTIRE chained-xxhash gram expression
-    # per row inside the pushed filter — measured 10-20× on the d3
-    # signature stage (14 s vs 0.6 s at sf0.1). ≥n tokens ⇔ sh non-empty,
-    # so this placement is semantically identical.
-    # Measured note (optimization round): a numpy/pure-python XXH64
-    # batch kernel for THIS function was built and benchmarked 1.4-1.6x
-    # SLOWER than this expression form (token hashing dominates and
-    # F.xxhash64 is codegen'd JVM; the python XXH64 twin is interpreted)
-    # — reverted. with_minhash keeps its kernel because the 128-wide
-    # signature matrix, not token hashing, dominates there.
+    allocates and copies each gram before hashing it.
+
+    A filter on ``sh`` above this projection would re-evaluate the
+    whole gram expression (PushDownPredicates substitutes it into the
+    pushed predicate); filter on ``n_tokens`` instead, as
+    ``with_hashed_shingles`` does, or materialize first."""
     extra = [F.col(c) for c in passthrough]
-    toked = (
-        spread_for_cpu(docs)
-        .select(
-            F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks"), *extra
-        )
-        .filter(F.size("__toks") >= n)
-    )
-    th = toked.select(
+    th = docs.select(
+        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__toks"), *extra
+    ).select(
         "doc_id",
+        F.size("__toks").alias("n_tokens"),
         F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"),
         *extra,
     )
@@ -230,69 +179,72 @@ def with_hashed_shingles(
             *[F.element_at(F.col("__th"), (i + j + 1).cast("int")) for j in range(n)]
         ),
     )
-    return th.select("doc_id", F.array_distinct(grams).alias("sh"), *extra)
+    # CASE evaluates lazily, so sequence() never sees a short doc (where
+    # it would count downward and element_at(…, 0) would throw)
+    sh = F.when(F.col("n_tokens") >= n, F.array_distinct(grams)).otherwise(
+        F.array().cast("array<long>")
+    )
+    return th.select("doc_id", "n_tokens", sh.alias("sh"), *extra)
+
+
+def with_hashed_shingles(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """(doc_id, sh: array<long>[, *passthrough]) — ``with_gram_hashes``
+    without the docs shorter than n tokens: an empty set has no Jaccard
+    pairs, and an all-NULL MinHash signature must never reach the
+    banding join. The drop filters ``n_tokens``, which the optimizer
+    pushes below the gram projection as a plain ``size(split(text))``
+    test (≥n tokens ⇔ sh non-empty)."""
+    return (
+        with_gram_hashes(docs, text_col, id_col, n, passthrough)
+        .filter(F.col("n_tokens") >= n)
+        .select("doc_id", "sh", *passthrough)
+    )
 
 
 # --------------------------------------------------------------------------
 # cross-table contamination (decontamination pre-pass)
 
-def cross_contamination(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def cross_contamination(grams: DataFrame, eval_col: str = "is_eval") -> DataFrame:
     """Corpus documents sharing ≥1 distinct n-gram with ANY eval
     document → ``(doc_id, n_shared)`` — the decontamination pre-pass a
     training-data pipeline runs before a benchmark-bearing corpus ships
     (train/test n-gram overlap is the standard leakage check).
 
-    Shape: both sides reduce to hashed n-gram SETS (the same chained
-    xxhash64 shingles every dedup tier uses — 8 B/gram, no gram strings
-    in flight); the eval side collapses to one distinct gram set and
-    BROADCASTS (an eval set is a benchmark — 10³-10⁵ docs — so its gram
-    set fits an executor; for a pathological eval side drop the hint
-    and this degrades to a plain shuffled semi-join). The corpus side
-    is a pure scan → explode → broadcast-join → partial-agg pipeline:
-    no corpus-side shuffle of gram rows, only the final per-doc count.
-    ``n_shared`` counts the corpus doc's DISTINCT grams seen in eval
-    (shingle arrays are distinct by construction).
+    Input: ONE materialized ``(doc_id, sh, eval_col)`` frame holding the
+    corpus rows (``eval_col`` false) and the eval rows (true), with
+    their hashed n-gram sets (``with_gram_hashes``: 8 B/gram, no gram
+    strings in flight). analytics.x14 builds it in its single pass: the
+    quality gate, the canonical dedup, the eval label, the grams and the
+    token counts come from one scan into one localCheckpoint, and this
+    join, the anti-join and the packing all read that checkpoint.
 
-    The gram arrays are computed ONCE over corpus ∪ eval and cut with an
-    eager localCheckpoint before either explode. Two reasons, both
-    measured (x9 at sf0.1, 8.0 s → 2.3 s): (a) corpus and eval usually
-    filter the same parent frame, so two lazy ``with_hashed_shingles``
-    calls tokenize+hash the whole table twice; (b) the optimizer's
-    InferFiltersFromGenerate adds ``size(sh) > 0`` above each explode and
-    PushDownPredicates substitutes the ENTIRE chained-xxhash gram
-    expression into that inferred filter at the scan — a third and fourth
-    full evaluation that no source-level filter placement can prevent
-    (the filter is optimizer-born). The checkpoint gives the explodes a
-    plain column to scan. Same cut as ``ngram_jaccard_pairs``; at scale
-    the materialization is ~8 B/gram on executor-local disk, the same
-    bytes the exploded shuffle pays anyway."""
-    both = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("__text"),
-        F.lit(False).alias("__is_eval"),
-    ).unionByName(
-        eval_docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("__text"),
-            F.lit(True).alias("__is_eval"),
-        )
+    The frame must be materialized (checkpointed or cached): the
+    optimizer's InferFiltersFromGenerate adds ``size(sh) > 0`` above
+    each explode and PushDownPredicates substitutes the ENTIRE
+    chained-xxhash gram expression into that inferred filter at the
+    scan (measured on x9 at sf0.1, 8.0 s → 2.3 s with the cut); a
+    checkpoint gives the explodes a plain column to scan.
+
+    Shape: the eval grams BROADCAST (an eval set is a benchmark —
+    10³-10⁵ docs — so its grams fit an executor; for a pathological eval
+    side drop the hint and this degrades to a plain shuffled semi-join)
+    and the corpus grams semi-join them, so a gram repeated across eval
+    docs needs no distinct (and no shuffle) first. The corpus side is a
+    pure scan → explode → broadcast semi-join → partial-agg pipeline: no
+    corpus-side shuffle of gram rows, only the final per-doc count.
+    ``n_shared`` counts the corpus doc's DISTINCT grams seen in eval
+    (gram arrays are distinct by construction)."""
+    tr = grams.filter(~F.col(eval_col)).select(
+        "doc_id", F.explode("sh").alias("g")
     )
-    sh = with_hashed_shingles(
-        both, "__text", "doc_id", n, passthrough=("__is_eval",)
-    ).localCheckpoint(eager=True)
-    tr = sh.filter(~F.col("__is_eval")).select("doc_id", F.explode("sh").alias("g"))
-    ev = (
-        sh.filter(F.col("__is_eval"))
-        .select(F.explode("sh").alias("g"))
-        .distinct()
-    )
-    return tr.join(F.broadcast(ev), "g").groupBy("doc_id").agg(
+    ev = grams.filter(F.col(eval_col)).select(F.explode("sh").alias("g"))
+    return tr.join(F.broadcast(ev), "g", "left_semi").groupBy("doc_id").agg(
         F.count("*").alias("n_shared")
     )
 
@@ -338,7 +290,7 @@ def strip_boilerplate(
     toked = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(group_col).alias("grp"),
-        tokens(text_col).alias("__toks"),
+        tokens_col(text_col).alias("__toks"),
     )
     nch = F.ceil(F.size("__toks") / F.lit(float(para_tokens))).cast("int")
     chunks = F.transform(
@@ -463,68 +415,10 @@ def with_minhash(
     n: int = 3,
     num_hashes: int = 128,
 ) -> DataFrame:
-    """(doc_id, sh, sig) — hashed shingle sets plus their
-    ``num_hashes``-wide MinHash signatures, built in ONE vectorized
-    batch kernel (guide §4.2): token hashes via the pure-python XXH64
-    (functions/xxh64.py — bit-identical to ``F.xxhash64`` on strings,
-    pinned in tests), gram chaining and the num_hashes×shingles
-    signature matrix via the XXH64 long-path recurrence in wrapping
-    numpy uint64. Bit-identical to the expression composition
-    ``with_hashed_shingles + minhash_signature`` (which remains the
-    reference formulation below, exercised by the twin fixtures): the
-    interpreted per-(i, shingle) HOF rehash was the measured bulk of
-    d3's signature stage. Short docs (< n tokens) drop, shingles are
-    first-occurrence distinct — the with_hashed_shingles contract."""
-    seeds = _xxh64_hash_long(np.arange(num_hashes, dtype=np.uint64), _XX_SEED)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out_id, out_sh, out_sig = [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf[text_col]):
-                if txt is None:
-                    continue
-                toks = txt.split(" ")
-                if len(toks) < n:
-                    continue
-                sh = _gram_hashes_distinct(toks, n)
-                sig = (
-                    _xxh64_hash_long(
-                        sh.astype(np.uint64)[None, :], seeds[:, None]
-                    )
-                    .astype(np.int64)
-                    .min(axis=1)
-                )
-                out_id.append(did)
-                out_sh.append(sh.tolist())
-                out_sig.append(sig.tolist())
-            if out_id:  # empty frames infer float64 cols → Arrow mismatch
-                yield pd.DataFrame(
-                    {"doc_id": out_id, "sh": out_sh, "sig": out_sig}
-                )
-
-    id_type = docs.select(F.col(id_col)).schema.fields[0].dataType.simpleString()
-    return (
-        spread_for_cpu(docs)
-        .select(F.col(id_col).alias("doc_id"), F.col(text_col))
-        .mapInPandas(
-            kernel,
-            f"doc_id {id_type}, sh array<long>, sig array<long>",
-        )
-    )
-
-
-def with_minhash_expr(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 128,
-) -> DataFrame:
-    """The expression-tier reference formulation of ``with_minhash``
-    (with_hashed_shingles + minhash_signature) — kept as the semantics
-    the kernel is pinned against in tests."""
+    """(doc_id, sh, sig) — hashed shingle sets (``with_hashed_shingles``:
+    docs shorter than n tokens drop) plus their ``num_hashes``-wide
+    MinHash signatures (``minhash_signature``), all JVM-side
+    expressions: no Python task runs."""
     sh = with_hashed_shingles(docs, text_col, id_col, n)
     return sh.select(
         "doc_id",
@@ -550,14 +444,16 @@ def minhash_lsh_pairs(
     ``ngram_jaccard_pairs`` oracle. The candidate join shuffles
     O(n·bands) band-bucket rows, never O(n²); the verify join ships
     hashed shingle arrays (8 B/shingle), not the strings.
-    """
-    from pyspark import StorageLevel
 
+    The signatures are checkpointed once (one job) and read by both
+    banding sides and both verify sides; the two verify joins read the
+    same ``(doc_id, sh)`` frame, so AQE reuses one broadcast for both.
+    The pairs come back lazy: their consumer runs the banding and the
+    verify inside its own first job (``duplicate_clusters`` reads its
+    pairs exactly once).
+    """
     bands = num_hashes // rows_per_band
-    # explicit spill-safe persist (computed once, read by banding + verify)
-    mh = with_minhash(docs, text_col, id_col, n, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    mh = with_minhash(docs, text_col, id_col, n, num_hashes).localCheckpoint(eager=True)
     band_col = F.explode(
         F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -582,8 +478,9 @@ def minhash_lsh_pairs(
     )
     sets = mh.select("doc_id", "sh")
     verified = (
-        cand.join(sets.withColumnRenamed("doc_id", "a_id").withColumnRenamed("sh", "sh_a"), "a_id")
-        .join(sets.withColumnRenamed("doc_id", "b_id").withColumnRenamed("sh", "sh_b"), "b_id")
+        cand.join(sets.alias("a"), F.col("a_id") == F.col("a.doc_id"))
+        .join(sets.alias("b"), F.col("b_id") == F.col("b.doc_id"))
+        .select("a_id", "b_id", F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"))
         .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn(
             "jaccard",
@@ -592,13 +489,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("a_id", "b_id", "jaccard")
     )
-    # materialize the (small, O(|true pairs|)) result, then release the
-    # persisted signatures — repeated calls in a long session must not
-    # accumulate cached partitions until storage eviction kicks in. The
-    # checkpoint also makes downstream iteration (duplicate_clusters)
-    # read a materialized pair graph instead of recomputing the LSH.
-    verified = verified.localCheckpoint(eager=True)
-    mh.unpersist()
     return verified
 
 
@@ -619,9 +509,14 @@ def duplicate_clusters(
     itself; each round every node takes the min label in its closed
     neighborhood; converged when no label changes. O(diameter) rounds —
     near-dup components are tiny cliques/chains, so 2-4 rounds in
-    practice; ``localCheckpoint`` per round truncates the lineage so the
-    plan does not grow with iterations (the classic iterative-Spark
-    footgun). Driver-side work per round is ONE scalar count.
+    practice. A node carries its adjacency list with its label, so a
+    round is one aggregate over the messages (the node's own row, its
+    label to each neighbor) and never joins; the pairs are read once, by
+    the first round. ``localCheckpoint`` per round truncates the lineage
+    so the plan does not grow with iterations (the classic
+    iterative-Spark footgun), and the round's changed-label count is an
+    observed metric of that checkpoint's job, so the convergence check
+    starts no job of its own.
 
     ``algorithm="twostar"`` delegates to
     ``graph.connected_components_twostar`` — same (doc_id, cluster_id =
@@ -657,42 +552,70 @@ def duplicate_clusters(
         raise ValueError(
             f"algorithm must be auto|label|twostar, got {algorithm!r}"
         )
-    # checkpoint the edge list: every propagation round joins against it,
-    # and a LAZY pairs input (e.g. an all-pairs cosine self-join) would
-    # otherwise be re-evaluated once per round — measured 146 s instead
-    # of ~4 s for x27 at sf0.1 before this cut (callers that already
-    # materialized their pairs lose nothing: the checkpoint is one
-    # cheap scan of the small edge set)
-    edges = (
-        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .unionByName(pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    ).localCheckpoint()
-    changed = -1
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias(
-                    "label"
-                ),
-                (F.col("label") != F.least(F.col("label"),
-                                           F.coalesce("nmin", F.col("label"))))
-                .alias("__changed"),
+    # both directions of every pair from ONE read of it: the pairs are
+    # read once, by the first round, however lazy they are (a lazy
+    # all-pairs input re-read per round cost 146 s instead of ~4 s for
+    # x27 at sf0.1 when rounds joined against it)
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a_id").alias("u"), F.col("b_id").alias("v")),
+                F.struct(F.col("b_id").alias("u"), F.col("a_id").alias("v")),
             )
-        ).localCheckpoint()
-        changed = new_labels.filter(F.col("__changed")).limit(1).count()
-        labels = new_labels.drop("__changed")
+        ).alias("e")
+    ).select("e.*")
+    # state: (node, nbrs, label, own) — a node's adjacency list rides
+    # with its label, so a round is ONE aggregate and never joins. Every
+    # node starts labeled with itself, so the first round reads the
+    # edges alone: label = least(node, min(nbrs)); ``own`` is the label
+    # the node had before the round.
+    state = (
+        edges.groupBy(F.col("u").alias("node"))
+        .agg(F.collect_list("v").alias("nbrs"), F.min("v").alias("nmin"))
+        .select("node", "nbrs", F.least("node", "nmin").alias("label"), F.col("node").alias("own"))
+    )
+    id_type = state.schema["node"].dataType
+
+    def next_round(state: DataFrame) -> DataFrame:
+        # every node sends its label to itself (with its adjacency list)
+        # and to each neighbor; a node's new label is the min it receives
+        msg = F.explode(
+            F.concat(
+                F.array(F.struct(F.col("node").alias("to"), "label", "nbrs")),
+                F.transform(
+                    "nbrs",
+                    lambda nb: F.struct(
+                        nb.alias("to"),
+                        F.col("label").alias("label"),
+                        F.lit(None).cast(T.ArrayType(id_type)).alias("nbrs"),
+                    ),
+                ),
+            )
+        )
+        return (
+            state.select(msg.alias("m"))
+            .select("m.*")
+            .groupBy(F.col("to").alias("node"))
+            .agg(
+                # only the node's own message carries its list
+                F.flatten(F.collect_list("nbrs")).alias("nbrs"),
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("nbrs").isNotNull(), F.col("label"))).alias("own"),
+            )
+        )
+
+    changed = -1
+    for r in range(max_iters):
+        if r:
+            state = next_round(state)
+        # the changed-label count rides on the round's checkpoint job
+        obs = Observation()
+        state = (
+            state.observe(obs, F.count_if(F.col("label") < F.col("own")).alias("n"))
+            .drop("own")
+            .localCheckpoint(eager=True)
+        )
+        changed = obs.get["n"]
         if changed == 0:
             break
     if changed != 0:
@@ -726,7 +649,7 @@ def duplicate_clusters(
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    return state.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 # --------------------------------------------------------------------------
@@ -760,7 +683,7 @@ def simhash64(
     re-evaluates it per BIT — 64 md5s per token, measured 10× the whole
     sketch cost (the same captured-expression trap as the O(tokens²)
     shingle bug in round 1)."""
-    toks = tokens(text_col)
+    toks = tokens_col(text_col)
     hfn = hash_fn or (md5_hash64 if token_hash == "md5" else F.xxhash64)
     hashes = F.transform(toks, lambda t: hfn(t))
     zero = F.array_repeat(F.lit(0).cast("long"), 64)
@@ -1122,7 +1045,7 @@ def window_hash_stream(
     that decides where to cut it."""
     toked = (
         spread_for_cpu(docs)
-        .select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks"))
+        .select(F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__toks"))
         .filter(F.size("__toks") >= window)
     )
     th = toked.select(
@@ -1244,7 +1167,7 @@ def strip_duplicate_spans(
         F.collect_list(F.struct("tok_start", "tok_end")).alias("__spans")
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks")
+        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__toks")
     )
     joined = base.join(by_doc, "doc_id", "left").withColumn(
         "__spans", F.coalesce(F.col("__spans"), F.array())

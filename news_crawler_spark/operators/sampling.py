@@ -86,7 +86,7 @@ def pack_token_shards(
     budget: int,
     n_shards: int,
     key_col: str = "doc_id",
-    text_col: str = "text",
+    n_tokens: str | None = None,
     seed: str = "shard",
 ) -> DataFrame:
     """Deterministic token-budget packing: assign every document a
@@ -94,7 +94,10 @@ def pack_token_shards(
     and cut the running token stream into ``budget``-token bins —
     ``(key, shard, n_tokens, tok_start, bin_id)``, the layout a
     sequence-packing trainer consumes (concatenate a bin, split at the
-    budget boundary).
+    budget boundary). ``n_tokens`` names a column that already holds
+    each document's whitespace token count (analytics.x14 carries it
+    from its single tokenization pass); without it the ``text`` column
+    is split here.
 
     Scale shape: ONE shuffle on the shard id, then a per-shard window
     cumsum. Parallelism = ``n_shards`` — size it to the cluster (a
@@ -112,7 +115,9 @@ def pack_token_shards(
         (sample_bucket(F.col(key_col), seed) % F.lit(n_shards))
         .cast("int")
         .alias("shard"),
-        token_count(text_col).cast("long").alias("n_tokens"),
+        (F.col(n_tokens) if n_tokens else token_count("text"))
+        .cast("long")
+        .alias("n_tokens"),
     )
     w = Window.partitionBy("shard").orderBy(key_col)
     return base.withColumn(

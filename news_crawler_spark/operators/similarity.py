@@ -15,7 +15,8 @@ equivalents here (SURVEY.md T5/E2):
   predicate runs in Spark, one job that collects the surviving ids; only
   those rows of the cached matrix are scored;
 - SemDeDup (``semdedup``): exact-integer k-means cells
-  (``kmeans_cells``), then a within-cell integer-exact cosine ≥ τ prune.
+  (``kmeans_cells``, centroids held on the driver, each assignment a
+  projection), then a within-cell integer-exact cosine ≥ τ prune.
 
 Search math is the arithmetic Spark's ``aggregate(zip_with(...))`` fold
 did: double precision, every dot product and squared norm summed left to
@@ -238,15 +239,19 @@ def kmeans_cells(
     no RNG). An emptied cell simply drops out of later iterations —
     identical behavior in the SQL twin.
 
-    Shape per iteration: one broadcast join against k centroid rows
-    (k ≈ 8-65k, always broadcastable) + one posexplode groupBy on
-    (cell, component) for the update — both linear in rows·dim, no
-    all-pairs anywhere; per-iteration centroids are eagerly
-    checkpointed (8 rows) so the lineage stays O(1) deep however many
-    iterations run (the d5 label-propagation pattern). At 100 TB run
-    the update on a deterministic hash-sample of the corpus (the
-    codebook needs ~10⁶ points, not 10¹⁰) and keep the final full-scan
-    assignment — same operators, one extra filter.
+    Shape: the quantized vectors are checkpointed once; the k × dim
+    centroid matrix lives on the driver and enters the plan as one flat
+    literal. Assignment is a projection: each vector's ``array_min`` over
+    its k ``(dist, cell)`` structs (struct order, so the smaller cell
+    wins a distance tie). No join, no window, no sort. The update is ONE
+    hash aggregate on (cell, component) — floor(sum / count) — collected
+    through Arrow as the next iteration's matrix; an iteration runs one
+    Spark job per stage of that aggregate, the final assignment none.
+    Every row computes k·dim squared differences and the plan carries
+    k·dim literals, so this form is for codebooks up to a few hundred
+    cells (SemDeDup sizes k to the corpus: at ~10³ cells or more, assign
+    against a sampled codebook instead — the cells need not come from
+    Lloyd's, see ``semdedup_prune``).
 
     Returns ``(vec_id, cell, dist, iv)`` — the final assignment, with the
     quantized vector ``semdedup`` prunes on.
@@ -254,40 +259,62 @@ def kmeans_cells(
     vecs = embeddings.select(
         F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("iv")
     ).localCheckpoint(eager=True)
-    cents = (
-        vecs.filter(F.col("vec_id").isin(*seed_ids))
-        .select(F.col("vec_id").alias("cell"), F.col("iv").alias("cv"))
-        .localCheckpoint(eager=True)
-    )
+    id_type = vecs.schema["vec_id"].dataType
 
-    def assign(cent: DataFrame) -> DataFrame:
-        d = F.aggregate(
-            F.zip_with("iv", "cv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+    def centroids(rows: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        """(cell ids, k × dim matrix), in cell order, from ``(cell, pos,
+        cx)`` rows collected through Arrow."""
+        t = rows.toArrow()
+        cell, pos, cx = (t.column(c).to_numpy() for c in ("cell", "pos", "cx"))
+        cells = np.unique(cell)
+        mat = np.zeros((len(cells), int(pos.max()) + 1 if len(pos) else 0), np.int64)
+        mat[np.searchsorted(cells, cell), pos] = cx
+        return cells, mat
+
+    def assign(cells: np.ndarray, mat: np.ndarray) -> DataFrame:
+        if not len(cells):
+            return vecs.select(
+                "vec_id",
+                F.lit(None).cast(id_type).alias("cell"),
+                F.lit(None).cast("long").alias("dist"),
+                "iv",
+            ).limit(0)
+        # the centroids as ONE flat literal (a numpy array crosses to the
+        # JVM in one call); cell k's vector is its k-th dim-long slice
+        dim = mat.shape[1]
+        flat, ids = F.lit(mat.ravel()), F.lit(cells)
+        per_cell = F.transform(
+            F.sequence(F.lit(0), F.lit(len(cells) - 1)),
+            lambda k: F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        "iv", F.slice(flat, k * dim + 1, dim), lambda a, b: (a - b) * (a - b)
+                    ),
+                    F.lit(0).cast("long"),
+                    lambda acc, x: acc + x,
+                ).alias("dist"),
+                F.element_at(ids, k + 1).cast(id_type).alias("cell"),
+            ),
         )
-        return (
-            vecs.join(F.broadcast(cent))
-            .withColumn("dist", d)
-            .groupBy("vec_id")
-            # (dist, cell) is unique per vector, so iv never decides the min
-            .agg(F.min(F.struct("dist", "cell", "iv")).alias("m"))
-            .select("vec_id", "m.cell", "m.dist", "m.iv")
+        return vecs.select("vec_id", F.array_min(per_cell).alias("m"), "iv").select(
+            "vec_id", "m.cell", "m.dist", "iv"
         )
 
-    def update(a: DataFrame) -> DataFrame:
-        return (
+    def update(a: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        return centroids(
             a.select("cell", F.posexplode("iv").alias("pos", "x"))
             .groupBy("cell", "pos")
             .agg(F.floor(F.sum("x") / F.count("*")).alias("cx"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "cx"))).alias("ps"))
-            .select("cell", F.transform("ps", lambda s: s["cx"]).alias("cv"))
         )
 
+    cents = centroids(
+        vecs.filter(F.col("vec_id").isin(*seed_ids)).select(
+            F.col("vec_id").alias("cell"), F.posexplode("iv").alias("pos", "cx")
+        )
+    )
     for _ in range(iters - 1):
-        cents = update(assign(cents)).localCheckpoint(eager=True)
-    return assign(cents)
+        cents = update(assign(*cents))
+    return assign(*cents)
 
 
 # SemDeDup similarity threshold τ = 0.45 as a pure rational: τ² =
@@ -324,8 +351,11 @@ def semdedup(
     Scale shape (the SemDeDup design point): the self-join is keyed on
     the CELL, so pair work is Σ_c |c|², never corpus-quadratic — at 10¹⁰
     docs size k ≈ N/occupancy so cells stay ~10³ and the join is
-    linear·occupancy. The dup test lives IN the join condition, so
-    failing candidates never materialize and the dot expression is
+    linear·occupancy. ``kmeans_cells`` holds its k × dim centroids on
+    the driver and puts them in the plan, which bounds this composition
+    to a few hundred cells; at larger k take the cells from a sampled
+    codebook and call ``semdedup_prune`` directly. The dup test lives
+    IN the join condition, so failing candidates never materialize and the dot expression is
     evaluated exactly once per candidate (a projected score filtered
     afterwards would be evaluated again: PushDownPredicates substitutes
     the projection into the predicate).

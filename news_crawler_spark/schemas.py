@@ -152,10 +152,22 @@ LINEAGE = T.StructType(
     ]
 )
 
+# the corpus tables the build and search queries read (analytics.load):
+# stored articles and their embedding vectors, keyed by the same id
+CORPUS_DOCUMENTS = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+        T.StructField("source", T.StringType(), True),
+        T.StructField("n_chars", T.LongType(), True),
+    ]
+)
+
 EMBEDDINGS = T.StructType(
     [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("vector", T.ArrayType(T.FloatType()), False),
-        T.StructField("dim", T.IntegerType(), False),
+        T.StructField("vec_id", T.LongType(), True),
+        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
+        T.StructField("label", T.IntegerType(), True),
     ]
 )

@@ -122,6 +122,34 @@ def test_auto_falls_back_to_twostar_on_long_chains(spark):
     assert len({r.cluster_id for r in coarse}) > 1
 
 
+def test_label_propagation_convergence_boundary(spark):
+    """Label 0 needs 4 rounds to reach the far end of a 5-node chain, and
+    a 5th round to see no label change. So label propagation warns at
+    max_iters=4 although its labels are already whole, warns and returns
+    the split clustering at max_iters=3, and is silent at max_iters=5."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(4)], "a_id long, b_id long"
+    )
+
+    def run(max_iters):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            got = {
+                r.doc_id: r.cluster_id
+                for r in dedup.duplicate_clusters(
+                    pairs, max_iters=max_iters, algorithm="label"
+                ).collect()
+            }
+        return got, any("did not converge" in str(w.message) for w in caught)
+
+    got, warned = run(4)
+    assert warned and got == {i: 0 for i in range(5)}
+    got, warned = run(3)
+    assert warned and got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 1}
+    got, warned = run(5)
+    assert not warned and got == {i: 0 for i in range(5)}
+
+
 def test_duplicate_clusters_twostar_backend(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],

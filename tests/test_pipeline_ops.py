@@ -167,21 +167,6 @@ def test_minhash_signature_matches_python_twin(spark, docs, doc_rows):
         assert sig == py_minhash(doc_rows[doc_id], 16)[: len(sig)], doc_id
 
 
-def test_minhash_kernel_matches_expression_tier(spark, docs):
-    """The vectorized with_minhash kernel must emit the identical
-    (sh-set, sig) per doc as the expression-tier reference formulation
-    (with_hashed_shingles + minhash_signature)."""
-    ker = {
-        r.doc_id: (set(r.sh), list(r.sig))
-        for r in dedup.with_minhash(docs.limit(20), num_hashes=32).collect()
-    }
-    expr = {
-        r.doc_id: (set(r.sh), list(r.sig))
-        for r in dedup.with_minhash_expr(docs.limit(20), num_hashes=32).collect()
-    }
-    assert ker == expr and len(ker) > 0
-
-
 def _null_beside_wide_sketches(spark, doc_rows, sketch):
     """One NULL text and one text whose sketch exceeds 2^53 (not a
     float64-representable value) in EVERY input partition. There are
@@ -229,6 +214,38 @@ def test_lsh_equals_exact_jaccard(spark, docs, doc_rows):
     }
     assert exact == want
     assert lsh == want
+
+
+def _jobs_of(spark, action):
+    """Run ``action`` under a fresh job group; return its result and the
+    ids of the Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ops-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spread_for_cpu_never_runs_its_input(spark):
+    """spread_for_cpu decides without executing its input: on a fresh
+    semi-joined documents frame (its plan holds a shuffle, whose stages
+    AQE would run to report a partition count) it starts no Spark job,
+    while a plain one-partition scan is still spread over the cores."""
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    canon = d.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
+    semi = d.join(canon.select("doc_id"), "doc_id", "left_semi")
+    _, jobs = _jobs_of(spark, lambda: dedup.spread_for_cpu(semi))
+    assert jobs == []
+
+    cores = spark.sparkContext.defaultParallelism
+    assert d.rdd.getNumPartitions() < cores
+    assert dedup.spread_for_cpu(d).rdd.getNumPartitions() == cores
 
 
 def test_exact_duplicates(spark):
@@ -817,11 +834,11 @@ def test_cross_contamination_matches_string_grams(spark, docs, doc_rows):
 
     ids = sorted(doc_rows)
     ev_ids = set(ids[::7])
-    ev = docs.filter(F.col("doc_id").isin([int(i) for i in ev_ids]))
-    tr = docs.filter(~F.col("doc_id").isin([int(i) for i in ev_ids]))
+    lab = docs.withColumn("is_eval", F.col("doc_id").isin([int(i) for i in ev_ids]))
+    built = dedup_ops.with_gram_hashes(lab, n=4, passthrough=("is_eval",))
     got = {
         r.doc_id: r.n_shared
-        for r in dedup_ops.cross_contamination(tr, ev, n=4).collect()
+        for r in dedup_ops.cross_contamination(built.localCheckpoint(eager=True)).collect()
     }
 
     def grams(txt, n=4):

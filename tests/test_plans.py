@@ -327,16 +327,22 @@ def test_x13_bm25_plan_shape(spark):
 
 
 def test_v10_kmeans_assign_is_broadcast(spark):
-    """Every k-means iteration joins the corpus against k centroid rows:
-    that join must be a broadcast, and the argmin must be an aggregate
-    (min over (dist, cell) structs), not a per-vector window sort."""
+    """k-means ships its k centroids to every task inside the plan (the
+    driver holds them between iterations), so an assignment is a
+    projection — an array_min over (dist, cell) structs — and the update
+    a hash aggregate: no join, no per-vector window sort and no
+    SortAggregate (a min over structs would be one), neither in the
+    iterations nor in the final assignment."""
     from news_crawler_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p = plan(similarity.kmeans_cells(emb, seed_ids=(0, 1, 2, 3), iters=2))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-    assert "Window" not in p
+    out, jobs = jobs_of(
+        spark, lambda: similarity.kmeans_cells(emb, seed_ids=(0, 1, 2, 3), iters=2)
+    )
+    p = "\n".join(executed_plans(spark, jobs) + [plan(out)])
+    assert "HashAggregate" in p, p
+    for node in ("Join", "CartesianProduct", "Window", "SortAggregate"):
+        assert node not in p, (node, p)
 
 
 def test_t6_asof_is_window_not_range_join(spark):
@@ -565,6 +571,35 @@ def test_x20_strip_rebuild_no_explode_single_eval(spark):
     assert "BroadcastHashJoin" in p, p
     head = p.split("Scan ExistingRDD")[0]
     assert head.count("exists(") == 1, head
+
+
+# Spark jobs the corpus build (x14 + d5 + x21 at sf0.001, each result
+# persisted and counted) starts: 38 measured (11 + 11 + 16), plus 10%
+CORPUS_BUILD_JOBS = 41
+
+
+def test_corpus_build_jobs_and_no_python_tasks(spark):
+    """The corpus build runs on the JVM and starts no job that only
+    recomputes or re-checks something: none of its plans holds a Python
+    stage (MinHash, shingles and k-means are expressions) or a
+    SortAggregate, and the three queries stay within their job budget."""
+    from pyspark import StorageLevel
+
+    total = 0
+    for name in ("x14_corpus_build", "d5_dup_clusters", "x21_semdedup"):
+
+        def build():
+            df = getattr(analytics, name)(spark, SF).persist(StorageLevel.MEMORY_AND_DISK)
+            df.count()
+            return df
+
+        df, jobs = jobs_of(spark, build)
+        df.unpersist()
+        p = "\n".join(executed_plans(spark, jobs))
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "SortAggregate"):
+            assert node not in p, (name, node)
+        total += len(jobs)
+    assert total <= CORPUS_BUILD_JOBS, total
 
 
 def test_x21_semdedup_pairs_join_is_cell_equi(spark):
