@@ -243,13 +243,3 @@ def archive_url(source_base: Column | str, jy: Column, jm: Column, jd: Column) -
         "%s/page/archive.xhtml?mn=%d&wide=0&dy=%d&ms=0&pi=1&yr=%d",
         base, jm, jd, jy,
     )
-
-
-def sitemap_key_base64(model: Column | str, date_str: Column | str) -> Column:
-    """F9: base64(json({model, date})) sitemap key (Shargh pattern,
-    collectors/shargh/historical_links_collector.py:61-79) — builtins only."""
-    m = F.col(model) if isinstance(model, str) else model
-    d = F.col(date_str) if isinstance(date_str, str) else date_str
-    return F.base64(
-        F.to_json(F.struct(m.alias("model"), d.alias("date"))).cast("binary")
-    )

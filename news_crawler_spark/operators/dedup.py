@@ -1,8 +1,8 @@
 """Document deduplication family for the training-data pipeline.
 
 The reference dedups only URLs (unique link index, db_models.py:40); a
-100 TB corpus additionally needs *content* dedup. Four tiers, all
-expressed Spark-first:
+100 TB corpus additionally needs *content* dedup. Tiers, all expressed
+Spark-first:
 
 - exact:       md5-groupBy (one shuffle on a 16-byte key)
 - n-gram Jaccard: exact pairwise similarity via a HASHED-shingle
@@ -14,9 +14,6 @@ expressed Spark-first:
                (no Python task), banded bucketing, candidate join,
                exact-Jaccard verify on hashed sets — the scale path
                (O(n·bands) shuffle)
-- SimHash:     64-bit per-doc sketch from token hashes (pure
-               expressions), banded hamming candidates with COMPLETE
-               recall at the named radius (n_bands = max_hamming+1)
 - clusters:    connected components over near-dup pairs (iterative
                min-label propagation, one aggregate per round, its
                convergence count observed on the round's own job) — the
@@ -24,10 +21,8 @@ expressed Spark-first:
 
 Hash provenance: shingle/MinHash hashes are Spark's builtin ``xxhash64``
 (seed 42), bit-identical to the pure-Python twin in functions/xxh64.py;
-SimHash token hashes default to md5-derived 64-bit values so a SQL
-twin can recompute the sketch exactly (xxhash64 variant retained for
-speed via ``token_hash="xxhash64"``).
-Nothing depends on partitioning.
+``md5_hash64`` gives md5-derived 64-bit values a DuckDB twin can
+recompute exactly. Nothing depends on partitioning.
 
 Scale notes: shingles travel as 8-byte hashes everywhere (3-5× smaller
 shuffles than strings; Jaccard identical up to 64-bit collisions, which
@@ -40,7 +35,6 @@ verify-stage candidates. Stop-shingle skew (one shingle shared by k docs
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -108,22 +102,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     # otherwise count downward and element_at(…,0) would throw)
     return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
-    )
-
-
-def with_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    toked = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__toks")
-    ).filter(
-        # short-doc drop BELOW the shingle projection (≥n tokens ⇔ a
-        # non-empty shingle set) — a `size(shingles) > 0` filter above it
-        # would be pushed through the Project with the whole shingle
-        # expression substituted into the predicate (see
-        # with_hashed_shingles)
-        F.size("__toks") >= n
-    )
-    return toked.select(
-        "doc_id", shingles_from_tokens(F.col("__toks"), n).alias("shingles")
     )
 
 
@@ -246,88 +224,6 @@ def cross_contamination(grams: DataFrame, eval_col: str = "is_eval") -> DataFram
     ev = grams.filter(F.col(eval_col)).select(F.explode("sh").alias("g"))
     return tr.join(F.broadcast(ev), "g", "left_semi").groupBy("doc_id").agg(
         F.count("*").alias("n_shared")
-    )
-
-
-# --------------------------------------------------------------------------
-# paragraph-level boilerplate dedup (CCNet/RefinedWeb-style line dedup)
-
-def strip_boilerplate(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    para_tokens: int = 8,
-    min_docs: int = 5,
-) -> DataFrame:
-    """Line-level (here: fixed paragraph) dedup within a group — the
-    CCNet/RefinedWeb boilerplate pass: a paragraph that appears verbatim
-    in ≥ ``min_docs`` distinct documents of the same ``group_col``
-    (site headers, cookie banners, subscribe footers) is boilerplate and
-    is stripped from every document; corpus-level document dedup cannot
-    see it because the documents differ outside the shared lines.
-
-    Returns one row per input document:
-    ``(doc_id, n_paras, n_kept, text_clean)`` — text_clean is the
-    surviving paragraphs rejoined in document order (empty string when
-    everything was boilerplate).
-
-    Shape at 100 TB: documents chunk into ``para_tokens``-token
-    paragraphs in one projection; the paragraph frame is cut with an
-    eager localCheckpoint because it feeds three branches — the
-    frequency aggregate, the anti-join, and the rebuild — each of which
-    would otherwise replay the explode AND its optimizer-inferred
-    ``size(chunks) > 0`` pushed filter with the full chunk expression
-    substituted in (the InferFiltersFromGenerate trap, PLANS.md; the
-    single materialization still pays that inference once, which is the
-    bounded cost). One shuffle on
-    (group, md5(para)) for the document-frequency count; the boilerplate
-    set is tiny by construction (only paragraphs repeated across
-    ``min_docs`` docs) so the strip is a broadcast anti-join; the
-    rebuild shuffles once on doc_id with per-doc bounded state. md5 so
-    the DuckDB oracle reproduces the paragraph keys exactly.
-    """
-    toked = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(group_col).alias("grp"),
-        tokens_col(text_col).alias("__toks"),
-    )
-    nch = F.ceil(F.size("__toks") / F.lit(float(para_tokens))).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), nch - 1),
-        lambda c: F.array_join(
-            F.slice(F.col("__toks"), (c * para_tokens + 1).cast("int"), para_tokens),
-            " ",
-        ),
-    )
-    paras = (
-        toked.select("doc_id", "grp", F.posexplode(chunks).alias("pos", "para"))
-        .withColumn("ph", F.md5("para"))
-        .localCheckpoint(eager=True)
-    )
-    boiler = (
-        paras.groupBy("grp", "ph")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("grp", "ph")
-    )
-    kept = paras.join(F.broadcast(boiler), ["grp", "ph"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda s: s["para"],
-            ),
-            " ",
-        ).alias("text_clean"),
-    )
-    totals = paras.groupBy("doc_id").agg(F.count("*").alias("n_paras"))
-    return totals.join(rebuilt, "doc_id", "left").select(
-        "doc_id",
-        "n_paras",
-        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        F.coalesce("text_clean", F.lit("")).alias("text_clean"),
     )
 
 
@@ -653,7 +549,7 @@ def duplicate_clusters(
 
 
 # --------------------------------------------------------------------------
-# SimHash
+# md5-derived 64-bit hashes and hamming banding
 
 def md5_hash64(value: Column) -> Column:
     """64-bit token hash from the first 16 hex chars of md5 — chosen so a
@@ -666,234 +562,12 @@ def md5_hash64(value: Column) -> Column:
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-def simhash64(
-    text_col: str, token_hash: str = "md5", hash_fn=None
-) -> Column:
-    """64-bit SimHash of the whitespace tokens — pure expressions:
-    per-token hash, per-bit ±1 vote aggregated with a fold over a
-    64-long counter array, sign → bit. No Python, no explode.
-
-    ``token_hash``: "md5" (default — recomputable in DuckDB with SQL
-    md5) or "xxhash64" (cheaper hash; pure-Python twin in
-    tests/test_pipeline_ops.py).
-
-    The token hash is materialized ONCE per token (a ``transform`` into
-    an array of longs) and the 64 bit-probes run on the bound lambda
-    variable. Inlining the hash expression into ``bit_votes`` instead
-    re-evaluates it per BIT — 64 md5s per token, measured 10× the whole
-    sketch cost (the same captured-expression trap as the O(tokens²)
-    shingle bug in round 1)."""
-    toks = tokens_col(text_col)
-    hfn = hash_fn or (md5_hash64 if token_hash == "md5" else F.xxhash64)
-    hashes = F.transform(toks, lambda t: hfn(t))
-    zero = F.array_repeat(F.lit(0).cast("long"), 64)
-
-    def bit_votes(h):
-        # h is the fold's bound variable (already-computed long).
-        # shiftright needs a literal bit count → unroll the 64 bits in
-        # Python; the generated expression stays fully JVM-side.
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(h, b).bitwiseAND(F.lit(1).cast("long")) == 1,
-                    F.lit(1).cast("long"),
-                ).otherwise(F.lit(-1).cast("long"))
-                for b in range(64)
-            ]
-        )
-
-    votes = F.aggregate(
-        hashes, zero, lambda acc, h: F.zip_with(acc, bit_votes(h), lambda a, v: a + v)
-    )
-    # bit 63 is the sign bit in a Java long → use its signed value
-    bit_value = F.array(
-        *[F.lit((1 << b) if b < 63 else -(1 << 63)).cast("long") for b in range(64)]
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes, bit_value,
-            lambda v, bv: F.when(v > 0, bv).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
-def _with_simhash_md5_kernel(
-    docs: DataFrame, text_col: str, id_col: str, words: int
-) -> DataFrame:
-    """SimHash sketch builder as a vectorized batch kernel (guide §4.2:
-    Spark distributes, hashlib+numpy crunch whole batches) — the md5
-    fast path behind ``with_simhash``/``with_simhash128``. Bit-identical
-    to the ``simhash64`` expression fold (pinned against the same
-    pure-python twin in tests/test_pipeline_ops): tokens =
-    ``text.split(" ")`` ≡ Spark's limit=-1 regex split on a single
-    space (both keep leading/trailing/interior empties), token word w =
-    md5 digest bytes [8w, 8w+8) big-endian as a two's-complement int64
-    ≡ ``md5_hash64``/``md5_hash64_w2``'s hex-parse + shiftleft wrap,
-    per-bit vote ``2·count_set(b) > n_tokens`` ≡ the ±1 fold's
-    ``votes > 0`` (a 0 tie leaves the bit clear in both). The
-    interpreted per-token 64-when fold measured ~5× this kernel's wall
-    at sf0.1 for identical sketches. NULL text sketches NULL, as the
-    expression tier's null propagation does."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    shifts = np.arange(64, dtype=np.uint64)
-    out_cols = ["simhash"] if words == 1 else ["sh_w1", "sh_w2"]
-
-    def sketch(batches):
-        for pdf in batches:
-            outs = [np.zeros(len(pdf), dtype=np.int64) for _ in range(words)]
-            nulls = np.zeros(len(pdf), dtype=bool)
-            for i, txt in enumerate(pdf[text_col]):
-                if txt is None:
-                    nulls[i] = True
-                    continue
-                toks = txt.split(" ")
-                buf = b"".join(
-                    hashlib.md5(t.encode("utf-8")).digest() for t in toks
-                )
-                H = np.frombuffer(buf, dtype=">u8").reshape(-1, 2)
-                n = len(toks)
-                for w in range(words):
-                    bits = (
-                        (H[:, w].astype(np.uint64)[:, None] >> shifts)
-                        & np.uint64(1)
-                    ).sum(axis=0)
-                    packed = (
-                        (2 * bits > n).astype(np.uint64) << shifts
-                    ).sum(dtype=np.uint64)
-                    outs[w][i] = int(packed.astype(np.int64))
-            out = pd.DataFrame({"doc_id": pdf[id_col]})
-            for w, c in enumerate(out_cols):
-                # nullable Int64, never where(): a NULL would upcast the
-                # int64 column to float64 and round every sketch > 2^53
-                out[c] = pd.arrays.IntegerArray(outs[w], nulls)
-            yield out
-
-    id_type = docs.select(F.col(id_col)).schema.fields[0].dataType.simpleString()
-    schema = f"doc_id {id_type}, " + ", ".join(f"{c} long" for c in out_cols)
-    return spread_for_cpu(docs).select(F.col(id_col), F.col(text_col)).mapInPandas(
-        sketch, schema
-    )
-
-
-def with_simhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    token_hash: str = "md5",
-) -> DataFrame:
-    if token_hash == "md5":
-        return _with_simhash_md5_kernel(docs, text_col, id_col, words=1)
-    return spread_for_cpu(docs).select(
-        F.col(id_col).alias("doc_id"), simhash64(text_col, token_hash).alias("simhash")
-    )
-
-
-# ---- 128-bit variant -------------------------------------------------------
-# At 10^9+ docs, complete recall at hamming radius 8 over a 64-bit sketch
-# needs 9 bands of ~7 bits → only 128 bucket values per band, so candidate
-# volume grows ~n²/128 per band on dissimilar corpora (the scale note on
-# simhash_pairs). Doubling the sketch to 128 bits keeps the same pigeonhole
-# guarantee with ~14-bit chunks — 16384 bucket values per band, two orders
-# of magnitude fewer accidental collisions — at 2× sketch cost.
-
-def md5_hash64_w2(value: Column) -> Column:
-    """The SECOND 64-bit word of md5 (hex chars 17-32) — md5 is 128 bits,
-    so the two words give two independent 64-bit token hashes for free."""
-    hx = F.md5(value)
-    hi = F.conv(F.substring(hx, 17, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(hx, 25, 8), 16, 10).cast("long")
-    return F.shiftleft(hi, 32).bitwiseOR(lo)
-
-
-def with_simhash128(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, sh_w1, sh_w2): a 128-bit SimHash as two independent
-    64-bit sketches — each bit of a SimHash is independent, so sketching
-    the two md5 words separately IS the 128-bit sketch. Built by the
-    md5 batch kernel (one digest per token serves BOTH words — the
-    expression tier hashed every token twice)."""
-    return _with_simhash_md5_kernel(docs, text_col, id_col, words=2)
-
-
-def simhash128_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """ALL pairs with hamming128 <= max_hamming via the banded pigeonhole
-    over the 128-bit sketch (same contract and plan order as
-    ``simhash_pairs``; chunks never straddle the word boundary, so every
-    chunk is one shiftright+mask on one long)."""
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    sh = with_simhash128(docs, text_col, id_col).persist()
-    bands_w1 = (n_bands + 1) // 2
-    bands_w2 = n_bands - bands_w1
-
-    def word_chunks(col: str, n: int, band_off: int):
-        bounds = [b * 64 // n for b in range(n + 1)]
-        return [
-            F.struct(
-                F.lit(band_off + b).alias("band"),
-                F.shiftright(F.col(col), bounds[b])
-                .bitwiseAND(F.lit((1 << (bounds[b + 1] - bounds[b])) - 1).cast("long"))
-                .alias("chunk"),
-            )
-            for b in range(n)
-        ]
-
-    banded = sh.select(
-        "doc_id",
-        "sh_w1",
-        "sh_w2",
-        F.explode(
-            F.array(
-                *word_chunks("sh_w1", bands_w1, 0),
-                *word_chunks("sh_w2", bands_w2, bands_w1),
-            )
-        ).alias("bb"),
-    ).select(
-        "doc_id", "sh_w1", "sh_w2",
-        F.col("bb.band").alias("band"), F.col("bb.chunk").alias("chunk"),
-    )
-    # verify BEFORE distinct (the d4 lesson: dedupe true pairs, never the
-    # raw candidate stream)
-    pairs = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "chunk"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("x.sh_w1").bitwiseXOR(F.col("y.sh_w1")))
-            + F.bit_count(F.col("x.sh_w2").bitwiseXOR(F.col("y.sh_w2"))),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("x.doc_id").alias("a_id"),
-            F.col("y.doc_id").alias("b_id"),
-            "hamming",
-        )
-        .distinct()
-    )
-    pairs = pairs.localCheckpoint(eager=True)
-    sh.unpersist()
-    return pairs
-
-
 def _banded64(sh: DataFrame, n_bands: int) -> DataFrame:
     """(doc_id, simhash) → one row per band with the band's exact chunk
-    value. Uneven split: chunk b covers bits [bounds[b], bounds[b+1])."""
+    value of the 64-bit sketch. Uneven split: chunk b covers bits
+    [bounds[b], bounds[b+1]). With n_bands = max_hamming + 1, two sketches
+    within that hamming radius agree on at least one whole band
+    (pigeonhole), so banding on equal chunks has complete recall."""
     bounds = [b * 64 // n_bands for b in range(n_bands + 1)]
     return sh.select(
         "doc_id",
@@ -919,113 +593,6 @@ def _banded64(sh: DataFrame, n_bands: int) -> DataFrame:
         F.col("bb.band").alias("band"),
         F.col("bb.chunk").alias("chunk"),
     )
-
-
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    n_bands: int | None = None,
-    token_hash: str = "md5",
-) -> DataFrame:
-    """ALL pairs with hamming(simhash) <= max_hamming, found via the
-    classic banded pigeonhole: split 64 bits into ``n_bands`` chunks; a
-    pair differing in at most ``n_bands - 1`` bits must share ≥1 exact
-    chunk. Default ``n_bands = max_hamming + 1`` — guaranteed-complete
-    recall at the named radius (the verify step is exact bit_count, so no
-    false positives either; output == the all-pairs oracle).
-
-    Scale note: complete recall at hamming 8 needs 9 bands of ~7 bits —
-    128 bucket values per band, so candidate volume grows ~n²/128 per
-    band on dissimilar corpora. At 10^9+ docs either widen the sketch
-    (128-bit SimHash → 16-bit chunks) or pass an explicit smaller
-    ``n_bands`` and accept probabilistic recall above ``n_bands - 1``.
-    """
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    sh = with_simhash(docs, text_col, id_col, token_hash).persist()
-    banded = _banded64(sh, n_bands)
-    # ORDER MATTERS: the hamming verify (xor + bit_count, codegen'd) runs
-    # on the raw banded join output BEFORE the distinct — verifying is a
-    # per-row expression, deduping is a shuffle, so the distinct must see
-    # only true pairs (thousands), never the full candidate stream
-    # (n²/2^chunk_bits per band). Doing distinct first measured 35.8 s at
-    # sf0.1; this order is ~3 s for identical output.
-    pairs = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "chunk"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("x.doc_id").alias("a_id"),
-            F.col("y.doc_id").alias("b_id"),
-            "hamming",
-        )
-        .distinct()
-    )
-    # materialize, then release the persisted sketches (cache-lifetime
-    # hygiene — same reasoning as minhash_lsh_pairs)
-    pairs = pairs.localCheckpoint(eager=True)
-    sh.unpersist()
-    return pairs
-
-
-def incremental_simhash_pairs(
-    base: DataFrame,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    n_bands: int | None = None,
-    token_hash: str = "md5",
-) -> DataFrame:
-    """Near-dup the NEW batch against the existing corpus WITHOUT
-    re-pairing the corpus: every (batch doc, base doc) pair with
-    hamming(simhash) <= max_hamming — the content-level analog of the
-    URL seen-filter probe (J1's incremental path): each crawl poll asks
-    "is this new article a near-copy of anything we already hold?"
-    against a base that only ever grows.
-
-    Same banded pigeonhole + verify-inside-the-join as simhash_pairs,
-    but the join is batch-bands × base-bands — the base side is NEVER
-    self-joined, so cost is O(|base| + |batch| · band_occupancy) per
-    poll instead of the O(|base|²/2^bits) a full re-pair would grow
-    toward. At scale the base's (doc_id, simhash) projection is
-    write-once (persist the sketch column at ingest; bands derive in
-    the scan), so each poll reads the base once and shuffles only its
-    banded projection."""
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    base_sh = with_simhash(base, text_col, id_col, token_hash).persist()
-    batch_sh = with_simhash(batch, text_col, id_col, token_hash).persist()
-    bb = _banded64(base_sh, n_bands).withColumnsRenamed(
-        {"doc_id": "base_id", "simhash": "base_simhash"}
-    )
-    nb = _banded64(batch_sh, n_bands).withColumnsRenamed(
-        {"doc_id": "batch_id", "simhash": "batch_simhash"}
-    )
-    # verify BEFORE distinct, for the same reason as simhash_pairs: the
-    # xor+bit_count is a codegen'd per-row expression on the candidate
-    # stream; the distinct shuffle must only ever see true pairs
-    pairs = (
-        nb.join(bb, ["band", "chunk"])
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("batch_simhash").bitwiseXOR(F.col("base_simhash"))),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("batch_id", "base_id", "hamming")
-        .distinct()
-    )
-    pairs = pairs.localCheckpoint(eager=True)
-    base_sh.unpersist()
-    batch_sh.unpersist()
-    return pairs
 
 
 # --------------------------------------------------------------------------
@@ -1328,14 +895,14 @@ def cdc_chunks(
     cost is O(n·window) like winnowing. Downstream dedup groups by
     ``md5(chunk_text)`` — one map-side-combined shuffle of 16-byte
     keys, the same bill as every other dedup tier here."""
-    # vectorized batch kernel (guide §4.2 — the simhash/minhash
-    # treatment applied to the boundary scan): one md5 per window
-    # position in hashlib instead of the interpreted per-position
-    # filter/slice/join HOF chain. Bit-identical semantics: boundary
-    # after 1-based position i (window ≤ i ≤ n−1) iff the first 12 md5
-    # hex chars of the window string ending at i are 0 mod divisor;
-    # doc end always a boundary; NULL text yields no rows (the
-    # expression form's posexplode-over-NULL behavior).
+    # vectorized batch kernel (guide §4.2, applied to the boundary
+    # scan): one md5 per window position in hashlib instead of the
+    # interpreted per-position filter/slice/join HOF chain.
+    # Bit-identical semantics: boundary after 1-based position i
+    # (window ≤ i ≤ n−1) iff the first 12 md5 hex chars of the window
+    # string ending at i are 0 mod divisor; doc end always a boundary;
+    # NULL text yields no rows (the expression form's
+    # posexplode-over-NULL behavior).
     import hashlib
 
     import pandas as pd

@@ -78,7 +78,7 @@ def mine_param_rules(pages: DataFrame, min_support: int = 3) -> DataFrame:
     """Mine per-host removable-parameter rules from (url, digest) pairs.
 
     ``pages``: columns ``url`` (string), ``digest`` (string — any stable
-    content fingerprint: simhash hex, md5 of extracted text, …).
+    content fingerprint, e.g. the md5 of the extracted text).
 
     Returns (host, param, support, violations, removable) — one row per
     (host, param key) that produced at least one piece of evidence.

@@ -23,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import schemas
 
 # F12: per-source selector configs — the Spark restatement of the
 # reference's five hand-written parser families
@@ -34,8 +33,7 @@ from .. import schemas
 # order) and a title regex. The dict is tiny and is shipped to executors
 # inside the serialized task closure — the same mechanism as an explicit
 # ``sc.broadcast`` of a collected config-dim table, which is where these
-# rows would come from in production (``selector_config_df`` below is
-# that dim's schema).
+# rows would come from in production.
 SELECTOR_CONFIGS = {
     "classic": {
         "block": r"<p>(.*?)</p>|<img src=\"(.*?)\">",
@@ -63,17 +61,6 @@ _COMPILED = {
     for d, cfg in SELECTOR_CONFIGS.items()
 }
 
-
-def selector_config_df(spark) -> DataFrame:
-    """The selector-config dim as a DataFrame (broadcast-joinable surface:
-    one row per source with its dialect + regexes), for catalogs/audit."""
-    rows = [
-        {"source": s, "dialect": d, **SELECTOR_CONFIGS[d]}
-        for s, d in SOURCE_DIALECT.items()
-    ]
-    return spark.createDataFrame(
-        rows, "source string, dialect string, block string, title string"
-    )
 
 EXTRACTED_SCHEMA = (
     "doc_id string, url string, source string, host string, "
@@ -166,16 +153,3 @@ def documents_from_fetch_extract(fused: DataFrame) -> DataFrame:
         "published_ts",
         F.unix_timestamp("published_ts").alias("published_epoch"),
     )
-
-
-def content_text(documents: DataFrame) -> DataFrame:
-    """Reassemble reference-style ``content`` = '\n'-joined non-empty text
-    spans (pages_collector.py:219-222) — pure built-ins (F13), no Python."""
-    txt = F.array_join(
-        F.transform(
-            F.filter(F.col("spans"), lambda s: (s["kind"] == "text") & (s["text"] != "")),
-            lambda s: s["text"],
-        ),
-        "\n",
-    )
-    return documents.withColumn("content", txt)

@@ -1,4 +1,4 @@
-"""Fetch stage: popped frontier rows → raw pages.
+"""Fetch stage: popped frontier rows → fetched, extracted pages.
 
 The reference fetches with async Playwright under a semaphore
 (collectors/isna/pages_collector.py:55-181 and peers, SURVEY.md S7/S8).
@@ -20,13 +20,6 @@ from pyspark.sql import functions as F
 
 from .. import synth
 
-# popped columns carried through + fetch results
-FETCHED_SCHEMA = (
-    "url string, canonical_url string, url_hash long, host string, "
-    "source string, priority int, published_ts timestamp, "
-    "discovery_time timestamp, tried_count int, "
-    "ok boolean, fetch_ms int, payload string"
-)
 
 _CARRY = [
     "url", "canonical_url", "url_hash", "host", "source", "priority",
@@ -52,34 +45,6 @@ def _salted(popped: DataFrame, partitions: int | None, salts: int | None) -> Dat
     return popped.repartition(partitions, F.col("host"), salt)
 
 
-def fetch_pages(popped: DataFrame, partitions: int | None = None, salts: int | None = None) -> DataFrame:
-    """Fetch every popped URL. Deterministic; failure injection ~5%.
-
-    Repartitions by (host, url_hash-derived salt): a production fetcher
-    holds one connection pool per host group per partition, but a single
-    hot host must not collapse the stage to one task — the salt spreads
-    it over up to ``salts`` partitions (SURVEY.md X4 skew handling; the
-    politeness *rate* was already enforced at pop time, so splitting a
-    host across tasks never violates the budget).
-    """
-    src = _salted(popped.select(*_CARRY), partitions, salts)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-partition setup would go here (browser context / HTTP pool)
-        for pdf in batches:
-            urls = pdf["canonical_url"]
-            pdf = pdf.copy()
-            pdf["ok"] = urls.map(synth.page_ok)
-            pdf["fetch_ms"] = urls.map(synth.page_fetch_ms).astype("int32")
-            pdf["payload"] = [
-                synth.page_payload(u) if ok else None
-                for u, ok in zip(urls, pdf["ok"])
-            ]
-            yield pdf
-
-    return src.mapInPandas(run, schema=FETCHED_SCHEMA)
-
-
 # fused fetch+extract: one python pass, no payload through Arrow ----------
 
 _RAW_SCHEMA = (
@@ -92,15 +57,6 @@ _RAW_SCHEMA = (
 _DOC_STRUCT = (
     "struct<title:string,summary:string,keywords:array<string>,"
     "spans:array<struct<kind:string,text:string,media_ref:string,offset:int>>>"
-)
-
-FETCH_EXTRACT_SCHEMA = (
-    "url string, canonical_url string, url_hash long, host string, "
-    "source string, priority int, published_ts timestamp, "
-    "discovery_time timestamp, tried_count int, "
-    "ok boolean, fetch_ms int, "
-    "title string, summary string, keywords array<string>, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
 
@@ -118,8 +74,9 @@ def fetch_extract_pages(
     (codegen). Building array<struct> columns from python objects is
     allocation-bound and was the measured scalability ceiling of the whole
     stage — a string column + JVM parse is ~3× cheaper and scales with
-    cores. Same semantics as ``extract_documents(fetch_pages(df))`` —
-    asserted by the span-equality fixtures, which run both paths.
+    cores. Same documents as fetching the payload and running
+    ``extract.extract_documents`` over it, as a second python stage —
+    asserted by tests/test_pipeline_ops.py, which runs both paths.
     """
     import json
 

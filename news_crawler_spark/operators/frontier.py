@@ -160,24 +160,6 @@ def salts_for_budget(
     return max(1, min(max_salts, target_phase2 // max(1, max_budget)))
 
 
-def with_salted_key(df: DataFrame, hot_hosts: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Salted repartition key for hot hosts (SURVEY.md X4): hosts in
-    ``hot_hosts`` (small, broadcast) get url_hash-derived salt so one
-    dominant host spreads over ``n_salts`` partitions; others keep salt 0.
-    Use for the fetch/extract stages where per-host ordering no longer
-    matters (ordering was fixed at pop time)."""
-    j = df.join(F.broadcast(hot_hosts.select("host", F.lit(True).alias("__hot"))), "host", "left")
-    salt = F.when(
-        F.col("__hot").isNotNull(), F.pmod(F.col("url_hash"), F.lit(n_salts))
-    ).otherwise(F.lit(0))
-    return (
-        j.withColumn("__salt", salt)
-        .drop("__hot")
-        .repartition(F.col("host"), F.col("__salt"))
-        .drop("__salt")
-    )
-
-
 # Query parameters that mark per-visitor state in a URL: any value makes
 # the "same" page infinitely many URLs — classic crawler-trap fuel.
 TRAP_SESSION_PARAMS = (
@@ -260,8 +242,9 @@ def apportion_budget(
 ) -> DataFrame:
     """Largest-remainder (Hamilton) apportionment of a global per-round
     fetch budget across hosts, proportional to an integer rank signal
-    (e.g. ``graph.pagerank_int``): budget_h = ⌊T·r_h/R⌋ plus one of the
-    T − Σ⌊·⌋ leftover units for the largest remainders (ties by host) —
+    (e.g. a host rank from the link graph): budget_h = ⌊T·r_h/R⌋ plus
+    one of the T − Σ⌊·⌋ leftover units for the largest remainders (ties
+    by host) —
     Σ budgets == T exactly, every step integer arithmetic, so a SQL twin
     replays it bit-for-bit. This is how a rank signal becomes the
     per-host budget column ``pop_round`` consumes when the crawl has a
@@ -310,92 +293,6 @@ def apportion_budget(
     )
 
 
-def crawl_delay_tokens(
-    robots_txt: DataFrame,
-    agent: str = "newsbot",
-    default_delay: int = 2,
-    round_seconds: int = 30,
-    cap: int = 10,
-) -> DataFrame:
-    """Parse raw robots.txt bodies into per-host politeness rates —
-    the seam between the robots surface and the token buckets: the
-    reference hard-codes its per-host sleep; a web-scale crawler reads
-    Crawl-delay and sizes each host's per-round token refill from it.
-
-    Input ``(host, robots_txt)``; output ``(host, delay, tokens)`` with
-    ``delay`` the effective crawl-delay in seconds — the ``agent``
-    section's value if one exists, else the ``*`` section's, else
-    ``default_delay`` (most-specific-group-wins, the REP rule) — and
-    ``tokens = min(cap, round_seconds div delay)``, the refill
-    ``TokenBucket``/``pop_round`` consumes. Within the winning
-    precedence the SMALLEST delay wins (conservative, deterministic).
-
-    Parsing is set-at-a-time, all JVM-side: split body into lines and
-    posexplode; lowercase+trim; sectionize with a running count of
-    ``user-agent:`` markers (one window sum per host — robots bodies
-    are one row per HOST, ~10^7 rows at web scale, nothing
-    corpus-sized); join each ``crawl-delay:`` line to its section's
-    agent; pick the winner with one exact-integer ``max_by``
-    (prec·10^6 − delay). Simplification, documented: each user-agent
-    line opens its own section (consecutive UA lines sharing one
-    group — legal REP — attach directives to the last of them).
-    Non-integer delays are dropped by the cast (NULL), never crash."""
-    lines = robots_txt.select(
-        "host",
-        F.posexplode(F.split("robots_txt", "\n")).alias("pos", "line"),
-    ).withColumn("line", F.lower(F.trim("line")))
-    sec = F.sum(
-        F.col("line").startswith("user-agent:").cast("int")
-    ).over(
-        Window.partitionBy("host")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    l = lines.withColumn("sec", sec)
-    val = F.trim(F.substring_index("line", ":", -1))
-    uas = l.where(F.col("line").startswith("user-agent:")).select(
-        "host", "sec", val.alias("ua")
-    )
-    # try_cast, not cast: the session runs ANSI mode (Spark 4 default),
-    # where a malformed delay value would fail the job instead of
-    # falling through to the default
-    delays = l.where(F.col("line").startswith("crawl-delay:")).select(
-        "host", "sec", val.try_cast("long").alias("delay")
-    )
-    cand = (
-        delays.join(uas, ["host", "sec"])
-        .where(F.col("ua").isin(agent, "*") & F.col("delay").isNotNull())
-        .select(
-            "host",
-            "delay",
-            F.when(F.col("ua") == agent, F.lit(2)).otherwise(F.lit(1)).alias("__prec"),
-        )
-    )
-    eff = cand.groupBy("host").agg(
-        F.max_by(
-            F.col("delay"), F.col("__prec") * F.lit(1_000_000) - F.col("delay")
-        ).alias("delay")
-    )
-    return (
-        robots_txt.select("host")
-        .join(eff, "host", "left")
-        .select(
-            "host",
-            F.coalesce(F.col("delay"), F.lit(default_delay))
-            .cast("long")
-            .alias("delay"),
-        )
-        .select(
-            "host",
-            "delay",
-            F.least(
-                F.lit(cap).cast("long"),
-                F.expr(f"cast({round_seconds} as bigint) div delay"),
-            ).alias("tokens"),
-        )
-    )
-
-
 def robots_sitemaps(robots_txt: DataFrame) -> DataFrame:
     """Extract ``Sitemap:`` directives from raw robots.txt bodies —
     the discovery seam the reference hard-codes: its collectors carry
@@ -418,7 +315,7 @@ def robots_sitemaps(robots_txt: DataFrame) -> DataFrame:
     http(s) URLs survive (relative and non-http values drop —
     per-spec the directive takes a full URL).
 
-    Set-at-a-time, all JVM-side (the ``crawl_delay_tokens`` recipe):
+    Set-at-a-time, all JVM-side:
     split + posexplode over one row per HOST (~10^7 rows web-scale,
     never corpus-sized), codegen'd string ops, one distinct. The
     directive is section-independent per the sitemaps protocol, so no

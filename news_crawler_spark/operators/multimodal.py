@@ -100,116 +100,6 @@ def media_table(spans_docs: DataFrame) -> DataFrame:
     return refs.mapInPandas(attach, schema=MEDIA_SCHEMA)
 
 
-def decode_image(payload: bytes):  # pragma: no cover - stub by design
-    """REAL image decode — requires PIL/libjpeg, absent in this container.
-
-    The pipeline never calls this in-sandbox; ``extract_media_features``
-    uses the deterministic fake path instead. Swap this in on a cluster
-    with codecs installed.
-    """
-    raise NotImplementedError(
-        "image codecs not available in-sandbox; use extract_media_features"
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("format", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("n_bytes", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
-
-def resize_image(media: DataFrame, width: int = 16, height: int = 16) -> DataFrame:
-    """Resize stage plumbing: media rows → same schema with payload
-    replaced by a ``width·height``-byte thumbnail and meta updated.
-
-    The *fake resizer* stride-samples the byte stream to exactly
-    width·height bytes (deterministic; a real build swaps in
-    decode→PIL.resize→encode with the identical stage signature). Output
-    rows are uniformly small — the property that matters for the
-    downstream shuffle/storage math at 100 TB."""
-    n_out = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            metas = []
-            for p in pdf["payload"]:
-                arr = np.frombuffer(p, dtype=np.uint8)
-                idx = np.linspace(0, len(arr) - 1, n_out).astype(np.int64)
-                thumb = arr[idx].tobytes()
-                outs.append(thumb)
-                metas.append(
-                    {"format": "fake/thumb", "width": width,
-                     "height": height, "n_bytes": n_out}
-                )
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "kind": pdf["kind"],
-                    "payload": outs,
-                    "meta": metas,
-                }
-            )
-
-    return media.select("media_ref", "kind", "payload").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
-
-
-FRAMES_SCHEMA = (
-    "media_ref string, frame_idx int, frame binary, n_bytes int"
-)
-
-
-def frame_sample(
-    media: DataFrame, frame_bytes: int = 64, every_n: int = 4
-) -> DataFrame:
-    """Video frame-sampling plumbing: each media payload → every
-    ``every_n``-th fixed-size frame as its own row (media_ref, frame_idx,
-    frame). The fake demuxer slices the byte stream into
-    ``frame_bytes``-sized frames; a real build swaps in pyav/ffmpeg
-    keyframe extraction with the identical explode-to-rows shape.
-
-    Scale note: the output is a row explosion — at 100 TB the stage must
-    be followed by its consumer in the SAME job (no materialization of
-    all frames), or sampled aggressively via ``every_n``; the per-row
-    payload is bounded by frame_bytes by construction."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, p in zip(pdf["media_ref"], pdf["payload"]):
-                n_frames = len(p) // frame_bytes
-                for fi in range(0, n_frames, every_n):
-                    frame = p[fi * frame_bytes:(fi + 1) * frame_bytes]
-                    rows.append(
-                        {"media_ref": ref, "frame_idx": fi,
-                         "frame": frame, "n_bytes": len(frame)}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "frame_idx", "frame", "n_bytes"]
-            )
-
-    return media.select("media_ref", "payload").mapInPandas(
-        run, schema=FRAMES_SCHEMA
-    )
-
-
 FEATURES_SCHEMA = (
     "media_ref string, kind string, n_bytes int, "
     "feature array<float>, feat_norm double"
@@ -353,9 +243,8 @@ def image_ahash64(
     recomputes it bit-identically.
 
     Input: one row per image with ``cells_col`` = array of ``n_cells``
-    integer intensities (the output shape of ``resize_image``'s decoded
-    thumbnail; in this sandbox the decode is the documented fake, but
-    the hash contract only needs integers). Output ``(doc_id, simhash)``
+    integer intensities (a decoded thumbnail's cells; the hash contract
+    only needs integers). Output ``(doc_id, simhash)``
     — named to feed straight into dedup's banded-pigeonhole machinery.
 
     Scale shape: a pure projection (whole-stage codegen, no UDF, no
@@ -388,14 +277,14 @@ def image_neardup_pairs(
     perceptual hashes differ in at most ``max_hamming`` bits — resized
     re-encodes, recompressions, and watermark stamps of the same picture
     hash within a few bits of each other, and a training pipeline dedups
-    them exactly like near-dup text. Reuses the text-side SimHash
+    them exactly like near-dup text. Reuses dedup's 64-bit hamming
     banding (dedup._banded64: n_bands = max_hamming+1 pigeonhole →
     complete recall at the radius) and its verify-BEFORE-distinct order:
     the exact bit_count(xor) filter is a per-row expression on the raw
     banded join output, so the dedup shuffle only ever sees true pairs,
-    never the n²/2^chunk candidate stream (the measured 10× trap
-    documented at dedup.simhash_pairs). Output (id_a, id_b, hamming),
-    hamming exact."""
+    never the n²/2^chunk candidate stream (verifying after the
+    distinct was measured 10× slower on the text sketches). Output
+    (id_a, id_b, hamming), hamming exact."""
     from . import dedup
 
     if n_bands is None:

@@ -46,17 +46,6 @@ SEED_LIST = T.StructType(
     ]
 )
 
-# Fetch-outcome event (the worker-side completion record a fetch stage
-# publishes back to the coordinator topic; joined to discoveries in the
-# streaming audit join, streaming.fetch_audit_join_stream).
-FETCH_OUTCOME = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("fetch_ts", T.TimestampType(), True),
-        T.StructField("status", T.StringType(), False),
-    ]
-)
-
 FRONTIER = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

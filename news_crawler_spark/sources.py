@@ -195,11 +195,10 @@ def cursor_cut(links: DataFrame, cursors: DataFrame) -> DataFrame:
 
     Feed order is (published_ts DESC, url DESC) — ONE tie-break direction
     everywhere: "newer" means the tuple (published_ts, url) is strictly
-    greater, which is exactly what ``latest_cursors`` maximizes and what
-    ``streaming.cursor_cut_stream`` keeps. A late link that ties the
-    cursor's timestamp is kept iff its url sorts above the cursor url —
-    identical in batch and streaming, so no permanent drops from
-    batch/stream disagreement.
+    greater, which is exactly what ``latest_cursors`` maximizes. A late
+    link that ties the cursor's timestamp is kept iff its url sorts
+    above the cursor url, so a sweep never drops a link that a later
+    sweep would have kept.
     """
     w = Window.partitionBy("source").orderBy(
         F.desc("published_ts"), F.desc("url")
@@ -247,111 +246,6 @@ def discover(
     return fresh, latest_cursors(links)
 
 
-def recrawl_schedule(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    window_s: int = 3 * 86400,
-    target_batch: int = 50,
-    min_s: int = 60,
-    max_s: int = 86400,
-) -> DataFrame:
-    """Freshness-driven recrawl scheduling: pick each source's next poll
-    interval so a poll catches ~``target_batch`` new items, from the
-    discovery rate observed over the trailing ``window_s`` — the
-    decision the reference's fresh-links scheduler makes per feed
-    (news_fresh_links_scheduler.py:29-68 polls on a fixed cadence and
-    counts fresh links; this closes the loop rate → cadence). A source
-    discovering n items per window gets interval
-    clamp(⌈target·window/n⌉, min_s, max_s) — exact integer ceil-div on
-    epoch seconds, so a SQL twin replays every interval bit-for-bit.
-
-    Scale shape: one 1-row max aggregate broadcast back, a pushed-down
-    timestamp filter, one per-source count — O(sources) output. Sources
-    with zero recent discoveries are absent (poll them at max_s by
-    default at the call site).
-
-    Returns ``(source, n_recent, next_poll_s)``.
-    """
-    mx = events.agg(F.max(ts_col).alias("__mx"))
-    # .cast("timestamp").cast("long"): NTZ→long needs the two-step (the
-    # a8 epoch recipe, matches the twin's floor(epoch(...)))
-    tl = F.col(ts_col).cast("timestamp").cast("long")
-    n = (
-        events.join(F.broadcast(mx))
-        .filter(tl > F.col("__mx").cast("timestamp").cast("long") - window_s)
-        .groupBy(F.col(key_col).alias("source"))
-        .agg(F.count("*").alias("n_recent"))
-    )
-    a = int(window_s) * int(target_batch)
-    delay = F.least(
-        F.lit(max_s).cast("long"),
-        F.greatest(
-            F.lit(min_s).cast("long"),
-            F.expr(f"(cast({a} as bigint) + n_recent - 1) div n_recent"),
-        ),
-    )
-    return n.select("source", "n_recent", delay.alias("next_poll_s"))
-
-
-def change_rate_schedule(
-    polls: DataFrame,
-    interval_s: int = 3600,
-    max_factor: int = 30,
-) -> DataFrame:
-    """Per-PAGE adaptive recrawl from observed change rates — the
-    Cho & Garcia-Molina Poisson estimator (the page-granular
-    counterpart of :func:`recrawl_schedule`'s per-source rate loop):
-    a page polled ``n`` times at interval I that showed a change on
-    ``X`` of them has estimated change rate
-    λ̂·I = −ln((n−X+½)/(n+½)), and the next visit is scheduled at
-    ≈1/λ̂, clamped to [I, max_factor·I].
-
-    Exact-integer formulation (the x25 micro-nat discipline): doubling
-    clears the ½-corrections, so with L(x) = round(ln(x)·10⁶),
-    ``lam_micro = L(2n+1) − L(2(n−X)+1)`` is λ̂·I in integer micro-nats
-    and ``next_interval_s = clamp(I·10⁶ div lam_micro)`` is one integer
-    division — no float ratio ever materializes, and a never-changed
-    page (X=0 ⇒ lam_micro=0) takes the max-interval branch explicitly
-    instead of dividing by zero (which ANSI mode would fail).
-
-    Input ``(page_id, changed)`` — one row per poll; output
-    ``(page_id, n_polls, n_changed, lam_micro, next_interval_s)``.
-    Scale shape: one partial-agg groupBy(page_id) over the poll log,
-    then a pure projection; the poll log is the big table and it is
-    touched exactly once."""
-    lmicro = lambda c: F.round(  # noqa: E731
-        F.log(c.cast("double")) * F.lit(1_000_000.0)
-    ).cast("long")
-    agg = polls.groupBy("page_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_polls"),
-        F.sum(F.col("changed").cast("long")).cast("long").alias("n_changed"),
-    )
-    lam = agg.select(
-        "page_id",
-        "n_polls",
-        "n_changed",
-        (
-            lmicro(F.lit(2) * F.col("n_polls") + 1)
-            - lmicro(F.lit(2) * (F.col("n_polls") - F.col("n_changed")) + 1)
-        ).alias("lam_micro"),
-    )
-    lo, hi = interval_s, interval_s * max_factor
-    nxt = F.when(
-        F.col("lam_micro") > 0,
-        F.least(
-            F.lit(hi).cast("long"),
-            F.greatest(
-                F.lit(lo).cast("long"),
-                F.expr(f"cast({interval_s} as bigint) * 1000000 div lam_micro"),
-            ),
-        ),
-    ).otherwise(F.lit(hi).cast("long"))
-    return lam.select(
-        "page_id", "n_polls", "n_changed", "lam_micro", nxt.alias("next_interval_s")
-    )
-
-
 def sitemap_staleness(
     entries: DataFrame, captures: DataFrame
 ) -> DataFrame:
@@ -361,11 +255,9 @@ def sitemap_staleness(
     and classify every advertised URL — ``unseen`` (never captured →
     crawl), ``stale`` (lastmod newer than our latest capture →
     refetch; ``staleness_s`` = how far behind), ``fresh`` (no fetch
-    needed). This closes the third recrawl loop: ``recrawl_schedule``
-    paces by observed discovery rate, ``change_rate_schedule`` by
-    per-page change history, and this one by what the origin itself
-    declares — the cheapest signal (one sitemap fetch covers 50k URLs)
-    and the reference ignores it entirely (its sitemap collectors read
+    needed). This recrawl signal is what the origin itself declares —
+    the cheapest one (one sitemap fetch covers 50k URLs), and the
+    reference ignores it entirely (its sitemap collectors read
     URLs and dates for DISCOVERY only; nothing compares lastmod to
     stored state).
 
@@ -428,17 +320,17 @@ def sitemap_tree(
     indexes that cycle (a child pointing back at an ancestor) are cut
     by the visited set, not by the depth cap alone.
 
-    Spark-first shape: level-unrolled BFS like graph.bfs_depth, but
-    keyed per (root, loc) because attribution matters — the frontier is
-    |sitemap FILES| rows (≤ tens of thousands for even a huge site:
-    50k² URLs via one nesting level), so it stays broadcast-side
-    against the edge list; page URLs (the 10^9-row output) are emitted
-    once per level and only union+min-deduped at the end — they never
-    enter the iterated frontier. The visited anti-join per level keeps
-    a cyclic index from amplifying: each (root, loc) is expanded at
-    most once, at its minimum depth (BFS order guarantees first visit =
-    min depth, so the end min() over URL emissions only reconciles
-    DIAMOND re-discoveries — two indexes listing the same child file)."""
+    Spark-first shape: level-unrolled BFS, keyed per (root, loc) because
+    attribution matters — the frontier is |sitemap FILES| rows (≤ tens
+    of thousands for even a huge site: 50k² URLs via one nesting level),
+    so it stays broadcast-side against the edge list; page URLs (the
+    10^9-row output) are emitted once per level and only
+    union+min-deduped at the end — they never enter the iterated
+    frontier. The visited anti-join per level keeps a cyclic index from
+    amplifying: each (root, loc) is expanded at most once, at its
+    minimum depth (BFS order guarantees first visit = min depth, so the
+    end min() over URL emissions only reconciles DIAMOND re-discoveries
+    — two indexes listing the same child file)."""
     idx = edges.filter(F.col("kind") == "sitemap").select(
         F.col("loc").alias("loc"), F.col("child").alias("child")
     )
@@ -489,7 +381,7 @@ def refresh_allocation(
     steady-state freshness (Cho & Garcia-Molina, "Effective Page
     Refresh Policies for Web Crawlers", TODS'03): input
     ``pages (page_id, lam)`` with ``lam`` = observed changes per period
-    (``change_rate_schedule``'s integer estimator feeds this), output
+    (an integer change-rate estimate), output
     ``(page_id, lam, f_alloc)`` with Σ f_alloc ≤ budget, f_alloc ≤
     f_max. The reference refreshes every source on one fixed 15 s
     cadence regardless of change rate or capacity

@@ -342,45 +342,6 @@ def test_apportion_budget_empty_and_zero_rank(spark):
     assert got == {"a": 0, "b": 0}
 
 
-def test_crawl_delay_tokens_precedence_and_edges(spark):
-    """Every parse path of frontier.crawl_delay_tokens: agent section
-    beats *, * fallback, default when no delay anywhere, mixed-case
-    directives, a malformed delay dropped by try_cast (falls through
-    to the * value), smallest-delay tie-break within a precedence,
-    and the refill cap."""
-    from news_crawler_spark.operators import frontier as fops
-
-    rows = [
-        # agent section (5) beats * (3): delay 5, tokens 30 div 5 = 6
-        ("a", "User-agent: *\nCrawl-delay: 3\nUser-Agent: NewsBot\nCrawl-Delay: 5"),
-        # * only: delay 3, tokens 10 (30 div 3 = 10, at the cap)
-        ("b", "user-agent: *\ncrawl-delay: 3\ndisallow: /x"),
-        # no delay anywhere: default 2, tokens 10 (15 capped)
-        ("c", "User-agent: *\nDisallow: /private"),
-        # malformed agent delay -> try_cast NULL -> * wins: delay 4
-        ("d", "User-agent: newsbot\nCrawl-delay: soon\nUser-agent: *\nCrawl-delay: 4"),
-        # two delays in the SAME section: smallest wins -> 1, capped 10
-        ("e", "User-agent: newsbot\nCrawl-delay: 9\nCrawl-delay: 1"),
-        # delay for an unrelated agent only: default 2
-        ("f", "User-agent: otherbot\nCrawl-delay: 9"),
-    ]
-    df = spark.createDataFrame(rows, "host string, robots_txt string")
-    got = {
-        r.host: (r.delay, r.tokens)
-        for r in fops.crawl_delay_tokens(
-            df, agent="newsbot", default_delay=2, round_seconds=30, cap=10
-        ).collect()
-    }
-    assert got == {
-        "a": (5, 6),
-        "b": (3, 10),
-        "c": (2, 10),
-        "d": (4, 7),
-        "e": (1, 10),
-        "f": (2, 10),
-    }
-
-
 def test_robots_sitemaps_every_parse_path(spark):
     """Every parse path of frontier.robots_sitemaps: plain directive,
     mixed-case field with whitespace before the colon and a tab after

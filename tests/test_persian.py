@@ -80,16 +80,12 @@ def test_parse_persian_datetime(spark):
 
 
 def test_archive_url_and_sitemap_key(spark):
-    df = spark.createDataFrame([("https://www.isna.ir", 1403, 1, 2, "1403-01-02")],
-                               "base string, jy int, jm int, jd int, ds string")
+    df = spark.createDataFrame([("https://www.isna.ir", 1403, 1, 2)],
+                               "base string, jy int, jm int, jd int")
     r = df.select(
         persian.archive_url("base", F.col("jy"), F.col("jm"), F.col("jd")).alias("u"),
-        persian.sitemap_key_base64(F.lit("news"), "ds").alias("k"),
     ).collect()[0]
     assert r.u == "https://www.isna.ir/page/archive.xhtml?mn=1&wide=0&dy=2&ms=0&pi=1&yr=1403"
-    import base64, json
-    decoded = json.loads(base64.b64decode(r.k))
-    assert decoded == {"model": "news", "date": "1403-01-02"}
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""Training-data-pipeline operators: dedup (exact / Jaccard / MinHash /
-SimHash), similarity search, text features, multimodal plumbing — Spark
+"""Training-data-pipeline operators: dedup (exact / Jaccard / MinHash),
+similarity search, text features, multimodal plumbing — Spark
 vs independent pure-Python oracles on the sf0.001 testdata tables."""
 
 import struct
@@ -80,24 +80,6 @@ def py_minhash(txt: str, num_hashes: int = 128) -> list[int]:
     return [min(py_hash_i_long(h, i) for h in hs) for i in range(num_hashes)]
 
 
-def py_simhash(txt: str, token_hash: str = "md5") -> int:
-    import hashlib
-
-    votes = [0] * 64
-    for t in txt.split(" "):
-        if token_hash == "md5":
-            u = int(hashlib.md5(t.encode()).hexdigest()[:16], 16)
-        else:
-            u = xxh64(t.encode(), 42)
-        for b in range(64):
-            votes[b] += 1 if (u >> b) & 1 else -1
-    out = 0
-    for b in range(64):
-        if votes[b] > 0:
-            out |= 1 << b
-    return _signed(out)
-
-
 def py_jaccard_pairs(doc_rows, threshold=0.6, n=3):
     sh = {d: py_shingles(t, n) for d, t in doc_rows.items() if py_shingles(t, n)}
     ids = sorted(sh)
@@ -114,18 +96,6 @@ def py_jaccard_pairs(doc_rows, threshold=0.6, n=3):
 
 
 # -- dedup ------------------------------------------------------------------
-
-def test_string_shingles_match_python_twin(spark, docs, doc_rows):
-    """dedup.with_shingles is the string-side reference form — the set
-    the DuckDB oracles and py_jaccard_pairs compute Jaccard over. The
-    production path (with_hashed_shingles) never materializes these
-    strings; this pins the reference form they stand in for."""
-    got = {
-        r.doc_id: set(r.shingles)
-        for r in dedup.with_shingles(docs.limit(8)).collect()
-    }
-    for doc_id, sh in got.items():
-        assert sh == py_shingles(doc_rows[doc_id]), doc_id
 
 
 def test_short_docs_drop_out_of_shingle_pipelines(spark):
@@ -165,41 +135,6 @@ def test_minhash_signature_matches_python_twin(spark, docs, doc_rows):
     }
     for doc_id, sig in got.items():
         assert sig == py_minhash(doc_rows[doc_id], 16)[: len(sig)], doc_id
-
-
-def _null_beside_wide_sketches(spark, doc_rows, sketch):
-    """One NULL text and one text whose sketch exceeds 2^53 (not a
-    float64-representable value) in EVERY input partition. There are
-    defaultParallelism partitions, so spread_for_cpu leaves them in
-    place and each Arrow batch holds both. Returns (frame, the wide
-    text's doc_id)."""
-    wide = next(
-        (d, t) for d, t in sorted(doc_rows.items())
-        if all(abs(v) > 2**53 and int(float(v)) != v for v in sketch(t))
-    )
-    parts = spark.sparkContext.defaultParallelism
-    rows = []
-    for p in range(parts):
-        rows += [(-1 - p, None), (wide[0] if p == 0 else 10**6 + p, wide[1])]
-    df = spark.sparkContext.parallelize(rows, parts).toDF("doc_id long, text string")
-    return df, wide[0]
-
-
-def test_simhash_matches_python_twin(spark, docs, doc_rows):
-    for th in ("md5", "xxhash64"):
-        got = {
-            r.doc_id: r.simhash
-            for r in dedup.with_simhash(docs.limit(10), token_hash=th).collect()
-        }
-        for doc_id, sh in got.items():
-            assert sh == py_simhash(doc_rows[doc_id], th), (th, doc_id)
-        # a NULL text sketches NULL and leaves its batch-mates bit-exact
-        df, wide_id = _null_beside_wide_sketches(
-            spark, doc_rows, lambda t, th=th: [py_simhash(t, th)]
-        )
-        want = py_simhash(doc_rows[wide_id], th)
-        for r in dedup.with_simhash(df, token_hash=th).collect():
-            assert r.simhash == (None if r.doc_id < 0 else want), (th, r.doc_id)
 
 
 def test_lsh_equals_exact_jaccard(spark, docs, doc_rows):
@@ -254,22 +189,6 @@ def test_exact_duplicates(spark):
     )
     got = {r.fp: (r.canonical_id, r.n_copies) for r in dedup.exact_duplicates(df).collect()}
     assert sorted(got.values()) == [(1, 2), (3, 1)]
-
-
-def test_simhash_pairs_complete_at_radius(spark, docs, doc_rows):
-    """Default banding (n_bands = max_hamming + 1) must be COMPLETE: the
-    banded output equals the exact all-pairs hamming<=8 set."""
-    rows = dedup.simhash_pairs(docs, max_hamming=8).collect()
-    sh = {d: py_simhash(t) for d, t in doc_rows.items()}
-    ids = sorted(sh)
-    want = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            ham = bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1")
-            if ham <= 8:
-                want[(a, b)] = ham
-    got = {(r.a_id, r.b_id): r.hamming for r in rows}
-    assert got == want
 
 
 # -- similarity -------------------------------------------------------------
@@ -346,8 +265,6 @@ def test_media_plumbing(spark):
         assert len(r.feature) == 16
         assert abs(sum(r.feature) - 1.0) < 1e-5  # L1-normalized histogram
         assert r.n_bytes == rows[ref].meta.n_bytes
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\xff\xd8")
 
 
 def _py_expected_spans(doc_id: int, text: str, para=8, img_every=3):
@@ -396,27 +313,10 @@ def test_m1_span_equality_all_dialects(spark, tmp_path):
 
     # media sizes from the same spans, pinned to the python synth path
     media = multimodal.media_table(analytics._m1_extracted(spark, str(tmp_path)))
-    frames = (
-        multimodal.frame_sample(media)
-        .groupBy("media_ref")
-        .agg(F.count("*").alias("n_frames"))
-    )
-    thumbs = multimodal.resize_image(media).select(
-        "media_ref", F.length("payload").alias("thumb_bytes")
-    )
-    m2 = {
-        r.media_ref: r
-        for r in media.select("media_ref", F.col("meta.n_bytes").alias("n_bytes"))
-        .join(frames, "media_ref")
-        .join(thumbs, "media_ref")
-        .collect()
-    }
+    m2 = {r.media_ref: r.meta.n_bytes for r in media.collect()}
     assert m2  # at least one media item
-    for ref, r in m2.items():
-        n = len(multimodal.synth_media_payload(ref))
-        assert r.n_bytes == n
-        assert r.n_frames == ((n // 64) + 3) // 4
-        assert r.thumb_bytes == 256
+    for ref, n_bytes in m2.items():
+        assert n_bytes == len(multimodal.synth_media_payload(ref))
 
 
 def py_ahash64(cells):
@@ -484,6 +384,31 @@ def test_image_neardup_pairs_radius(spark):
 
 # -- fetch/extract path parity -----------------------------------------------
 
+def _fetch_pages(popped):
+    """Two-stage twin of fetch_extract_pages' fetch half: one row per
+    popped URL with its raw page payload (None when the fetch fails),
+    the input ``extract.extract_documents`` parses."""
+    from news_crawler_spark import synth
+
+    cols = ["canonical_url", "url_hash", "host", "source", "published_ts"]
+
+    def run(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["ok"] = pdf["canonical_url"].map(synth.page_ok)
+            pdf["payload"] = [
+                synth.page_payload(u) if ok else None
+                for u, ok in zip(pdf["canonical_url"], pdf["ok"])
+            ]
+            yield pdf
+
+    return popped.select(*cols).mapInPandas(
+        run,
+        "canonical_url string, url_hash long, host string, source string, "
+        "published_ts timestamp, ok boolean, payload string",
+    )
+
+
 def test_fused_fetch_extract_matches_two_stage(spark):
     from news_crawler_spark import synth
     from news_crawler_spark.functions.urls import with_url_columns
@@ -491,7 +416,7 @@ def test_fused_fetch_extract_matches_two_stage(spark):
         documents_from_fetch_extract,
         extract_documents,
     )
-    from news_crawler_spark.operators.fetch import fetch_extract_pages, fetch_pages
+    from news_crawler_spark.operators.fetch import fetch_extract_pages
 
     cand = (
         with_url_columns(synth.build_seed_list(spark, 300))
@@ -499,7 +424,7 @@ def test_fused_fetch_extract_matches_two_stage(spark):
         .withColumn("tried_count", F.lit(0))
     ).cache()
 
-    two_stage = extract_documents(fetch_pages(cand))
+    two_stage = extract_documents(_fetch_pages(cand))
     fused = documents_from_fetch_extract(fetch_extract_pages(cand))
 
     def key(df):
@@ -570,38 +495,6 @@ def test_per_source_dialect_span_equality(spark):
     assert len(seen_markup) == 3  # three genuinely different markups
 
 
-def test_resize_and_frame_sample_plumbing(spark):
-    media = spark.createDataFrame(
-        [
-            ("m1", "image", multimodal.synth_media_payload("m1")),
-            ("m2", "video", multimodal.synth_media_payload("m2")),
-        ],
-        "media_ref string, kind string, payload binary",
-    )
-    # resize: every output payload exactly width*height bytes, meta synced
-    small = {r.media_ref: r for r in multimodal.resize_image(media, 8, 8).collect()}
-    for ref, r in small.items():
-        assert len(r.payload) == 64 and r.meta.n_bytes == 64
-        assert r.meta.width == 8 and r.meta.height == 8
-    # deterministic: same input bytes → same thumbnail
-    again = {r.media_ref: r.payload
-             for r in multimodal.resize_image(media, 8, 8).collect()}
-    assert {k: v.payload for k, v in small.items()} == again
-    # frame sampling: every_n-th fixed-size frame, indices correct
-    frames = multimodal.frame_sample(media, frame_bytes=32, every_n=2).collect()
-    by_ref = {}
-    for fr in frames:
-        assert fr.n_bytes == 32 and fr.frame_idx % 2 == 0
-        by_ref.setdefault(fr.media_ref, []).append(fr.frame_idx)
-    raw = {r.media_ref: r.payload for r in media.collect()}
-    for ref, idxs in by_ref.items():
-        n_frames = len(raw[ref]) // 32
-        assert sorted(idxs) == list(range(0, n_frames, 2))
-        # frame content slices the original payload
-        f0 = [f.frame for f in frames if f.media_ref == ref and f.frame_idx == 0][0]
-        assert bytes(f0) == bytes(raw[ref][:32])
-
-
 def test_duplicate_clusters_matches_union_find(spark):
     """Iterative min-label propagation == python union-find on the same
     pair graph (chain, clique, isolated pair, and a long path that needs
@@ -632,62 +525,6 @@ def test_duplicate_clusters_matches_union_find(spark):
     want = {n: find(n) for n in parent}
     assert got == want
     assert got[35] == 30 and got[3] == 1 and got[12] == 10
-
-
-def py_simhash128(txt: str) -> tuple[int, int]:
-    """Two independent 64-bit sketches from the two md5 words."""
-    import hashlib
-
-    out = []
-    for word in (0, 1):
-        votes = [0] * 64
-        for t in txt.split(" "):
-            hx = hashlib.md5(t.encode()).hexdigest()
-            u = int(hx[16 * word : 16 * word + 16], 16)
-            for b in range(64):
-                votes[b] += 1 if (u >> b) & 1 else -1
-        w = 0
-        for b in range(64):
-            if votes[b] > 0:
-                w |= 1 << b
-        out.append(_signed(w))
-    return tuple(out)
-
-
-def test_simhash128_matches_python_twin(spark, docs, doc_rows):
-    got = {
-        r.doc_id: (r.sh_w1, r.sh_w2)
-        for r in dedup.with_simhash128(docs.limit(10)).collect()
-    }
-    for doc_id, sh in got.items():
-        assert sh == py_simhash128(doc_rows[doc_id]), doc_id
-    # the shared md5 kernel: a NULL text leaves both words of its
-    # batch-mates bit-exact
-    df, wide_id = _null_beside_wide_sketches(spark, doc_rows, py_simhash128)
-    want = py_simhash128(doc_rows[wide_id])
-    for r in dedup.with_simhash128(df).collect():
-        got_r = (r.sh_w1, r.sh_w2)
-        assert got_r == ((None, None) if r.doc_id < 0 else want), r.doc_id
-
-
-def test_simhash128_pairs_complete_at_radius(spark, docs, doc_rows):
-    """128-bit banding (bands split across the two words, never straddling
-    the word boundary) must be COMPLETE at the radius — output equals the
-    exact all-pairs hamming128<=8 set."""
-    rows = dedup.simhash128_pairs(docs, max_hamming=8).collect()
-    sh = {d: py_simhash128(t) for d, t in doc_rows.items()}
-    ids = sorted(sh)
-    mask = (1 << 64) - 1
-    want = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            h = bin(((sh[a][0] ^ sh[b][0]) & mask)).count("1") + bin(
-                ((sh[a][1] ^ sh[b][1]) & mask)
-            ).count("1")
-            if h <= 8:
-                want[(a, b)] = h
-    got = {(r.a_id, r.b_id): r.hamming for r in rows}
-    assert got == want
 
 
 def test_duplicate_clusters_warns_when_unconverged(spark):
@@ -890,31 +727,6 @@ def test_kmeans_separates_planted_clusters(spark):
     assert again == out
 
 
-def test_incremental_simhash_pairs_cross_only(spark, docs, doc_rows):
-    """incremental_simhash_pairs(base, batch) must equal the exact
-    cross-side all-pairs hamming<=8 set — complete at the radius, NO
-    base-base or batch-batch pairs, batch_id/base_id sides correct."""
-    from pyspark.sql import functions as F
-
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    rows = dedup.incremental_simhash_pairs(base, batch, max_hamming=8).collect()
-    sh = {d: py_simhash(t) for d, t in doc_rows.items()}
-    want = {}
-    for a in sh:  # batch side
-        if a % 5 != 0:
-            continue
-        for b in sh:  # base side
-            if b % 5 == 0:
-                continue
-            ham = bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1")
-            if ham <= 8:
-                want[(a, b)] = ham
-    got = {(r.batch_id, r.base_id): r.hamming for r in rows}
-    assert got == want
-    assert all(a % 5 == 0 and b % 5 != 0 for a, b in got)
-
-
 def test_mirror_clusters_collapse_chained_pairs(spark):
     """A 3-way mirror family discovered only as CHAINED pairs (a↔b and
     b↔c share enough content; a↔c alone would not) must still collapse
@@ -941,245 +753,6 @@ def test_mirror_clusters_collapse_chained_pairs(spark):
     )
     got = {r.doc_id: r.cluster_id for r in dedup.duplicate_clusters(mp).collect()}
     assert got == {1: 1, 2: 1, 3: 1}
-
-
-def py_pagerank_int(edges, iters=3, num=85, den=100, scale=1_000_000):
-    """Straight-line python twin of graph.pagerank_int (exact ints)."""
-    nodes = sorted({n for e in edges for n in e})
-    outdeg = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    base = (scale * (den - num)) // den
-    r = {n: scale for n in nodes}
-    for _ in range(iters):
-        contrib = {n: 0 for n in nodes}
-        for s, d in edges:
-            contrib[d] += r[s] // outdeg[s]
-        r = {n: base + (num * contrib[n]) // den for n in nodes}
-    return r
-
-
-def test_pagerank_planted_hub_matches_python_twin(spark):
-    """A 7-node star (1..6 -> 0, 0 -> 1) plus a detached 2-cycle: the
-    hub must rank highest, node 1 (fed by the whole hub's mass) second,
-    and every value must equal the integer twin bit-for-bit."""
-    from news_crawler_spark.operators import graph
-
-    edges = [(i, 0) for i in range(1, 7)] + [(0, 1), (8, 9), (9, 8)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r["rank"] for r in graph.pagerank_int(df, iters=3).collect()}
-    assert got == py_pagerank_int(edges)
-    order = sorted(got, key=lambda n: -got[n])
-    assert order[0] == 0 and order[1] == 1
-
-
-def py_hits_int(edges, iters=3, scale=1_000_000):
-    """Straight-line python twin of graph.hits_int (exact ints)."""
-    nodes = sorted({n for e in edges for n in e})
-    hub = {n: scale for n in nodes}
-    for _ in range(iters):
-        a_raw = {n: 0 for n in nodes}
-        for s, d in edges:
-            a_raw[d] += hub[s]
-        mx = max(max(a_raw.values()), 1)
-        auth = {n: (v * scale) // mx for n, v in a_raw.items()}
-        h_raw = {n: 0 for n in nodes}
-        for s, d in edges:
-            h_raw[s] += auth[d]
-        mx = max(max(h_raw.values()), 1)
-        hub = {n: (v * scale) // mx for n, v in h_raw.items()}
-    return auth, hub
-
-
-def test_hits_planted_structure_matches_python_twin(spark):
-    """A bipartite hub/authority structure (0,1 each link to 10,11,12;
-    10..12 link nowhere; plus a stray 5->10): hubs 0,1 must carry max
-    hub score and zero auth, 10..12 max-class auth and zero hub, and
-    every value must equal the integer twin bit-for-bit."""
-    from news_crawler_spark.operators import graph
-
-    edges = [(s, d) for s in (0, 1) for d in (10, 11, 12)] + [(5, 10)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: (r.auth, r.hub) for r in graph.hits_int(df, iters=3).collect()}
-    auth, hub = py_hits_int(edges)
-    assert got == {n: (auth[n], hub[n]) for n in auth}
-    assert got[0][1] == 1_000_000 and got[0][0] == 0
-    assert got[10][0] == 1_000_000 and got[10][1] == 0
-    assert got[5][1] < got[0][1]  # stray hub links to fewer authorities
-
-
-def test_hits_broadcasts_score_vectors(spark):
-    """Per half-iteration the edge list must join the score vector via
-    broadcast — no sort-merge join anywhere in the final plan."""
-    from news_crawler_spark.operators import graph
-
-    df = spark.createDataFrame([(i, (i * 7) % 20) for i in range(40)],
-                               "src long, dst long")
-    out = graph.hits_int(df, iters=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def py_opic(edges, rounds=3, k=20, scale=1_000_000):
-    """Straight-line python twin of graph.opic_cash (exact ints)."""
-    nodes = sorted({n for e in edges for n in e})
-    outdeg = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    cash = {n: scale for n in nodes}
-    hist = {n: 0 for n in nodes}
-    for _ in range(rounds):
-        fetch = set(sorted(nodes, key=lambda n: (-cash[n], n))[:k])
-        contrib = {n: 0 for n in nodes}
-        for s, d in edges:
-            if s in fetch:
-                contrib[d] += cash[s] // outdeg[s]
-        new = {}
-        for n in nodes:
-            new[n] = (0 if n in fetch else cash[n]) + contrib[n]
-            if n in fetch:
-                hist[n] += cash[n]
-        cash = new
-    return cash, hist
-
-
-def test_opic_greedy_rounds_match_python_twin(spark):
-    """A hub-and-chain graph through 3 greedy rounds of k=2: every cash
-    and history value must equal the integer twin bit-for-bit, the hub
-    (fed by both fetched leaves) must accumulate the most history, and
-    a fetched node's cash must move to history (not vanish) while a
-    fetched DANGLING node's cash deterministically drops."""
-    from news_crawler_spark.operators import graph
-
-    # 1,2 -> 0 (hub); 0 -> 3 -> 4 (chain); 4 dangling
-    edges = [(1, 0), (2, 0), (0, 3), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r.node: (r.cash, r.history)
-        for r in graph.opic_cash(df, rounds=3, k=2).collect()
-    }
-    cash, hist = py_opic(edges, rounds=3, k=2)
-    assert got == {n: (cash[n], hist[n]) for n in cash}
-    # the hub was fetched (its cash banked); circulating cash only
-    # LEAKS (div remainders, fetched dangling nodes) — never inflates
-    assert hist[0] > 0
-    assert sum(cash.values()) <= len(cash) * 1_000_000
-
-
-def test_pagerank_feeds_frontier_priority(spark):
-    """The scheduling hook: rank joins pending URLs by host and becomes
-    the pop order (priority = -rank, POP_ORDER is ascending) — the
-    hub host's URL must pop ahead of the leaf hosts'."""
-    from news_crawler_spark.operators import frontier as fops
-    from news_crawler_spark.operators import graph
-
-    edges = [(i, 0) for i in range(1, 5)] + [(0, 1)]
-    ranks = graph.pagerank_int(
-        spark.createDataFrame(edges, "src long, dst long"), iters=2
-    )
-    twin = py_pagerank_int(edges, iters=2)
-    want_order = [f"h{n}" for n in sorted(twin, key=lambda n: (-twin[n], n))]
-    pending = spark.createDataFrame(
-        [(f"h{n}", 100 + n, 0) for n in range(5)],
-        "host string, url_hash long, published_ts long",
-    ).join(
-        ranks.withColumn("host", F.concat(F.lit("h"), F.col("node"))),
-        "host",
-    ).select("host", "url_hash", "published_ts", (-F.col("rank")).alias("priority"))
-    budgets = spark.createDataFrame([("h0", 1)], "host string, budget int")
-    popped = fops.pop_round(pending, budgets, default_budget=1, salts=4)
-    by_prio = sorted(popped.collect(), key=lambda r: r.priority)
-    assert [r.host for r in by_prio][:2] == want_order[:2]
-
-
-def py_trustrank_int(edges, seeds, iters=3, num=85, den=100, scale=1_000_000):
-    """Straight-line python twin of graph.trustrank_int (exact ints)."""
-    nodes = sorted({n for e in edges for n in e} | set(seeds))
-    outdeg = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    base = (scale * (den - num)) // den
-    r = {n: (scale if n in seeds else 0) for n in nodes}
-    for _ in range(iters):
-        contrib = {n: 0 for n in nodes}
-        for s, d in edges:
-            contrib[d] += r[s] // outdeg[s]
-        r = {
-            n: (base if n in seeds else 0) + (num * contrib[n]) // den
-            for n in nodes
-        }
-    return r
-
-
-def test_trustrank_blocks_unreachable_farm(spark):
-    """Trusted chain 0->1->2 plus a detached link farm 7<->8 that also
-    mass-links INTO node 9: with seeds={0}, trust flows down the chain
-    (0 > 1 > 2 > 0-for-the-farm), the farm and its target converge to
-    exactly 0 despite their in-links, and every value equals the
-    integer twin bit-for-bit. Same edges under plain PageRank give the
-    farm nodes NON-zero rank — the anti-spam property is the diff."""
-    from news_crawler_spark.operators import graph
-
-    edges = [(0, 1), (1, 2), (7, 8), (8, 7), (7, 9), (8, 9)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    seeds = spark.createDataFrame([(0,)], "node long")
-    got = {
-        r.node: r.trust
-        for r in graph.trustrank_int(df, seeds, iters=3).collect()
-    }
-    assert got == py_trustrank_int(edges, {0})
-    assert got[0] > got[1] > got[2] > 0
-    assert got[7] == got[8] == got[9] == 0
-    pr = {r.node: r["rank"] for r in graph.pagerank_int(df, iters=3).collect()}
-    assert pr[9] > 0  # plain PageRank pays the farm; TrustRank doesn't
-
-
-def test_trustrank_seed_outside_edge_graph_kept(spark):
-    """A seed with no edges at all must still appear with the pure
-    teleport fixed point (trust = base), not vanish from the output."""
-    from news_crawler_spark.operators import graph
-
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    seeds = spark.createDataFrame([(5,)], "node long")
-    got = {
-        r.node: r.trust
-        for r in graph.trustrank_int(df, seeds, iters=3).collect()
-    }
-    assert got[5] == 150_000 and got[1] == 0 and got[2] == 0
-
-
-def test_bfs_depth_shortest_path_and_cap(spark):
-    """Chain 0->1->2->3->4->5 with a shortcut 0->3 and a back-edge
-    3->0: depth is the SHORTEST path (3 via the shortcut = 1, not 3),
-    the seed stays 0 even though 3->0 re-enters it, the cap drops
-    nodes beyond max_depth (5 is 3 hops via shortcut — present at
-    max_depth=3, absent at 2), and unreached components never appear."""
-    from news_crawler_spark.operators import graph
-
-    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (0, 3), (3, 0), (8, 9)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    seeds = spark.createDataFrame([(0,)], "node long")
-    got = {r.node: r.depth for r in graph.bfs_depth(df, seeds, max_depth=3).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 1, 4: 2, 5: 3}
-    got2 = {r.node: r.depth for r in graph.bfs_depth(df, seeds, max_depth=2).collect()}
-    assert got2 == {0: 0, 1: 1, 2: 2, 3: 1, 4: 2}
-
-
-def test_bfs_depth_broadcasts_reached_vector(spark):
-    """Per level the edge list must meet the reached vector via
-    broadcast — no sort-merge join in the final plan (the g1/g5/g7/g8
-    vector contract)."""
-    from news_crawler_spark.operators import graph
-
-    df = spark.createDataFrame(
-        [(i, (i * 7) % 20) for i in range(40)], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(0,), (1,)], "node long")
-    out = graph.bfs_depth(df, seeds, max_depth=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_semdedup_prunes_within_cell_only(spark):
@@ -1434,100 +1007,6 @@ def test_cluster_representatives_survivor_rule(spark):
     assert got[1].rep_doc_id == 2 and got[1].n_members == 3
     assert got[1].dup_tokens == 2 + 3
     assert got[7].rep_doc_id == 7 and got[7].dup_tokens == 3
-
-
-def py_resolve_redirects(edges, max_hops=32):
-    """Straight-line python twin of graph.resolve_redirects, with the
-    SAME documented cap: chains longer than 2^ceil(log2(max_hops)) are
-    reported cyclic."""
-    from news_crawler_spark.operators.graph import _doubling_iters
-
-    cap = 1 << _doubling_iters(max_hops)
-    nxt = dict(edges)
-    out = {}
-    for s in nxt:
-        cur, hops = s, 0
-        while cur in nxt and hops < cap:
-            cur, hops = nxt[cur], hops + 1
-        if cur in nxt:  # still redirecting: loop or over-cap chain
-            out[s] = (None, None, True)
-        else:
-            out[s] = (cur, hops, False)
-    return out
-
-
-def test_resolve_redirects_chains_cycles_and_cap(spark):
-    """Every structural case at once: a 3-hop chain (+ a branch
-    converging into it), a self-loop, a 2-cycle, a chain INTO that
-    cycle, and a 9-hop chain under max_hops=8 — whose head must be
-    flagged cyclic by the documented power-of-two cap while its second
-    node (exactly 8 hops from the terminal) still resolves."""
-    from news_crawler_spark.operators import graph
-
-    edges = (
-        [(1, 2), (2, 3), (3, 4), (10, 3)]
-        + [(20, 20), (30, 31), (31, 30), (40, 30)]
-        + [(50 + i, 51 + i) for i in range(9)]
-    )
-    df = spark.createDataFrame(edges, "src long, dst long")
-    rows = graph.resolve_redirects(df, max_hops=8).collect()
-    got = {r.src: (r.terminal, r.hops, r.cyclic) for r in rows}
-    assert got == py_resolve_redirects(edges, max_hops=8)
-    assert got[1] == (4, 3, False)
-    assert got[50] == (None, None, True)  # 9 hops > cap 8
-    assert got[51] == (59, 8, False)  # exactly at the cap
-    assert got[40] == (None, None, True)  # feeds a loop
-
-
-def test_resolve_redirects_join_count_is_logarithmic():
-    """The scale claim: 32-hop resolution is 5 doubling joins, not 32
-    walks (and the cap never needs more than one join)."""
-    from news_crawler_spark.operators.graph import _doubling_iters
-
-    assert _doubling_iters(32) == 5
-    assert _doubling_iters(8) == 3
-    assert _doubling_iters(2) == 1
-    assert _doubling_iters(1) == 1
-
-
-def py_anchor_summary(links, k=3):
-    """Straight-line python twin of graph.anchor_summary."""
-    cnt = {}
-    for dst, a in links:
-        cnt[(dst, a)] = cnt.get((dst, a), 0) + 1
-    out = {}
-    for dst in {d for d, _ in cnt}:
-        per = sorted(
-            ((a, c) for (d, a), c in cnt.items() if d == dst),
-            key=lambda t: (-t[1], t[0]),
-        )
-        n_in = sum(c for _, c in per)
-        for rank, (a, c) in enumerate(per[:k], start=1):
-            out[(dst, a)] = (c, rank, n_in, len(per))
-    return out
-
-
-def test_anchor_summary_ranks_ties_and_totals(spark):
-    """Top-k anchors per target: count-desc rank with anchor-asc
-    tie-break, totals over ALL anchors (not just the kept top-k), a
-    >k target whose tail anchor is cut, and a single-link target."""
-    from news_crawler_spark.operators import graph
-
-    links = (
-        [(1, "home")] * 5
-        + [(1, "news")] * 3
-        + [(1, "blog")] * 3  # ties with news → blog ranks first
-        + [(1, "misc")]  # rank 4 → cut at k=3, but counted in totals
-        + [(2, "solo")]
-    )
-    df = spark.createDataFrame(links, "dst long, anchor string")
-    rows = graph.anchor_summary(df, k=3).collect()
-    got = {(r.dst, r.anchor): (r.cnt, r["rank"], r.n_inlinks, r.n_anchors) for r in rows}
-    assert got == py_anchor_summary(links, k=3)
-    assert got[(1, "blog")] == (3, 2, 12, 4)
-    assert got[(1, "news")] == (3, 3, 12, 4)
-    assert (1, "misc") not in got
-    assert got[(2, "solo")] == (1, 1, 1, 1)
 
 
 def py_mirror_hosts(rows, min_shared=2, num=8, den=10, df_cap=1000):

@@ -264,50 +264,6 @@ def test_surt_range_reaches_scan_as_pushed_filter(spark, tmp_path):
     assert q.count() == sum(1 for i in range(1000) if i % 16 == 4)
 
 
-def test_x11_pii_scrub_is_single_scan(spark):
-    """The PII pass must be one codegen'd projection: no exchange, no
-    python evaluation anywhere in the plan."""
-    from news_crawler_spark.operators import pii
-
-    # the library surface: an orderBy on top would be presentation,
-    # not part of the operator's contract
-    df = pii.with_pii(spark.read.parquet(f"{SF}/documents.parquet"))
-    p = plan(df)
-    assert "Exchange" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    assert "WholeStageCodegen" in p or "*(1)" in p
-
-
-def test_x12_boilerplate_strip_is_broadcast_anti(spark):
-    """The boilerplate strip must anti-join against a BROADCAST
-    boilerplate set (it is tiny by construction), never sort-merge."""
-    import re
-
-    from news_crawler_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    # an 8-token header woven onto every even doc, so the boilerplate
-    # set is non-empty
-    woven = docs.select(
-        "doc_id",
-        "source",
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit("subscribe to "),
-                F.col("source"),
-                F.lit(" newsletter for daily updates now "),
-                F.col("text"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    p = plan(dedup.strip_boilerplate(woven, para_tokens=8, min_docs=5))
-    assert re.search(r"BroadcastHashJoin [^\n]*LeftAnti", p), p
-    assert "SortMergeJoin" not in p
-
-
 def test_x13_bm25_plan_shape(spark):
     """BM25 scores from postings built once per documents DataFrame by
     one aggregate over the exploded tokens; repeat searches on the same
@@ -469,27 +425,6 @@ def test_x16_countmin_estimate_join_is_broadcast(spark):
     assert "CartesianProduct" not in p
 
 
-def test_x18_incremental_neardup_never_pairs_the_base(spark):
-    """The incremental near-dup must be ONE equi-join between the batch
-    bands and the base bands (no self-join of either side, no nested
-    loop), with the hamming verify inside the join output."""
-    from news_crawler_spark.operators import dedup
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan(
-        dedup.incremental_simhash_pairs(
-            d.filter(F.col("doc_id") % 5 != 0),
-            d.filter(F.col("doc_id") % 5 == 0),
-            max_hamming=8,
-        )
-    )
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "CartesianProduct" not in p
-    # exactly one join in the pair plan (checkpointed upstream aside):
-    # batch-bands x base-bands
-    assert p.count("Join") <= 2, p
-
-
 def test_x19_dup_spans_plan_shape(spark):
     """Three contracts: (a) the lazy window stream travels as hashed
     windows off a pruned (doc_id, text) scan — never window strings,
@@ -511,41 +446,6 @@ def test_x19_dup_spans_plan_shape(spark):
     assert "Scan parquet" not in p, p
     assert p.count("Scan ExistingRDD") == 2, p
     assert "partial_count" in p, p
-
-
-def test_g1_pagerank_iteration_is_broadcast(spark):
-    """Each PageRank iteration joins the (big) edge list against the
-    (small, one-row-per-host) rank vector: that join must be a
-    broadcast with the RANK side built, the contribution sum must keep
-    its map-side partial phase (hub-host in-degree skew collapses
-    before the shuffle), and the edge list must never be sort-merged
-    or re-sorted per iteration."""
-    from news_crawler_spark.operators import graph
-
-    # a 200-host link graph from the events table, one candidate edge
-    # per event, every 4th event pointing into a 10-host hub set
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    h = lambda tag: F.conv(  # noqa: E731
-        F.substring(
-            F.md5(F.concat(F.lit(tag), F.col("event_id").cast("string"))), 1, 4
-        ),
-        16,
-        10,
-    ).cast("long")
-    edges = (
-        ev.select(
-            (h("gs") % 200).alias("src"),
-            F.when(F.col("event_id") % 4 == 0, h("gd") % 10)
-            .otherwise(h("gd") % 200)
-            .alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    p = plan(graph.pagerank_int(edges, iters=3))
-    assert "BroadcastHashJoin" in p, p
-    assert "partial_sum" in p, p
-    assert "SortMergeJoin" not in p, p
 
 
 def test_x20_strip_rebuild_no_explode_single_eval(spark):

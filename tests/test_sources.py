@@ -83,7 +83,7 @@ def test_cursor_cut_matches_python_oracle(spark, links):
         ordered.setdefault(r.source, []).append(r)
     for s in ordered:
         # feed order = (published_ts, url) tuple DESC — the one tie-break
-        # direction shared by cursor_cut / latest_cursors / streaming
+        # direction shared by cursor_cut / latest_cursors
         ordered[s].sort(key=lambda r: (r.published_ts, r.url), reverse=True)
     # cursor = the 5th-newest link per source
     cursors = [
@@ -104,9 +104,9 @@ def test_cursor_cut_matches_python_oracle(spark, links):
 
 def test_cursor_tie_break_matches_streaming(spark):
     """A link that TIES the cursor's published_ts is kept iff its url is
-    tuple-greater — the same rule streaming.cursor_cut_stream applies, so
-    a late same-timestamp link is never permanently dropped by the batch
-    path while the stream path would admit it (ADVICE round-1 item)."""
+    tuple-greater — the order ``latest_cursors`` maximizes, so a late
+    same-timestamp link is never permanently dropped between sweeps
+    (ADVICE round-1 item)."""
     from datetime import datetime
 
     ts = datetime(2024, 6, 1, 12, 0)
@@ -152,75 +152,6 @@ def test_discover_feeds_engine(spark, pages, tmp_path):
     assert 0 < n <= fresh.count()  # dedup may collapse rediscoveries
     assert pend.select("canonical_url").distinct().count() == n
     assert cursors.count() == 5
-
-
-def test_recrawl_schedule_clamps_and_ceil(spark):
-    """Interval math vs hand computation: exact ceil-div, min/max clamps,
-    and zero-recent sources absent from the output."""
-    import datetime as dt
-
-    from news_crawler_spark import sources
-
-    base = dt.datetime(2024, 1, 10, 0, 0, 0)
-    rows = []
-    # 'hot': 100 events inside the window -> ceil(50*3600/100) = 1800
-    rows += [("hot", base - dt.timedelta(seconds=i)) for i in range(100)]
-    # 'cold': 1 event inside -> ceil(180000/1) clamped to max_s
-    rows += [("cold", base - dt.timedelta(seconds=30))]
-    # 'firehose': 4000 inside -> ceil(180000/4000)=45 clamped to min_s
-    rows += [("firehose", base - dt.timedelta(seconds=i % 3000)) for i in range(4000)]
-    # 'stale': only events OUTSIDE the window -> absent
-    rows += [("stale", base - dt.timedelta(seconds=4000))]
-    df = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    got = {
-        r.source: (r.n_recent, r.next_poll_s)
-        for r in sources.recrawl_schedule(
-            df, window_s=3600, target_batch=50, min_s=60, max_s=7200
-        ).collect()
-    }
-    assert got == {
-        "hot": (100, 1800),
-        "cold": (1, 7200),
-        "firehose": (4000, 60),
-    }, got
-
-
-def test_change_rate_schedule_estimator_edges(spark):
-    """The CGM estimator's branch structure: a never-changed page takes
-    the explicit max branch (lam_micro == 0, no division), an
-    every-poll changer clamps to the minimum interval, and a middling
-    page matches the closed-form integer arithmetic exactly."""
-    import math
-
-    from news_crawler_spark import sources as src
-
-    rows = (
-        [("never", False)] * 10
-        + [("always", True)] * 10
-        + [("some", True)] * 2
-        + [("some", False)] * 8
-        + [("once", True)]
-    )
-    df = spark.createDataFrame(rows, "page_id string, changed boolean")
-    got = {
-        r.page_id: (r.n_polls, r.n_changed, r.lam_micro, r.next_interval_s)
-        for r in src.change_rate_schedule(df, interval_s=3600, max_factor=30).collect()
-    }
-    L = lambda x: round(math.log(x) * 1_000_000)  # noqa: E731
-
-    def expect(n, x):
-        lam = L(2 * n + 1) - L(2 * (n - x) + 1)
-        nxt = 108000 if lam == 0 else min(108000, max(3600, 3600 * 1_000_000 // lam))
-        return (n, x, lam, nxt)
-
-    assert got == {
-        "never": expect(10, 0),
-        "always": expect(10, 10),
-        "some": expect(10, 2),
-        "once": expect(1, 1),
-    }
-    assert got["never"][2] == 0 and got["never"][3] == 108000
-    assert got["always"][3] == 3600  # min clamp: lam >> 10^6
 
 
 # ---------------------------------------------------------------------------

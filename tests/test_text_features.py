@@ -36,62 +36,6 @@ def test_dup_ngram_fraction_twin(spark):
         assert got[d] == (twin(t, 1), twin(t, 3)), d
 
 
-def test_scrub_pii_placeholders(spark):
-    """Every PII kind is counted and replaced; clean text untouched."""
-    from pyspark.sql import functions as F
-
-    from news_crawler_spark.operators import pii
-
-    rows = [
-        ("a", "mail me at jo.user+x@example.co.uk or root@10.0.0.1 ok"),
-        ("b", "server 192.168.1.255 then call +491234567890 now"),
-        ("c", "no pii here at all"),
-        ("d", "two mails a@b.io c@d.org and ip 1.2.3.4"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    got = {r.doc_id: r for r in pii.with_pii(df).collect()}
-
-    # NB row a: "root@10.0.0.1" is NOT an email (the pattern requires a
-    # letter TLD after the last dot), so the ipv4 pass claims the
-    # address part — ordering of the chained replaces made visible.
-    assert (got["a"].n_email, got["a"].n_ipv4, got["a"].n_phone) == (1, 1, 0)
-    assert got["a"].text_scrubbed == "mail me at <EMAIL> or root@<IP> ok"
-    assert (got["b"].n_email, got["b"].n_ipv4, got["b"].n_phone) == (0, 1, 1)
-    assert got["b"].text_scrubbed == "server <IP> then call <PHONE> now"
-    assert (got["c"].n_email, got["c"].n_ipv4, got["c"].n_phone) == (0, 0, 0)
-    assert got["c"].text_scrubbed == rows[2][1]
-    assert got["d"].text_scrubbed == "two mails <EMAIL> <EMAIL> and ip <IP>"
-
-
-def test_strip_boilerplate_edges(spark):
-    """Group-scoped stripping, the all-boilerplate doc, and the
-    below-threshold group staying intact."""
-    from news_crawler_spark.operators import dedup
-
-    header = "one two three four"  # 4 tokens = one chunk at para_tokens=4
-    rows = (
-        # 5 docs in s1 share the header chunk -> boilerplate at min_docs=5
-        [(i, "s1", f"{header} body{i} text{i} here{i} now{i}") for i in range(5)]
-        # doc 5 is NOTHING BUT the header -> must come back empty
-        + [(5, "s1", header)]
-        # same header in s2, but only 2 docs -> below threshold, kept
-        + [(10, "s2", f"{header} tail{0} a b c"), (11, "s2", header)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = {
-        r.doc_id: r
-        for r in dedup.strip_boilerplate(df, para_tokens=4, min_docs=5).collect()
-    }
-    assert len(out) == 8  # every input doc has an output row
-    for i in range(5):
-        assert (out[i].n_paras, out[i].n_kept) == (2, 1)
-        assert out[i].text_clean == f"body{i} text{i} here{i} now{i}"
-    assert (out[5].n_paras, out[5].n_kept, out[5].text_clean) == (1, 0, "")
-    assert (out[10].n_paras, out[10].n_kept) == (2, 2)
-    assert out[10].text_clean == rows[6][2]
-    assert (out[11].n_paras, out[11].n_kept, out[11].text_clean) == (1, 1, header)
-
-
 def test_bm25_matches_python_twin(spark):
     """BM25 scores and ranking vs a straightforward python twin,
     including a doc with no query terms (absent from output) and the
