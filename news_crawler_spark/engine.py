@@ -72,16 +72,9 @@ class CrawlEngine:
         default_refill: int = 20,
         max_retries: int = schemas.MAX_RETRIES,
         compact_every: int = 8,
-        param_rules: DataFrame | None = None,
     ):
         self.spark = spark
         self.catalog = SnapshotCatalog(spark, workdir)
-        # learned DUST strip rules (a prior crawl's dust_rules() output):
-        # applied to absolute seed URLs BEFORE canonicalization, so
-        # learned session-id aliases collapse into one seen-set key and
-        # are never fetched twice (dust.apply_param_rules; rules are
-        # broadcast — the seed stream is never shuffled by this)
-        self.param_rules = param_rules
         # the dims are a few rows per host, collected once: robots is held
         # as a local relation (a DataFrame built from a python list scans
         # through python workers every time a round reads it), politeness
@@ -244,27 +237,12 @@ class CrawlEngine:
         ]
 
     # ------------------------------------------------------------------ ingest
-    def _with_learned_rules(self, seed: DataFrame) -> DataFrame:
-        """Apply learned DUST strip rules (if configured) to the seed
-        batch's absolute URLs before canonicalization — the consumption
-        side of :meth:`dust_rules`. Rules are broadcast; scheme-less
-        dirty spellings pass through untouched (the canonicalizer owns
-        those)."""
-        if self.param_rules is None:
-            return seed
-        from .operators import dust as dust_ops
-
-        out = dust_ops.apply_param_rules(seed, self.param_rules)
-        return out.withColumn("url", F.col("rewritten_url")).drop(
-            "rewritten_url"
-        )
-
     def ingest(self, seed: DataFrame) -> None:
         """Seed list → frontier round 0: canonicalize, hash, first-wins
         dedup (the URL-seen set), initial pending state, seen-keys base,
         per-source cursors.
         """
-        cand = with_url_columns(self._with_learned_rules(seed), "url")
+        cand = with_url_columns(seed, "url")
         fresh = seen_set.ingest_batch(cand, seen=None)
         frontier = fresh.select(
             "url",
@@ -325,7 +303,7 @@ class CrawlEngine:
         round_no = prev + 1
         prev_pending = self._read_pending(prev)
         seen = self._read_seen_keys(prev)
-        cand = with_url_columns(self._with_learned_rules(seed), "url")
+        cand = with_url_columns(seed, "url")
         fresh = seen_set.ingest_batch(cand, seen)
         new_rows = fresh.select(
             "url", "canonical_url", "url_hash", "host", "source",
@@ -380,8 +358,8 @@ class CrawlEngine:
         return out
 
     def _budget_frame(self, budgets: dict[str, tuple[int, int]]) -> DataFrame:
-        """The (host, budget) dim ``pop_round``/``drain_eta`` join, as a
-        local relation."""
+        """The (host, budget) dim ``pop_round`` joins, as a local
+        relation."""
         return self.spark.createDataFrame(pa.table({
             "host": pa.array(list(budgets), pa.string()),
             "budget": pa.array([b for b, _n in budgets.values()], pa.int32()),
@@ -600,93 +578,3 @@ class CrawlEngine:
 
     def documents(self) -> DataFrame:
         return self.catalog.read_all("docs")
-
-    def drain_report(self, rounds_cap: int = 100) -> DataFrame:
-        """Per-host drain ETA over the live frontier — the c5 planning
-        operator (operators/frontier.drain_eta) wired to engine state:
-        robots-eligible pending backlog ÷ the NEXT round's token budget
-        (carry + refill, capped — exactly what step() would issue), with
-        the over-cap flag marking hosts whose queue cannot drain within
-        ``rounds_cap`` rounds no matter the executor count (their
-        ceiling is politeness, not compute). Steady-state note: the
-        budget is round-one's; hosts at bucket cap drain slightly
-        faster than the estimate, never slower — the flag is
-        conservative in the safe direction."""
-        last = self.catalog.latest_round()
-        if last is None:
-            raise FileNotFoundError("no committed rounds — ingest() first")
-        pending = self._read_pending(last)
-        eligible = frontier_ops.eligible(pending, self.max_retries)
-        allowed = frontier_ops.allowed_by_robots(eligible, self.robots)
-        budgets = self._budget_frame(self._budgets(allowed, last))
-        return frontier_ops.drain_eta(
-            allowed, budgets, self.default_refill, rounds_cap
-        )
-
-    def dust_rules(self, min_support: int = 3) -> DataFrame:
-        """Mine per-host content-neutral query parameters from THIS
-        crawl's own output (operators/dust.mine_param_rules): url +
-        span-sequence digest — the north-rule identity column — as the
-        evidence table. The loop this closes: a site-local session
-        param defeats both the static tracking strip-list
-        (functions/urls.py) and the seen-set (every alias is a new
-        64-bit key), so each crawl cycle refetches pages it already
-        holds; rules learned here feed dust.apply_param_rules ahead of
-        the NEXT cycle's canonicalization, turning yesterday's wasted
-        fetches into tomorrow's strip rules. Evidence never leaves the
-        cluster: one explode + one 8-byte-key equi-join + one tiny
-        groupBy over the docs table (see PLANS.md p16)."""
-        from .operators import dust as dust_ops
-
-        docs = self.catalog.read_all("docs")
-        pages = docs.select(
-            "url",
-            F.xxhash64(F.to_json("spans")).cast("string").alias("digest"),
-        )
-        return dust_ops.mine_param_rules(pages, min_support)
-
-    def run_snowball(
-        self,
-        max_cycles: int = 12,
-        universe: int = 400,
-        max_rounds: int = 1000,
-    ) -> list[RoundStats]:
-        """Open-web mode: crawl the frontier to quiescence, extract the
-        links embedded in the pages just fetched, admit the unseen ones
-        (exactly the ``ingest_incremental`` path a discovery poll uses —
-        seen anti-join and cursor fold included), and repeat until a
-        cycle discovers nothing new.
-
-        The reference never snowballs — its collectors enumerate
-        closed per-source lists (archives/RSS/sitemaps) and the page
-        fetcher walks only what they produced. An open crawl is this
-        loop: fetch → extract links → frontier. Cycle-batched expansion
-        reaches the same fixpoint as any BFS order because links are a
-        function of the page and admission is first-wins
-        (oracle.snowball pins engine ≡ closure on seen/completed/
-        failed/blocked sets). Each cycle's discovery cost is one
-        column-pruned pass over the NEW docs only (fetched_round
-        watermark), so re-crawling nothing and re-discovering nothing
-        is O(new work), not O(history)."""
-        from . import sources as src
-
-        all_stats: list[RoundStats] = []
-        if self.catalog.latest_round() is None:
-            raise FileNotFoundError("no committed rounds — ingest() first")
-        # resume safety: the FIRST cycle reprocesses every doc's links
-        # (watermark -1), because a crash between run() and the link
-        # ingest would otherwise lose the last batch's discoveries on a
-        # fresh attach. Reprocessing is idempotent (the seen anti-join
-        # re-admits nothing) and costs one column-pruned pass over the
-        # docs table per attach; steady-state cycles stay O(new docs).
-        watermark = -1
-        for _cycle in range(max_cycles):
-            all_stats.extend(self.run(max_rounds=max_rounds))
-            new_docs = self.documents().filter(
-                F.col("fetched_round") > watermark
-            )
-            watermark = self.catalog.latest_round()
-            links = src.outlinks_of(new_docs, universe=universe)
-            if self.ingest_incremental(links) == 0:
-                break
-        return all_stats

@@ -564,55 +564,3 @@ def allowed_by_robots_wildcards(frontier: DataFrame, robots: DataFrame) -> DataF
         joined.filter(_keep(F.col("__path"), F.col("__rules")))
         .drop("__rules", "__path")
     )
-
-
-def drain_eta(
-    frontier: DataFrame,
-    budgets: DataFrame,
-    default_budget: int = 20,
-    rounds_cap: int = 100,
-) -> DataFrame:
-    """Per-host frontier drain estimate — the capacity-planning signal
-    politeness creates: a host's pending backlog divided by its
-    per-round token budget is the number of rounds before that host's
-    queue empties, and a host whose ETA exceeds ``rounds_cap`` cannot
-    finish within the crawl cycle no matter how many executors exist
-    (politeness, not compute, is its bottleneck — the scheduler should
-    shed depth or raise the budget, not add workers). The reference
-    has a fixed 5-host worker layout and never needs this; an open
-    frontier with 10^6 hosts plans every cycle with it.
-
-    Input: the frontier (``status = 'pending'`` rows count) and the
-    ``(host, budget)`` dim ``pop_round`` consumes. Output per host with
-    pending work: ``(host, n_pending, budget, rounds_to_drain,
-    over_cap)`` — ceil-div, exact integers.
-
-    Scale shape: ONE partial-aggregated groupBy(host) over the
-    frontier (the 10^10-row side is touched once, combiner-reduced to
-    |hosts| rows) + a broadcast join against the budget dim; the
-    projection is pure integer arithmetic."""
-    pending = (
-        frontier.filter(F.col("status") == "pending")
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pending"))
-    )
-    joined = pending.join(
-        F.broadcast(budgets.select("host", "budget")), "host", "left"
-    ).withColumn(
-        "budget",
-        F.coalesce(F.col("budget"), F.lit(default_budget)).cast("long"),
-    )
-    # a zero/negative joined budget (bucket_capacity=0 politeness rows)
-    # means the host can never drain: the bare ceil-div yielded NULL
-    # rounds and NULL over_cap (or an ANSI divide-by-zero) instead of
-    # flagging it (ADVICE round 5) — classify explicitly
-    rounds = F.when(
-        F.col("budget") >= 1, F.expr("(n_pending + budget - 1) div budget")
-    )
-    return joined.select(
-        "host",
-        "n_pending",
-        "budget",
-        rounds.cast("long").alias("rounds_to_drain"),
-        F.coalesce(rounds > rounds_cap, F.lit(True)).alias("over_cap"),
-    )

@@ -200,56 +200,3 @@ def crawl(
             break
         rnd += 1
     return OracleResult(seen=seen, pops=pops, docs=docs, lineage=lineage)
-
-
-def snowball(
-    seed_rows: list[dict],
-    universe: int = 400,
-    robots: list[dict] | None = None,
-) -> dict[str, set]:
-    """Fixpoint of the snowball crawl (engine.run_snowball's contract):
-    the sets of canonical URLs that end up SEEN / COMPLETED / FAILED /
-    robots-blocked-PENDING once discovery converges. Outlinks are a pure
-    function of the page (synth.page_outlinks), failed fetches and
-    robots-denied URLs expand nothing, and the first-wins dedup makes
-    the closure order-invariant — so plain BFS here equals the engine's
-    cycle-batched expansion regardless of round structure.
-    """
-    robots = robots if robots is not None else synth.robots_rows()
-    seen = ingest(seed_rows)
-    queue = list(seen.values())
-    completed: set[str] = set()
-    failed: set[str] = set()
-    blocked: set[str] = set()
-    while queue:
-        e = queue.pop()
-        if not _robots_allows(robots, e.host, e.canonical_url):
-            blocked.add(e.canonical_url)
-            continue
-        if not synth.page_ok(e.canonical_url):
-            failed.add(e.canonical_url)
-            continue
-        completed.add(e.canonical_url)
-        for r in synth.page_outlinks(e.canonical_url, universe):
-            cu = canonicalize_one(r["url"])
-            if cu is None or cu in seen:
-                continue
-            h = xxh64_str(cu)
-            ne = OracleEntry(
-                url=r["url"],
-                canonical_url=cu,
-                url_hash=h,
-                host=urlsplit(cu).hostname,
-                source=r["source"],
-                priority=int(h % 3),
-                published_ts=r["published_ts"],
-                discovery_time=r["discovery_time"],
-            )
-            seen[cu] = ne
-            queue.append(ne)
-    return {
-        "seen": set(seen),
-        "completed": completed,
-        "failed": failed,
-        "blocked_pending": blocked,
-    }

@@ -5,10 +5,6 @@ Mirrors the reference's data model (SURVEY.md §1):
                     retry columns (alembic 20251209175903:30-64), plus the
                     derived columns a distributed engine needs (canonical
                     url, 64-bit hash, host, priority, discovery time).
-- documents       ← reference `news` table / `NewsData` (schema.py:14-25),
-                    generalized to interleaved text+media span arrays per
-                    BASELINE.json input_hint.
-- pages           ← synthetic fetch corpus standing in for the network.
 - robots_rules / politeness ← validate_link (news_sources/__init__.py:27-29)
                     and the concurrency knobs (config.py:27-36).
 - cursors         ← last-link JSON cache (cache_manager.py:12-16,54-69).
@@ -27,15 +23,6 @@ STATUS_COMPLETED = "completed"
 STATUS_FAILED = "failed"
 
 MAX_RETRIES = 3  # config.py:31; database_manager.py:25
-
-SPAN = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), False),       # 'text' | 'image'
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), False),    # document order
-    ]
-)
 
 SEED_LIST = T.StructType(
     [
@@ -59,32 +46,6 @@ FRONTIER = T.StructType(
         T.StructField("status", T.StringType(), False),
         T.StructField("tried_count", T.IntegerType(), False),
         T.StructField("last_tried_round", T.IntegerType(), True),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),     # hex(xxhash64(url))
-        T.StructField("url", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("summary", T.StringType(), True),
-        T.StructField("keywords", T.ArrayType(T.StringType()), True),
-        T.StructField("spans", T.ArrayType(SPAN), False),
-        T.StructField("published_ts", T.TimestampType(), True),
-        T.StructField("published_epoch", T.LongType(), True),
-        T.StructField("fetched_round", T.IntegerType(), False),
-    ]
-)
-
-PAGES = T.StructType(
-    [
-        T.StructField("canonical_url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("fetch_ms", T.IntegerType(), False),
-        T.StructField("payload", T.StringType(), True),
     ]
 )
 

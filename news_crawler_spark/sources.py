@@ -251,7 +251,7 @@ def sitemap_staleness(
 ) -> DataFrame:
     """Sitemap-lastmod-driven recrawl selection: join what the host
     ADVERTISES changed (sitemap ``<lastmod>``) against what the archive
-    HOLDS (the latest-capture table ``archive.cdx_resolve`` produces)
+    HOLDS (a latest-capture table: one row per URL, its newest capture)
     and classify every advertised URL — ``unseen`` (never captured →
     crawl), ``stale`` (lastmod newer than our latest capture →
     refetch; ``staleness_s`` = how far behind), ``fresh`` (no fetch
@@ -312,7 +312,7 @@ def sitemap_tree(
     sitemap file — ``kind='sitemap'`` is a ``<sitemapindex>`` child
     (another file to fetch), ``kind='url'`` is a ``<urlset>`` page URL.
     ``roots (root)``: the index URLs advertised in robots.txt
-    (``archive.robots_sitemaps`` produces exactly this). The protocol
+    (``frontier.robots_sitemaps`` produces exactly this). The protocol
     CAPS everything: 50k entries per file forces big sites into index
     trees (the reference's sources each fit one flat sitemap,
     collectors/*/sitemap readers, so it never recurses; an open crawl
@@ -489,30 +489,3 @@ def refresh_allocation(
             "page_id", "lam", F.col("f_alloc").cast("long").alias("f_alloc")
         )
     return alloc
-
-
-def outlinks_of(docs: DataFrame, universe: int = 400) -> DataFrame:
-    """Seed-list-shaped outlinks of fetched pages — the discovery stage
-    of a snowball crawl. In production this parses ``<a href>`` out of
-    the stored payload (the fused fetch stage already runs every page
-    through python, so extraction is a column away); against the
-    synthetic network it replays ``synth.page_outlinks`` — the same
-    pure function of the page the closure oracle uses, which is what
-    makes the engine-vs-oracle fixpoint comparison exact.
-
-    Scale shape: one ``mapInPandas`` pass over (url) — column-pruned to
-    8 bytes + string per doc — emitting ≤3 rows per page; everything
-    downstream (canonicalize, first-wins, seen anti-join, filter fold)
-    is ``ingest_incremental``'s existing machinery. The links table is
-    never collected."""
-    from . import schemas
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for u in pdf["url"]:
-                rows.extend(synth.page_outlinks(u, universe))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return docs.select("url").mapInPandas(gen, schema=schemas.SEED_LIST)

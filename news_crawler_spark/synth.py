@@ -158,24 +158,9 @@ def build_seed_list(
 # ---------------------------------------------------------------------------
 # synthetic pages (the "network")
 
-def content_key(canonical_url: str) -> str:
-    """The synthetic network's notion of page IDENTITY: the URL minus
-    its ``nsid`` session parameter. Real sites serve the same content to
-    every session id; modeling that is what lets the engine LEARN the
-    strip rule from its own crawl (operators/dust + engine.dust_rules)
-    instead of being handed a list. URLs without ``nsid`` — every URL
-    the stock generators emit — return unchanged, so nothing downstream
-    of the existing corpus shifts by a byte."""
-    if "nsid=" not in canonical_url:
-        return canonical_url
-    base, _, q = canonical_url.partition("?")
-    kept = [p for p in q.split("&") if not p.startswith("nsid=")]
-    return base + ("?" + "&".join(kept) if kept else "")
-
-
 def page_ok(canonical_url: str) -> bool:
     """~5% of fetches fail, hash-selected (failure injection)."""
-    return _u(xxh64_str(f"page:{content_key(canonical_url)}")) % 20 != 0
+    return _u(xxh64_str(f"page:{canonical_url}")) % 20 != 0
 
 
 # Per-source markup dialects (F12): the reference ships five hand-written
@@ -223,17 +208,16 @@ def page_payload(canonical_url: str) -> str:
     engine parser / oracle parser / any dialect holds on (kind, text,
     media_ref, offset)."""
     wrap = _DIALECT_WRAP[SOURCE_DIALECT[source_of_url(canonical_url)]]
-    ck = content_key(canonical_url)  # session-id aliases serve one page
-    h = _u(xxh64_str(f"page:{ck}"))
+    h = _u(xxh64_str(f"page:{canonical_url}"))
     n_blocks = 3 + h % 6
     parts = [wrap["title"].format(f"{_slug(h % 100000)} {h % 997}")]
     for b in range(n_blocks):
-        hb = _u(xxh64_str(f"span:{ck}:{b}"))
+        hb = _u(xxh64_str(f"span:{canonical_url}:{b}"))
         if hb % 4 == 0:
             parts.append(wrap["image"].format(f"img://{hb % 1000000}.jpg"))
         else:
             words = " ".join(
-                _WORDS[_u(xxh64_str(f"pw:{ck}:{b}:{k}")) % len(_WORDS)]
+                _WORDS[_u(xxh64_str(f"pw:{canonical_url}:{b}:{k}")) % len(_WORDS)]
                 for k in range(4 + hb % 12)
             )
             parts.append(wrap["text"].format(words))
@@ -242,37 +226,6 @@ def page_payload(canonical_url: str) -> str:
 
 def page_fetch_ms(canonical_url: str) -> int:
     return 20 + _u(xxh64_str(f"lat:{canonical_url}")) % 480
-
-
-def page_outlinks(canonical_url: str, universe: int = 400) -> list[dict]:
-    """The links the synthetic network embeds in a page: 0-3 'related
-    articles' per OK page, drawn from a FINITE article universe so a
-    snowball crawl converges to a fixpoint. Pure function of the page
-    identity (``content_key``), shared by the engine's discovery stage
-    (sources.outlinks_of) and the pure-python closure oracle
-    (oracle.snowball) — the same twin discipline as page_payload. A
-    failed fetch yields no links (the crawler never saw the page)."""
-    if not page_ok(canonical_url):
-        return []
-    ck = content_key(canonical_url)
-    n = _u(xxh64_str(f"links:{ck}")) % 4
-    out = []
-    for j in range(n):
-        art_key = _u(xxh64_str(f"link:{ck}:{j}")) % universe
-        source, _host, url = clean_url(art_key)
-        pub = _EPOCH_PUB + timedelta(
-            seconds=int(_u(xxh64_str(f"pub:{art_key}")) % (90 * 86400))
-        )
-        disc = _EPOCH_DISC + timedelta(seconds=art_key)
-        out.append(
-            {
-                "source": source,
-                "url": url,
-                "published_ts": pub.replace(tzinfo=None),
-                "discovery_time": disc.replace(tzinfo=None),
-            }
-        )
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -44,21 +44,6 @@ def main() -> None:
     ap.add_argument("--compact-every", type=int, default=8,
                     help="compaction interval (rounds) of the done, seen-key, "
                          "pops and lineage logs")
-    ap.add_argument("--dust-rules", action="store_true",
-                    help="after the crawl, mine per-host content-neutral "
-                         "query params from this crawl's own documents "
-                         "(operators/dust) and print the learned rules")
-    ap.add_argument("--snowball", action="store_true",
-                    help="open-web mode: after each crawl-to-quiescence, "
-                         "extract the links embedded in fetched pages and "
-                         "admit the unseen ones, until a cycle discovers "
-                         "nothing (engine.run_snowball)")
-    ap.add_argument("--universe", type=int, default=400,
-                    help="snowball: size of the synthetic article "
-                         "universe links are drawn from")
-    ap.add_argument("--drain-report", action="store_true",
-                    help="before crawling, print the per-host drain ETA "
-                         "forecast for the pending backlog")
     args = ap.parse_args()
 
     spark = get_spark(app_name="crawl_run", cores=args.cpus, master=args.master)
@@ -73,20 +58,7 @@ def main() -> None:
         print(
             f"resuming from round {eng.catalog.latest_round()}", file=sys.stderr
         )
-    if args.drain_report:
-        for r in eng.drain_report().collect():
-            print(
-                f"drain {r.host}: {r.n_pending} pending / budget "
-                f"{r.budget} -> {r.rounds_to_drain} rounds"
-                f"{' (over cap)' if r.over_cap else ''}",
-                file=sys.stderr,
-            )
-    if args.snowball:
-        stats = eng.run_snowball(
-            max_rounds=args.rounds, universe=args.universe
-        )
-    else:
-        stats = eng.run(max_rounds=args.rounds)
+    stats = eng.run(max_rounds=args.rounds)
     dt = time.perf_counter() - t0
     fetched = sum(s.fetched_ok + s.fetched_fail for s in stats)
     print(
@@ -100,13 +72,6 @@ def main() -> None:
             }
         )
     )
-    if args.dust_rules:
-        for r in eng.dust_rules().orderBy("host", "param").collect():
-            print(
-                f"dust {r.host} {r.param}: support={r.support} "
-                f"violations={r.violations} removable={r.removable}",
-                file=sys.stderr,
-            )
     spark.stop()
 
 

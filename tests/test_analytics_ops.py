@@ -4,6 +4,7 @@ vs a numpy oracle; and a source-level guard that every program function
 is reachable from the program's entry points."""
 
 import ast
+import copy
 from datetime import datetime
 from pathlib import Path
 
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from news_crawler_spark import analytics
 from news_crawler_spark.operators import similarity
-from test_oracles import QUERY_NAMES
+from test_oracles import QUERY_NAMES, twin_name
 
 SF = "/root/testdata/sf0.001"
 
@@ -128,7 +129,6 @@ def test_query_and_oracle_registries_stay_aligned():
     import inspect
 
     from news_crawler_spark import analytics
-    from test_oracles import twin_name
 
     defined = {
         name
@@ -146,7 +146,8 @@ def test_query_and_oracle_registries_stay_aligned():
 
 # Where a run of the program starts. "<glob>" runs each file's top-level
 # code (scripts and the benchmark run as programs); "<file>:<name>" also
-# uses that name; "<file>:*" uses every top-level name of the file.
+# uses that name (a function, class, constant or method); "<file>:*" uses
+# every top-level name of the file.
 REPO = Path(__file__).resolve().parent.parent
 PROGRAM_DIRS = ("news_crawler_spark", "scripts")
 PACKAGE_ALL = next(
@@ -160,14 +161,17 @@ ROOTS = (
     *(f"news_crawler_spark/__init__.py:{name}" for name in PACKAGE_ALL),
     # the analytics queries, each checked against its DuckDB twin
     *(f"news_crawler_spark/analytics.py:{name}" for name in QUERY_NAMES),
-    # the Python reference the crawl tests compare the engine against
+    *(f"news_crawler_spark/analytics.py:{twin_name(name)}" for name in QUERY_NAMES),
+    # the Python reference the crawl tests compare the engine against, and
+    # the engine's crawl-order view they compare it with
     "news_crawler_spark/oracle.py:*",
+    "news_crawler_spark/engine.py:pops_in_order",
     # the test seam for a non-POSIX filesystem
     "news_crawler_spark/functions/fsio.py:register_filesystem",
 )
 
 # Program code no entry point reaches that tier-1 still tests. It goes in
-# batches, each with the tests that check only it (ROADMAP item 5). The
+# batches, each with the tests that check only it (ROADMAP item 8). The
 # guard matches this table exactly, so the table only shrinks: new
 # unreached code fails, and so does an entry that was deleted or gained
 # a caller. "(module)" marks a module no reached code imports.
@@ -176,17 +180,13 @@ AWAITING_DELETION = {
         "(module)", "suffix_rules_df", "registered_domain_map", "with_registered_domain",
     ),
     "news_crawler_spark/functions/urls.py": ("surt_key_col", "url_template_col"),
-    "news_crawler_spark/operators/archive.py": (
-        "(module)", "pack_segments", "read_records", "cdx_resolve",
-        "revalidation_plan", "snapshot_diff",
-    ),
     "news_crawler_spark/operators/dedup.py": (
         "shingles_from_tokens", "exact_duplicates", "ngram_jaccard_pairs", "window_hash_stream",
         "duplicate_spans", "strip_duplicate_spans", "cluster_representatives",
         "mirror_hosts", "cdc_chunks", "containment_pairs",
     ),
     "news_crawler_spark/operators/frontier.py": (
-        "url_trap_flags", "robots_sitemaps", "rendezvous_assign",
+        "TRAP_SESSION_PARAMS", "url_trap_flags", "robots_sitemaps", "rendezvous_assign",
         "trap_templates", "allowed_by_robots_wildcards",
     ),
     "news_crawler_spark/operators/joins.py": (
@@ -196,7 +196,6 @@ AWAITING_DELETION = {
         "pack_interleaved", "media_integrity", "image_ahash64",
         "image_neardup_pairs", "sniff_content_type", "sniff_charset",
     ),
-    "news_crawler_spark/operators/sampling.py": ("hash_split", "stratified_sample"),
     "news_crawler_spark/operators/sessions.py": ("(module)", "sessionize"),
     "news_crawler_spark/operators/sketch.py": (
         "(module)", "md5_hash60", "kmv_bottom_k", "kmv_merge", "with_kmv_estimate",
@@ -210,6 +209,7 @@ AWAITING_DELETION = {
         "fingerprint", "winnow_fingerprints", "with_text_features",
         "dsir_select", "unigram_entropy", "bigram_logprob",
         "bpe_init_segmentation", "bpe_adjacent_pairs", "bpe_train", "ccnet_split",
+        "BPE_TOKEN_RE", "DSIR_BUCKETS", "DSIR_LOG_SCALE",
     ),
     "news_crawler_spark/sources.py": (
         "sitemap_staleness", "sitemap_tree", "refresh_allocation",
@@ -255,30 +255,62 @@ def _uses(node, package: str) -> tuple[set[str], set[str]]:
     return names, modules
 
 
+def _defined_name(node) -> str:
+    """The name a top-level function, class or single-name assignment
+    defines, walked once it is reached; "" for dunders and every other
+    statement, which run when the module loads."""
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        name = node.name
+    elif isinstance(node, ast.Assign) and len(node.targets) == 1:
+        name = getattr(node.targets[0], "id", "")
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        name = getattr(node.target, "id", "")
+    else:
+        return ""
+    return "" if name.startswith("__") else name
+
+
 def test_every_program_function_is_reachable():
-    """Every public top-level function and class of every module under
-    news_crawler_spark/ and scripts/ is reached from ``ROOTS``. A module
-    counts only when reached code imports it, so its top-level
-    statements (and hooks such as a package ``__getattr__``) run; a name
-    is reached when reached code uses it and its module counts. A
-    function only tests call, or only other unreached code calls, fails
-    here, and so does a module no reached code imports, unless
-    ``AWAITING_DELETION`` names it. Parses source only; no Spark."""
+    """Every public top-level function, class and constant of every
+    module under news_crawler_spark/ and scripts/, and every public
+    method of a reached class, is reached from ``ROOTS``. A module counts only when reached code
+    imports it, so its top-level statements (and hooks such as a package
+    ``__getattr__``) run; a name is reached when reached code uses it
+    and its module counts, a method when reached code uses its name and
+    its class is reached. A reached class runs its body and its dunder
+    methods; a constant's value and a method's body are walked only once
+    they are reached. A function only tests call, or only other
+    unreached code calls, fails here, and so does a module no reached
+    code imports, unless ``AWAITING_DELETION`` names it. Parses source
+    only; no Spark."""
     files = {
         _module_name(p): p
         for d in (*PROGRAM_DIRS, "perfbench")
         for p in sorted((REPO / d).rglob("*.py"))
     }
-    defs, body, package = {}, {}, {}
+    # defs: (module, "name") and (module, "Class.method") → the node
+    # walked once it is reached; a class's node is its body less methods
+    defs, body, package, assigned = {}, {}, {}, set()
     for mod, path in files.items():
         package[mod] = mod if path.name == "__init__.py" else mod.rpartition(".")[0]
         body[mod] = []
         for n in ast.parse(path.read_text()).body:
-            name = getattr(n, "name", "")
-            if isinstance(n, (ast.FunctionDef, ast.ClassDef)) and not name.startswith("__"):
-                defs[(mod, name)] = n
-            else:
+            name = _defined_name(n)
+            if not name:
                 body[mod].append(n)
+                continue
+            if not isinstance(n, (ast.FunctionDef, ast.ClassDef)):
+                assigned.add((mod, name))
+            elif isinstance(n, ast.ClassDef):
+                methods = [
+                    m for m in n.body
+                    if isinstance(m, ast.FunctionDef) and not m.name.startswith("__")
+                ]
+                for m in methods:
+                    defs[(mod, f"{name}.{m.name}")] = m
+                n = copy.copy(n)
+                n.body = [b for b in n.body if b not in methods]
+            defs[(mod, name)] = n
 
     loaded, reached, used = set(), set(), set()
 
@@ -302,14 +334,16 @@ def test_every_program_function_is_reachable():
             mod = _module_name(path)
             load(mod)
             if name == "*":
-                used.update(n for m, n in defs if m == mod)
+                used.update(n for m, n in defs if m == mod and "." not in n)
             elif name:
                 used.add(name)
     grown = True
     while grown:
         grown = False
         for (mod, name), node in defs.items():
-            if (mod, name) not in reached and mod in loaded and name in used:
+            owner, _, attr = name.rpartition(".")
+            live = (mod, owner) in reached if owner else mod in loaded
+            if (mod, name) not in reached and live and attr in used:
                 reached.add((mod, name))
                 visit(node, mod)
                 grown = True
@@ -321,11 +355,13 @@ def test_every_program_function_is_reachable():
             continue
         if mod not in loaded:
             orphans.add(f"{rel}:(module)")
-        orphans.update(
-            f"{rel}:{name}"
-            for (m, name) in defs
-            if m == mod and not name.startswith("_") and (m, name) not in reached
-        )
+        for m, name in defs:
+            owner, _, attr = name.rpartition(".")
+            # a method counts once its class is reached, a constant once
+            # its module is imported ("(module)" covers the rest)
+            scope = (m, owner) in reached if owner else (m, name) not in assigned or m in loaded
+            if m == mod and not attr.startswith("_") and (m, name) not in reached and scope:
+                orphans.add(f"{rel}:{name}")
     awaiting = {f"{rel}:{name}" for rel, names in AWAITING_DELETION.items() for name in names}
     new = sorted(orphans - awaiting)
     assert not new, "unreachable from ROOTS:\n" + "\n".join(new)

@@ -144,7 +144,11 @@ def test_resume_equals_uninterrupted(spark, seed_rows, engine_run, tmp_path_fact
 
 
 def test_incremental_ingest_dedups(spark, engine_run):
-    """ST2/ST3: re-delivered links are absorbed; only new URLs admitted."""
+    """ST2/ST3: re-delivered links are absorbed; only new URLs admitted.
+    Batches admitted after the crawl quiesced are crawled by the next
+    ``run`` to the oracle's final state of every batch crawled as one,
+    also when each call runs in a fresh engine on the workdir (a kill
+    between the calls)."""
     eng, _ = engine_run
     redelivered = synth.build_seed_list(spark, 50)  # all already seen
     n = eng.ingest_incremental(redelivered)
@@ -164,6 +168,15 @@ def test_incremental_ingest_dedups(spark, engine_run):
         eng.robots,
     ).count()
     assert left == 0
+
+    later = synth.build_seed_list(spark, N_SEED + 80, lo=N_SEED + 40)
+    assert CrawlEngine(spark, eng.catalog.root).ingest_incremental(later) > 0
+    last = CrawlEngine(spark, eng.catalog.root)
+    last.run()
+    rows = last.final_frontier().select("canonical_url", "status", "tried_count")
+    got = {r.canonical_url: (r.status, r.tried_count) for r in rows.collect()}
+    seen = oracle.crawl([synth.seed_row(i) for i in range(N_SEED + 80)]).seen
+    assert got == {cu: (e.status, e.tried_count) for cu, e in seen.items()}
 
 
 def test_poll_cycle_scans_no_python_rdd(spark, tmp_path_factory):
@@ -420,94 +433,3 @@ def test_rendezvous_resize_moves_only_to_the_new_shard(spark):
     assert 25 <= len(moved) <= 95
     # balance: every shard owns someone in the 8-world
     assert set(s8.values()) == set(range(8))
-
-
-def test_drain_report_matches_frontier_state(
-    spark, engine_run, tmp_path_factory
-):
-    """Fresh ingest: the report covers exactly the robots-eligible
-    pending backlog at round-1 budgets, the forecast upper-bounds the
-    real drain (budgets only grow with carry), and a quiesced engine
-    reports empty."""
-    import math
-
-    from news_crawler_spark.operators import frontier as frontier_ops
-
-    wd = str(tmp_path_factory.mktemp("drain"))
-    eng = CrawlEngine(spark, wd)
-    eng.ingest(synth.build_seed_list(spark, 300))
-    report = {r.host: r for r in eng.drain_report(rounds_cap=3).collect()}
-    assert report, "fresh ingest must have pending backlog"
-    # per-host backlog must equal the robots-eligible pending count
-    pending = eng.final_frontier().filter(F.col("status") == "pending")
-    allowed = frontier_ops.allowed_by_robots(
-        frontier_ops.eligible(pending), eng.robots
-    )
-    truth = {r.host: r.n for r in allowed.groupBy("host").count()
-             .withColumnRenamed("count", "n").collect()}
-    assert {h: r.n_pending for h, r in report.items()} == truth
-    for r in report.values():
-        assert r.budget > 0
-        assert r.rounds_to_drain == math.ceil(r.n_pending / r.budget)
-        assert r.over_cap == (r.rounds_to_drain > 3)
-    # the forecast never claims a faster drain than actually happened
-    done_eng, stats = engine_run
-    assert max(r.rounds_to_drain for r in report.values()) <= len(stats) * 2
-    # quiesced engine: robots-denied leftovers are filtered -> empty
-    assert done_eng.drain_report().collect() == []
-
-
-def test_snowball_reaches_the_oracle_closure(spark, tmp_path_factory):
-    """Open-web mode: run_snowball must land exactly on the BFS fixpoint
-    of the synthetic link graph — seen/completed/failed/blocked sets all
-    equal to oracle.snowball's closure, regardless of cycle batching."""
-    from news_crawler_spark import oracle
-
-    wd = str(tmp_path_factory.mktemp("snowball"))
-    eng = CrawlEngine(spark, wd)
-    eng.ingest(synth.build_seed_list(spark, 40))
-    eng.run_snowball(max_cycles=20, universe=150)
-
-    exp = oracle.snowball(
-        [synth.seed_row(i) for i in range(40)], universe=150
-    )
-    ff = eng.final_frontier().select("canonical_url", "status").collect()
-    got = {
-        "seen": {r.canonical_url for r in ff},
-        "completed": {r.canonical_url for r in ff if r.status == "completed"},
-        "failed": {r.canonical_url for r in ff if r.status == "failed"},
-        "blocked_pending": {
-            r.canonical_url for r in ff if r.status == "pending"
-        },
-    }
-    assert got == exp
-    # discovery genuinely expanded the frontier beyond the seed set
-    assert len(exp["seen"]) > 40
-
-
-def test_snowball_resumes_after_kill_between_run_and_ingest(
-    spark, tmp_path_factory
-):
-    """Crash window: pages fetched but their links never admitted. A
-    fresh attach must still reach the full closure — the first cycle
-    reprocesses all docs' links (idempotent through the seen set)."""
-    from news_crawler_spark import oracle
-
-    wd = str(tmp_path_factory.mktemp("snowball_resume"))
-    e1 = CrawlEngine(spark, wd)
-    e1.ingest(synth.build_seed_list(spark, 40))
-    # simulate the crash: crawl to quiescence, then DIE before the
-    # discovery ingest ever runs
-    for _ in e1.run():
-        pass
-
-    e2 = CrawlEngine(spark, wd)  # fresh attach on the same catalog
-    e2.run_snowball(max_cycles=20, universe=150)
-    exp = oracle.snowball(
-        [synth.seed_row(i) for i in range(40)], universe=150
-    )
-    ff = e2.final_frontier().select("canonical_url", "status").collect()
-    assert {r.canonical_url for r in ff} == exp["seen"]
-    assert {
-        r.canonical_url for r in ff if r.status == "completed"
-    } == exp["completed"]

@@ -11,7 +11,6 @@ from news_crawler_spark import sources
 from news_crawler_spark.functions.xxh64 import xxh64
 from news_crawler_spark.operators import (
     dedup,
-    frontier,
     multimodal,
     similarity,
     text,
@@ -575,69 +574,6 @@ def test_winnow_fingerprint_overlap_guarantee(spark):
     trows = {r.doc_id: list(r.fps) for r in tiny.select(
         "doc_id", text.winnow_fingerprints("text", n=3, window=4).alias("fps")).collect()}
     assert trows[9] == [] and len(trows[10]) == 1
-
-
-# ------------------------------------------------------------- sampling (r5)
-def test_hash_split_total_disjoint_stable(spark):
-    """Every row lands in exactly one split; assignment is a pure
-    function of (seed, key) — independent of row order, partitioning,
-    and the other rows (the eval-leakage invariant)."""
-    from news_crawler_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    out = sampling.hash_split(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-    n = docs.count()
-    assert out.count() == n                                   # total
-    assert out.select("doc_id").distinct().count() == n      # one split each
-    full = {r.doc_id: r.split for r in out.select("doc_id", "split").collect()}
-    # a 10%-subset, reshuffled, assigns identically
-    sub = docs.filter(F.col("doc_id") % 10 == 3).repartition(7)
-    sub_out = sampling.hash_split(
-        sub, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
-    for r in sub_out.select("doc_id", "split").collect():
-        assert full[r.doc_id] == r.split
-    # fractions land near their targets (md5 uniformity at n=500)
-    counts = {r.split: r.n for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()}
-    assert abs(counts["train"] / n - 0.8) < 0.06
-    assert abs(counts.get("val", 0) / n - 0.1) < 0.05
-    assert abs(counts.get("test", 0) / n - 0.1) < 0.05
-
-
-def test_stratified_sample_reproducible_under_growth(spark):
-    """Membership never depends on the other rows: sampling a GROWN
-    corpus keeps exactly the previously-kept rows plus new ones (the
-    property reservoir/limit sampling lacks), and per-group kept
-    fractions track their rates."""
-    from news_crawler_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    rates = docs.select("source").distinct().select(
-        "source",
-        ((F.pmod(F.substring("source", 4, 10).cast("int"), F.lit(5)) + 1) / 10.0)
-        .alias("rate"),
-    )
-    half = docs.filter(F.col("doc_id") % 2 == 0)
-    kept_half = {
-        r.doc_id
-        for r in sampling.stratified_sample(half, rates, "source", "doc_id")
-        .select("doc_id").collect()
-    }
-    kept_full = {
-        r.doc_id
-        for r in sampling.stratified_sample(docs, rates, "source", "doc_id")
-        .select("doc_id").collect()
-    }
-    assert kept_half == {d for d in kept_full if d % 2 == 0}
-    # rate accuracy per group, loose bound at ~25 rows/group
-    got = (
-        sampling.stratified_sample(docs, rates, "source", "doc_id")
-        .groupBy("source").agg(F.count("*").alias("k"))
-    )
-    tot = docs.groupBy("source").agg(F.count("*").alias("n"))
-    joined = got.join(tot, "source").join(rates, "source").collect()
-    for r in joined:
-        assert abs(r.k / r.n - r.rate) < 0.25, (r.source, r.k, r.n, r.rate)
 
 
 def test_pack_token_shards_offsets_exact(spark):
@@ -1307,58 +1243,6 @@ class TestCharsetSniff:
         # declaration can't break the scan
         got = self._sniff(spark, [b"\x80\x81\xfe<meta charset=utf-8>"])
         assert got == ["utf-8"]
-
-
-# ---------------------------------------------------------------- drain ETA
-
-
-class TestDrainEta:
-    def _run(self, spark, **kw):
-        fr = spark.createDataFrame(
-            [("a", "pending")] * 7
-            + [("a", "completed")] * 3
-            + [("b", "pending")] * 41
-            + [("c", "completed")],
-            "host string, status string",
-        )
-        budgets = spark.createDataFrame(
-            [("a", 3), ("b", 2)], "host string, budget long"
-        )
-        out = frontier.drain_eta(fr, budgets, **kw)
-        return {r.host: r for r in out.collect()}
-
-    def test_ceil_div_and_cap(self, spark):
-        got = self._run(spark, rounds_cap=10)
-        # a: 7 pending / budget 3 -> ceil = 3 rounds, under cap
-        assert (got["a"].n_pending, got["a"].rounds_to_drain) == (7, 3)
-        assert not got["a"].over_cap
-        # b: 41 / 2 -> 21 rounds, over cap
-        assert (got["b"].rounds_to_drain, got["b"].over_cap) == (21, True)
-        # c has no pending rows -> absent entirely
-        assert "c" not in got
-
-    def test_default_budget_branch(self, spark):
-        fr = spark.createDataFrame(
-            [("zz", "pending")] * 5, "host string, status string"
-        )
-        budgets = spark.createDataFrame([], "host string, budget long")
-        r = frontier.drain_eta(fr, budgets, default_budget=4).collect()[0]
-        assert (r.budget, r.rounds_to_drain) == (4, 2)
-
-    def test_zero_budget_host_is_over_cap(self, spark):
-        """ADVICE round 5: a host whose politeness rows carry budget 0
-        can never drain — it must classify over_cap=true (NULL eta),
-        not NULL/ANSI-error through the ceil-div."""
-        fr = spark.createDataFrame(
-            [("z0", "pending")] * 5 + [("ok", "pending")] * 4,
-            "host string, status string",
-        )
-        budgets = spark.createDataFrame(
-            [("z0", 0), ("ok", 2)], "host string, budget long"
-        )
-        got = {r.host: r for r in frontier.drain_eta(fr, budgets).collect()}
-        assert got["z0"].rounds_to_drain is None and got["z0"].over_cap
-        assert (got["ok"].rounds_to_drain, got["ok"].over_cap) == (2, False)
 
 
 # ----------------------------------------------------------- sitemap stale

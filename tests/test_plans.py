@@ -764,21 +764,6 @@ def test_s8_sitemap_tree_iterates_files_broadcast(spark):
     assert "SortMergeJoin" not in final, final
 
 
-def test_p16_dust_mine_joins_on_hashed_signature(spark):
-    """The evidence join must be an equi-join on the 8-byte xxhash64
-    signature — never a cartesian/nested-loop pairwise walk."""
-    from news_crawler_spark.operators import dust
-
-    pages = spark.createDataFrame(
-        [("https://h.example/p%d?sid=%d" % (i % 7, i), "d%d" % (i % 7))
-         for i in range(50)],
-        "url string, digest string",
-    )
-    p = plan(dust.mine_param_rules(pages))
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    assert "xxhash64" in p
-
-
 def test_t11_refresh_allocation_has_no_global_sort_of_pages(spark):
     """The page table must never be globally sorted: the θ search is
     aggregate probes, the allocation a pure array projection; only the

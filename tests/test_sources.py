@@ -256,35 +256,3 @@ def test_refresh_allocation_never_buys_zero_gain(spark):
 def test_refresh_allocation_zero_budget(spark):
     out = _alloc(spark, {1: 3, 2: 9}, budget=0, f_max=4)
     assert out == {1: 0, 2: 0}
-
-
-# ---------------------------------------------------------------------------
-# outlinks_of
-
-
-def test_outlinks_of_matches_the_python_twin(spark):
-    from news_crawler_spark import synth
-
-    urls = [synth.clean_url(k)[2] for k in range(25)]
-    docs = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = sorted(
-        (r.url, r.source, r.published_ts)
-        for r in sources.outlinks_of(docs, universe=50).collect()
-    )
-    exp = sorted(
-        (d["url"], d["source"], d["published_ts"])
-        for u in urls
-        for d in synth.page_outlinks(u, universe=50)
-    )
-    assert got == exp and len(exp) > 0
-
-
-def test_outlinks_of_failed_pages_and_empty_input(spark):
-    from news_crawler_spark import synth
-
-    bad = [synth.clean_url(k)[2] for k in range(300) if not synth.page_ok(synth.clean_url(k)[2])][:5]
-    assert bad
-    docs = spark.createDataFrame([(u,) for u in bad], "url string")
-    assert sources.outlinks_of(docs).count() == 0
-    empty = spark.createDataFrame([], "url string")
-    assert sources.outlinks_of(empty).count() == 0
