@@ -1,22 +1,27 @@
-"""Deterministic corpus packing and mixing for training-data pipelines.
+"""Deterministic corpus sampling for training-data pipelines.
 
-A training corpus is consumed as a MIX (per-source quotas that shape
-the training set, ``temperature_mixture``) cut into fixed-size token
-bins (``pack_token_shards``). Neither depends on randomness or row
-order: a document's shard and position are a function of the document
-keys, so a re-crawl that re-ingests a document lands it in the SAME
-place, and the quotas are a function of the per-source counts.
+A 100 TB training corpus is never consumed whole: it is SPLIT
+(reproducible train/val/test holdouts that survive re-runs and corpus
+growth) and SAMPLED (per-source rates that shape the training mix —
+up-weighting curated sources, down-weighting crawl bulk). Both must be
+pure functions of a stable document key, never of randomness or row
+order: a re-crawl that re-ingests a document must land it in the SAME
+split (or leakage silently contaminates eval sets), and adding a new
+source must not reshuffle the old ones.
 
-``sample_bucket`` hashes the key with the first 64 bits of md5 under a
-caller-chosen seed tag into ``pmod(h, 10^6)`` — one JVM-side expression
-per row. md5 rather than xxhash64 so a second engine can recompute the
-assignment exactly (dedup.md5_hash64).
+Both operators here hash the key with the first 64 bits of md5 under a
+caller-chosen seed tag and compare the bucket (``pmod(h, 10^6)``) to
+rate thresholds — one JVM-side expression per row, no shuffle at all
+(a pure filter/projection: Catalyst pushes it beneath whatever comes
+next, and at scale it composes with partition pruning). md5 rather
+than xxhash64 so a second engine can recompute membership exactly
+(dedup.md5_hash64 — same rationale as the SimHash/MinHash sketches).
 
 Reference tie-in: the reference has no sampling tier (its corpus fits
 one Postgres), but its deterministic-id discipline
 (vector_db_manager.py:250 derives point ids from URLs so re-upserts
 are stable) is the same invariant these operators extend to corpus
-packing.
+membership.
 """
 
 from __future__ import annotations
@@ -38,6 +43,42 @@ def sample_bucket(key: Column, seed: str) -> Column:
     reproducible from any engine with md5."""
     h = md5_hash64(F.concat(F.lit(f"{seed}:"), key.cast("string")))
     return F.pmod(h, F.lit(BUCKETS)).cast("int")
+
+
+def hash_split(
+    df: DataFrame,
+    key_col: str,
+    splits: dict[str, float] | None = None,
+    seed: str = "split",
+) -> DataFrame:
+    """Assign every row to a named split by hash bucket — the
+    reproducible train/val/test holdout. ``splits`` maps name →
+    fraction (must sum to ≤ 1; any remainder falls into the LAST
+    split, so the default covers everything). Assignment is a pure
+    projection: membership depends only on (seed, key), so re-ingested
+    duplicates of a document always land in the same split and eval
+    contamination cannot creep in across runs.
+    """
+    if splits is None:
+        splits = {"train": 0.98, "val": 0.01, "test": 0.01}
+    if not splits:
+        raise ValueError("splits must not be empty")
+    total = sum(splits.values())
+    if total > 1.0 + 1e-9:
+        raise ValueError(f"split fractions sum to {total} > 1")
+    bucket = sample_bucket(F.col(key_col), seed)
+    names = list(splits)
+    expr = None
+    cum = 0
+    for name in names[:-1]:
+        cum += int(round(splits[name] * BUCKETS))
+        cond = bucket < F.lit(cum)
+        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
+            cond, F.lit(name)
+        )
+    last = F.lit(names[-1])
+    expr = last if expr is None else expr.otherwise(last)
+    return df.withColumn("split", expr)
 
 
 def pack_token_shards(
@@ -82,6 +123,34 @@ def pack_token_shards(
     return base.withColumn(
         "tok_start", F.sum("n_tokens").over(w) - F.col("n_tokens")
     ).withColumn("bin_id", F.floor(F.col("tok_start") / F.lit(budget)))
+
+
+def stratified_sample(
+    df: DataFrame,
+    rates: DataFrame,
+    group_col: str,
+    key_col: str,
+    seed: str = "sample",
+) -> DataFrame:
+    """Per-group deterministic sampling: keep a row iff its hash bucket
+    falls under its group's rate threshold. ``rates`` carries one row
+    per group: ``(group_col, rate double)`` — the training-mix recipe
+    (tiny, broadcast; groups absent from it are dropped, rate 1.0
+    keeps everything). Expected kept fraction per group = rate, exact
+    in distribution and REPRODUCIBLE row-for-row: re-running on a
+    grown corpus keeps every previously-kept row (membership never
+    depends on the other rows, unlike reservoir/limit sampling).
+    """
+    thresholds = rates.select(
+        F.col(group_col),
+        (F.round(F.col("rate") * BUCKETS)).cast("int").alias("__thresh"),
+    )
+    bucket = sample_bucket(F.col(key_col), seed)
+    return (
+        df.join(F.broadcast(thresholds), group_col)
+        .filter(bucket < F.col("__thresh"))
+        .drop("__thresh")
+    )
 
 
 def temperature_mixture(

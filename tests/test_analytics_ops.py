@@ -196,6 +196,7 @@ AWAITING_DELETION = {
         "pack_interleaved", "media_integrity", "image_ahash64",
         "image_neardup_pairs", "sniff_content_type", "sniff_charset",
     ),
+    "news_crawler_spark/operators/sampling.py": ("hash_split", "stratified_sample"),
     "news_crawler_spark/operators/sessions.py": ("(module)", "sessionize"),
     "news_crawler_spark/operators/sketch.py": (
         "(module)", "md5_hash60", "kmv_bottom_k", "kmv_merge", "with_kmv_estimate",

@@ -576,6 +576,69 @@ def test_winnow_fingerprint_overlap_guarantee(spark):
     assert trows[9] == [] and len(trows[10]) == 1
 
 
+# ------------------------------------------------------------- sampling (r5)
+def test_hash_split_total_disjoint_stable(spark):
+    """Every row lands in exactly one split; assignment is a pure
+    function of (seed, key) — independent of row order, partitioning,
+    and the other rows (the eval-leakage invariant)."""
+    from news_crawler_spark.operators import sampling
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = sampling.hash_split(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
+    n = docs.count()
+    assert out.count() == n                                   # total
+    assert out.select("doc_id").distinct().count() == n      # one split each
+    full = {r.doc_id: r.split for r in out.select("doc_id", "split").collect()}
+    # a 10%-subset, reshuffled, assigns identically
+    sub = docs.filter(F.col("doc_id") % 10 == 3).repartition(7)
+    sub_out = sampling.hash_split(
+        sub, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
+    )
+    for r in sub_out.select("doc_id", "split").collect():
+        assert full[r.doc_id] == r.split
+    # fractions land near their targets (md5 uniformity at n=500)
+    counts = {r.split: r.n for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()}
+    assert abs(counts["train"] / n - 0.8) < 0.06
+    assert abs(counts.get("val", 0) / n - 0.1) < 0.05
+    assert abs(counts.get("test", 0) / n - 0.1) < 0.05
+
+
+def test_stratified_sample_reproducible_under_growth(spark):
+    """Membership never depends on the other rows: sampling a GROWN
+    corpus keeps exactly the previously-kept rows plus new ones (the
+    property reservoir/limit sampling lacks), and per-group kept
+    fractions track their rates."""
+    from news_crawler_spark.operators import sampling
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    rates = docs.select("source").distinct().select(
+        "source",
+        ((F.pmod(F.substring("source", 4, 10).cast("int"), F.lit(5)) + 1) / 10.0)
+        .alias("rate"),
+    )
+    half = docs.filter(F.col("doc_id") % 2 == 0)
+    kept_half = {
+        r.doc_id
+        for r in sampling.stratified_sample(half, rates, "source", "doc_id")
+        .select("doc_id").collect()
+    }
+    kept_full = {
+        r.doc_id
+        for r in sampling.stratified_sample(docs, rates, "source", "doc_id")
+        .select("doc_id").collect()
+    }
+    assert kept_half == {d for d in kept_full if d % 2 == 0}
+    # rate accuracy per group, loose bound at ~25 rows/group
+    got = (
+        sampling.stratified_sample(docs, rates, "source", "doc_id")
+        .groupBy("source").agg(F.count("*").alias("k"))
+    )
+    tot = docs.groupBy("source").agg(F.count("*").alias("n"))
+    joined = got.join(tot, "source").join(rates, "source").collect()
+    for r in joined:
+        assert abs(r.k / r.n - r.rate) < 0.25, (r.source, r.k, r.n, r.rate)
+
+
 def test_pack_token_shards_offsets_exact(spark):
     """Packing invariants, recomputed in python from the output: within
     every shard (key-ordered) tok_start is the exact running token sum,
