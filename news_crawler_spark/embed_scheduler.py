@@ -38,7 +38,6 @@ from .catalog import SnapshotCatalog
 from .operators.embed import DEFAULT_DIM, embed_documents, embed_text_col
 
 STATUS_PENDING = "pending"
-STATUS_COMPLETED = "completed"
 
 
 def claim_batch(pending: DataFrame, k: int, salts: int | None = None) -> DataFrame:
@@ -203,15 +202,3 @@ class EmbedScheduler:
     def vectors(self) -> DataFrame:
         """All vectors embedded so far (append-only union)."""
         return self.catalog.read_all("vectors")
-
-    def status(self) -> DataFrame:
-        """The document embed-status view: completed = has a vector,
-        pending = still in the latest pending slice."""
-        last = self.catalog.latest_round()
-        done = self.vectors().select(
-            "doc_id", F.lit(STATUS_COMPLETED).alias("status")
-        )
-        pend = self.catalog.read("embed_pending", last).select(
-            "doc_id", F.lit(STATUS_PENDING).alias("status")
-        )
-        return done.unionByName(pend)

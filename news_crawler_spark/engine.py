@@ -151,12 +151,23 @@ class CrawlEngine:
                 )
         return df
 
+    def _write_seen_base(self, round_no: int, keys: DataFrame) -> None:
+        """A fresh ``seen_keys`` base, range-partitioned and sorted on
+        url_hash. No predicate reaches a scan of it: each poll's
+        anti-join (``seen_set.unseen_only``) reads every key of the base
+        and its deltas, so the sort lets no row group be skipped."""
+        parts = max(4, self.spark.sparkContext.defaultParallelism)
+        self.catalog.write(
+            "seen_keys",
+            round_no,
+            keys.repartitionByRange(parts, "url_hash").sortWithinPartitions("url_hash"),
+        )
+
     def _write_seen_keys(
         self, round_no: int, new_keys: DataFrame, seen_prev: DataFrame
     ) -> None:
         """Delta write; every ``compact_every``-th ingest folds base+deltas
-        into a fresh base, range-sorted on url_hash so parquet min/max
-        stats prune the confirm-scan's row groups."""
+        into a fresh base, which bounds the snapshots a poll reads."""
         base_r = self.catalog.latest_existing("seen_keys", round_no - 1)
         n_deltas = sum(
             1
@@ -164,14 +175,7 @@ class CrawlEngine:
             if self.catalog.exists("seen_keys_delta", r)
         )
         if n_deltas + 1 >= self.compact_every:
-            parts = max(4, self.spark.sparkContext.defaultParallelism)
-            self.catalog.write(
-                "seen_keys",
-                round_no,
-                seen_prev.unionByName(new_keys)
-                .repartitionByRange(parts, "url_hash")
-                .sortWithinPartitions("url_hash"),
-            )
+            self._write_seen_base(round_no, seen_prev.unionByName(new_keys))
         else:
             self.catalog.write("seen_keys_delta", round_no, new_keys.coalesce(4))
 
@@ -237,14 +241,13 @@ class CrawlEngine:
         ]
 
     # ------------------------------------------------------------------ ingest
-    def ingest(self, seed: DataFrame) -> None:
-        """Seed list → frontier round 0: canonicalize, hash, first-wins
-        dedup (the URL-seen set), initial pending state, seen-keys base,
-        per-source cursors.
-        """
-        cand = with_url_columns(seed, "url")
-        fresh = seen_set.ingest_batch(cand, seen=None)
-        frontier = fresh.select(
+    @staticmethod
+    def _admit(seed: DataFrame, seen: DataFrame | None) -> DataFrame:
+        """Seed links → the pending rows they admit: canonicalized,
+        hashed, first-wins deduplicated and, when ``seen`` is given, not
+        already seen; each row pending, untried, with its priority."""
+        fresh = seen_set.ingest_batch(with_url_columns(seed, "url"), seen)
+        return fresh.select(
             "url",
             "canonical_url",
             "url_hash",
@@ -257,20 +260,18 @@ class CrawlEngine:
             F.lit(0).alias("tried_count"),
             F.lit(None).cast("int").alias("last_tried_round"),
         )
-        self.catalog.write("pending", 0, frontier)
+
+    def ingest(self, seed: DataFrame) -> None:
+        """Seed list → frontier round 0: canonicalize, hash, first-wins
+        dedup (the URL-seen set), initial pending state, seen-keys base,
+        per-source cursors.
+        """
+        self.catalog.write("pending", 0, self._admit(seed, seen=None))
         self.catalog.write_rows("done", 0, [], schemas.FRONTIER)
         # derive downstream state from the WRITTEN snapshot — recomputing
-        # from `frontier` would re-run seed→canonicalize→dedup each time
+        # from the admitted rows would re-run seed→canonicalize→dedup
         admitted = self._read_pending(0)
-        keys0 = admitted.select("url_hash", "canonical_url")
-        parts = max(4, self.spark.sparkContext.defaultParallelism)
-        self.catalog.write(
-            "seen_keys",
-            0,
-            keys0.repartitionByRange(parts, "url_hash").sortWithinPartitions(
-                "url_hash"
-            ),
-        )
+        self._write_seen_base(0, admitted.select("url_hash", "canonical_url"))
         cursors = self._fold_cursors([], self._newest_per_source(admitted), 0)
         self.catalog.write_rows("cursors", 0, cursors, schemas.CURSORS)
         self.catalog.write_rows("tokens", 0, [], schemas.TOKENS)
@@ -303,16 +304,7 @@ class CrawlEngine:
         round_no = prev + 1
         prev_pending = self._read_pending(prev)
         seen = self._read_seen_keys(prev)
-        cand = with_url_columns(seed, "url")
-        fresh = seen_set.ingest_batch(cand, seen)
-        new_rows = fresh.select(
-            "url", "canonical_url", "url_hash", "host", "source",
-            F.pmod(F.col("url_hash"), F.lit(3)).cast("int").alias("priority"),
-            "published_ts", "discovery_time",
-            F.lit(schemas.STATUS_PENDING).alias("status"),
-            F.lit(0).alias("tried_count"),
-            F.lit(None).cast("int").alias("last_tried_round"),
-        ).cache()
+        new_rows = self._admit(seed, seen).cache()
         # one aggregate: the admitted count and the batch's cursor rows
         # (it also materializes the cache the writes below read)
         batch = self._newest_per_source(new_rows)

@@ -5,9 +5,6 @@ The reference dedups only URLs (unique link index, db_models.py:40); a
 Spark-first:
 
 - exact:       md5-groupBy (one shuffle on a 16-byte key)
-- n-gram Jaccard: exact pairwise similarity via a HASHED-shingle
-                 inverted-index self-join (the correctness oracle;
-                 O(pairs-sharing-a-shingle), not O(n²))
 - MinHash+LSH: ONE signature path, on the JVM: ``with_minhash`` =
                ``with_hashed_shingles`` + ``minhash_signature``, xxhash64
                over hashed shingles inside higher-order array functions
@@ -18,6 +15,8 @@ Spark-first:
                min-label propagation, one aggregate per round, its
                convergence count observed on the round's own job) — the
                pipeline's final output
+- contamination: corpus documents sharing an n-gram with an eval set
+               (``cross_contamination``, the x14 decontamination pass)
 
 Hash provenance: shingle/MinHash hashes are Spark's builtin ``xxhash64``
 (seed 42), bit-identical to the pure-Python twin in functions/xxh64.py;
@@ -26,11 +25,9 @@ recompute exactly. Nothing depends on partitioning.
 
 Scale notes: shingles travel as 8-byte hashes everywhere (3-5× smaller
 shuffles than strings; Jaccard identical up to 64-bit collisions, which
-the string-side sf0.01 oracle would catch). The inverted index still
-explodes ~|doc|·|shingles| rows — at 100 TB use ``minhash_lsh_pairs``
-(bounded signature width) and reserve ``ngram_jaccard_pairs`` for
-verify-stage candidates. Stop-shingle skew (one shingle shared by k docs
-= k²/2 join rows) is capped by ``df_cap`` (on by default).
+the string-side sf0.01 oracle would catch). The correctness oracle of
+``minhash_lsh_pairs`` is the pure-Python all-pairs Jaccard of
+tests/test_pipeline_ops.py.
 """
 
 from __future__ import annotations
@@ -45,8 +42,8 @@ from .text import tokens_col
 def spread_for_cpu(df: DataFrame) -> DataFrame:
     """Guard for expression-bound stages over small inputs: a tiny
     parquet table scans as ONE partition (file-size-based splitting), so
-    a per-row-heavy stage (SimHash bit votes, winnowing, span
-    extraction) serializes on one core. Repartition up to the cluster
+    a per-row-heavy stage (the span extraction of analytics.m1)
+    serializes on one core. Repartition up to the cluster
     parallelism ONLY when the input has fewer partitions than cores; at
     real scale (inputs already ≥ cores partitions) this is a no-op, so
     no extra shuffle is introduced where it would hurt.
@@ -228,58 +225,6 @@ def cross_contamination(grams: DataFrame, eval_col: str = "is_eval") -> DataFram
 
 
 # --------------------------------------------------------------------------
-# exact n-gram Jaccard (inverted-index self-join)
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.6,
-    df_cap: int | None = 100_000,
-) -> DataFrame:
-    """All pairs (a<b) with Jaccard(shingle sets) >= threshold.
-
-    Inverted index over HASHED shingles (longs, not strings): explode,
-    self-join on the hash, count common per pair, then jaccard =
-    common / (|A|+|B|-common).
-
-    ``df_cap`` drops shingles whose document frequency exceeds the cap —
-    the stop-shingle skew guard: ONE shingle shared by k docs creates
-    k²/2 join rows, so a boilerplate phrase in 10⁶ docs is 5·10¹¹ rows
-    from a single hot key. Default 100k: a no-op below 100k docs (any
-    corpus this oracle tier should see) and a hard ceiling above. Pass
-    None only when provably exact output on a skewless corpus matters
-    more than not melting the shuffle.
-    """
-    # materialize the shingle sets ONCE: the plan reads them from five
-    # branches (sizes twice, the self-join twice, the df guard), and
-    # without the cut each branch re-tokenizes and re-hashes the corpus
-    # (52 copies of the hash expression in the optimized plan, d2 the
-    # slowest non-iterative gate query before this)
-    sh = with_hashed_shingles(docs, text_col, id_col, n).localCheckpoint(eager=True)
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
-    if df_cap is not None:
-        freq = inv.groupBy("shingle").agg(F.count("*").alias("df"))
-        inv = inv.join(freq.filter(F.col("df") <= df_cap), "shingle", "left_semi")
-    pairs = (
-        inv.alias("x")
-        .join(inv.alias("y"), "shingle")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a_id"), F.col("y.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("common"))
-    )
-    return (
-        pairs.join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n_sh", "n_a"), "a_id")
-        .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n_sh", "n_b"), "b_id")
-        .withColumn("jaccard", F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 4))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("a_id", "b_id", "jaccard")
-    )
-
-
-# --------------------------------------------------------------------------
 # MinHash + LSH
 
 def _hash_with_index(value: Column, i: Column) -> Column:
@@ -336,8 +281,9 @@ def minhash_lsh_pairs(
 
     bands b=num_hashes/rows_per_band, rows r=rows_per_band: candidate
     recall for a pair at jaccard j is 1-(1-j^r)^b — at r=2,b=64 a 0.6-pair
-    is missed with p≈4e-13, so the verified output matches the exact
-    ``ngram_jaccard_pairs`` oracle. The candidate join shuffles
+    is missed with p≈4e-13, so the verified output matches exact
+    all-pairs Jaccard (the Python twin in tests/test_pipeline_ops.py).
+    The candidate join shuffles
     O(n·bands) band-bucket rows, never O(n²); the verify join ships
     hashed shingle arrays (8 B/shingle), not the strings.
 
@@ -592,421 +538,4 @@ def _banded64(sh: DataFrame, n_bands: int) -> DataFrame:
         "simhash",
         F.col("bb.band").alias("band"),
         F.col("bb.chunk").alias("chunk"),
-    )
-
-
-# --------------------------------------------------------------------------
-# exact duplicate-substring spans (ExactSubstr-style, position level)
-
-def window_hash_stream(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-) -> DataFrame:
-    """``(doc_id, pos, wh)`` — one row per ``window``-token sliding
-    window, ``wh`` the chained ``xxhash64``-over-token-hashes window
-    hash (8 B/window, NO window strings materialized — a 50-token window
-    string would be ~300 B; same arithmetic-only form and rationale as
-    ``with_hashed_shingles``). Lazy; ``duplicate_spans`` is the consumer
-    that decides where to cut it."""
-    toked = (
-        spread_for_cpu(docs)
-        .select(F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__toks"))
-        .filter(F.size("__toks") >= window)
-    )
-    th = toked.select(
-        "doc_id", F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th")
-    )
-    idx = F.sequence(F.lit(0), F.size(F.col("__th")) - window)
-    # __th is a projected column — the transform lambda captures a cheap
-    # column reference, not a re-evaluated expression (shingles_from_tokens
-    # note); same chained multi-arg xxhash64 as the shingle tiers
-    whs = F.transform(
-        idx,
-        lambda i: F.xxhash64(
-            *[
-                F.element_at(F.col("__th"), (i + j + 1).cast("int"))
-                for j in range(window)
-            ]
-        ),
-    )
-    return th.select("doc_id", F.posexplode(whs).alias("pos", "wh"))
-
-
-def duplicate_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """Maximal duplicated token spans — ``(doc_id, tok_start, tok_end,
-    n_windows)`` — the position-level complement to the document-level
-    dedup tiers above (the "exact substring" dedup of Lee et al. 2021,
-    which removes repeated PASSAGES a document-level near-dup pass
-    keeps: licence blocks, syndicated paragraphs, quoted boilerplate).
-
-    Semantics: every ``window``-token sliding window whose token
-    sequence occurs ≥ ``min_count`` times corpus-wide (across docs OR
-    repeated inside one doc) marks its token range ``[pos, pos+window)``
-    duplicated; per document, overlapping or back-to-back duplicated
-    windows merge into maximal spans (gaps-and-islands over positions:
-    a new span starts when ``pos > prev_pos + window``). ``tok_end`` is
-    exclusive; a downstream strip keeps ``tokens[:tok_start] +
-    tokens[tok_end:]`` per span.
-
-    Shape, and why it scales: the window stream (see
-    ``window_hash_stream``) is materialized ONCE with an eager
-    localCheckpoint before its two consumers — lazily, the frequency agg
-    and the position join would each re-run the scan + tokenize +
-    chained-hash explode (plan-verified: two ``Scan parquet`` subtrees),
-    and the materialized bytes (~16 B/window on executor-local disk) are
-    the same order the frequency shuffle pays anyway (the
-    ``cross_contamination`` cut). The frequency pass is a groupBy on the
-    8-byte hash, so map-side partial aggregation collapses hot windows
-    (a boilerplate window repeated 10⁶× arrives at the reducer as
-    ~|partitions| partial counts, not 10⁶ rows — the skew case a
-    count-over-window formulation would serialize on). Rejoining the
-    ≥min_count hash set back to the positions stream is one shuffle
-    join keyed on the hash (AQE broadcasts it when the dup set is
-    small); the island merge shuffles only the surviving duplicated
-    positions on doc_id. Total: one explode, two key shuffles, no
-    all-pairs anywhere. 64-bit window-hash collisions (p ≈ m²/2⁶⁴)
-    would conflate two distinct windows; the sf0.01 string-side DuckDB
-    oracle would catch any (same argument as the Jaccard tier)."""
-    from pyspark.sql import Window as W
-
-    wins = window_hash_stream(
-        docs, text_col=text_col, id_col=id_col, window=window
-    ).localCheckpoint(eager=True)
-    dup_hashes = (
-        wins.groupBy("wh")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
-        .select("wh")
-    )
-    dup_pos = wins.join(dup_hashes, "wh").select("doc_id", "pos")
-    by_pos = W.partitionBy("doc_id").orderBy("pos")
-    brk = F.when(
-        F.lag("pos").over(by_pos).isNull()
-        | (F.col("pos") > F.lag("pos").over(by_pos) + window),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    islands = dup_pos.withColumn("__brk", brk).withColumn(
-        "__island",
-        F.sum("__brk").over(by_pos.rowsBetween(W.unboundedPreceding, 0)),
-    )
-    return islands.groupBy("doc_id", "__island").agg(
-        F.min("pos").alias("tok_start"),
-        (F.max("pos") + window).alias("tok_end"),
-        F.count(F.lit(1)).alias("n_windows"),
-    ).select("doc_id", "tok_start", "tok_end", "n_windows")
-
-
-def strip_duplicate_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """Apply :func:`duplicate_spans` — ``(doc_id, n_tokens, n_dup_tokens,
-    text_clean)`` with every duplicated span removed and the document
-    rebuilt in token order (the aggressive ExactSubstr variant: ALL
-    occurrences go; keeping a canonical copy is a policy layered on the
-    same spans).
-
-    Shape: the span set is per-doc TINY (a handful of intervals), so it
-    collapses to one ``collect_list(struct(start, end))`` row per doc —
-    bounded by construction, never by luck: spans are maximal and
-    disjoint with length ≥ window+? (each covers ≥ window tokens), so a
-    doc with T tokens carries at most T/window interval structs. The
-    rebuild joins that spans frame back to the documents ONCE (AQE
-    broadcasts the spans side when small) and filters tokens with a
-    pure higher-order ``filter(..., (tok, i) -> NOT exists(spans, s ->
-    s.start <= i < s.end))`` — no token explode, no per-token shuffle,
-    whole-stage codegen throughout the rebuild."""
-    spans = duplicate_spans(
-        docs, text_col=text_col, id_col=id_col, window=window, min_count=min_count
-    )
-    by_doc = spans.groupBy("doc_id").agg(
-        F.collect_list(F.struct("tok_start", "tok_end")).alias("__spans")
-    )
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("__toks")
-    )
-    joined = base.join(by_doc, "doc_id", "left").withColumn(
-        "__spans", F.coalesce(F.col("__spans"), F.array())
-    )
-    in_span = lambda i: F.exists(
-        F.col("__spans"),
-        lambda s: (s["tok_start"] <= i) & (i < s["tok_end"]),
-    )
-    kept = F.filter(F.col("__toks"), lambda t, i: ~in_span(i))
-    # project the O(tokens·spans) filter ONCE; two consumers reference
-    # the projected column (CollapseProject's cost heuristic keeps a
-    # non-cheap multi-referenced alias in its own Project — unlike
-    # PushDownPredicates, see with_hashed_shingles)
-    return joined.select(
-        "doc_id", F.size("__toks").cast("long").alias("n_tokens"), kept.alias("__kept")
-    ).select(
-        "doc_id",
-        "n_tokens",
-        (F.col("n_tokens") - F.size("__kept")).cast("long").alias("n_dup_tokens"),
-        F.array_join("__kept", " ").alias("text_clean"),
-    )
-
-
-def cluster_representatives(
-    clusters: DataFrame,
-    docs: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Dup clusters → the keep/drop decision: one row per cluster with
-    the representative document (most whitespace tokens, ties to the
-    smallest id — "keep the longest copy", the CCNet/RefinedWeb
-    survivor rule), the member count, and ``dup_tokens`` — the tokens
-    the drop decision removes from the corpus (the dedup savings line
-    every corpus report quotes).
-
-    The selection is a single ``max_by`` aggregate over the composite
-    order key ``n_tokens * 2^32 - doc_id`` (strictly monotone in
-    (n_tokens asc, doc_id desc), unique because ids are) — map-side
-    partial aggregation, one shuffle on cluster_id, no window sort."""
-    from .text import token_count
-
-    toks = docs.select(
-        F.col(key_col).alias("doc_id"),
-        token_count(text_col).cast("long").alias("n_tokens"),
-    )
-    j = clusters.join(toks, "doc_id")
-    ordk = F.col("n_tokens") * F.lit(4294967296) - F.col("doc_id")
-    return j.groupBy("cluster_id").agg(
-        F.max_by(F.col("doc_id"), ordk).alias("rep_doc_id"),
-        F.count("*").cast("long").alias("n_members"),
-        (F.sum("n_tokens") - F.max("n_tokens")).cast("long").alias("dup_tokens"),
-    )
-
-
-def mirror_hosts(
-    pages: DataFrame,
-    min_shared: int = 2,
-    ratio_num: int = 8,
-    ratio_den: int = 10,
-    df_cap: int = 1000,
-) -> DataFrame:
-    """Mirror-site detection over ``(host, content_key)`` pages: host
-    pairs whose content sets overlap heavily are mirrors (CDN clones,
-    scraper re-posts, www/no-www splits the canonicalizer can't see) —
-    the crawl should collapse their politeness budgets and frontier
-    priority onto one of them instead of fetching everything twice.
-
-    Returns one row per co-occurring host pair (host_a < host_b):
-    ``shared`` distinct content keys, each side's distinct content size
-    ``n_a``/``n_b``, and ``is_mirror`` — shared ≥ min_shared AND
-    ratio_den·shared ≥ ratio_num·min(n_a, n_b), the containment ratio
-    in EXACT integers (no float ever materializes, the d2/x23
-    determinism contract).
-
-    Scale shape: the pair generation is a self-join on content_key —
-    the same inverted-index discipline as the shingle tiers, so
-    ``df_cap`` first drops keys hosted in more than df_cap places
-    (site-chrome boilerplate shared by thousands of hosts would
-    otherwise contribute k²/2 join rows each; a content key on k ≤
-    df_cap hosts contributes at most df_cap·|keys| pairs). Host sizes
-    are counted AFTER the cap so the ratio is consistent with the
-    pair counts. One shuffle for the distinct, one for the join, one
-    partial-agg groupBy on the pair; the size join broadcasts (one row
-    per HOST). Never all-pairs over hosts, nothing driver-side."""
-    p = pages.select("host", "content_key").distinct()
-    if df_cap is not None:
-        freq = p.groupBy("content_key").agg(F.count(F.lit(1)).alias("__hf"))
-        p = p.join(
-            freq.filter(F.col("__hf") <= df_cap), "content_key", "left_semi"
-        )
-    sizes = p.groupBy("host").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    a = p.select(F.col("host").alias("host_a"), "content_key")
-    b = p.select(F.col("host").alias("host_b"), "content_key")
-    pairs = (
-        a.join(b, "content_key")
-        .where(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-        .where(F.col("shared") >= min_shared)
-    )
-    na = F.broadcast(sizes.select(F.col("host").alias("host_a"), F.col("n").alias("n_a")))
-    nb = F.broadcast(sizes.select(F.col("host").alias("host_b"), F.col("n").alias("n_b")))
-    return (
-        pairs.join(na, "host_a")
-        .join(nb, "host_b")
-        .select(
-            "host_a",
-            "host_b",
-            "shared",
-            "n_a",
-            "n_b",
-            (
-                F.lit(ratio_den) * F.col("shared")
-                >= F.lit(ratio_num) * F.least("n_a", "n_b")
-            ).alias("is_mirror"),
-        )
-    )
-
-
-def cdc_chunks(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 4,
-    divisor: int = 16,
-) -> DataFrame:
-    """Content-defined chunking (the rsync/LBFS/FastCDC family): split
-    each document into variable-size chunks whose boundaries depend only
-    on LOCAL content — a rolling window's hash hitting ``0 mod
-    divisor`` — so an insertion early in a document shifts every chunk
-    of a fixed-size grid but leaves all content-defined chunks after
-    the edit point IDENTICAL. That shift-resistance is what makes
-    chunk-level dedup work on re-crawled pages (same article, one new
-    paragraph): the storage layer keeps one copy of every unchanged
-    chunk. Fixed-grid token windows (``duplicate_spans``) find repeated
-    passages; CDC finds the storage-dedup partition of the corpus.
-
-    Semantics: tokens are whitespace-split; a chunk boundary falls
-    after 1-based token position ``i`` (``window ≤ i ≤ n-1``) iff the
-    48-bit md5 of the ``window``-token string ending at ``i`` is
-    ``0 mod divisor``; the document end is always a boundary. Expected
-    chunk length ≈ ``divisor`` tokens. Production CDC adds min/max
-    chunk-length clamps (FastCDC §3.2) — a sequential suppression rule
-    deliberately omitted here to keep the boundary decision stateless
-    per position (each token's boundary bit is independently
-    computable, which is what lets both engines in the correctness
-    gate agree position-by-position).
-
-    Output: one row per chunk occurrence — ``(doc_id, chunk_idx,
-    chunk_text, n_tokens)``, ``chunk_idx`` 0-based in document order.
-
-    Scale shape: boundary detection, chunk slicing, and reassembly are
-    ALL per-row higher-order expressions (tokens bound once via the
-    let-binding pattern — the captured-expression trap documented on
-    ``text.let_bound`` would otherwise re-split the text at every
-    lambda use) — zero shuffle in this function; the md5-per-position
-    cost is O(n·window) like winnowing. Downstream dedup groups by
-    ``md5(chunk_text)`` — one map-side-combined shuffle of 16-byte
-    keys, the same bill as every other dedup tier here."""
-    # vectorized batch kernel (guide §4.2, applied to the boundary
-    # scan): one md5 per window position in hashlib instead of the
-    # interpreted per-position filter/slice/join HOF chain.
-    # Bit-identical semantics: boundary after 1-based position i
-    # (window ≤ i ≤ n−1) iff the first 12 md5 hex chars of the window
-    # string ending at i are 0 mod divisor; doc end always a boundary;
-    # NULL text yields no rows (the expression form's
-    # posexplode-over-NULL behavior).
-    import hashlib
-
-    import pandas as pd
-
-    def kernel(batches):
-        for pdf in batches:
-            out_id, out_idx, out_text, out_n = [], [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf[text_col]):
-                if txt is None:
-                    continue
-                t = txt.split(" ")
-                n = len(t)
-                bounds = []
-                for i in range(window, n):
-                    h = hashlib.md5(
-                        " ".join(t[i - window : i]).encode("utf-8")
-                    ).hexdigest()[:12]
-                    if int(h, 16) % divisor == 0:
-                        bounds.append(i)
-                bounds.append(n)
-                start = 0
-                for idx, e in enumerate(bounds):
-                    out_id.append(did)
-                    out_idx.append(idx)
-                    out_text.append(" ".join(t[start:e]))
-                    out_n.append(e - start)
-                    start = e
-            if out_id:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": out_id,
-                        "chunk_idx": out_idx,
-                        "chunk_text": out_text,
-                        "n_tokens": out_n,
-                    }
-                )
-
-    id_type = docs.select(F.col(id_col)).schema.fields[0].dataType.simpleString()
-    return (
-        spread_for_cpu(docs)
-        .select(F.col(id_col).alias("doc_id"), F.col(text_col))
-        .mapInPandas(
-            kernel,
-            f"doc_id {id_type}, chunk_idx int, chunk_text string, n_tokens int",
-        )
-    )
-
-
-def containment_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold_pct: int = 80,
-    df_cap: int | None = 100_000,
-) -> DataFrame:
-    """All pairs (a<b) where one document's shingle set is ≥
-    ``threshold_pct``% CONTAINED in the other's — the asymmetric
-    complement to ``ngram_jaccard_pairs``: Jaccard punishes size
-    mismatch (a 50-token quote inside a 5000-token article scores
-    ~0.01), so syndicated-inclusion / quoted-boilerplate / expanded-
-    rewrite relations are invisible to it. Broder's containment
-    ``C(A,B) = |S(A)∩S(B)| / |S(A)|`` is the standard fix; the pair
-    qualifies when ``max(C(A,B), C(B,A)) = common/min(|A|,|B|)``
-    crosses the threshold — evaluated as INTEGER cross-multiplication
-    (``100·common ≥ pct·min``), so no float decides membership.
-
-    Output: ``(a_id, b_id, common, n_a, n_b, c_ab, c_ba)`` with the
-    directional scores rounded to 4dp for reporting (membership never
-    reads them).
-
-    Same inverted-index shape and stop-shingle ``df_cap`` guard as the
-    Jaccard tier (one shingle in k docs is k²/2 join rows — the cap is
-    the skew ceiling); shingle sets materialize once, the self-join is
-    on 8-byte hashes, and the per-pair count partial-aggregates."""
-    sh = with_hashed_shingles(docs, text_col, id_col, n).localCheckpoint(eager=True)
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
-    if df_cap is not None:
-        freq = inv.groupBy("shingle").agg(F.count("*").alias("df"))
-        inv = inv.join(freq.filter(F.col("df") <= df_cap), "shingle", "left_semi")
-    pairs = (
-        inv.alias("x")
-        .join(inv.alias("y"), "shingle")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a_id"), F.col("y.doc_id").alias("b_id"))
-        .agg(F.count("*").cast("long").alias("common"))
-    )
-    na = sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n_sh", "n_a")
-    nb = sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n_sh", "n_b")
-    return (
-        pairs.join(na, "a_id")
-        .join(nb, "b_id")
-        .filter(
-            F.lit(100) * F.col("common")
-            >= F.lit(threshold_pct) * F.least("n_a", "n_b")
-        )
-        .select(
-            "a_id",
-            "b_id",
-            "common",
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.round(F.col("common") / F.col("n_a"), 4).alias("c_ab"),
-            F.round(F.col("common") / F.col("n_b"), 4).alias("c_ba"),
-        )
     )

@@ -163,14 +163,15 @@ def temperature_mixture(
     sampling rule (sample groups ∝ n^T, T<1 upweights small
     sources/languages; the mT5/XLM-R recipe) as exact integers: per-group
     weights w_g = round(n_g^T · 10⁶) quantized to BIGINT (sqrt for the
-    canonical T=0.5 — correctly-rounded IEEE in every engine; the DSIR
-    micro-unit argument), then a Hamilton apportionment of ``total``
+    canonical T=0.5 — correctly-rounded IEEE, so every engine quantizes
+    the same value), then a Hamilton apportionment of ``total``
     across groups (``frontier.apportion_budget``), so Σ quotas == total
     exactly and a SQL twin replays weight quantization AND the
     largest-remainder assignment. Only T=0.5 is engine-portable
     bit-for-bit (general pow is not correctly rounded); other
-    temperatures carry the same ulp-at-the-round-boundary caveat as ln
-    in ``text.dsir_select``.
+    temperatures carry an ulp-at-the-round-boundary caveat: like ln, pow
+    may differ in its last ulp between engines, and a weight that lands
+    on a rounding boundary can then quantize differently.
 
     Returns ``(source, n_docs, quota)``. Scale: one count aggregate
     (O(groups) rows) + the apportionment's two 1-row aggregates.

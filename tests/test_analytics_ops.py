@@ -180,11 +180,7 @@ AWAITING_DELETION = {
         "(module)", "suffix_rules_df", "registered_domain_map", "with_registered_domain",
     ),
     "news_crawler_spark/functions/urls.py": ("surt_key_col", "url_template_col"),
-    "news_crawler_spark/operators/dedup.py": (
-        "shingles_from_tokens", "exact_duplicates", "ngram_jaccard_pairs", "window_hash_stream",
-        "duplicate_spans", "strip_duplicate_spans", "cluster_representatives",
-        "mirror_hosts", "cdc_chunks", "containment_pairs",
-    ),
+    "news_crawler_spark/operators/dedup.py": ("shingles_from_tokens", "exact_duplicates"),
     "news_crawler_spark/operators/frontier.py": (
         "TRAP_SESSION_PARAMS", "url_trap_flags", "robots_sitemaps", "rendezvous_assign",
         "trap_templates", "allowed_by_robots_wildcards",
@@ -203,14 +199,6 @@ AWAITING_DELETION = {
         "countmin_table", "countmin_merge", "countmin_estimate",
         "qsketch_bottom_k", "qsketch_merge", "qsketch_quantiles",
         "hll_registers", "hll_merge", "hll_estimate",
-    ),
-    "news_crawler_spark/operators/text.py": (
-        "bpe_ish_token_count", "stopword_ratio", "predict_lang",
-        "distinct_token_ratio", "mean_token_len", "dup_ngram_fraction",
-        "fingerprint", "winnow_fingerprints", "with_text_features",
-        "dsir_select", "unigram_entropy", "bigram_logprob",
-        "bpe_init_segmentation", "bpe_adjacent_pairs", "bpe_train", "ccnet_split",
-        "BPE_TOKEN_RE", "DSIR_BUCKETS", "DSIR_LOG_SCALE",
     ),
     "news_crawler_spark/sources.py": (
         "sitemap_staleness", "sitemap_tree", "refresh_allocation",

@@ -26,11 +26,13 @@ def test_drain_batches_per_source(spark, docs, tmp_path):
     # 90 docs / 3 sources / batch 10 → 3 full rounds of 30
     assert [s.embedded for s in stats] == [30, 30, 30]
     assert stats[-1].pending_left == 0
+    # drained: the latest pending slice is empty, and every doc with
+    # embed text has exactly one vector (dempty has none)
+    last = sched.catalog.latest_round()
+    assert sched.catalog.read("embed_pending", last).count() == 0
     vecs = sched.vectors()
-    assert vecs.count() == 90                          # dempty excluded
-    assert vecs.select("doc_id").distinct().count() == 90
-    st = {r.status for r in sched.status().collect()}
-    assert st == {"completed"}
+    ids = [r.doc_id for r in vecs.select("doc_id").collect()]
+    assert sorted(ids) == sorted(r.doc_id for r in docs.collect() if r.doc_id != "dempty")
     # every vector has the declared dim and a source tag
     bad = vecs.filter(
         (F.size("vector") != F.col("dim")) | F.col("source").isNull()

@@ -1,6 +1,6 @@
-"""Training-data-pipeline operators: dedup (exact / Jaccard / MinHash),
-similarity search, text features, multimodal plumbing — Spark
-vs independent pure-Python oracles on the sf0.001 testdata tables."""
+"""Training-data-pipeline operators: dedup (exact / MinHash), similarity
+search, multimodal plumbing, sampling — Spark vs independent pure-Python
+oracles on the sf0.001 testdata tables."""
 
 import struct
 
@@ -9,12 +9,7 @@ from pyspark.sql import functions as F
 
 from news_crawler_spark import sources
 from news_crawler_spark.functions.xxh64 import xxh64
-from news_crawler_spark.operators import (
-    dedup,
-    multimodal,
-    similarity,
-    text,
-)
+from news_crawler_spark.operators import dedup, multimodal, similarity
 
 SF = "/root/testdata/sf0.001"
 
@@ -137,17 +132,11 @@ def test_minhash_signature_matches_python_twin(spark, docs, doc_rows):
 
 
 def test_lsh_equals_exact_jaccard(spark, docs, doc_rows):
-    want = py_jaccard_pairs(doc_rows, 0.6)
-    exact = {
-        (r.a_id, r.b_id)
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.6).collect()
-    }
     lsh = {
         (r.a_id, r.b_id)
         for r in dedup.minhash_lsh_pairs(docs, threshold=0.6).collect()
     }
-    assert exact == want
-    assert lsh == want
+    assert lsh == py_jaccard_pairs(doc_rows, 0.6)
 
 
 def _jobs_of(spark, action):
@@ -207,30 +196,6 @@ def test_topk_cosine_matches_numpy(spark):
     want = sorted(scores.items(), key=lambda kv: (-round(kv[1], 4), kv[0]))[:10]
     got = [(r.vec_id, r.score) for r in similarity.topk_cosine(emb, 7, k=10).collect()]
     assert [(v, round(s, 4)) for v, s in want] == got
-
-
-# -- text -------------------------------------------------------------------
-
-def test_text_features(spark):
-    df = spark.createDataFrame(
-        [(1, "the cat sat on the mat", "en", "s", 22)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    r = text.with_text_features(df).collect()[0]
-    assert r.n_tokens == 6
-    assert r.n_bpe_tokens == 6
-    assert r.stop_ratio == round(3 / 6, 6)  # the, on, the
-    assert r.pred_lang == "en"
-    assert 0.0 <= r.quality <= 1.0
-    assert len(r.fp) == 32
-
-
-def test_fingerprint_normalizes_whitespace(spark):
-    df = spark.createDataFrame(
-        [(1, "A  b\tc"), (2, "a b c")], "doc_id long, text string"
-    )
-    fps = [r.fp for r in df.select(text.fingerprint("text").alias("fp")).collect()]
-    assert fps[0] == fps[1]
 
 
 # -- multimodal -------------------------------------------------------------
@@ -545,37 +510,6 @@ def test_duplicate_clusters_warns_when_unconverged(spark):
     assert set(got.values()) == {0}
 
 
-def test_winnow_fingerprint_overlap_guarantee(spark):
-    """Winnowing guarantee: documents sharing a run of >= n+window-1 (=6)
-    tokens share at least one fingerprint; disjoint-vocabulary documents
-    share none. Fingerprints are deterministic across runs."""
-    shared = "alpha beta gamma delta epsilon zeta"        # 6-token run
-    df = spark.createDataFrame(
-        [
-            (1, f"one two {shared} three four"),
-            (2, f"five six seven {shared} eight"),
-            (3, "red green blue cyan magenta yellow black white"),
-        ],
-        "doc_id long, text string",
-    )
-    out = df.select(
-        "doc_id", text.winnow_fingerprints("text", n=3, window=4).alias("fps")
-    ).collect()
-    fps = {r.doc_id: set(r.fps) for r in out}
-    assert fps[1] & fps[2]                 # shared run ⇒ shared fingerprint
-    assert not (fps[1] & fps[3])           # disjoint vocab ⇒ none
-    assert not (fps[2] & fps[3])
-    again = {r.doc_id: set(r.fps) for r in df.select(
-        "doc_id", text.winnow_fingerprints("text", n=3, window=4).alias("fps")
-    ).collect()}
-    assert again == fps                    # deterministic
-    # short docs: < n tokens → no fingerprints; >= n but < n+window-1 → 1 window
-    tiny = spark.createDataFrame([(9, "a b"), (10, "a b c d")], "doc_id long, text string")
-    trows = {r.doc_id: list(r.fps) for r in tiny.select(
-        "doc_id", text.winnow_fingerprints("text", n=3, window=4).alias("fps")).collect()}
-    assert trows[9] == [] and len(trows[10]) == 1
-
-
 # ------------------------------------------------------------- sampling (r5)
 def test_hash_split_total_disjoint_stable(spark):
     """Every row lands in exactly one split; assignment is a pure
@@ -724,34 +658,6 @@ def test_kmeans_separates_planted_clusters(spark):
         for r in similarity.kmeans_cells(emb, seed_ids=(0, 1), iters=3).collect()
     }
     assert again == out
-
-
-def test_mirror_clusters_collapse_chained_pairs(spark):
-    """A 3-way mirror family discovered only as CHAINED pairs (a↔b and
-    b↔c share enough content; a↔c alone would not) must still collapse
-    to one canonical host = the component min — the property pair
-    output alone cannot express (the g6 close of d7)."""
-    from news_crawler_spark.operators import dedup
-
-    # hosts 1,2,3: content k0..k9 on all three via overlapping halves,
-    # host 9 isolated with its own keys
-    rows = (
-        [(1, f"k{i}") for i in range(6)]
-        + [(2, f"k{i}") for i in range(10)]
-        + [(3, f"k{i}") for i in range(4, 10)]
-        + [(9, f"z{i}") for i in range(5)]
-    )
-    pages = spark.createDataFrame(rows, "host long, content_key string")
-    pairs = dedup.mirror_hosts(pages, min_shared=2, df_cap=20)
-    flagged = {(r.host_a, r.host_b): r.is_mirror for r in pairs.collect()}
-    # 1↔2 share 6 of min(6,10), 2↔3 share 6 of min(10,6) → mirrors;
-    # 1↔3 share only k4,k5 = 2 of 6 → NOT a mirror pair
-    assert flagged[(1, 2)] and flagged[(2, 3)] and not flagged[(1, 3)]
-    mp = pairs.where(F.col("is_mirror")).select(
-        F.col("host_a").alias("a_id"), F.col("host_b").alias("b_id")
-    )
-    got = {r.doc_id: r.cluster_id for r in dedup.duplicate_clusters(mp).collect()}
-    assert got == {1: 1, 2: 1, 3: 1}
 
 
 def test_semdedup_prunes_within_cell_only(spark):
@@ -981,181 +887,6 @@ def test_media_integrity_missing_and_orphan(spark):
     assert got == {"lost": "missing", "extra": "orphan"}
 
 
-def test_cluster_representatives_survivor_rule(spark):
-    """Longest-copy-wins with ties to the smallest id, and dup_tokens =
-    member tokens minus the survivor's."""
-    from news_crawler_spark.operators import dedup as dedup_ops
-
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)], "doc_id long, cluster_id long"
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "a b"),            # 2 tokens
-            (2, "a b c d"),        # 4 — survivor of cluster 1
-            (3, "a b c"),          # 3
-            (7, "x y z"),          # 3 — ties with 9 → smaller id wins
-            (9, "p q r"),          # 3
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r.cluster_id: r
-        for r in dedup_ops.cluster_representatives(clusters, docs).collect()
-    }
-    assert got[1].rep_doc_id == 2 and got[1].n_members == 3
-    assert got[1].dup_tokens == 2 + 3
-    assert got[7].rep_doc_id == 7 and got[7].dup_tokens == 3
-
-
-def py_mirror_hosts(rows, min_shared=2, num=8, den=10, df_cap=1000):
-    """Straight-line python twin of dedup.mirror_hosts (exact ints)."""
-    p = set(rows)
-    hf = {}
-    for _, c in p:
-        hf[c] = hf.get(c, 0) + 1
-    pc = {(h, c) for h, c in p if hf[c] <= df_cap}
-    n = {}
-    for h, _ in pc:
-        n[h] = n.get(h, 0) + 1
-    byc = {}
-    for h, c in pc:
-        byc.setdefault(c, []).append(h)
-    shared = {}
-    for hs in byc.values():
-        for a in hs:
-            for b in hs:
-                if a < b:
-                    shared[(a, b)] = shared.get((a, b), 0) + 1
-    return {
-        (a, b): (s, n[a], n[b], den * s >= num * min(n[a], n[b]))
-        for (a, b), s in shared.items()
-        if s >= min_shared
-    }
-
-
-def test_mirror_hosts_ratio_cap_and_threshold(spark):
-    """A full mirror (flag true), a partial mirror diluted below the
-    80% containment bar (flag false), a sub-min_shared pair (dropped),
-    and a boilerplate key on every host that df_cap must drop before
-    it fabricates pairs — all vs the python twin."""
-    from news_crawler_spark.operators import dedup
-
-    rows = (
-        # hosts 1/2: full mirror (3 shared, n=3 each)
-        [(1, f"c{i}") for i in range(3)]
-        + [(2, f"c{i}") for i in range(3)]
-        # hosts 3/4: 2 shared, the SMALLER side diluted to n=3 ->
-        # 10*2 < 8*min(3,5): containment fails on both sides, false
-        + [(3, f"d{i}") for i in range(2)]
-        + [(3, "own3")]
-        + [(4, f"d{i}") for i in range(2)]
-        + [(4, f"junk{i}") for i in range(3)]
-        # hosts 5/6: only 1 shared -> below min_shared, no row
-        + [(5, "e0"), (6, "e0")]
-        # boilerplate on every host, df_cap=4 < 6 hosts -> dropped
-        + [(h, "boiler") for h in range(1, 7)]
-    )
-    df = spark.createDataFrame(rows, "host long, content_key string")
-    got = {
-        (r.host_a, r.host_b): (r.shared, r.n_a, r.n_b, r.is_mirror)
-        for r in dedup.mirror_hosts(df, min_shared=2, df_cap=4).collect()
-    }
-    assert got == py_mirror_hosts(rows, min_shared=2, df_cap=4)
-    assert got[(1, 2)] == (3, 3, 3, True)
-    assert got[(3, 4)] == (2, 3, 5, False)
-    assert (5, 6) not in got
-
-
-# ---------------------------------------------------------------- CDC chunks
-
-
-def _py_cdc(text: str, window: int = 4, divisor: int = 16):
-    import hashlib
-
-    t = text.split(" ")
-    n = len(t)
-    bounds = [
-        i
-        for i in range(window, n)
-        if int(
-            hashlib.md5(" ".join(t[i - window : i]).encode()).hexdigest()[:12],
-            16,
-        )
-        % divisor
-        == 0
-    ] + [n]
-    starts = [0] + bounds[:-1]
-    return [" ".join(t[s:e]) for s, e in zip(starts, bounds)]
-
-
-class TestCdcChunks:
-    def _chunks(self, spark, rows):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = dedup.cdc_chunks(df).collect()
-        got = {}
-        for r in sorted(out, key=lambda r: (r.doc_id, r.chunk_idx)):
-            got.setdefault(r.doc_id, []).append(r.chunk_text)
-        return got
-
-    def test_matches_python_oracle(self, spark, docs):
-        sample = docs.select("doc_id", "text").limit(30).collect()
-        got = self._chunks(spark, [(r.doc_id, r.text) for r in sample])
-        for r in sample:
-            assert got[r.doc_id] == _py_cdc(r.text), r.doc_id
-
-    def test_short_and_degenerate_docs(self, spark):
-        got = self._chunks(
-            spark, [(1, "a b c"), (2, "solo"), (3, "a  b")]  # incl. empty token
-        )
-        assert got[1] == ["a b c"]  # n-1 < window → single chunk
-        assert got[2] == ["solo"]
-        assert got[3] == ["a  b"]
-
-    def test_roundtrip_rebuilds_text(self, spark, docs):
-        ch = dedup.cdc_chunks(docs)
-        rebuilt = ch.groupBy("doc_id").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("chunk_idx", "chunk_text"))),
-                    lambda s: s["chunk_text"],
-                ),
-                " ",
-            ).alias("rebuilt")
-        )
-        bad = (
-            rebuilt.join(docs.select("doc_id", "text"), "doc_id")
-            .filter(F.col("rebuilt") != F.col("text"))
-            .count()
-        )
-        assert bad == 0
-
-    def test_shift_resistance(self, spark):
-        """THE CDC property: an insertion near the front leaves every
-        chunk after the edit's window horizon identical — a fixed-size
-        grid would shift all of them."""
-        base = " ".join(f"tok{i * 7 % 101}" for i in range(400))
-        edited = "inserted " + base
-        a = _py_cdc(base)
-        b = _py_cdc(edited)
-        got = self._chunks(spark, [(1, base), (2, edited)])
-        assert got[1] == a and got[2] == b
-        # boundaries strictly after the edit's window horizon depend only
-        # on local content, so the chunk streams share their entire
-        # suffix — only the leading ≤2 chunks (which contain the edit or
-        # a boundary the edit created/destroyed) may differ
-        k = 0
-        while k < min(len(a), len(b)) and a[-1 - k] == b[-1 - k]:
-            k += 1
-        assert k >= len(a) - 2 and k >= len(b) - 2, (len(a), len(b), k)
-
-    def test_expected_chunk_length(self, spark, docs):
-        """divisor=16 → mean chunk length in the right decade (sanity
-        on the boundary rate, not an exact pin)."""
-        stats = dedup.cdc_chunks(docs).agg(F.avg("n_tokens")).collect()[0][0]
-        assert 6 < stats < 60, stats
-
-
 # ---------------------------------------------------------------- sniffing
 
 
@@ -1201,53 +932,6 @@ class TestContentSniff:
         must not trigger (the sniffer reads 12 bytes, period)."""
         got = self._sniff(spark, [b"xx%PDF-", b"ab\xff\xd8\xff"])
         assert got == ["application/octet-stream"] * 2
-
-
-# ---------------------------------------------------------------- containment
-
-
-class TestContainmentPairs:
-    def test_excerpt_contained_but_jaccard_blind(self, spark):
-        body = " ".join(f"w{i * 13 % 997}" for i in range(300))
-        excerpt = " ".join(body.split(" ")[:60])
-        df = spark.createDataFrame(
-            [(1, body), (2, excerpt)], "doc_id long, text string"
-        )
-        rows = dedup.containment_pairs(df, threshold_pct=80).collect()
-        assert len(rows) == 1
-        r = rows[0]
-        assert (r.a_id, r.b_id) == (1, 2)
-        assert r.c_ba == 1.0 and r.common == r.n_b  # excerpt fully inside
-        # and the symmetric tier misses it at its own threshold
-        assert dedup.ngram_jaccard_pairs(df, threshold=0.6).count() == 0
-
-    def test_threshold_is_integer_exact(self, spark):
-        """10 shingles, 8 common → exactly 80%: the >= must admit it;
-        7 common (70%) must not."""
-        # doc B = 12 tokens -> 10 shingles; doc A shares first 10/9 tokens
-        toks = [f"t{i}" for i in range(12)]
-        b = " ".join(toks)
-        a8 = " ".join(toks[:10] + ["zz", "qq", "rr", "ss"])   # 8 common shingles
-        a7 = " ".join(toks[:9] + ["zz", "qq", "rr", "ss", "uu"])  # 7 common
-        df = spark.createDataFrame(
-            [(1, a8), (2, b)], "doc_id long, text string"
-        )
-        assert dedup.containment_pairs(df, threshold_pct=80).count() == 1
-        df2 = spark.createDataFrame(
-            [(1, a7), (2, b)], "doc_id long, text string"
-        )
-        assert dedup.containment_pairs(df2, threshold_pct=80).count() == 0
-
-    def test_direction_scores(self, spark):
-        body = " ".join(f"x{i}" for i in range(50))
-        sub = " ".join(body.split(" ")[:20])
-        df = spark.createDataFrame(
-            [(10, sub), (20, body)], "doc_id long, text string"
-        )
-        r = dedup.containment_pairs(df, threshold_pct=80).collect()[0]
-        # a_id < b_id ordering; containment of the SMALL set is 1.0
-        assert (r.a_id, r.b_id) == (10, 20)
-        assert r.c_ab == 1.0 and r.c_ba < 1.0
 
 
 # ---------------------------------------------------------------- charset
@@ -1351,4 +1035,3 @@ class TestSitemapStaleness:
         assert plan.count("BroadcastHashJoin") == 2 or plan.count(
             "BroadcastExchange"
         ) >= 2, plan
-

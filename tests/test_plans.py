@@ -113,16 +113,6 @@ def test_anti_join_broadcasts_small_popped(spark):
     assert "Broadcast" in p
 
 
-def test_whole_stage_codegen_on_text_features(spark):
-    from news_crawler_spark.operators.text import with_text_features
-
-    df = with_text_features(spark.read.parquet(f"{SF}/documents.parquet"))
-    p = explain_formatted(df)
-    # formatted explain marks codegen'd operators with "[codegen id : N]";
-    # executedPlan.toString shows them as "*(N) Project" — accept either
-    assert "codegen id" in p or "*(1)" in plan(df), p
-
-
 def filtered_search_plan(spark, monkeypatch, query) -> str:
     """Run an analytics filtered search twice over the same loaded
     tables (the first call builds the vector index) and return the
@@ -425,54 +415,6 @@ def test_x16_countmin_estimate_join_is_broadcast(spark):
     assert "CartesianProduct" not in p
 
 
-def test_x19_dup_spans_plan_shape(spark):
-    """Three contracts: (a) the lazy window stream travels as hashed
-    windows off a pruned (doc_id, text) scan — never window strings,
-    never the other document columns; (b) the spans plan reads the
-    ONE materialized window stream, not a second parquet scan per
-    consumer (the lazy form re-ran scan+tokenize+chained-hash explode
-    under both the frequency agg and the position join); (c) the
-    frequency pass keeps its map-side partial phase (partial_count
-    collapses a 10^6-times-repeated boilerplate window before the
-    shuffle — the skew defense a count-over-window formulation lacks)."""
-    from news_crawler_spark.operators import dedup as dd
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    lazy = plan(dd.window_hash_stream(docs))
-    assert "xxhash64" in lazy, lazy
-    assert "n_chars" not in lazy.split("ReadSchema")[1][:200], lazy
-
-    p = plan(dd.duplicate_spans(docs, window=8, min_count=2))
-    assert "Scan parquet" not in p, p
-    assert p.count("Scan ExistingRDD") == 2, p
-    assert "partial_count" in p, p
-
-
-def test_x20_strip_rebuild_no_explode_single_eval(spark):
-    """The rebuild never explodes tokens (pure higher-order filter over
-    the token array), the per-doc span set joins back as a BROADCAST,
-    and the O(tokens×spans) interval filter is evaluated ONCE per row
-    (projected column referenced twice — not re-expanded per consumer,
-    the CollapseProject trap)."""
-    from news_crawler_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan(
-        dedup.strip_duplicate_spans(docs, window=8, min_count=2)
-        .select(
-            "doc_id",
-            "n_tokens",
-            "n_dup_tokens",
-            F.md5("text_clean").alias("clean_md5"),
-        )
-        .orderBy("doc_id")
-    )
-    assert "Generate" not in p.split("Scan ExistingRDD")[0], p
-    assert "BroadcastHashJoin" in p, p
-    head = p.split("Scan ExistingRDD")[0]
-    assert head.count("exists(") == 1, head
-
-
 # Spark jobs the corpus build (x14 + d5 + x21 at sf0.001, each result
 # persisted and counted) starts: 38 measured (11 + 11 + 16), plus 10%
 CORPUS_BUILD_JOBS = 41
@@ -517,23 +459,6 @@ def test_x21_semdedup_pairs_join_is_cell_equi(spark):
     assert "cell" in p, p
 
 
-def test_x22_dsir_weights_join_is_broadcast(spark):
-    """DSIR's per-doc weighting must join the exploded token stream
-    against the n_buckets-row log-ratio table as a BROADCAST (the big
-    side never shuffles for the join) and keep the map-side partial for
-    the per-doc sum; the final top-m must be a TakeOrderedAndProject,
-    never a global sort."""
-    from pyspark.sql import functions as F
-
-    from news_crawler_spark.operators import text as text_ops
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan(text_ops.dsir_select(docs, F.col("lang") == "de", m=100))
-    assert "BroadcastHashJoin" in p, p
-    assert "partial_sum" in p, p
-    assert "TakeOrderedAndProject" in p, p
-
-
 def test_m3_pack_one_window_no_global_sort(spark):
     """m3: interleaved packing must be ONE per-shard window over ONE
     shuffle on the shard id — no global Sort/Exchange anywhere above it
@@ -551,20 +476,6 @@ def test_m3_pack_one_window_no_global_sort(spark):
     # hash-partitions on shard
     assert "rangepartitioning" not in p.lower(), p
     assert "hashpartitioning(shard" in p, p
-
-
-def test_x29_reps_are_partial_aggregate_no_window(spark):
-    """x29: the survivor selection must be a partial (map-side) max_by
-    aggregate on cluster_id — never a per-cluster window sort."""
-    from news_crawler_spark.operators import dedup as dedup_ops
-
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1)], "doc_id long, cluster_id long"
-    )
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan(dedup_ops.cluster_representatives(clusters, docs))
-    assert "Window" not in p, p
-    assert "partial_max_by" in p or ("max_by" in p and "partial" in p.lower()), p
 
 
 def test_m4_integrity_prunes_payload_and_reduces_before_join(spark):
@@ -644,85 +555,6 @@ def test_bucketed_id_join_colocates_no_exchange(spark, tmp_path):
         assert "Bucketed: true" in p, p
     finally:
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
-
-
-def test_x32_bpe_pairs_two_exchanges_topk(spark):
-    """The BPE pair-count plan: exactly two exchanges (corpus word
-    count, vocab pair sum — both map-side combined HashAggregates) and
-    the top-200 as TakeOrderedAndProject, never a global Sort."""
-    from news_crawler_spark.operators import text as text_ops
-
-    seg = text_ops.bpe_init_segmentation(
-        spark.read.parquet(f"{SF}/documents.parquet")
-    )
-    df = (
-        text_ops.bpe_adjacent_pairs(seg)
-        .select(F.concat_ws(" ", "a", "b").alias("pair"), "n")
-        .orderBy(F.desc("n"), "pair")
-        .limit(200)
-    )
-    p = explain_formatted(df)
-    # count detail headers "(N) Exchange" — the tree section repeats
-    # every operator, so a bare substring count double-counts
-    assert p.count(") Exchange") == 2, p
-    assert "TakeOrderedAndProject" in p
-    assert "Sort " not in p.split("TakeOrderedAndProject")[0]
-
-
-def test_x33_bpe_merge_iteration_shape(spark):
-    """One merge iteration of bpe_train: the argmax pair enters as a
-    broadcast join (never collected), the merge fold is a pure Catalyst
-    expression (no BatchEvalPython / ArrowEvalPython anywhere), and the
-    left join on TRUE plans as BroadcastNestedLoopJoin over a 1-row
-    side — constant work per word."""
-    from news_crawler_spark.operators import text as text_ops
-
-    seg = text_ops.bpe_init_segmentation(
-        spark.read.parquet(f"{SF}/documents.parquet")
-    )
-    best = (
-        text_ops.bpe_adjacent_pairs(seg)
-        .orderBy(F.desc("n"), "a", "b")
-        .limit(1)
-        .select(F.col("a").alias("_ba"), F.col("b").alias("_bb"))
-    )
-    one_iter = seg.join(F.broadcast(best), F.lit(True), "left").select(
-        "w",
-        "wc",
-        text_ops._bpe_merge_fold(
-            F.col("syms"), F.col("_ba"), F.col("_bb")
-        ).alias("syms"),
-    )
-    p = explain_formatted(one_iter)
-    assert "BroadcastNestedLoopJoin" in p
-    assert "EvalPython" not in p  # fold is JVM-side, no Python stage
-
-
-def test_x34_encode_vocab_broadcasts(spark):
-    """The corpus encode probes the trained vocabulary via a broadcast
-    hash join — no sort-merge join, no corpus-side exchange below the
-    doc_id reassembly aggregate."""
-    from news_crawler_spark.operators import text as text_ops
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    vocab = text_ops.bpe_train(text_ops.bpe_init_segmentation(docs), 6)
-    toks = docs.select(
-        "doc_id",
-        F.posexplode_outer(
-            F.regexp_extract_all("text", F.lit(text_ops.BPE_TOKEN_RE), F.lit(0))
-        ).alias("pos", "w"),
-    )
-    df = (
-        toks.join(F.broadcast(vocab.select("w", "syms")), "w", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("w").alias("n_words"),
-            F.sum(F.size("syms")).alias("n_bpe_tokens"),
-        )
-    )
-    p = explain_formatted(df)
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
 
 
 def test_c2_rendezvous_is_a_pure_projection(spark):
