@@ -17,6 +17,10 @@ Spark-first:
                pipeline's final output
 - contamination: corpus documents sharing an n-gram with an eval set
                (``cross_contamination``, the x14 decontamination pass)
+- survivors:   one representative per dup cluster, longest copy wins
+               (``cluster_representatives``)
+- containment: pairs where one shingle set lies mostly inside the
+               other, which Jaccard misses (``containment_pairs``)
 
 Hash provenance: shingle/MinHash hashes are Spark's builtin ``xxhash64``
 (seed 42), bit-identical to the pure-Python twin in functions/xxh64.py;
@@ -538,4 +542,100 @@ def _banded64(sh: DataFrame, n_bands: int) -> DataFrame:
         "simhash",
         F.col("bb.band").alias("band"),
         F.col("bb.chunk").alias("chunk"),
+    )
+
+
+# --------------------------------------------------------------------------
+# cluster survivors and containment pairs
+
+def cluster_representatives(
+    clusters: DataFrame,
+    docs: DataFrame,
+    key_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Dup clusters → the keep/drop decision: one row per cluster with
+    the representative document (most whitespace tokens, ties to the
+    smallest id — "keep the longest copy", the CCNet/RefinedWeb
+    survivor rule), the member count, and ``dup_tokens`` — the tokens
+    the drop decision removes from the corpus (the dedup savings line
+    every corpus report quotes).
+
+    The selection is a single ``max_by`` aggregate over the composite
+    order key ``n_tokens * 2^32 - doc_id`` (strictly monotone in
+    (n_tokens asc, doc_id desc), unique because ids are) — map-side
+    partial aggregation, one shuffle on cluster_id, no window sort."""
+    from .text import token_count
+
+    toks = docs.select(
+        F.col(key_col).alias("doc_id"),
+        token_count(text_col).cast("long").alias("n_tokens"),
+    )
+    j = clusters.join(toks, "doc_id")
+    ordk = F.col("n_tokens") * F.lit(4294967296) - F.col("doc_id")
+    return j.groupBy("cluster_id").agg(
+        F.max_by(F.col("doc_id"), ordk).alias("rep_doc_id"),
+        F.count("*").cast("long").alias("n_members"),
+        (F.sum("n_tokens") - F.max("n_tokens")).cast("long").alias("dup_tokens"),
+    )
+
+
+def containment_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold_pct: int = 80,
+    df_cap: int | None = 100_000,
+) -> DataFrame:
+    """All pairs (a<b) where one document's shingle set is ≥
+    ``threshold_pct``% CONTAINED in the other's — the asymmetric
+    complement to the Jaccard tier (``minhash_lsh_pairs``): Jaccard
+    punishes size mismatch (a 50-token quote inside a 5000-token article
+    scores ~0.01), so syndicated-inclusion / quoted-boilerplate / expanded-
+    rewrite relations are invisible to it. Broder's containment
+    ``C(A,B) = |S(A)∩S(B)| / |S(A)|`` is the standard fix; the pair
+    qualifies when ``max(C(A,B), C(B,A)) = common/min(|A|,|B|)``
+    crosses the threshold — evaluated as INTEGER cross-multiplication
+    (``100·common ≥ pct·min``), so no float decides membership.
+
+    Output: ``(a_id, b_id, common, n_a, n_b, c_ab, c_ba)`` with the
+    directional scores rounded to 4dp for reporting (membership never
+    reads them).
+
+    An inverted index over hashed shingles with a stop-shingle ``df_cap``
+    guard (one shingle in k docs is k²/2 join rows — the cap is the skew
+    ceiling); shingle sets materialize once, the self-join is
+    on 8-byte hashes, and the per-pair count partial-aggregates."""
+    sh = with_hashed_shingles(docs, text_col, id_col, n).localCheckpoint(eager=True)
+    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
+    inv = sh.select("doc_id", F.explode("sh").alias("shingle"))
+    if df_cap is not None:
+        freq = inv.groupBy("shingle").agg(F.count("*").alias("df"))
+        inv = inv.join(freq.filter(F.col("df") <= df_cap), "shingle", "left_semi")
+    pairs = (
+        inv.alias("x")
+        .join(inv.alias("y"), "shingle")
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .groupBy(F.col("x.doc_id").alias("a_id"), F.col("y.doc_id").alias("b_id"))
+        .agg(F.count("*").cast("long").alias("common"))
+    )
+    na = sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n_sh", "n_a")
+    nb = sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n_sh", "n_b")
+    return (
+        pairs.join(na, "a_id")
+        .join(nb, "b_id")
+        .filter(
+            F.lit(100) * F.col("common")
+            >= F.lit(threshold_pct) * F.least("n_a", "n_b")
+        )
+        .select(
+            "a_id",
+            "b_id",
+            "common",
+            F.col("n_a").cast("long").alias("n_a"),
+            F.col("n_b").cast("long").alias("n_b"),
+            F.round(F.col("common") / F.col("n_a"), 4).alias("c_ab"),
+            F.round(F.col("common") / F.col("n_b"), 4).alias("c_ba"),
+        )
     )

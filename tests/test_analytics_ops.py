@@ -180,7 +180,10 @@ AWAITING_DELETION = {
         "(module)", "suffix_rules_df", "registered_domain_map", "with_registered_domain",
     ),
     "news_crawler_spark/functions/urls.py": ("surt_key_col", "url_template_col"),
-    "news_crawler_spark/operators/dedup.py": ("shingles_from_tokens", "exact_duplicates"),
+    "news_crawler_spark/operators/dedup.py": (
+        "shingles_from_tokens", "exact_duplicates", "cluster_representatives",
+        "containment_pairs",
+    ),
     "news_crawler_spark/operators/frontier.py": (
         "TRAP_SESSION_PARAMS", "url_trap_flags", "robots_sitemaps", "rendezvous_assign",
         "trap_templates", "allowed_by_robots_wildcards",

@@ -887,6 +887,33 @@ def test_media_integrity_missing_and_orphan(spark):
     assert got == {"lost": "missing", "extra": "orphan"}
 
 
+def test_cluster_representatives_survivor_rule(spark):
+    """Longest-copy-wins with ties to the smallest id, and dup_tokens =
+    member tokens minus the survivor's."""
+    from news_crawler_spark.operators import dedup as dedup_ops
+
+    clusters = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)], "doc_id long, cluster_id long"
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, "a b"),            # 2 tokens
+            (2, "a b c d"),        # 4 — survivor of cluster 1
+            (3, "a b c"),          # 3
+            (7, "x y z"),          # 3 — ties with 9 → smaller id wins
+            (9, "p q r"),          # 3
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        r.cluster_id: r
+        for r in dedup_ops.cluster_representatives(clusters, docs).collect()
+    }
+    assert got[1].rep_doc_id == 2 and got[1].n_members == 3
+    assert got[1].dup_tokens == 2 + 3
+    assert got[7].rep_doc_id == 7 and got[7].dup_tokens == 3
+
+
 # ---------------------------------------------------------------- sniffing
 
 
@@ -932,6 +959,53 @@ class TestContentSniff:
         must not trigger (the sniffer reads 12 bytes, period)."""
         got = self._sniff(spark, [b"xx%PDF-", b"ab\xff\xd8\xff"])
         assert got == ["application/octet-stream"] * 2
+
+
+# ---------------------------------------------------------------- containment
+
+
+class TestContainmentPairs:
+    def test_excerpt_contained_but_jaccard_blind(self, spark):
+        body = " ".join(f"w{i * 13 % 997}" for i in range(300))
+        excerpt = " ".join(body.split(" ")[:60])
+        df = spark.createDataFrame(
+            [(1, body), (2, excerpt)], "doc_id long, text string"
+        )
+        rows = dedup.containment_pairs(df, threshold_pct=80).collect()
+        assert len(rows) == 1
+        r = rows[0]
+        assert (r.a_id, r.b_id) == (1, 2)
+        assert r.c_ba == 1.0 and r.common == r.n_b  # excerpt fully inside
+        # and the symmetric tier misses it at its own threshold
+        assert py_jaccard_pairs({1: body, 2: excerpt}, threshold=0.6) == set()
+
+    def test_threshold_is_integer_exact(self, spark):
+        """10 shingles, 8 common → exactly 80%: the >= must admit it;
+        7 common (70%) must not."""
+        # doc B = 12 tokens -> 10 shingles; doc A shares first 10/9 tokens
+        toks = [f"t{i}" for i in range(12)]
+        b = " ".join(toks)
+        a8 = " ".join(toks[:10] + ["zz", "qq", "rr", "ss"])   # 8 common shingles
+        a7 = " ".join(toks[:9] + ["zz", "qq", "rr", "ss", "uu"])  # 7 common
+        df = spark.createDataFrame(
+            [(1, a8), (2, b)], "doc_id long, text string"
+        )
+        assert dedup.containment_pairs(df, threshold_pct=80).count() == 1
+        df2 = spark.createDataFrame(
+            [(1, a7), (2, b)], "doc_id long, text string"
+        )
+        assert dedup.containment_pairs(df2, threshold_pct=80).count() == 0
+
+    def test_direction_scores(self, spark):
+        body = " ".join(f"x{i}" for i in range(50))
+        sub = " ".join(body.split(" ")[:20])
+        df = spark.createDataFrame(
+            [(10, sub), (20, body)], "doc_id long, text string"
+        )
+        r = dedup.containment_pairs(df, threshold_pct=80).collect()[0]
+        # a_id < b_id ordering; containment of the SMALL set is 1.0
+        assert (r.a_id, r.b_id) == (10, 20)
+        assert r.c_ab == 1.0 and r.c_ba < 1.0
 
 
 # ---------------------------------------------------------------- charset

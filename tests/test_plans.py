@@ -478,6 +478,20 @@ def test_m3_pack_one_window_no_global_sort(spark):
     assert "hashpartitioning(shard" in p, p
 
 
+def test_x29_reps_are_partial_aggregate_no_window(spark):
+    """x29: the survivor selection must be a partial (map-side) max_by
+    aggregate on cluster_id — never a per-cluster window sort."""
+    from news_crawler_spark.operators import dedup as dedup_ops
+
+    clusters = spark.createDataFrame(
+        [(1, 1), (2, 1)], "doc_id long, cluster_id long"
+    )
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    p = plan(dedup_ops.cluster_representatives(clusters, docs))
+    assert "Window" not in p, p
+    assert "partial_max_by" in p or ("max_by" in p and "partial" in p.lower()), p
+
+
 def test_m4_integrity_prunes_payload_and_reduces_before_join(spark):
     """m4: the reconcile joins DISTINCT ref keys only — both sides
     aggregate to distinct refs BELOW the full-outer join, and the span
