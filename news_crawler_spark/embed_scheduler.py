@@ -31,13 +31,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import SnapshotCatalog
 from .operators.embed import DEFAULT_DIM, embed_documents, embed_text_col
-
-STATUS_PENDING = "pending"
+from .operators.frontier import salted_top_k, salts_for_budget
 
 
 def claim_batch(pending: DataFrame, k: int, salts: int | None = None) -> DataFrame:
@@ -46,29 +45,20 @@ def claim_batch(pending: DataFrame, k: int, salts: int | None = None) -> DataFra
     pending articles oldest first (database_manager.py:296-297,
     323-324 ``ORDER BY published_datetime ASC LIMIT batch``); doc_id
     breaks ties and orders docs with no timestamp (nulls last).
-    Two-phase salted window — identical output to a single per-source
-    window, salts× its parallelism. Module-level so the analytics query
-    (e1_embed_drain_schedule) replays the exact operator the scheduler
-    runs. ``salts=None`` sizes the salt count to the batch size
+    Two-phase salted window (``frontier.salted_top_k``) — identical
+    output to a single per-source window, salts× its parallelism.
+    Module-level so the analytics query (e1_embed_drain_schedule)
+    replays the exact operator the scheduler runs. ``salts=None`` sizes the salt count to the batch size
     (phase 2's per-source input is salts × k — see
     frontier.salts_for_budget); pass an int to pin it."""
     if salts is None:
-        from .operators.frontier import salts_for_budget
-
         salts = salts_for_budget(k, max_salts=16)
-    order = [F.asc_nulls_last("published_ts"), F.asc("doc_id")]
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(salts))
-    w1 = Window.partitionBy("source", salt).orderBy(*order)
-    pruned = (
-        pending.withColumn("__rn1", F.row_number().over(w1))
-        .filter(F.col("__rn1") <= k)
-        .drop("__rn1")
-    )
-    w2 = Window.partitionBy("source").orderBy(*order)
-    return (
-        pruned.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return salted_top_k(
+        pending,
+        ["source"],
+        [F.asc_nulls_last("published_ts"), F.asc("doc_id")],
+        F.lit(k),
+        F.pmod(F.xxhash64("doc_id"), F.lit(salts)),
     )
 
 
@@ -101,9 +91,10 @@ class EmbedScheduler:
 
     # ------------------------------------------------------------------
     def ingest(self, docs: DataFrame) -> None:
-        """Documents → embed round 0: project the embed text (P10), drop
-        empties (P8), status=pending. ``docs`` needs doc_id, source, and
-        title/summary columns (the engine's documents table shape);
+        """Documents → embed round 0: project the embed text (P10) and
+        drop empties (P8); every ``embed_pending`` row is pending. ``docs``
+        needs doc_id, source, and title/summary columns (the engine's
+        documents table shape);
         ``published_ts`` is carried when present so the drain order can
         match the reference's oldest-first claim
         (database_manager.py:296-297 ORDER BY published_datetime ASC)."""
@@ -120,7 +111,6 @@ class EmbedScheduler:
                 embed_text_col().alias("embed_text"),
             )
             .filter(F.coalesce(F.trim("embed_text"), F.lit("")) != "")
-            .withColumn("status", F.lit(STATUS_PENDING))
         )
         # one row per doc_id (deterministic min-row pick): duplicate ids
         # in the input would otherwise desync the arithmetic pending_left
@@ -131,7 +121,7 @@ class EmbedScheduler:
             pending.groupBy("doc_id")
             .agg(
                 F.min_by(
-                    F.struct("source", "published_ts", "embed_text", "status"),
+                    F.struct("source", "published_ts", "embed_text"),
                     F.struct("published_ts", "source", "embed_text"),
                 ).alias("__r")
             )

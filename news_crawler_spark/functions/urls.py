@@ -130,51 +130,3 @@ def with_url_columns(df: DataFrame, url_col: str = "url") -> DataFrame:
     return out.withColumn("host", host_col("canonical_url")).withColumn(
         "url_hash", url_hash_col("canonical_url")
     )
-
-
-_QUERY_RE = r"\?([^#]*)"
-
-
-def surt_key_col(canonical: Column | str) -> Column:
-    """SURT (Sort-friendly URI Reordering Transform) key of a canonical
-    URL — the Heritrix/CommonCrawl/OpenWayback index key:
-    ``https://a.blog.example.com/x?q=1`` → ``com,example,blog,a)/x?q=1``.
-
-    Reversing the host labels makes lexicographic order group every host
-    of a registered domain (and every URL of a host) CONTIGUOUSLY, so a
-    frontier or URL index *range-partitioned by surt_key* gets per-domain
-    locality for free: one domain's politeness scan, trap audit, or
-    recrawl sweep touches one partition range (min/max pruning on the
-    sorted parquet), instead of hashing across the cluster. The scheme is
-    dropped (canonicalization already collapsed it) and the query string
-    is kept verbatim — canonical URLs already carry tracking-stripped
-    queries in their original order, so equal keys mean equal canonical
-    URLs.
-
-    Pure codegen string ops (the regex trio + reverse/array_join); no
-    UDF, no parse_url (see ``host_col`` for why).
-    """
-    c = F.col(canonical) if isinstance(canonical, str) else canonical
-    rev_host = F.array_join(F.reverse(F.split(host_col(c), r"\.")), ",")
-    q = F.regexp_extract(c, _QUERY_RE, 1)
-    return F.concat(
-        rev_host,
-        F.lit(")"),
-        path_col(c),
-        F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
-    )
-
-
-def url_template_col(path: Column | str) -> Column:
-    """URL-template canonicalization for crawler-trap detection: long
-    hex runs (session ids, content hashes; >=16 chars) -> ``{h}``, then
-    digit runs (dates, page numbers, item ids) -> ``{d}`` — so
-    ``/cal/2026/08/page-3`` and ``/cal/1999/01/page-7`` collapse to the
-    same template. Two JVM-side regexp_replace calls (codegen'd, replace
-    ALL matches — same semantics as DuckDB's 'g' flag, which the oracle
-    twin must pass explicitly). The hex rule runs FIRST so a 16+-char
-    hex token becomes one ``{h}``, not a mix of ``{d}`` and letters."""
-    p = F.col(path) if isinstance(path, str) else path
-    return F.regexp_replace(
-        F.regexp_replace(p, "[0-9a-f]{16,}", "{h}"), "[0-9]+", "{d}"
-    )

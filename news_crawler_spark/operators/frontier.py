@@ -16,24 +16,21 @@ key is total (url_hash tie-break) so the popped set is deterministic under
 any partitioning — this is the crawl-ordering contract.
 
 Scale notes (10^10-row frontier):
-- the eligibility filter (status/tried_count) is a parquet-pushed predicate;
-  with the frontier partitioned by status, pruning skips completed/failed
-  files entirely.
-- ``pop_round`` is a two-phase salted top-k: phase 1 ranks within
-  (host, url_hash mod salts) — salts× the parallelism of a plain per-host
-  window and each group's sort stops mattering past its budget; phase 2
-  re-ranks the ≤ budget·salts survivors per host. Identical result to the
-  single-window plan (same total order), fraction of the sort work.
+- the eligibility filter (status/tried_count) is a parquet-pushed predicate.
+- ``pop_round`` ranks with :func:`salted_top_k`, a two-phase salted
+  top-k: phase 1 ranks within (host, url_hash mod salts) — salts× the
+  parallelism of a plain per-host window and each group's sort stops
+  mattering past its budget; phase 2 re-ranks the ≤ budget·salts
+  survivors per host. Identical result to the single-window plan (same
+  total order), fraction of the sort work.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..functions import urls as url_fns
 
 # Columns that define the deterministic pop order within a host.
 POP_ORDER = ("priority", "published_ts", "url_hash")
@@ -110,18 +107,7 @@ def pop_round(
 
     ``budgets`` is a small (host, budget) DataFrame — broadcast.
 
-    Two-phase salted top-k: a single window over ``partitionBy(host)``
-    caps parallelism at the number of hosts (≈5 here) and sorts the whole
-    hot host — fatal on a 10^10-row frontier. Instead:
-
-      phase 1: window over (host, url_hash mod salts) — ``salts``× the
-               parallelism, each group keeps its own top-budget;
-      phase 2: window over host on the ≤ budget·salts survivors.
-
-    Any row in the true per-host top-k is in its salt group's top-k
-    (same total order), so the result is identical to the single-window
-    plan — asserted by the crawl-ordering fixtures.
-
+    Ranked by :func:`salted_top_k` over (host, url_hash mod salts).
     Salt sizing: phase 2's input is ≤ salts × budget rows per host, and
     phase 1 only prunes while its salt groups (≈ rows/host/salts) exceed
     the budget — so large budgets want FEWER salts (j11's cap-1000
@@ -132,20 +118,43 @@ def pop_round(
     el = frontier.join(
         F.broadcast(budgets.select("host", "budget")), "host", "left"
     ).withColumn("budget", F.coalesce(F.col("budget"), F.lit(default_budget)))
+    return salted_top_k(
+        el,
+        ["host"],
+        [F.col(c).asc_nulls_last() for c in POP_ORDER],
+        F.col("budget"),
+        F.pmod(F.col("url_hash"), F.lit(salts)),
+    ).drop("budget")
 
-    order = [F.col(c).asc_nulls_last() for c in POP_ORDER]
-    salt = F.pmod(F.col("url_hash"), F.lit(salts))
-    w1 = Window.partitionBy("host", salt).orderBy(*order)
+
+def salted_top_k(
+    df: DataFrame, group: list[str], order: list[Column], k: Column, salt: Column
+) -> DataFrame:
+    """The rows of ``df`` ranked ≤ ``k`` within their ``group`` by
+    ``order`` (a total order), as a two-phase salted top-k. A single
+    window over ``partitionBy(group)`` caps parallelism at the number of
+    groups (≈5 hosts here) and sorts the whole hot group — fatal on a
+    10^10-row frontier. Instead:
+
+      phase 1: window over (group, salt) — salts× the parallelism,
+               each (group, salt) keeps its own top-k;
+      phase 2: window over group on the ≤ k·salts survivors.
+
+    Any row in the true per-group top-k is in its salt group's top-k
+    (same total order), so the result is identical to the single-window
+    plan — asserted by the crawl-ordering fixtures. An empty ``group``
+    ranks the whole frame."""
+    w1 = Window.partitionBy(*group, salt).orderBy(*order)
     pruned = (
-        el.withColumn("__rn1", F.row_number().over(w1))
-        .filter(F.col("__rn1") <= F.col("budget"))
+        df.withColumn("__rn1", F.row_number().over(w1))
+        .filter(F.col("__rn1") <= k)
         .drop("__rn1")
     )
-    w2 = Window.partitionBy("host").orderBy(*order)
+    w2 = Window.partitionBy(*group).orderBy(*order)
     return (
         pruned.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= F.col("budget"))
-        .drop("__rn", "budget")
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
     )
 
 
@@ -158,79 +167,6 @@ def salts_for_budget(
     as that allows. Small politeness budgets (≤ ~128) keep the full
     ``max_salts``; j11-style cap-1000 budgets drop to 8."""
     return max(1, min(max_salts, target_phase2 // max(1, max_budget)))
-
-
-# Query parameters that mark per-visitor state in a URL: any value makes
-# the "same" page infinitely many URLs — classic crawler-trap fuel.
-TRAP_SESSION_PARAMS = (
-    "sessionid",
-    "phpsessid",
-    "jsessionid",
-    "sid",
-    "cfid",
-    "cftoken",
-)
-
-
-def url_trap_flags(
-    urls: DataFrame,
-    url_col: str = "canonical_url",
-    max_depth: int = 12,
-    max_seg_repeat: int = 2,
-    max_digit_segs: int = 3,
-    max_params: int = 8,
-) -> DataFrame:
-    """Spider-trap detection over frontier URLs (P11) — the admission
-    hygiene pass the reference's per-source link validators imply
-    (news_sources/__init__.py:27-29 owns-link checks; the reference
-    crawls a closed set of archive/sitemap URL shapes so traps cannot
-    occur — an open-frontier crawler at 10^10 URLs must reject them
-    explicitly or the frontier fills with infinite URL spaces).
-
-    Adds ``trap_reason`` ∈ {depth, cycle, calendar, params, session, ok}
-    by the first matching rule (most-structural wins):
-
-    - ``depth``:    more than ``max_depth`` path segments
-    - ``cycle``:    some path segment repeats > ``max_seg_repeat`` times
-                    (/tag/a/tag/a/tag/... loops)
-    - ``calendar``: more than ``max_digit_segs`` all-digit segments
-                    (infinite date-grid archives: /2024/01/02/03/...)
-    - ``params``:   more than ``max_params`` query parameters
-    - ``session``:  a per-visitor state parameter (TRAP_SESSION_PARAMS,
-                    case-insensitive)
-
-    Scale shape: pure whole-stage-codegen expressions over the URL
-    string (regexp split + higher-order array ops, no UDF, no shuffle)
-    — a map-side admission filter in front of the pending merge, so trap
-    URLs never cost frontier storage or MERGE work. The segment-repeat
-    count is O(depth²) per row with depth ≤ a few dozen — flat register
-    work next to the parquet scan it fuses into.
-    """
-    u = F.col(url_col)
-    path = F.regexp_extract(u, r"^[a-z]+://[^/?#]+([^?#]*)", 1)
-    query = F.regexp_extract(u, r"\?([^#]*)", 1)
-    segs = F.filter(F.split(path, "/"), lambda s: s != F.lit(""))
-    depth = F.size(segs)
-    seg_repeat = F.when(depth == 0, F.lit(0)).otherwise(
-        F.array_max(
-            F.transform(segs, lambda s: F.size(F.filter(segs, lambda t: t == s)))
-        )
-    )
-    digit_segs = F.size(F.filter(segs, lambda s: s.rlike("^[0-9]+$")))
-    params = F.filter(F.split(query, "&"), lambda p: p != F.lit(""))
-    has_session = F.exists(
-        params,
-        lambda p: F.lower(F.split(p, "=").getItem(0)).isin(*TRAP_SESSION_PARAMS),
-    )
-    reason = (
-        F.when(depth > max_depth, F.lit("depth"))
-        .when(seg_repeat > max_seg_repeat, F.lit("cycle"))
-        .when(digit_segs > max_digit_segs, F.lit("calendar"))
-        .when(F.size(params) > max_params, F.lit("params"))
-        .when(has_session, F.lit("session"))
-        .otherwise(F.lit("ok"))
-    )
-    return urls.withColumn("trap_reason", reason)
 
 
 def apportion_budget(
@@ -252,10 +188,10 @@ def apportion_budget(
 
     Scale shape: two 1-row aggregates (R, then the leftover count L —
     the engine's one-row-collect discipline, never a row collect), and
-    the +1 set is picked by the SAME two-phase salted top-k ``pop_round``
-    uses (phase 1 ranks within a salt, phase 2 ranks the ≤ salts·L
-    survivors), so there is no single-task global window over the host
-    table. Quota math rides a broadcast of the 1-row total; the host
+    the +1 set is picked by the SAME :func:`salted_top_k` ``pop_round``
+    uses, with no group (phase 1 ranks within a salt of the host hash,
+    phase 2 ranks the ≤ salts·L survivors), so there is no single-task
+    global window over the host table. Quota math rides a broadcast of the 1-row total; the host
     table is scanned twice (quota pass + top-L pass) and shuffled once.
     """
     row = ranks.agg(F.sum(rank_col).cast("long")).collect()[0][0]
@@ -277,290 +213,14 @@ def apportion_budget(
     leftover = int(total - q.agg(F.sum("quota")).collect()[0][0])
     if leftover == 0:
         return q.select("host", F.col("quota").cast("long").alias("budget"))
-    w1 = Window.partitionBy("__s").orderBy(F.desc("rem"), "host")
-    w2 = Window.orderBy(F.desc("rem"), "host")
-    plus = (
-        q.withColumn("__s", F.pmod(F.xxhash64("host"), F.lit(salts)))
-        .withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= leftover)
-        .withColumn("__r2", F.row_number().over(w2))
-        .filter(F.col("__r2") <= leftover)
-        .select("host", F.lit(1).cast("long").alias("__plus"))
-    )
+    plus = salted_top_k(
+        q,
+        [],
+        [F.desc("rem"), F.col("host")],
+        F.lit(leftover),
+        F.pmod(F.xxhash64("host"), F.lit(salts)),
+    ).select("host", F.lit(1).cast("long").alias("__plus"))
     return q.join(plus, "host", "left").select(
         "host",
         (F.col("quota") + F.coalesce("__plus", F.lit(0))).cast("long").alias("budget"),
-    )
-
-
-def robots_sitemaps(robots_txt: DataFrame) -> DataFrame:
-    """Extract ``Sitemap:`` directives from raw robots.txt bodies —
-    the discovery seam the reference hard-codes: its collectors carry
-    fixed sitemap URL lists per source (Tasnim/Donya sitemap scans),
-    while the sitemaps protocol says a host ADVERTISES them in
-    robots.txt; this operator turns fetched robots bodies into the
-    sitemap URL list that feeds ``sources.discover`` (s2), closing
-    robots → sitemap → article discovery for an open frontier.
-
-    Input ``(host, robots_txt)``; output one row per distinct
-    ``(host, sitemap_url)`` with ``sitemap_host`` (lowercased host of
-    the advertised URL) and ``cross_host`` (0/1 — sitemap served off
-    the advertising host, e.g. a CDN; the sitemaps spec says such
-    references need cross-host trust, so callers get the flag, not a
-    silent drop). Parsing rules, each deliberate: the field name is
-    case-insensitive with optional whitespace before the colon
-    (``SiteMap :`` matches; ``sitemap-index:`` does not); the VALUE
-    keeps its original bytes (URL paths are case-sensitive) while the
-    scheme check and ``sitemap_host`` fold case; only absolute
-    http(s) URLs survive (relative and non-http values drop —
-    per-spec the directive takes a full URL).
-
-    Set-at-a-time, all JVM-side:
-    split + posexplode over one row per HOST (~10^7 rows web-scale,
-    never corpus-sized), codegen'd string ops, one distinct. The
-    directive is section-independent per the sitemaps protocol, so no
-    sectionization pass is needed at all. Whitespace is trimmed as
-    space/tab/CR explicitly — plain ``trim()`` strips SPACES ONLY in
-    both Spark and DuckDB, which silently drops every tab-indented
-    value and every line of a CRLF robots body (most real ones)."""
-    lines = robots_txt.select(
-        "host", F.explode(F.split("robots_txt", "\n")).alias("line")
-    ).select("host", F.expr("trim(BOTH ' \\t\\r' FROM line)").alias("line"))
-    val = F.expr(
-        "trim(BOTH ' \\t\\r' FROM substring(line, instr(line, ':') + 1))"
-    )
-    cand = (
-        lines.where(F.lower("line").rlike("^sitemap[ \\t]*:"))
-        .select("host", val.alias("sitemap_url"))
-        .where(
-            F.lower("sitemap_url").startswith("http://")
-            | F.lower("sitemap_url").startswith("https://")
-        )
-    )
-    return (
-        cand.select(
-            "host",
-            "sitemap_url",
-            F.lower(
-                F.regexp_extract("sitemap_url", "^[a-zA-Z]+://([^/]+)", 1)
-            ).alias("sitemap_host"),
-        )
-        .withColumn(
-            "cross_host",
-            (F.col("sitemap_host") != F.col("host")).cast("long"),
-        )
-        .distinct()
-    )
-
-
-def rendezvous_assign(
-    df: DataFrame,
-    key_col: str = "host",
-    n_shards: int = 8,
-    salt_tag: str = "rv",
-) -> DataFrame:
-    """Highest-random-weight (rendezvous) shard assignment — which
-    fetcher shard OWNS each host. Politeness makes host affinity
-    mandatory (one token bucket per host must live in one place);
-    hash-mod assignment reshuffles ~every host's affinity when the
-    fleet resizes, rendezvous moves ONLY the keys the new shard wins
-    (≈1/(N+1) of them, and they move nowhere else) — the property that
-    makes an N→4N executor resize a warm-cache event instead of a
-    full frontier re-shard.
-
-    Adds ``shard`` = argmax over s∈[0,n_shards) of the 60-bit integer
-    md5(key ∥ '#' ∥ s ∥ salt_tag) — a PURE PROJECTION (sequence →
-    transform → array_max inside whole-stage codegen): no shuffle, no
-    join, no state; ties (2^-60) break to the larger shard id via the
-    (weight, shard) struct order, deterministic in any engine."""
-    key = F.col(key_col).cast("string")
-    weights = F.transform(
-        F.sequence(F.lit(0), F.lit(n_shards - 1)),
-        lambda s: F.struct(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            key, F.lit("#"), s.cast("string"), F.lit(salt_tag)
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("w"),
-            s.cast("int").alias("shard"),
-        ),
-    )
-    return df.withColumn("shard", F.array_max(weights)["shard"])
-
-
-def trap_templates(
-    pages: DataFrame,
-    min_urls: int = 20,
-    num: int = 1,
-    den: int = 4,
-) -> DataFrame:
-    """Crawler-trap detection: per (host, URL template) compare how many
-    DISTINCT URLs the template spawned against how many DISTINCT
-    contents they returned. Calendar pages, faceted search, and session
-    ids mint unbounded URL spaces over near-constant content — the
-    classic trap an open-web frontier must stop feeding (the reference's
-    fixed five-source list never meets one; a 10^10-URL frontier meets
-    them constantly). Complementary to ``url_trap_flags`` (p11): that
-    one rejects URLs whose SHAPE is suspicious before any fetch; this
-    one catches traps whose shape looks legitimate by measuring what
-    fetches actually returned. A (host, template) is a trap when it has
-    at least
-    ``min_urls`` distinct URLs and content diversity at or below
-    ``num/den`` of the URL count — exact integer cross-multiplication,
-    no float ratio.
-
-    Input ``(host, path, content_key)`` — one row per fetched page,
-    content_key = any exact content fingerprint (md5, xxh64). Output one
-    row per (host, template) with ``n_urls``, ``n_content``,
-    ``is_trap``.
-
-    Scale shape: ONE grouped distinct-aggregation on (host, template) —
-    partial aggregation collapses the per-template URL explosion
-    map-side (the trap host's millions of calendar URLs reduce before
-    the shuffle), and the template string itself is bounded (paths are
-    short), so the shuffle carries (host, template, path-dedup) keys,
-    never raw page bodies. Downstream the trap rows broadcast back
-    against the frontier as a discard filter (the robots/budget
-    broadcast pattern)."""
-    t = pages.select(
-        "host",
-        url_fns.url_template_col(F.col("path")).alias("template"),
-        "path",
-        "content_key",
-    )
-    agg = t.groupBy("host", "template").agg(
-        F.countDistinct("path").cast("long").alias("n_urls"),
-        F.countDistinct("content_key").cast("long").alias("n_content"),
-    )
-    return agg.withColumn(
-        "is_trap",
-        (F.col("n_urls") >= min_urls)
-        & (F.col("n_content") * den <= F.col("n_urls") * num),
-    )
-
-
-def _robots_pattern_match(p, pat):
-    """One RFC 9309 path-pattern test, pure codegen string ops (no regex,
-    no UDF): '*' matches any run (greedy in-order segment search — the
-    classic correctness result for prefix*seg*...*seg patterns), a
-    trailing '$' anchors the end. Literal otherwise (a '.' in a pattern
-    is a dot, unlike regex twins, which must escape it)."""
-    anchored = pat.endswith("$")
-    core = F.when(anchored, F.substr(pat, F.lit(1), F.length(pat) - 1)).otherwise(pat)
-    segs = F.split(core, "[*]", -1)
-    n = F.size(segs)
-    first = F.element_at(segs, 1)
-    last = F.element_at(segs, n)
-    mids = F.slice(
-        segs,
-        2,
-        F.greatest(F.when(anchored, n - 2).otherwise(n - 1), F.lit(0)),
-    )
-    acc0 = F.struct(
-        (F.length(first) + 1).cast("long").alias("pos"),
-        p.startswith(first).alias("ok"),
-    )
-
-    def step(acc, seg):
-        # empty segment ('**', trailing '*'): '*' already matches any
-        # run, so consume nothing — also guards Spark's locate('',s,pos)
-        # returning 1 regardless of pos, which would rewind the cursor
-        idx = F.call_function("locate", seg, p, acc["pos"]).cast("long")
-        return F.when(seg == "", acc).otherwise(
-            F.struct(
-                (idx + F.length(seg)).alias("pos"),
-                (acc["ok"] & (idx > 0)).alias("ok"),
-            )
-        )
-
-    folded = F.aggregate(mids, acc0, step)
-    return F.when(
-        anchored,
-        F.when(n == 1, p == core).otherwise(
-            folded["ok"]
-            & p.endswith(last)
-            & (folded["pos"] <= F.length(p) - F.length(last) + 1)
-        ),
-    ).otherwise(folded["ok"])
-
-
-def allowed_by_robots_wildcards(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """RFC 9309 robots evaluation — ``allowed_by_robots`` upgraded from
-    plain prefixes to the full wildcard grammar big sites actually ship
-    ('*' any-run, trailing '$' end-anchor: 'Disallow: /*.pdf$',
-    'Allow: /private/public*'). Most-specific rule wins, specificity =
-    raw pattern length (the Google-parser convention, '$'/'*' octets
-    included); equal-length tie → allow. No matching rule ⇒ allow.
-
-    Same scale shape as the prefix version: rules grouped per host
-    (tiny), broadcast — ZERO shuffle on the 10^10-row frontier side.
-    The per-row grammar evaluation runs as a vectorized Arrow batch
-    kernel (the same greedy in-order segment search, in Python str ops
-    with the identical 1-based locate/prefix/suffix arithmetic as the
-    ``_robots_pattern_match`` expression fold it replaces — the fold's
-    interpreted per-(row, rule) ArrayAggregate measured ~3× the whole
-    query wall at sf0.1 for identical survivors; the fold stays as the
-    fixture-pinned reference semantics)."""
-    from ..functions.urls import path_col
-
-    rules_by_host = robots.groupBy("host").agg(
-        F.collect_list(F.struct("pattern", "rule_kind")).alias("__rules")
-    )
-    joined = frontier.join(F.broadcast(rules_by_host), "host", "left").withColumn(
-        "__path", path_col("canonical_url")
-    )
-
-    def _match(path: str, pat: str) -> bool:
-        # python twin of _robots_pattern_match, 0-based cursors: '*'
-        # splits into segments matched greedily in order; trailing '$'
-        # anchors the end; empty segments consume nothing
-        anchored = pat.endswith("$")
-        core = pat[:-1] if anchored else pat
-        segs = core.split("*")
-        n = len(segs)
-        if anchored and n == 1:
-            return path == core
-        ok = path.startswith(segs[0])
-        pos = len(segs[0])
-        for seg in segs[1 : n - 1] if anchored else segs[1:]:
-            if seg == "":
-                continue
-            idx = path.find(seg, pos)
-            ok = ok and idx >= 0
-            pos = idx + len(seg)
-        if anchored:
-            return bool(
-                ok and path.endswith(segs[-1]) and pos <= len(path) - len(segs[-1])
-            )
-        return bool(ok)
-
-    @F.pandas_udf("boolean")
-    def _keep(paths: pd.Series, rules: pd.Series) -> pd.Series:
-        out = []
-        for path, rl in zip(paths, rules):
-            if rl is None or len(rl) == 0 or path is None:
-                out.append(True)  # no rules / unparsable path → allow
-                continue
-            best = None
-            for r in rl:
-                if _match(path, r["pattern"]):
-                    cand = (len(r["pattern"]), 1 if r["rule_kind"] == "allow" else 0)
-                    if best is None or cand > best:
-                        best = cand
-            out.append(best is None or best[1] == 1)
-        return pd.Series(out)
-
-    return (
-        joined.filter(_keep(F.col("__path"), F.col("__rules")))
-        .drop("__rules", "__path")
     )

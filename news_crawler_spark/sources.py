@@ -299,78 +299,6 @@ def sitemap_staleness(
     )
 
 
-def sitemap_tree(
-    edges: DataFrame, roots: DataFrame, max_depth: int = 5
-) -> DataFrame:
-    """Expand nested sitemap INDEXES to their page URLs, attributing
-    every URL to the root index it came from: ``(root, url, depth)``
-    where depth = how many sitemap FILES were fetched on the shortest
-    path (the root itself is fetch #1, so a urlset entry directly in
-    the root has depth 1).
-
-    Input ``edges (loc, child, kind)``: one row per entry of a fetched
-    sitemap file — ``kind='sitemap'`` is a ``<sitemapindex>`` child
-    (another file to fetch), ``kind='url'`` is a ``<urlset>`` page URL.
-    ``roots (root)``: the index URLs advertised in robots.txt
-    (``frontier.robots_sitemaps`` produces exactly this). The protocol
-    CAPS everything: 50k entries per file forces big sites into index
-    trees (the reference's sources each fit one flat sitemap,
-    collectors/*/sitemap readers, so it never recurses; an open crawl
-    must), and ``max_depth`` bounds the walk — malformed or adversarial
-    indexes that cycle (a child pointing back at an ancestor) are cut
-    by the visited set, not by the depth cap alone.
-
-    Spark-first shape: level-unrolled BFS, keyed per (root, loc) because
-    attribution matters — the frontier is |sitemap FILES| rows (≤ tens
-    of thousands for even a huge site: 50k² URLs via one nesting level),
-    so it stays broadcast-side against the edge list; page URLs (the
-    10^9-row output) are emitted once per level and only
-    union+min-deduped at the end — they never enter the iterated
-    frontier. The visited anti-join per level keeps a cyclic index from
-    amplifying: each (root, loc) is expanded at most once, at its
-    minimum depth (BFS order guarantees first visit = min depth, so the
-    end min() over URL emissions only reconciles DIAMOND re-discoveries
-    — two indexes listing the same child file)."""
-    idx = edges.filter(F.col("kind") == "sitemap").select(
-        F.col("loc").alias("loc"), F.col("child").alias("child")
-    )
-    leaves = edges.filter(F.col("kind") == "url").select(
-        F.col("loc").alias("loc"), F.col("child").alias("url")
-    )
-    frontier = (
-        roots.select(F.col("root"))
-        .distinct()
-        .select("root", F.col("root").alias("loc"), F.lit(1).cast("long").alias("depth"))
-        .localCheckpoint(eager=True)
-    )
-    visited = frontier.select("root", "loc").localCheckpoint(eager=True)
-    urls = [
-        frontier.join(leaves, "loc").select("root", "url", "depth")
-    ]
-    for level in range(2, max_depth + 1):
-        nxt = (
-            frontier.join(idx, "loc")
-            .select("root", F.col("child").alias("loc"))
-            .distinct()
-            .join(visited, ["root", "loc"], "left_anti")
-            .withColumn("depth", F.lit(level).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt.select("root", "loc")).localCheckpoint(
-            eager=True
-        )
-        urls.append(nxt.join(leaves, "loc").select("root", "url", "depth"))
-        frontier = nxt
-    out = urls[0]
-    for u in urls[1:]:
-        out = out.unionByName(u)
-    return out.groupBy("root", "url").agg(
-        F.min("depth").cast("long").alias("depth")
-    )
-
-
 def refresh_allocation(
     pages: DataFrame,
     budget: int,

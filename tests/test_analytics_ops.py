@@ -176,17 +176,9 @@ ROOTS = (
 # unreached code fails, and so does an entry that was deleted or gained
 # a caller. "(module)" marks a module no reached code imports.
 AWAITING_DELETION = {
-    "news_crawler_spark/functions/domains.py": (
-        "(module)", "suffix_rules_df", "registered_domain_map", "with_registered_domain",
-    ),
-    "news_crawler_spark/functions/urls.py": ("surt_key_col", "url_template_col"),
     "news_crawler_spark/operators/dedup.py": (
         "shingles_from_tokens", "exact_duplicates", "cluster_representatives",
         "containment_pairs",
-    ),
-    "news_crawler_spark/operators/frontier.py": (
-        "TRAP_SESSION_PARAMS", "url_trap_flags", "robots_sitemaps", "rendezvous_assign",
-        "trap_templates", "allowed_by_robots_wildcards",
     ),
     "news_crawler_spark/operators/joins.py": (
         "(module)", "asof_join", "asof_join_bucketed", "range_join_bucketed",
@@ -204,7 +196,7 @@ AWAITING_DELETION = {
         "hll_registers", "hll_merge", "hll_estimate",
     ),
     "news_crawler_spark/sources.py": (
-        "sitemap_staleness", "sitemap_tree", "refresh_allocation",
+        "sitemap_staleness", "refresh_allocation",
     ),
 }
 

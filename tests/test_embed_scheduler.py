@@ -29,7 +29,9 @@ def test_drain_batches_per_source(spark, docs, tmp_path):
     # drained: the latest pending slice is empty, and every doc with
     # embed text has exactly one vector (dempty has none)
     last = sched.catalog.latest_round()
-    assert sched.catalog.read("embed_pending", last).count() == 0
+    pend = sched.catalog.read("embed_pending", last)
+    assert pend.columns == ["doc_id", "source", "published_ts", "embed_text"]
+    assert pend.count() == 0
     vecs = sched.vectors()
     ids = [r.doc_id for r in vecs.select("doc_id").collect()]
     assert sorted(ids) == sorted(r.doc_id for r in docs.collect() if r.doc_id != "dempty")

@@ -226,34 +226,6 @@ def test_k1_cache_fold_is_aggregate_not_window(spark):
     assert "SortMergeJoin" not in p, p
 
 
-def test_surt_range_reaches_scan_as_pushed_filter(spark, tmp_path):
-    """The f3 layout claim's plan half: a per-domain surt prefix range
-    must reach the parquet scan as PushedFilters (row-group min/max
-    skipping happens in the reader only if the predicate gets there) —
-    a plan that filters post-scan decodes the whole table regardless of
-    layout."""
-    from news_crawler_spark.functions.urls import surt_key_col
-
-    df = spark.range(1000).select(
-        F.concat(
-            F.lit("https://sub.site"),
-            (F.col("id") % 16).cast("string"),
-            F.lit(".com/p/"),
-            F.col("id").cast("string"),
-        ).alias("canonical_url")
-    ).withColumn("surt_key", surt_key_col("canonical_url"))
-    df.repartitionByRange(4, "surt_key").sortWithinPartitions(
-        "surt_key"
-    ).write.parquet(str(tmp_path / "fr"))
-    q = spark.read.parquet(str(tmp_path / "fr")).where(
-        (F.col("surt_key") >= "com,site4,") & (F.col("surt_key") < "com,site4-")
-    )
-    p = plan(q)
-    assert "GreaterThanOrEqual(surt_key,com,site4,)" in p, p
-    assert "LessThan(surt_key,com,site4-)" in p, p
-    assert q.count() == sum(1 for i in range(1000) if i % 16 == 4)
-
-
 def test_x13_bm25_plan_shape(spark):
     """BM25 scores from postings built once per documents DataFrame by
     one aggregate over the exploded tokens; repeat searches on the same
@@ -569,45 +541,6 @@ def test_bucketed_id_join_colocates_no_exchange(spark, tmp_path):
         assert "Bucketed: true" in p, p
     finally:
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
-
-
-def test_c2_rendezvous_is_a_pure_projection(spark):
-    """Shard assignment adds no exchange, no join, no python stage —
-    it must stay inside the scan's whole-stage-codegen projection."""
-    from news_crawler_spark.operators import frontier as fops
-
-    hosts = spark.range(100).select(
-        F.concat(F.lit("h"), F.col("id").cast("string")).alias("host")
-    )
-    p = explain_formatted(fops.rendezvous_assign(hosts, n_shards=8))
-    assert "Exchange" not in p
-    assert "Join" not in p
-    assert "EvalPython" not in p
-
-
-def test_s8_sitemap_tree_iterates_files_broadcast(spark):
-    """The URL side must never be iterated: every join in the expansion
-    broadcasts the (bounded) file frontier; page URLs only flow through
-    the final min-depth aggregate."""
-    from news_crawler_spark import sources
-
-    edges = spark.createDataFrame(
-        [("r", "i%d" % i, "sitemap") for i in range(20)]
-        + [("i%d" % i, "u%d_%d" % (i, j), "url")
-           for i in range(20) for j in range(50)],
-        "loc string, child string, kind string",
-    )
-    roots = spark.createDataFrame([("r",)], "root string")
-    out = sources.sitemap_tree(edges, roots, max_depth=3)
-    out.collect()  # run THIS df's own QE so its AQE plan finalizes
-                   # (count() would plan a separate aggregate query)
-    p = out._jdf.queryExecution().executedPlan().toString()
-    # AQE's toString appends the pre-adaptive "Initial Plan" (which
-    # legitimately shows SortMergeJoin); judge the Final Plan section
-    final = p.split("Initial Plan")[0]
-    assert "isFinalPlan=true" in final
-    assert "BroadcastHashJoin" in final
-    assert "SortMergeJoin" not in final, final
 
 
 def test_t11_refresh_allocation_has_no_global_sort_of_pages(spark):

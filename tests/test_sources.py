@@ -155,64 +155,6 @@ def test_discover_feeds_engine(spark, pages, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# sitemap_tree
-
-
-def _tree(spark, edges, roots, **kw):
-    e = spark.createDataFrame(edges, "loc string, child string, kind string")
-    r = spark.createDataFrame([(x,) for x in roots], "root string")
-    return {
-        (row.root, row.url): row.depth
-        for row in sources.sitemap_tree(e, r, **kw).collect()
-    }
-
-
-def test_sitemap_tree_expands_nested_indexes(spark):
-    edges = [
-        ("r", "i1", "sitemap"), ("r", "i2", "sitemap"), ("r", "u0", "url"),
-        ("i1", "s1", "sitemap"), ("i2", "s1", "sitemap"),  # diamond
-        ("s1", "u1", "url"), ("s1", "u2", "url"),
-        ("i2", "u3", "url"),
-        ("orphan", "u9", "url"),  # not reachable from any root
-    ]
-    out = _tree(spark, edges, ["r"])
-    assert out == {
-        ("r", "u0"): 1,   # directly in the root file
-        ("r", "u3"): 2,   # via i2
-        ("r", "u1"): 3,   # via i1/i2 -> s1 (diamond deduped to min)
-        ("r", "u2"): 3,
-    }
-
-
-def test_sitemap_tree_two_roots_attribute_separately(spark):
-    edges = [
-        ("a", "shared", "sitemap"), ("b", "shared", "sitemap"),
-        ("shared", "u", "url"), ("b", "ub", "url"),
-    ]
-    out = _tree(spark, edges, ["a", "b"])
-    assert out == {("a", "u"): 2, ("b", "u"): 2, ("b", "ub"): 1}
-
-
-def test_sitemap_tree_cycle_is_cut_by_visited_set(spark):
-    edges = [
-        ("r", "i", "sitemap"),
-        ("i", "r", "sitemap"),   # points back at the root
-        ("i", "i", "sitemap"),   # and at itself
-        ("i", "u", "url"), ("r", "u0", "url"),
-    ]
-    out = _tree(spark, edges, ["r"], max_depth=10)
-    assert out == {("r", "u0"): 1, ("r", "u"): 2}
-
-
-def test_sitemap_tree_depth_cap(spark):
-    edges = [("n%d" % i, "n%d" % (i + 1), "sitemap") for i in range(6)]
-    edges += [("n%d" % i, "u%d" % i, "url") for i in range(7)]
-    out = _tree(spark, edges, ["n0"], max_depth=3)
-    # files n0(d1) n1(d2) n2(d3) expanded; deeper files never fetched
-    assert out == {("n0", "u0"): 1, ("n0", "u1"): 2, ("n0", "u2"): 3}
-
-
-# ---------------------------------------------------------------------------
 # refresh_allocation
 
 

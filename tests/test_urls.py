@@ -78,221 +78,3 @@ def test_pandas_udf_batch():
     fn = canonicalize_url.func
     out = fn(pd.Series([g[0] for g in GOLDEN]))
     assert list(out) == [g[1] for g in GOLDEN]
-
-
-# ---------------------------------------------------------------------------
-# P11 spider-trap flags (frontier.url_trap_flags)
-
-TRAP_CASES = [
-    # benign
-    ("https://h/news/123", "ok"),
-    ("https://h/", "ok"),
-    ("https://h/news/item?page=2&sort=asc", "ok"),
-    # boundaries sit exactly on the thresholds
-    ("https://h/a/b/c/d/e/f/g/h/i/j/k/9", "ok"),          # depth 12 == max
-    ("https://h/a/b/c/d/e/f/g/h/i/j/k/l/9", "depth"),     # depth 13
-    ("https://h/x/y/x/9", "ok"),                          # repeat 2 == max
-    ("https://h/x/y/x/y/x", "cycle"),                     # repeat 3
-    ("https://h/2024/01/02/a", "ok"),                     # 3 digit segs == max
-    ("https://h/2024/01/02/03/55", "calendar"),           # 5 digit segs
-    ("https://h/p?a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8", "ok"),
-    ("https://h/p?a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8&i=9", "params"),
-    # session ids, case-insensitive, anywhere in the query
-    ("https://h/p?ref=x&PHPSESSID=77", "session"),
-    ("https://h/p?jsessionid=abc", "session"),
-    # rule priority: cycle is more structural than session
-    ("https://h/tag/a/tag/a/tag/9?sid=1", "cycle"),
-    # a 'sid' VALUE (not key) is not a session param
-    ("https://h/p?q=sid", "ok"),
-]
-
-
-def test_url_trap_flags_golden(spark):
-    from news_crawler_spark.operators.frontier import url_trap_flags
-
-    df = spark.createDataFrame(
-        [(u,) for u, _ in TRAP_CASES], "canonical_url string"
-    )
-    got = {
-        r.canonical_url: r.trap_reason for r in url_trap_flags(df).collect()
-    }
-    assert got == {u: want for u, want in TRAP_CASES}
-
-
-def test_url_trap_flags_plan_is_map_side(spark):
-    """The admission filter must not shuffle: no Exchange in the plan."""
-    from news_crawler_spark.operators.frontier import url_trap_flags
-
-    df = spark.range(8).selectExpr(
-        "concat('https://h/news/', id) AS canonical_url"
-    )
-    plan = (
-        url_trap_flags(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-
-
-# P13 behavioral trap templates (frontier.trap_templates)
-
-TEMPLATE_CASES = [
-    ("/cal/2026/08/page-3", "/cal/{d}/{d}/page-{d}"),
-    ("/article/0123456789abcdef-42", "/article/{h}-{d}"),      # hex run first
-    ("/article/0123456789abcde-42", "/article/{d}abcde-{d}"),  # 15 hex chars: too short
-    ("/static/about", "/static/about"),                          # no runs → identity
-    ("/a1b2/x", "/a{d}b{d}/x"),                                  # short hex stays digits
-]
-
-
-def test_url_template_col_golden(spark):
-    from news_crawler_spark.functions.urls import url_template_col
-
-    df = spark.createDataFrame([(p,) for p, _ in TEMPLATE_CASES], "path string")
-    got = {r.path: r.t for r in df.select("path", url_template_col("path").alias("t")).collect()}
-    assert got == {p: want for p, want in TEMPLATE_CASES}
-
-
-def py_trap_templates(rows, min_urls=3, num=1, den=4):
-    """Straight-line python twin of frontier.trap_templates (on
-    pre-templated paths: the template rule is pinned separately above)."""
-    import re
-
-    tpl = lambda p: re.sub(r"[0-9]+", "{d}", re.sub(r"[0-9a-f]{16,}", "{h}", p))
-    urls, content = {}, {}
-    for h, p, c in rows:
-        k = (h, tpl(p))
-        urls.setdefault(k, set()).add(p)
-        content.setdefault(k, set()).add(c)
-    return {
-        k: (
-            len(urls[k]),
-            len(content[k]),
-            len(urls[k]) >= min_urls and len(content[k]) * den <= len(urls[k]) * num,
-        )
-        for k in urls
-    }
-
-
-def test_trap_templates_thresholds(spark):
-    """Trap / boundary / legit / min-urls-guard in one frame: a 4-URL
-    1-content calendar (trap), a 4-URL 1-content pair below min_urls=3
-    ... exactly-at-boundary content (4 urls, 1 content, num/den=1/4 →
-    4*1 <= 4*1 trap), and an all-unique-content template (legit)."""
-    from news_crawler_spark.operators.frontier import trap_templates
-
-    rows = (
-        [("t", f"/cal/{i}/p", "same") for i in range(4)]          # 4 urls, 1 content → trap
-        + [("t", f"/art/{i}", f"c{i}") for i in range(4)]         # unique content → legit
-        + [("b", f"/tag/{i}", f"c{i % 1}") for i in range(2)]     # 2 urls < min_urls → exempt
-        + [("e", f"/x/{i}", f"c{i % 2}") for i in range(8)]       # 8 urls, 2 content = exactly 1/4 → trap
-        + [("e2", f"/x/{i}", f"c{i % 3}") for i in range(8)]      # 3/8 > 1/4 → legit
-    )
-    df = spark.createDataFrame(rows, "host string, path string, content_key string")
-    out = trap_templates(df, min_urls=3, num=1, den=4).collect()
-    got = {(r.host, r.template): (r.n_urls, r.n_content, r.is_trap) for r in out}
-    assert got == py_trap_templates(rows, min_urls=3)
-    assert got[("t", "/cal/{d}/p")] == (4, 1, True)
-    assert got[("t", "/art/{d}")] == (4, 4, False)
-    assert got[("b", "/tag/{d}")] == (2, 1, False)
-    assert got[("e", "/x/{d}")] == (8, 2, True)
-    assert got[("e2", "/x/{d}")] == (8, 3, False)
-
-
-# P14 RFC 9309 wildcard robots (frontier.allowed_by_robots_wildcards)
-
-WILDCARD_CASES = [
-    # (path, pattern, matches)
-    ("/cal/9/page-3", "/cal/*/page-*", True),
-    ("/cal/9/index", "/cal/*/page-*", False),   # segments out of order → no
-    ("/doc/7.pdf", "/*.pdf$", True),
-    ("/doc/7.pdfx", "/*.pdf$", False),          # '$' rejects a longer suffix
-    ("/doc/.pdf", "/doc/*.pdf$", True),         # '*' matches the empty run
-    ("/a/b12/c", "/a/*b*c", True),
-    ("/a/c/b", "/a/*b*c", False),
-    ("/ab", "/a**b", True),                     # '**' ≡ '*'
-    ("/axb", "/a*$", True),
-    ("/doc/", "/doc/$", True),                  # anchored exact
-    ("/doc/x", "/doc/$", False),
-    ("/abc12", "/a*c", True),
-    ("/private/public", "/private/public*", True),  # trailing '*' ≡ prefix
-    ("/p", "/p*", True),
-]
-
-
-def test_robots_pattern_match_golden(spark):
-    from news_crawler_spark.operators.frontier import _robots_pattern_match
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(p, q) for p, q, _ in WILDCARD_CASES], "path string, pat string"
-    )
-    rows = df.select(
-        "path", "pat", _robots_pattern_match(F.col("path"), F.col("pat")).alias("m")
-    ).collect()
-    got = {(r.path, r.pat): r.m for r in rows}
-    assert got == {(p, q): want for p, q, want in WILDCARD_CASES}
-
-
-def test_wildcards_kernel_matches_expression_fold(spark):
-    """The operator's vectorized Python matcher must agree with the
-    ``_robots_pattern_match`` expression fold (the retained reference
-    semantics) on the full golden matrix: one single-deny-rule frontier
-    per case — a row survives iff the pattern does NOT match."""
-    from news_crawler_spark.operators.frontier import allowed_by_robots_wildcards
-
-    df = spark.createDataFrame(
-        [
-            (f"h{i}", f"https://h{i}{path}")
-            for i, (path, _pat, _want) in enumerate(WILDCARD_CASES)
-        ],
-        "host string, canonical_url string",
-    )
-    rules = spark.createDataFrame(
-        [
-            (f"h{i}", pat, "deny")
-            for i, (_path, pat, _want) in enumerate(WILDCARD_CASES)
-        ],
-        "host string, pattern string, rule_kind string",
-    )
-    kept = {r.host for r in allowed_by_robots_wildcards(df, rules).collect()}
-    want = {f"h{i}" for i, (_p, _q, m) in enumerate(WILDCARD_CASES) if not m}
-    assert kept == want
-
-
-def test_allowed_by_robots_wildcards_precedence(spark):
-    """Longest-match-wins + allow-beats-deny-on-tie + default allow,
-    through the real broadcast operator (and no Exchange on the
-    frontier side of the plan)."""
-    from news_crawler_spark.operators.frontier import allowed_by_robots_wildcards
-
-    rules = spark.createDataFrame(
-        [
-            ("h", "/private*", "deny"),
-            ("h", "/private/public*", "allow"),
-            ("h", "/a*c", "deny"),
-            ("h", "/ab*", "allow"),
-            ("h", "/*.pdf$", "deny"),
-        ],
-        "host string, pattern string, rule_kind string",
-    )
-    urls = [
-        ("https://h/free", True),             # no match → allow
-        ("https://h/private/x", False),
-        ("https://h/private/public/x", True), # longer allow overrides
-        ("https://h/abc1", True),             # len-4 tie → allow wins
-        ("https://h/ax1c", False),            # only the deny matches
-        ("https://h/d.pdf", False),
-        ("https://h/d.pdfx", True),           # anchor rejects
-        ("https://other/private/x", True),    # host without rules
-    ]
-    df = spark.createDataFrame(
-        [("h" if "//h/" in u else "other", u) for u, _ in urls],
-        "host string, canonical_url string",
-    )
-    out = allowed_by_robots_wildcards(df, rules)
-    kept = {r.canonical_url for r in out.collect()}
-    assert kept == {u for u, keep in urls if keep}
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
