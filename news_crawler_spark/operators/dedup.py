@@ -499,7 +499,7 @@ def duplicate_clusters(
 
 
 # --------------------------------------------------------------------------
-# md5-derived 64-bit hashes and hamming banding
+# md5-derived 64-bit hashes
 
 def md5_hash64(value: Column) -> Column:
     """64-bit token hash from the first 16 hex chars of md5 — chosen so a
@@ -510,39 +510,6 @@ def md5_hash64(value: Column) -> Column:
     hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
     lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
     return F.shiftleft(hi, 32).bitwiseOR(lo)
-
-
-def _banded64(sh: DataFrame, n_bands: int) -> DataFrame:
-    """(doc_id, simhash) → one row per band with the band's exact chunk
-    value of the 64-bit sketch. Uneven split: chunk b covers bits
-    [bounds[b], bounds[b+1]). With n_bands = max_hamming + 1, two sketches
-    within that hamming radius agree on at least one whole band
-    (pigeonhole), so banding on equal chunks has complete recall."""
-    bounds = [b * 64 // n_bands for b in range(n_bands + 1)]
-    return sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), bounds[b])
-                        .bitwiseAND(
-                            F.lit((1 << (bounds[b + 1] - bounds[b])) - 1).cast("long")
-                        )
-                        .alias("chunk"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "doc_id",
-        "simhash",
-        F.col("bb.band").alias("band"),
-        F.col("bb.chunk").alias("chunk"),
-    )
 
 
 # --------------------------------------------------------------------------

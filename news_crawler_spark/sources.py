@@ -245,175 +245,3 @@ def discover(
     )
     return fresh, latest_cursors(links)
 
-
-def sitemap_staleness(
-    entries: DataFrame, captures: DataFrame
-) -> DataFrame:
-    """Sitemap-lastmod-driven recrawl selection: join what the host
-    ADVERTISES changed (sitemap ``<lastmod>``) against what the archive
-    HOLDS (a latest-capture table: one row per URL, its newest capture)
-    and classify every advertised URL — ``unseen`` (never captured →
-    crawl), ``stale`` (lastmod newer than our latest capture →
-    refetch; ``staleness_s`` = how far behind), ``fresh`` (no fetch
-    needed). This recrawl signal is what the origin itself declares —
-    the cheapest one (one sitemap fetch covers 50k URLs), and the
-    reference ignores it entirely (its sitemap collectors read
-    URLs and dates for DISCOVERY only; nothing compares lastmod to
-    stored state).
-
-    Input: ``entries (url, lastmod_ts)`` — a sitemap batch (duplicate
-    urls collapse to max lastmod here: sitemap files may repeat a URL);
-    ``captures (url, latest_ts)`` — the latest-capture table. Output:
-    one row per advertised URL: ``(url, lastmod_ts, latest_ts, status,
-    staleness_s)``.
-
-    Scale shape: the archive side is NEVER shuffled — a sitemap batch
-    is bounded (≤50k URLs/file by spec), so the capture table is
-    pruned with a broadcast left-semi join (the scan streams past the
-    broadcast URL set; on a urlkey-partitioned layout the runtime
-    filter prunes files too), and the surviving ≤|entries| capture
-    rows broadcast back into the left join that preserves every entry.
-    Two broadcasts of the bounded side; zero exchanges of the big
-    one."""
-    e = entries.groupBy("url").agg(F.max("lastmod_ts").alias("lastmod_ts"))
-    matched = captures.join(
-        F.broadcast(e.select("url")), "url", "left_semi"
-    ).select("url", "latest_ts")
-    j = e.join(F.broadcast(matched), "url", "left")
-    status = (
-        F.when(F.col("latest_ts").isNull(), "unseen")
-        .when(F.col("lastmod_ts") > F.col("latest_ts"), "stale")
-        .otherwise("fresh")
-    )
-    staleness = F.when(
-        F.col("latest_ts").isNotNull()
-        & (F.col("lastmod_ts") > F.col("latest_ts")),
-        F.col("lastmod_ts") - F.col("latest_ts"),
-    ).otherwise(F.lit(0))
-    return j.select(
-        "url",
-        "lastmod_ts",
-        "latest_ts",
-        status.alias("status"),
-        staleness.cast("long").alias("staleness_s"),
-    )
-
-
-def refresh_allocation(
-    pages: DataFrame,
-    budget: int,
-    f_max: int = 8,
-    scale: int = 10**9,
-) -> DataFrame:
-    """Allocate a global recrawl budget across pages to maximize
-    steady-state freshness (Cho & Garcia-Molina, "Effective Page
-    Refresh Policies for Web Crawlers", TODS'03): input
-    ``pages (page_id, lam)`` with ``lam`` = observed changes per period
-    (an integer change-rate estimate), output
-    ``(page_id, lam, f_alloc)`` with Σ f_alloc ≤ budget, f_alloc ≤
-    f_max. The reference refreshes every source on one fixed 15 s
-    cadence regardless of change rate or capacity
-    (news_fresh_links_scheduler.py:175); at five sources that is fine,
-    at 10^10 pages the budget IS the constraint and allocation is the
-    policy.
-
-    Freshness model: a page crawled ``f`` times per period with change
-    rate ``lam`` is fresh f/(f+lam) of the time; the marginal gain of
-    the f-th crawl is lam/((f+lam)(f+lam-1)) — concave in f, so the
-    global optimum is exactly the budget-many LARGEST marginal gains,
-    and since the gain of the FIRST crawl is 1/(1+lam), the famous
-    counterintuitive result falls out: under a tight budget the
-    fastest-changing pages get FEWER crawls, not more (chasing a page
-    that changes faster than you can fetch buys almost no freshness).
-    t8/t9/t10 SCORE pages; this operator ALLOCATES — the step that
-    turns change-rate estimates into a crawl plan that respects the
-    fleet's actual capacity.
-
-    Spark-first shape — never a global sort: gains are exact scaled
-    integers (``scale·lam div ((f+lam)(f+lam-1))`` — floor division in
-    both engines, so the DuckDB twin is bit-identical), and the
-    selection threshold θ* (the Lagrange multiplier) is found by
-    BINARY SEARCH over integer gain values: O(log scale) ≈ 30 probes,
-    each ONE combiner-reduced aggregate over the page table (the
-    per-page gains live in a length-f_max array column, counted with a
-    codegen'd filter+size — no explode). Only the TIE BOUNDARY (steps
-    whose gain equals θ*−1) is ever exploded and sorted — a sliver,
-    deterministically ordered by (page_id, f) so the greedy tie-break
-    is reproducible. Steps with zero integer gain are never allocated
-    even under a loose budget (a crawl buying < 1/scale freshness is
-    not worth a fetch)."""
-    gains = F.array(
-        *[
-            F.expr(
-                f"CAST({scale} AS BIGINT) * lam "
-                f"DIV ((lam + {f}) * (lam + {f} - 1))"
-            )
-            for f in range(1, f_max + 1)
-        ]
-    )
-    base = (
-        pages.select(
-            F.col("page_id").cast("long").alias("page_id"),
-            F.col("lam").cast("long").alias("lam"),
-        )
-        .withColumn("gains", gains)
-        .localCheckpoint(eager=True)
-    )
-
-    def count_at_least(theta: int) -> int:
-        return base.agg(
-            F.sum(
-                F.size(F.filter("gains", lambda g: g >= F.lit(int(theta))))
-            ).alias("n")
-        ).collect()[0]["n"]
-
-    lo, hi = 1, scale + 1  # smallest θ with count(gain ≥ θ) ≤ budget
-    while lo < hi:
-        mid = (lo + hi) // 2
-        if count_at_least(mid) > budget:
-            lo = mid + 1
-        else:
-            hi = mid
-    theta = lo
-    f_base = F.size(F.filter("gains", lambda g: g >= F.lit(int(theta))))
-    alloc = base.select("page_id", "lam", f_base.alias("f_alloc"))
-    n_hi = count_at_least(theta)
-    remaining = budget - n_hi
-    if remaining > 0 and theta > 1:
-        t = theta - 1
-        ties = (
-            base.select(
-                "page_id", F.posexplode("gains").alias("f0", "g")
-            )
-            .filter(F.col("g") == t)
-            .select("page_id", (F.col("f0") + 1).alias("f"))
-        )
-        # the boundary sliver: a window over ties only, never the table
-        from pyspark.sql import Window
-
-        picked = (
-            ties.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.orderBy(F.col("page_id"), F.col("f"))
-                ),
-            )
-            .filter(F.col("rn") <= remaining)
-            .groupBy("page_id")
-            .agg(F.count("*").alias("f_tie"))
-        )
-        alloc = (
-            alloc.join(picked, "page_id", "left")
-            .select(
-                "page_id",
-                "lam",
-                (F.col("f_alloc") + F.coalesce("f_tie", F.lit(0)))
-                .cast("long")
-                .alias("f_alloc"),
-            )
-        )
-    else:
-        alloc = alloc.select(
-            "page_id", "lam", F.col("f_alloc").cast("long").alias("f_alloc")
-        )
-    return alloc

@@ -32,7 +32,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .functions.xxh64 import xxh64_str
 from . import schemas

@@ -4,7 +4,6 @@ P8/P10 projections, end-to-end crawl→embed→search (E1/E2, §3.3)."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from news_crawler_spark import synth
 from news_crawler_spark.engine import CrawlEngine

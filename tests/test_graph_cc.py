@@ -8,7 +8,6 @@ where label propagation needs O(n) rounds but two-star stays O(log²)."""
 import warnings
 
 import pytest
-from pyspark.sql import functions as F
 
 from news_crawler_spark.operators import dedup
 from news_crawler_spark.operators.graph import connected_components_twostar

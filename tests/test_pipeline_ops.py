@@ -7,7 +7,6 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from news_crawler_spark import sources
 from news_crawler_spark.functions.xxh64 import xxh64
 from news_crawler_spark.operators import dedup, multimodal, similarity
 
@@ -281,69 +280,6 @@ def test_m1_span_equality_all_dialects(spark, tmp_path):
     assert m2  # at least one media item
     for ref, n_bytes in m2.items():
         assert n_bytes == len(multimodal.synth_media_payload(ref))
-
-
-def py_ahash64(cells):
-    """Straight-line python twin of multimodal.image_ahash64 (two's
-    complement 64-bit int, bit i set when cell_i*64 > sum)."""
-    total = sum(cells)
-    h = 0
-    for i, c in enumerate(cells):
-        if c * 64 > total:
-            h += (1 << i) if i < 63 else -(1 << 63)
-    return h
-
-
-def test_image_ahash64_packing_and_mean(spark):
-    """Bit placement (incl. bit 63 = the two's-complement sign bit),
-    the exact integer mean test (a cell EQUAL to the mean is NOT set),
-    and the all-equal image (no bit set, hash 0)."""
-    a = [255] + [0] * 63                       # only bit 0
-    b = [0] * 63 + [255]                       # only bit 63 → negative hash
-    c = [7] * 64                               # all == mean → 0
-    d = [4, 8] * 32                            # alternating above/below mean
-    df = spark.createDataFrame(
-        [(1, a), (2, b), (3, c), (4, d)], "media_ref long, cells array<int>"
-    )
-    got = {
-        r.doc_id: r.simhash
-        for r in multimodal.image_ahash64(df, id_col="media_ref").collect()
-    }
-    assert got == {k: py_ahash64(v) for k, v in [(1, a), (2, b), (3, c), (4, d)]}
-    assert got[1] == 1
-    assert got[2] == -(1 << 63)
-    assert got[3] == 0
-
-
-def test_image_neardup_pairs_radius(spark):
-    """Complete recall at the radius and rejection above it: bi-level
-    images where hash hamming == cell symmetric-difference. Base vs
-    1/3/4-flip variants → pairs at hamming 1, 3, 4 (4 rejected at
-    max_hamming=3); the 1-flip vs 3-flip pair differs in 4 cells
-    (disjoint flips) and must be rejected too."""
-    base = [255 if i % 2 == 0 else 0 for i in range(64)]
-
-    def flip(cells, positions):
-        out = list(cells)
-        for p in positions:
-            out[p] = 255 - out[p]
-        return out
-
-    imgs = [
-        (0, base),
-        (1, flip(base, [5])),            # hamming(0,1) = 1
-        (2, flip(base, [10, 20, 30])),   # hamming(0,2) = 3
-        (3, flip(base, [1, 2, 3, 4])),   # hamming(0,3) = 4 → rejected
-    ]
-    df = spark.createDataFrame(imgs, "media_ref long, cells array<int>")
-    rows = multimodal.image_neardup_pairs(df, id_col="media_ref", max_hamming=3).collect()
-    got = {(r.id_a, r.id_b): r.hamming for r in rows}
-    assert got[(0, 1)] == 1
-    assert got[(0, 2)] == 3
-    assert (0, 3) not in got
-    assert (1, 2) not in got  # disjoint flips: 1+3 = 4 > radius
-    assert (1, 3) not in got  # 5 cells apart
-    assert set(got) == {(0, 1), (0, 2)}
 
 
 # -- fetch/extract path parity -----------------------------------------------
@@ -821,72 +757,6 @@ def test_kmeans_assign_blocked_equals_expression(spark):
     assert 1 not in {c for c, _ in got.values()}
 
 
-def test_pack_interleaved_mixed_costs(spark):
-    """Interleaved packing invariants on a hand-built span frame: text
-    spans cost their token count, image spans the fixed vision budget,
-    offsets are exact running sums in (doc_id, offset) order within a
-    shard, and the crosses flag marks exactly the boundary-straddlers."""
-    from news_crawler_spark.operators import multimodal
-
-    spans_docs = spark.createDataFrame(
-        [
-            (
-                "d1",
-                [
-                    {"kind": "text", "text": "a b c", "media_ref": None, "offset": 0},
-                    {"kind": "image", "text": None, "media_ref": "m1", "offset": 1},
-                    {"kind": "text", "text": "d", "media_ref": None, "offset": 2},
-                ],
-            ),
-            (
-                "d2",
-                [{"kind": "text", "text": "x y", "media_ref": None, "offset": 0}],
-            ),
-        ],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    out = multimodal.pack_interleaved(
-        spans_docs, budget=4, n_shards=1, image_tokens=6
-    ).collect()
-    assert len(out) == 4
-    rows = sorted(out, key=lambda r: (r.doc_id, r.offset))
-    assert [r.cost for r in rows] == [3, 6, 1, 2]
-    # one shard → global order (d1,0) (d1,1) (d1,2) (d2,0)
-    assert [r.tok_start for r in rows] == [0, 3, 9, 10]
-    assert [r.bin_id for r in rows] == [0, 0, 2, 2]
-    # the image span starts at 3 and ends at 8 → crosses the 4-token cut;
-    # d2's span (10..11) stays inside bin 2
-    assert [r.crosses for r in rows] == [0, 1, 0, 0]
-
-
-def test_media_integrity_missing_and_orphan(spark):
-    """The reconcile reports exactly the planted holes: a referenced ref
-    absent from the media side and a stored ref nothing references."""
-    from news_crawler_spark.operators import multimodal
-
-    spans_docs = spark.createDataFrame(
-        [
-            (
-                "d1",
-                [
-                    {"kind": "image", "text": None, "media_ref": "keep", "offset": 0},
-                    {"kind": "image", "text": None, "media_ref": "lost", "offset": 1},
-                    {"kind": "text", "text": "t", "media_ref": None, "offset": 2},
-                ],
-            ),
-        ],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    media = spark.createDataFrame(
-        [("keep",), ("extra",)], "media_ref string"
-    )
-    got = {
-        r.media_ref: r.status
-        for r in multimodal.media_integrity(spans_docs, media).collect()
-    }
-    assert got == {"lost": "missing", "extra": "orphan"}
-
-
 def test_cluster_representatives_survivor_rule(spark):
     """Longest-copy-wins with ties to the smallest id, and dup_tokens =
     member tokens minus the survivor's."""
@@ -912,53 +782,6 @@ def test_cluster_representatives_survivor_rule(spark):
     assert got[1].rep_doc_id == 2 and got[1].n_members == 3
     assert got[1].dup_tokens == 2 + 3
     assert got[7].rep_doc_id == 7 and got[7].dup_tokens == 3
-
-
-# ---------------------------------------------------------------- sniffing
-
-
-class TestContentSniff:
-    def _sniff(self, spark, payloads):
-        df = spark.createDataFrame(
-            [(i, bytearray(p)) for i, p in enumerate(payloads)],
-            "i long, payload binary",
-        )
-        out = df.select(
-            "i", multimodal.sniff_content_type(F.col("payload")).alias("ct")
-        ).collect()
-        return [r.ct for r in sorted(out, key=lambda r: r.i)]
-
-    def test_known_magics(self, spark):
-        cases = [
-            (b"%PDF-1.7 rest", "application/pdf"),
-            (b"\x89PNG\r\n\x1a\nchunk", "image/png"),
-            (b"\xff\xd8\xff\xe0jfif", "image/jpeg"),
-            (b"GIF87a....", "image/gif"),
-            (b"GIF89a....", "image/gif"),
-            (b"PK\x03\x04docx", "application/zip"),
-            (b"\x1f\x8bgz", "application/gzip"),
-            (b"<!DOCTYPE html>", "text/html"),
-            (b"<html><body>", "text/html"),
-            (b"RIFF\x00\x01\x02\x03WEBPVP8", "image/webp"),
-            (b"plain text here", "application/octet-stream"),
-            (b"RIFF\x00\x01\x02\x03WAVEfmt", "application/octet-stream"),
-        ]
-        assert self._sniff(spark, [p for p, _ in cases]) == [m for _, m in cases]
-
-    def test_short_and_empty_payloads(self, spark):
-        got = self._sniff(spark, [b"", b"\x1f", b"\x1f\x8b", b"<h"])
-        assert got == [
-            "application/octet-stream",
-            "application/octet-stream",
-            "application/gzip",
-            "application/octet-stream",
-        ]
-
-    def test_prefix_magic_inside_body_not_sniffed(self, spark):
-        """Only the PREFIX counts — magic bytes later in the payload
-        must not trigger (the sniffer reads 12 bytes, period)."""
-        got = self._sniff(spark, [b"xx%PDF-", b"ab\xff\xd8\xff"])
-        assert got == ["application/octet-stream"] * 2
 
 
 # ---------------------------------------------------------------- containment
@@ -1006,106 +829,3 @@ class TestContainmentPairs:
         # a_id < b_id ordering; containment of the SMALL set is 1.0
         assert (r.a_id, r.b_id) == (10, 20)
         assert r.c_ab == 1.0 and r.c_ba < 1.0
-
-
-# ---------------------------------------------------------------- charset
-
-
-class TestCharsetSniff:
-    def _sniff(self, spark, payloads, **kw):
-        df = spark.createDataFrame(
-            [(i, bytearray(p)) for i, p in enumerate(payloads)],
-            "i long, payload binary",
-        )
-        out = df.select(
-            "i", multimodal.sniff_charset(F.col("payload"), **kw).alias("cs")
-        ).collect()
-        return [r.cs for r in sorted(out, key=lambda r: r.i)]
-
-    def test_bom_detection(self, spark):
-        got = self._sniff(
-            spark,
-            [b"\xef\xbb\xbfx", b"\xfe\xffx", b"\xff\xfex", b"no bom"],
-        )
-        assert got == ["utf-8", "utf-16be", "utf-16le", "windows-1252"]
-
-    def test_meta_declarations(self, spark):
-        cases = [
-            (b'<meta charset="utf-8">', "utf-8"),
-            (b"<meta charset=UTF8>", "utf-8"),          # bare + fold
-            (b"<meta charset='iso-8859-1'>", "windows-1252"),  # WHATWG map
-            (b"<META CHARSET = ascii >x", "windows-1252"),
-            (
-                b'<meta http-equiv="Content-Type" '
-                b'content="text/html; charset=utf-16">',
-                "utf-16le",                              # bare utf-16 is LE
-            ),
-            (b'<meta charset="koi8-r">', "koi8-r"),      # passthrough
-        ]
-        assert self._sniff(spark, [p for p, _ in cases]) == [
-            c for _, c in cases
-        ]
-
-    def test_bom_beats_meta(self, spark):
-        got = self._sniff(spark, [b'\xef\xbb\xbf<meta charset="koi8-r">'])
-        assert got == ["utf-8"]
-
-    def test_prescan_window_bounds_the_scan(self, spark):
-        inside = b"x" * 100 + b'<meta charset="utf-8">'
-        outside = b"x" * 1100 + b'<meta charset="utf-8">'
-        assert self._sniff(spark, [inside, outside]) == [
-            "utf-8", "windows-1252"
-        ]
-        # the window is a parameter: widen it and the same bytes decode
-        assert self._sniff(spark, [outside], scan_bytes=2048) == ["utf-8"]
-
-    def test_non_ascii_bytes_before_meta_are_harmless(self, spark):
-        # ISO-8859-1 decode is total: arbitrary high bytes before the
-        # declaration can't break the scan
-        got = self._sniff(spark, [b"\x80\x81\xfe<meta charset=utf-8>"])
-        assert got == ["utf-8"]
-
-
-# ----------------------------------------------------------- sitemap stale
-
-
-class TestSitemapStaleness:
-    def test_classification_and_dup_collapse(self, spark):
-        entries = spark.createDataFrame(
-            [
-                ("u1", 100), ("u1", 250),   # dup url -> max lastmod 250
-                ("u2", 100),
-                ("u3", 100),
-            ],
-            "url string, lastmod_ts long",
-        )
-        captures = spark.createDataFrame(
-            [("u1", 200), ("u2", 500)], "url string, latest_ts long"
-        )
-        got = {r.url: r for r in sources.sitemap_staleness(
-            entries, captures).collect()}
-        assert got["u1"].status == "stale" and got["u1"].staleness_s == 50
-        assert got["u2"].status == "fresh" and got["u2"].staleness_s == 0
-        assert got["u3"].status == "unseen" and got["u3"].latest_ts is None
-        assert got["u1"].lastmod_ts == 250  # dup collapsed to max
-
-    def test_archive_side_never_shuffled(self, spark):
-        """The scale contract: both joins broadcast the bounded sitemap
-        side — the capture table must not appear under a SortMergeJoin
-        or an Exchange feeding one."""
-        entries = spark.createDataFrame(
-            [("u1", 1)], "url string, lastmod_ts long"
-        )
-        captures = spark.createDataFrame(
-            [("u1", 2)], "url string, latest_ts long"
-        )
-        plan = (
-            sources.sitemap_staleness(entries, captures)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SortMergeJoin" not in plan
-        assert plan.count("BroadcastHashJoin") == 2 or plan.count(
-            "BroadcastExchange"
-        ) >= 2, plan

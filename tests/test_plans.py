@@ -7,7 +7,6 @@ they claim (counted per job group)."""
 
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 from news_crawler_spark import analytics
@@ -431,25 +430,6 @@ def test_x21_semdedup_pairs_join_is_cell_equi(spark):
     assert "cell" in p, p
 
 
-def test_m3_pack_one_window_no_global_sort(spark):
-    """m3: interleaved packing must be ONE per-shard window over ONE
-    shuffle on the shard id — no global Sort/Exchange anywhere above it
-    (a global ORDER BY cumsum would serialize the corpus through one
-    partition). The query's trailing orderBy is display-only and not
-    part of the operator, so assert on the operator itself."""
-    from news_crawler_spark.operators import multimodal
-
-    df = multimodal.pack_interleaved(
-        analytics._m1_extracted(spark, SF), budget=2048, n_shards=8
-    )
-    p = plan(df)
-    assert p.count("Window") == 1, p
-    # the only range-partitioning allowed is none: the window's exchange
-    # hash-partitions on shard
-    assert "rangepartitioning" not in p.lower(), p
-    assert "hashpartitioning(shard" in p, p
-
-
 def test_x29_reps_are_partial_aggregate_no_window(spark):
     """x29: the survivor selection must be a partial (map-side) max_by
     aggregate on cluster_id — never a per-cluster window sort."""
@@ -462,25 +442,6 @@ def test_x29_reps_are_partial_aggregate_no_window(spark):
     p = plan(dedup_ops.cluster_representatives(clusters, docs))
     assert "Window" not in p, p
     assert "partial_max_by" in p or ("max_by" in p and "partial" in p.lower()), p
-
-
-def test_m4_integrity_prunes_payload_and_reduces_before_join(spark):
-    """m4: the reconcile joins DISTINCT ref keys only — both sides
-    aggregate to distinct refs BELOW the full-outer join, and the span
-    struct's text/payload fields never reach the join."""
-    from news_crawler_spark.operators import multimodal
-
-    spans = analytics._m1_extracted(spark, SF)
-    media = spans.select(
-        F.explode("spans").alias("s")
-    ).select(F.col("s.media_ref").alias("media_ref")).limit(5)
-    df = multimodal.media_integrity(spans, media)
-    p = plan(df)
-    assert "FullOuter" in p, p
-    # distinct (HashAggregate on media_ref) on both sides of the join
-    join_pos = p.find("FullOuter")
-    below = p[join_pos:]
-    assert below.count("HashAggregate") >= 2, p
 
 
 def test_x31_qsketch_two_phase_bounded(spark):
@@ -541,26 +502,6 @@ def test_bucketed_id_join_colocates_no_exchange(spark, tmp_path):
         assert "Bucketed: true" in p, p
     finally:
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
-
-
-def test_t11_refresh_allocation_has_no_global_sort_of_pages(spark):
-    """The page table must never be globally sorted: the θ search is
-    aggregate probes, the allocation a pure array projection; only the
-    tie sliver (gain == θ*−1) may see a window."""
-    from news_crawler_spark import sources
-
-    pages = spark.createDataFrame(
-        [(i, 1 + (i * 13) % 20) for i in range(500)],
-        "page_id long, lam long",
-    )
-    out = sources.refresh_allocation(pages, budget=600, f_max=4)
-    p = plan(out)
-    # a GLOBAL sort would plan Exchange rangepartitioning; the tie
-    # sliver's row_number is allowed to collapse into a
-    # TakeOrderedAndProject (per-partition top-k + single merge of the
-    # boundary rows — exactly the bounded-sort contract)
-    assert "Exchange rangepartitioning" not in p, p
-    assert p.count("TakeOrderedAndProject") <= 1, p
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

@@ -4,8 +4,6 @@ oracle, including threshold-boundary gaps and equal-timestamp ties."""
 import datetime as dt
 import hashlib
 
-from pyspark.sql import functions as F
-
 from news_crawler_spark.operators import sessions
 
 EPOCH = dt.datetime(2024, 1, 1)

@@ -1,8 +1,6 @@
 """Discovery-source operators: S1-S6 scan semantics, P4-P6 filters,
 T3 cursor cut vs a pure-python oracle, T4 cursor extraction."""
 
-from datetime import timedelta
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,49 +150,3 @@ def test_discover_feeds_engine(spark, pages, tmp_path):
     assert 0 < n <= fresh.count()  # dedup may collapse rediscoveries
     assert pend.select("canonical_url").distinct().count() == n
     assert cursors.count() == 5
-
-
-# ---------------------------------------------------------------------------
-# refresh_allocation
-
-
-def _alloc(spark, lam_by_page, budget, **kw):
-    p = spark.createDataFrame(
-        [(k, v) for k, v in lam_by_page.items()], "page_id long, lam long"
-    )
-    return {
-        r.page_id: r.f_alloc
-        for r in sources.refresh_allocation(p, budget, **kw).collect()
-    }
-
-
-def test_refresh_allocation_prefers_slow_changers(spark):
-    # the Cho result: under a tight budget the fast-changing page loses
-    out = _alloc(spark, {1: 2, 2: 50}, budget=2, f_max=3)
-    assert out == {1: 2, 2: 0}
-    out = _alloc(spark, {1: 2, 2: 50}, budget=4, f_max=3)
-    assert out == {1: 3, 2: 1}
-
-
-def test_refresh_allocation_exhausts_exactly_the_budget(spark):
-    lam = {i: 1 + (i * 13) % 20 for i in range(40)}
-    out = _alloc(spark, lam, budget=37, f_max=4)
-    assert sum(out.values()) == 37
-    assert all(0 <= f <= 4 for f in out.values())
-
-
-def test_refresh_allocation_tie_break_is_by_page_id(spark):
-    out = _alloc(spark, {1: 5, 2: 5, 3: 5}, budget=2, f_max=1)
-    assert out == {1: 1, 2: 1, 3: 0}
-
-
-def test_refresh_allocation_never_buys_zero_gain(spark):
-    # scale=10, lam=1: integer gains are [5, 1, 0] — the third crawl is
-    # worth < 1/scale freshness and must not be bought even with budget
-    out = _alloc(spark, {7: 1}, budget=10, f_max=3, scale=10)
-    assert out == {7: 2}
-
-
-def test_refresh_allocation_zero_budget(spark):
-    out = _alloc(spark, {1: 3, 2: 9}, budget=0, f_max=4)
-    assert out == {1: 0, 2: 0}
